@@ -52,7 +52,7 @@ object Main {
       case _ =>
         // self-describing / non-delimited source: typed enforcement only
         val df = Sources.table(spark, meta, meta.typeMapping.map(_.name),
-          tablePath, "CorruptRecCol", format)
+          tablePath, TableValidator.CorruptCol, format)
         val summary = TypedChecks.summarize(TypedChecks.lexical(df, meta), meta)
         if (summary.exists(!_.passed))
           Sources.writeBadRows(
@@ -84,15 +84,10 @@ object Main {
           System.err.println(e.getMessage)
           sys.exit(2)
       }
-    val spark = SparkSession.builder()
-      .appName("graft-validator")
-      // default for direct `runMain`; spark-submit's --master overrides
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER points the run at a cluster; unset, it runs
+    // on local[cpus]
+    val spark = Session.create("graft-validator",
+      sys.env.get("SPARK_GRAFT_MASTER").map("spark.master" -> _).toSeq: _*)
     val code =
       try run(spark, baseDir, table, format)
       finally spark.stop()

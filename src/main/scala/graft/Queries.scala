@@ -1735,133 +1735,57 @@ object Queries {
        ORDER BY month"""
 
   // ------------------------------------------------------------ registry
-  val relational: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg _),
-    "q2_filter_project" -> (q2FilterProject _),
-    "q3_join_agg" -> (q3JoinAgg _),
-    "q4_sort_limit" -> (q4SortLimit _),
-    "q5_multi_join" -> (q5MultiJoin _),
-    "q6_window" -> (q6Window _),
-    "q7_distinct" -> (q7Distinct _),
-    "q8_setops" -> (q8SetOps _),
-    "q9_semi_anti" -> (q9SemiAnti _),
-    "q10_rollup" -> (q10Rollup _),
-    "q11_above_avg" -> (q11AboveAvg _),
-    "q12_conditional" -> (q12Conditional _),
-    "q13_strings" -> (q13Strings _),
-    "q14_dates" -> (q14Dates _),
-    "q15_pivot" -> (q15Pivot _),
-    "q16_group_concat" -> (q16GroupConcat _),
-    "q17_events_hourly" -> (q17EventsHourly _),
-    "q18_sessionize" -> (q18Sessionize _),
-    "q19_topk_per_group" -> (q19TopKPerGroup _),
-    "q20_agg_join" -> (q20AggJoin _),
-    "q21_asof" -> (q21Asof _),
-    "q22_percentiles" -> (q22Percentiles _),
-    "q23_approx_percentiles" -> (q23ApproxPercentiles _),
-    "q24_cube" -> (q24Cube _),
-    "q25_lead_lag" -> (q25LeadLag _),
-    "q26_unpivot" -> (q26Unpivot _),
-    "q27_grouping_sets" -> (q27GroupingSets _),
-    "q28_correlated" -> (q28Correlated _),
-    "q29_recursive" -> (q29Recursive _),
-    "q30_moving_avg" -> (q30MovingAvg _),
-    "q31_lateral_topk" -> (q31Lateral _),
-    "q32_set_ops" -> (q32SetOps _),
-    "q33_range_frame" -> (q33RangeFrame _),
-    "q34_dist_rank" -> (q34DistRank _),
-    "q35_not_in_null" -> (q35NotInNull _),
-    "q36_pagination" -> (q36Pagination _),
-    "q37_filtered_agg" -> (q37FilteredAgg _),
-    "q38_scalar_subqueries" -> (q38ScalarSubqueries _),
-    "q39_group_by_all" -> (q39GroupByAll _),
-    "q40_bag_set_ops" -> (q40BagSetOps _),
-    "q41_ordered_set" -> (q41OrderedSet _),
-    "q42_window_distinct" -> (q42WindowDistinct _),
-    "q43_hash_sample" -> (q43HashSample _),
-    "q44_locf" -> (q44Locf _),
-    "q45_exists" -> (q45Exists _),
-    "q46_tz_calendar" -> (q46TzCalendar _),
-    "q47_iso_weeks" -> (q47IsoWeeks _),
-    "q48_billing_periods" -> (q48BillingPeriods _),
-    "q49_null_safe_join" -> (q49NullSafeJoin _),
-    "q50_recursive_spine" -> (q50RecursiveSpine _),
-    "q51_keyed_range_frame" -> (q51KeyedRangeFrame _),
-    "q52_qualify_ties" -> (q52QualifyTies _)
-  )
-
-  val relationalOracles: Map[String, String] = Map(
-    "q1_agg" -> q1Oracle,
-    "q2_filter_project" -> q2Oracle,
-    "q3_join_agg" -> q3Oracle,
-    "q4_sort_limit" -> q4Oracle,
-    "q5_multi_join" -> q5Oracle,
-    "q6_window" -> q6Oracle,
-    "q7_distinct" -> q7Oracle,
-    "q8_setops" -> q8Oracle,
-    "q9_semi_anti" -> q9Oracle,
-    "q10_rollup" -> q10Oracle,
-    "q11_above_avg" -> q11Oracle,
-    "q12_conditional" -> q12Oracle,
-    "q13_strings" -> q13Oracle,
-    "q14_dates" -> q14Oracle,
-    "q15_pivot" -> q15Oracle,
-    "q16_group_concat" -> q16Oracle,
-    "q17_events_hourly" -> q17Oracle,
-    "q18_sessionize" -> q18Oracle,
-    "q19_topk_per_group" -> q19Oracle,
-    "q20_agg_join" -> q20Oracle,
-    "q21_asof" -> q21Oracle,
-    "q22_percentiles" -> q22Oracle,
-    "q23_approx_percentiles" -> q23Oracle,
-    "q24_cube" -> q24Oracle,
-    "q25_lead_lag" -> q25Oracle,
-    "q26_unpivot" -> q26Oracle,
-    "q27_grouping_sets" -> q27Oracle,
-    "q28_correlated" -> q28Oracle,
-    "q29_recursive" -> q29Oracle,
-    "q30_moving_avg" -> q30Oracle,
-    "q31_lateral_topk" -> q31Oracle,
-    "q32_set_ops" -> q32Oracle,
-    "q33_range_frame" -> q33Oracle,
-    "q34_dist_rank" -> q34Oracle,
-    "q35_not_in_null" -> q35Oracle,
-    "q36_pagination" -> q36Oracle,
-    "q37_filtered_agg" -> q37Oracle,
-    "q38_scalar_subqueries" -> q38Oracle,
-    "q39_group_by_all" -> q39Oracle,
-    "q40_bag_set_ops" -> q40Oracle,
-    "q41_ordered_set" -> q41Oracle,
-    "q42_window_distinct" -> q42Oracle,
-    "q43_hash_sample" -> q43Oracle,
-    "q44_locf" -> q44Oracle,
-    "q45_exists" -> q45Oracle,
-    "q46_tz_calendar" -> q46Oracle,
-    "q47_iso_weeks" -> q47Oracle,
-    "q48_billing_periods" -> q48Oracle,
-    "q49_null_safe_join" -> q49Oracle,
-    "q50_recursive_spine" -> q50Oracle,
-    "q51_keyed_range_frame" -> q51Oracle,
-    "q52_qualify_ties" -> q52Oracle
-  )
-
-  // lazy: a caller may initialize a contributing registry object FIRST
-  // (e.g. a spec touching StreamGates directly), and StreamGates's own
-  // init references this object for its batch-twin oracles — an eager
-  // concat here would read that half-initialized registry as null
-  lazy val all: Map[String, (SparkSession, String) => DataFrame] =
-    relational ++ ops.TextOps.queries ++ ops.FuzzyDedup.queries ++
-      ops.Similarity.queries ++ ops.Multimodal.queries ++
-      ops.CorpusOps.queries ++ ops.GraphOps.queries ++
-      ops.SqlSurface.queries ++
-      streaming.StreamGates.queries ++
-      validate.ValidationQueries.queries
-
-  lazy val oracles: Map[String, String] =
-    relationalOracles ++ ops.TextOps.oracles ++ ops.FuzzyDedup.oracles ++
-      ops.Similarity.oracles ++ ops.Multimodal.oracles ++
-      ops.CorpusOps.oracles ++ ops.GraphOps.oracles ++
-      ops.SqlSurface.oracles ++
-      streaming.StreamGates.oracles ++
-      validate.ValidationQueries.oracles
+  val gates: Seq[Gate] = Seq(
+    Gate("q1_agg", q1Agg, q1Oracle),
+    Gate("q2_filter_project", q2FilterProject, q2Oracle),
+    Gate("q3_join_agg", q3JoinAgg, q3Oracle),
+    Gate("q4_sort_limit", q4SortLimit, q4Oracle),
+    Gate("q5_multi_join", q5MultiJoin, q5Oracle),
+    Gate("q6_window", q6Window, q6Oracle),
+    Gate("q7_distinct", q7Distinct, q7Oracle),
+    Gate("q8_setops", q8SetOps, q8Oracle),
+    Gate("q9_semi_anti", q9SemiAnti, q9Oracle),
+    Gate("q10_rollup", q10Rollup, q10Oracle),
+    Gate("q11_above_avg", q11AboveAvg, q11Oracle),
+    Gate("q12_conditional", q12Conditional, q12Oracle),
+    Gate("q13_strings", q13Strings, q13Oracle),
+    Gate("q14_dates", q14Dates, q14Oracle),
+    Gate("q15_pivot", q15Pivot, q15Oracle),
+    Gate("q16_group_concat", q16GroupConcat, q16Oracle),
+    Gate("q17_events_hourly", q17EventsHourly, q17Oracle),
+    Gate("q18_sessionize", q18Sessionize, q18Oracle),
+    Gate("q19_topk_per_group", q19TopKPerGroup, q19Oracle),
+    Gate("q20_agg_join", q20AggJoin, q20Oracle),
+    Gate("q21_asof", q21Asof, q21Oracle),
+    Gate("q22_percentiles", q22Percentiles, q22Oracle),
+    Gate("q23_approx_percentiles", q23ApproxPercentiles, q23Oracle),
+    Gate("q24_cube", q24Cube, q24Oracle),
+    Gate("q25_lead_lag", q25LeadLag, q25Oracle),
+    Gate("q26_unpivot", q26Unpivot, q26Oracle),
+    Gate("q27_grouping_sets", q27GroupingSets, q27Oracle),
+    Gate("q28_correlated", q28Correlated, q28Oracle),
+    Gate("q29_recursive", q29Recursive, q29Oracle),
+    Gate("q30_moving_avg", q30MovingAvg, q30Oracle),
+    Gate("q31_lateral_topk", q31Lateral, q31Oracle),
+    Gate("q32_set_ops", q32SetOps, q32Oracle),
+    Gate("q33_range_frame", q33RangeFrame, q33Oracle),
+    Gate("q34_dist_rank", q34DistRank, q34Oracle),
+    Gate("q35_not_in_null", q35NotInNull, q35Oracle),
+    Gate("q36_pagination", q36Pagination, q36Oracle),
+    Gate("q37_filtered_agg", q37FilteredAgg, q37Oracle),
+    Gate("q38_scalar_subqueries", q38ScalarSubqueries, q38Oracle),
+    Gate("q39_group_by_all", q39GroupByAll, q39Oracle),
+    Gate("q40_bag_set_ops", q40BagSetOps, q40Oracle),
+    Gate("q41_ordered_set", q41OrderedSet, q41Oracle),
+    Gate("q42_window_distinct", q42WindowDistinct, q42Oracle),
+    Gate("q43_hash_sample", q43HashSample, q43Oracle),
+    Gate("q44_locf", q44Locf, q44Oracle),
+    Gate("q45_exists", q45Exists, q45Oracle),
+    Gate("q46_tz_calendar", q46TzCalendar, q46Oracle),
+    Gate("q47_iso_weeks", q47IsoWeeks, q47Oracle),
+    Gate("q48_billing_periods", q48BillingPeriods, q48Oracle),
+    Gate("q49_null_safe_join", q49NullSafeJoin, q49Oracle),
+    Gate("q50_recursive_spine", q50RecursiveSpine, q50Oracle),
+    Gate("q51_keyed_range_frame", q51KeyedRangeFrame, q51Oracle),
+    Gate("q52_qualify_ties", q52QualifyTies, q52Oracle))
 }

@@ -28,17 +28,24 @@ object ParquetMeta {
 
   /** Total committed rows across the parquet data files under each of
     * `dirs` (a bare file path also works). Only `part-*` data files
-    * count — `_SUCCESS`, `_spark_metadata`, and checksum side files are
-    * skipped, matching what a Spark scan of the directory reads. */
+    * count, and none under a `_`- or `.`-prefixed directory — a
+    * leftover `_temporary` attempt of an aborted task included —
+    * matching what a Spark scan of the directory reads. Local
+    * filesystem paths only. */
   def rowCount(dirs: String*): Long = dirs.iterator.map { d =>
     val root = Paths.get(d)
     if (Files.isRegularFile(root)) footerRows(root)
     else {
+      def hiddenDir(p: Path): Boolean =
+        root.relativize(p.getParent).iterator().asScala.exists { c =>
+          val n = c.toString
+          n.startsWith("_") || n.startsWith(".")
+        }
       val s = Files.walk(root)
       try s.iterator().asScala
         .filter(p => Files.isRegularFile(p) &&
           p.getFileName.toString.startsWith("part-") &&
-          p.getFileName.toString.endsWith(".parquet"))
+          p.getFileName.toString.endsWith(".parquet") && !hiddenDir(p))
         .map(footerRows).sum
       finally s.close()
     }

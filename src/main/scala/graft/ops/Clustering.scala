@@ -111,8 +111,6 @@ object Clustering {
       }
       rounds += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged in $rounds rounds")
     // fail LOUDLY rather than emit silently-wrong clusters: with path
     // compression, exceeding the guard needs a component of diameter
     // ~2^100 — i.e. broken input, not scale

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Corpus-preparation operators — the steps between a cleaned corpus and
   * training shards: chunking long documents to the context budget,
@@ -4596,6 +4596,7 @@ object CorpusOps {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
     val prevA = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     val prevF = spark.conf.get("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
+    val prevP = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32k")
@@ -4604,6 +4605,11 @@ object CorpusOps {
     // partition is "only" ~5x the median, exactly the default factor —
     // pin 2x so the gate tests the SPLIT mechanism, not the boundary.
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
+    // Skew is judged against the MEDIAN reduce partition, so with the
+    // session's width at one core there is one partition, it is the
+    // median, and nothing is ever skewed: pin the join's width to the
+    // fact's 8 map slices so the split is exercised on any box.
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try {
       val agg = fact.join(dim, "k")
         .groupBy("g")
@@ -4629,6 +4635,7 @@ object CorpusOps {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", prevT)
       spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", prevA)
       spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", prevF)
+      spark.conf.set("spark.sql.shuffle.partitions", prevP)
     }
   }
 
@@ -8584,261 +8591,131 @@ object CorpusOps {
          TRUE AS union_ok, TRUE AS direct_ok, TRUE AS merge_ok
        FROM events GROUP BY 1 ORDER BY month"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d230_dpp_prune" -> (d230DppPrune _),
-    "d232_hll_rollup" -> (d232HllRollup _),
-    "d171_loo_influence" -> (d171LooInfluence _),
-    "d172_source_affinity" -> (d172SourceAffinity _),
-    "d190_column_profile" -> (d190ColumnProfile _),
-    "d191_winsor_audit" -> (d191WinsorAudit _),
-    "d193_typed_variance" -> (d193TypedVariance _),
-    "d194_seasonal_backtest" -> (d194SeasonalBacktest _),
-    "d199_decayed_engagement" -> (d199DecayedEngagement _),
-    "d200_compaction_plan" -> (d200CompactionPlan _),
-    "d201_file_skipping" -> (d201FileSkipping _),
-    "d202_zorder_audit" -> (d202ZorderAudit _),
-    "d203_deletion_sweep" -> (d203DeletionSweep _),
-    "d213_peak_concurrency" -> (d213PeakConcurrency _),
-    "d214_variant_extract" -> (d214VariantExtract _),
-    "d188_lorenz_mass" -> (d188LorenzMass _),
-    "d189_weekly_profile" -> (d189WeeklyProfile _),
-    "d185_wilson_reach" -> (d185WilsonReach _),
-    "d186_cusum_change" -> (d186CusumChange _),
-    "d183_source_perplexity" -> (d183SourcePerplexity _),
-    "d184_hill_tail" -> (d184HillTail _),
-    "d181_good_turing" -> (d181GoodTuring _),
-    "d182_burstiness" -> (d182Burstiness _),
-    "d177_wasserstein_drift" -> (d177WassersteinDrift _),
-    "d178_temperature_mix" -> (d178TemperatureMix _),
-    "d173_gap_fill" -> (d173GapFill _),
-    "d174_source_lang_nmi" -> (d174SourceLangNmi _),
-    "d175_neyman_sample" -> (d175NeymanSample _),
-    "d176_daily_acf" -> (d176DailyAcf _),
-    "d168_script_profile" -> (d168ScriptProfile _),
-    "d169_contract_audit" -> (d169ContractAudit _),
-    "d165_auc" -> (d165Auc _),
-    "d166_l_diversity" -> (d166LDiversity _),
-    "d167_group_folds" -> (d167GroupFolds _),
-    "d164_psi_drift" -> (d164PsiDrift _),
-    "d162_coverage_gaps" -> (d162CoverageGaps _),
-    "d163_quartile_bins" -> (d163QuartileBins _),
-    "d160_apportion" -> (d160Apportion _),
-    "d161_benford_digits" -> (d161BenfordDigits _),
-    "d156_dpp_scan" -> (d156DppScan _),
-    "d157_weighted_quantiles" -> (d157WeightedQuantiles _),
-    "d158_bloom_join" -> (d158BloomJoin _),
-    "d153_asof_join" -> (d153AsofJoin _),
-    "d154_quantile_audit" -> (d154QuantileAudit _),
-    "d155_prefix_ssjoin" -> (d155PrefixSsjoin _),
-    "d150_ndcg_eval" -> (d150NdcgEval _),
-    "d151_temporal_split" -> (d151TemporalSplit _),
-    "d152_triangle_count" -> (d152TriangleCount _),
-    "d147_kmv_overlap" -> (d147KmvOverlap _),
-    "d148_schema_evolution" -> (d148SchemaEvolution _),
-    "d149_decay_score" -> (d149DecayScore _),
-    "d142_interval_join" -> (d142IntervalJoin _),
-    "d144_sliding_distinct" -> (d144SlidingDistinct _),
-    "d146_range_shards" -> (d146RangeShards _),
-    "d128_salted_join" -> (d128SaltedJoin _),
-    "d138_aqe_skew_join" -> (d138AqeSkewJoin _),
-    "d140_reservoir_per_key" -> (d140ReservoirPerKey _),
-    "d141_changelog_apply" -> (d141ChangelogApply _),
-    "d130_linear_probe" -> (d130LinearProbe _),
-    "d131_cohens_kappa" -> (d131CohensKappa _),
-    "d133_incremental_stats" -> (d133IncrementalStats _),
-    "d134_scd2_intervals" -> (d134Scd2Intervals _),
-    "d135_fk_audit" -> (d135FkAudit _),
-    "d136_sequence_packing" -> (d136SequencePacking _),
-    "d137_approx_distinct" -> (d137ApproxDistinct _),
-    "d126_shard_gate" -> (d126ShardGate _),
-    "d119_k_anonymity" -> (d119KAnonymity _),
-    "d120_heaps_growth" -> (d120HeapsGrowth _),
-    "d121_robust_outliers" -> (d121RobustOutliers _),
-    "d122_dp_release" -> (d122DpRelease _),
-    "d123_session_paths" -> (d123SessionPaths _),
-    "d124_rfm_features" -> (d124RfmFeatures _),
-    "d125_join_cardinality" -> (d125JoinCardinality _),
-    "d113_token_entropy" -> (d113TokenEntropy _),
-    "d114_ks_drift" -> (d114KsDrift _),
-    "d115_gini_sources" -> (d115GiniSources _),
-    "d116_feature_hash" -> (d116FeatureHash _),
-    "d117_chi2_terms" -> (d117Chi2Terms _),
-    "d118_value_trend" -> (d118ValueTrend _),
-    "d102_dsir_weights" -> (d102DsirWeights _),
-    "d103_ab_test" -> (d103AbTest _),
-    "d106_eval_coverage" -> (d106EvalCoverage _),
-    "d108_poisson_bootstrap" -> (d108PoissonBootstrap _),
-    "d109_retention_cohorts" -> (d109RetentionCohorts _),
-    "d71_heavy_hitters" -> (d71HeavyHitters _),
-    "d72_zipf_fit" -> (d72ZipfFit _),
-    "d73_key_skew" -> (d73KeySkew _),
-    "d74_bpe_merges" -> (d74BpeMerges _),
-    "d75_zorder_layout" -> (d75ZorderLayout _),
-    "d77_snapshot_diff" -> (d77SnapshotDiff _),
-    "d78_weighted_sample" -> (d78WeightedSample _),
-    "d79_event_debounce" -> (d79EventDebounce _),
-    "d80_training_sequences" -> (d80TrainingSequences _),
-    "d85_cdc_chunks" -> (d85CdcChunks _),
-    "d86_ordered_funnel" -> (d86OrderedFunnel _),
-    "d88_rate_anomaly" -> (d88RateAnomaly _),
-    "d89_score_calibration" -> (d89ScoreCalibration _),
-    "d90_event_transitions" -> (d90EventTransitions _),
-    "d91_pmi_collocations" -> (d91PmiCollocations _),
-    "d92_skew_sessions" -> (d92SkewSessions _),
-    "d93_bucketed_join" -> (d93BucketedJoin _),
-    "d94_json_props" -> (d94JsonProps _),
-    "d95_partitioned_scan" -> (d95PartitionedScan _),
-    "d96_props_schema" -> (d96PropsSchema _),
-    "d97_attribution" -> (d97Attribution _),
-    "d23_chunking" -> (d23Chunking _),
-    "d24_tfidf" -> (d24Tfidf _),
-    "d25_surprisal" -> (d25Surprisal _),
-    "d56_curriculum_rank" -> (d56CurriculumRank _),
-    "d61_token_budget" -> (d61TokenBudget _),
-    "d41_bigram_surprisal" -> (d41BigramSurprisal _),
-    "d26_pii_scrub" -> (d26PiiScrub _),
-    "d28_cardinality" -> (d28Cardinality _),
-    "d29_curation_gate" -> (d29CurationGate _),
-    "d31_dup_report" -> (d31DupReport _),
-    "d32_integrity_audit" -> (d32IntegrityAudit _),
-    "d33_train_split" -> (d33TrainSplit _),
-    "d60_data_card" -> (d60DataCard _),
-    "d62_split_drift" -> (d62SplitDrift _),
-    "d63_normalize" -> (d63Normalize _),
-    "d65_salted_enrich" -> (d65SaltedEnrich _),
-    "d34_boilerplate" -> (d34Boilerplate _),
-    "d58_boiler_scrub" -> (d58BoilerScrub _),
-    "d35_source_overlap" -> (d35SourceOverlap _),
-    "d37_bm25" -> (d37Bm25 _),
-    "d38_funnel" -> (d38Funnel _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d150_ndcg_eval" -> d150Oracle,
-    "d151_temporal_split" -> d151Oracle,
-    "d152_triangle_count" -> d152Oracle,
-    "d153_asof_join" -> d153Oracle,
-    "d156_dpp_scan" -> d156Oracle,
-    "d160_apportion" -> d160Oracle,
-    "d162_coverage_gaps" -> d162Oracle,
-    "d164_psi_drift" -> d164Oracle,
-    "d165_auc" -> d165Oracle,
-    "d166_l_diversity" -> d166Oracle,
-    "d167_group_folds" -> d167Oracle,
-    "d168_script_profile" -> d168Oracle,
-    "d169_contract_audit" -> d169Oracle,
-    "d171_loo_influence" -> d171Oracle,
-    "d172_source_affinity" -> d172Oracle,
-    "d173_gap_fill" -> d173Oracle,
-    "d177_wasserstein_drift" -> d177Oracle,
-    "d178_temperature_mix" -> d178Oracle,
-    "d181_good_turing" -> d181Oracle,
-    "d182_burstiness" -> d182Oracle,
-    "d183_source_perplexity" -> d183Oracle,
-    "d184_hill_tail" -> d184Oracle,
-    "d185_wilson_reach" -> d185Oracle,
-    "d186_cusum_change" -> d186Oracle,
-    "d188_lorenz_mass" -> d188Oracle,
-    "d189_weekly_profile" -> d189Oracle,
-    "d190_column_profile" -> d190Oracle,
-    "d191_winsor_audit" -> d191Oracle,
-    "d193_typed_variance" -> d193Oracle,
-    "d194_seasonal_backtest" -> d194Oracle,
-    "d199_decayed_engagement" -> d199Oracle,
-    "d200_compaction_plan" -> d200Oracle,
-    "d201_file_skipping" -> d201Oracle,
-    "d202_zorder_audit" -> d202Oracle,
-    "d203_deletion_sweep" -> d203Oracle,
-    "d213_peak_concurrency" -> d213Oracle,
-    "d214_variant_extract" -> d214Oracle,
-    "d230_dpp_prune" -> d230Oracle,
-    "d232_hll_rollup" -> d232Oracle,
-    "d174_source_lang_nmi" -> d174Oracle,
-    "d175_neyman_sample" -> d175Oracle,
-    "d176_daily_acf" -> d176Oracle,
-    "d163_quartile_bins" -> d163Oracle,
-    "d161_benford_digits" -> d161Oracle,
-    "d157_weighted_quantiles" -> d157Oracle,
-    "d158_bloom_join" -> d158Oracle,
-    "d154_quantile_audit" -> d154Oracle,
-    "d155_prefix_ssjoin" -> d155Oracle,
-    "d147_kmv_overlap" -> d147Oracle,
-    "d148_schema_evolution" -> d148Oracle,
-    "d149_decay_score" -> d149Oracle,
-    "d142_interval_join" -> d142Oracle,
-    "d144_sliding_distinct" -> d144Oracle,
-    "d146_range_shards" -> d146Oracle,
-    "d119_k_anonymity" -> d119Oracle,
-    "d120_heaps_growth" -> d120Oracle,
-    "d121_robust_outliers" -> d121Oracle,
-    "d122_dp_release" -> d122Oracle,
-    "d123_session_paths" -> d123Oracle,
-    "d124_rfm_features" -> d124Oracle,
-    "d125_join_cardinality" -> d125Oracle,
-    "d126_shard_gate" -> d126Oracle,
-    "d128_salted_join" -> d128Oracle,
-    "d138_aqe_skew_join" -> d138Oracle,
-    "d140_reservoir_per_key" -> d140Oracle,
-    "d141_changelog_apply" -> d141Oracle,
-    "d130_linear_probe" -> d130Oracle,
-    "d131_cohens_kappa" -> d131Oracle,
-    "d133_incremental_stats" -> d133Oracle,
-    "d134_scd2_intervals" -> d134Oracle,
-    "d135_fk_audit" -> d135Oracle,
-    "d136_sequence_packing" -> d136Oracle,
-    "d137_approx_distinct" -> d137Oracle,
-    "d113_token_entropy" -> d113Oracle,
-    "d114_ks_drift" -> d114Oracle,
-    "d115_gini_sources" -> d115Oracle,
-    "d116_feature_hash" -> d116Oracle,
-    "d117_chi2_terms" -> d117Oracle,
-    "d118_value_trend" -> d118Oracle,
-    "d102_dsir_weights" -> d102Oracle,
-    "d103_ab_test" -> d103Oracle,
-    "d106_eval_coverage" -> d106Oracle,
-    "d108_poisson_bootstrap" -> d108Oracle,
-    "d109_retention_cohorts" -> d109Oracle,
-    "d71_heavy_hitters" -> d71Oracle,
-    "d72_zipf_fit" -> d72Oracle,
-    "d73_key_skew" -> d73Oracle,
-    "d74_bpe_merges" -> d74Oracle,
-    "d75_zorder_layout" -> d75Oracle,
-    "d77_snapshot_diff" -> d77Oracle,
-    "d78_weighted_sample" -> d78Oracle,
-    "d79_event_debounce" -> d79Oracle,
-    "d80_training_sequences" -> d80Oracle,
-    "d85_cdc_chunks" -> d85Oracle,
-    "d86_ordered_funnel" -> d86Oracle,
-    "d88_rate_anomaly" -> d88Oracle,
-    "d89_score_calibration" -> d89Oracle,
-    "d90_event_transitions" -> d90Oracle,
-    "d91_pmi_collocations" -> d91Oracle,
-    "d92_skew_sessions" -> d92Oracle,
-    "d93_bucketed_join" -> d93Oracle,
-    "d94_json_props" -> d94Oracle,
-    "d95_partitioned_scan" -> d95Oracle,
-    "d96_props_schema" -> d96Oracle,
-    "d97_attribution" -> d97Oracle,
-    "d23_chunking" -> d23Oracle,
-    "d24_tfidf" -> d24Oracle,
-    "d25_surprisal" -> d25Oracle,
-    "d56_curriculum_rank" -> d56Oracle,
-    "d61_token_budget" -> d61Oracle,
-    "d41_bigram_surprisal" -> d41Oracle,
-    "d26_pii_scrub" -> d26Oracle,
-    "d28_cardinality" -> d28Oracle,
-    "d29_curation_gate" -> d29Oracle,
-    "d31_dup_report" -> d31Oracle,
-    "d32_integrity_audit" -> d32Oracle,
-    "d33_train_split" -> d33Oracle,
-    "d60_data_card" -> d60Oracle,
-    "d62_split_drift" -> d62Oracle,
-    "d63_normalize" -> d63Oracle,
-    "d65_salted_enrich" -> d65Oracle,
-    "d34_boilerplate" -> d34Oracle,
-    "d58_boiler_scrub" -> d58Oracle,
-    "d35_source_overlap" -> d35Oracle,
-    "d37_bm25" -> d37Oracle,
-    "d38_funnel" -> d38Oracle
-  )
+  val gates: Seq[Gate] = Seq(
+    Gate("d230_dpp_prune", d230DppPrune, d230Oracle),
+    Gate("d232_hll_rollup", d232HllRollup, d232Oracle),
+    Gate("d171_loo_influence", d171LooInfluence, d171Oracle),
+    Gate("d172_source_affinity", d172SourceAffinity, d172Oracle),
+    Gate("d190_column_profile", d190ColumnProfile, d190Oracle),
+    Gate("d191_winsor_audit", d191WinsorAudit, d191Oracle),
+    Gate("d193_typed_variance", d193TypedVariance, d193Oracle),
+    Gate("d194_seasonal_backtest", d194SeasonalBacktest, d194Oracle),
+    Gate("d199_decayed_engagement", d199DecayedEngagement, d199Oracle),
+    Gate("d200_compaction_plan", d200CompactionPlan, d200Oracle),
+    Gate("d201_file_skipping", d201FileSkipping, d201Oracle),
+    Gate("d202_zorder_audit", d202ZorderAudit, d202Oracle),
+    Gate("d203_deletion_sweep", d203DeletionSweep, d203Oracle),
+    Gate("d213_peak_concurrency", d213PeakConcurrency, d213Oracle),
+    Gate("d214_variant_extract", d214VariantExtract, d214Oracle),
+    Gate("d188_lorenz_mass", d188LorenzMass, d188Oracle),
+    Gate("d189_weekly_profile", d189WeeklyProfile, d189Oracle),
+    Gate("d185_wilson_reach", d185WilsonReach, d185Oracle),
+    Gate("d186_cusum_change", d186CusumChange, d186Oracle),
+    Gate("d183_source_perplexity", d183SourcePerplexity, d183Oracle),
+    Gate("d184_hill_tail", d184HillTail, d184Oracle),
+    Gate("d181_good_turing", d181GoodTuring, d181Oracle),
+    Gate("d182_burstiness", d182Burstiness, d182Oracle),
+    Gate("d177_wasserstein_drift", d177WassersteinDrift, d177Oracle),
+    Gate("d178_temperature_mix", d178TemperatureMix, d178Oracle),
+    Gate("d173_gap_fill", d173GapFill, d173Oracle),
+    Gate("d174_source_lang_nmi", d174SourceLangNmi, d174Oracle),
+    Gate("d175_neyman_sample", d175NeymanSample, d175Oracle),
+    Gate("d176_daily_acf", d176DailyAcf, d176Oracle),
+    Gate("d168_script_profile", d168ScriptProfile, d168Oracle),
+    Gate("d169_contract_audit", d169ContractAudit, d169Oracle),
+    Gate("d165_auc", d165Auc, d165Oracle),
+    Gate("d166_l_diversity", d166LDiversity, d166Oracle),
+    Gate("d167_group_folds", d167GroupFolds, d167Oracle),
+    Gate("d164_psi_drift", d164PsiDrift, d164Oracle),
+    Gate("d162_coverage_gaps", d162CoverageGaps, d162Oracle),
+    Gate("d163_quartile_bins", d163QuartileBins, d163Oracle),
+    Gate("d160_apportion", d160Apportion, d160Oracle),
+    Gate("d161_benford_digits", d161BenfordDigits, d161Oracle),
+    Gate("d156_dpp_scan", d156DppScan, d156Oracle),
+    Gate("d157_weighted_quantiles", d157WeightedQuantiles, d157Oracle),
+    Gate("d158_bloom_join", d158BloomJoin, d158Oracle),
+    Gate("d153_asof_join", d153AsofJoin, d153Oracle),
+    Gate("d154_quantile_audit", d154QuantileAudit, d154Oracle),
+    Gate("d155_prefix_ssjoin", d155PrefixSsjoin, d155Oracle),
+    Gate("d150_ndcg_eval", d150NdcgEval, d150Oracle),
+    Gate("d151_temporal_split", d151TemporalSplit, d151Oracle),
+    Gate("d152_triangle_count", d152TriangleCount, d152Oracle),
+    Gate("d147_kmv_overlap", d147KmvOverlap, d147Oracle),
+    Gate("d148_schema_evolution", d148SchemaEvolution, d148Oracle),
+    Gate("d149_decay_score", d149DecayScore, d149Oracle),
+    Gate("d142_interval_join", d142IntervalJoin, d142Oracle),
+    Gate("d144_sliding_distinct", d144SlidingDistinct, d144Oracle),
+    Gate("d146_range_shards", d146RangeShards, d146Oracle),
+    Gate("d128_salted_join", d128SaltedJoin, d128Oracle),
+    Gate("d138_aqe_skew_join", d138AqeSkewJoin, d138Oracle),
+    Gate("d140_reservoir_per_key", d140ReservoirPerKey, d140Oracle),
+    Gate("d141_changelog_apply", d141ChangelogApply, d141Oracle),
+    Gate("d130_linear_probe", d130LinearProbe, d130Oracle),
+    Gate("d131_cohens_kappa", d131CohensKappa, d131Oracle),
+    Gate("d133_incremental_stats", d133IncrementalStats, d133Oracle),
+    Gate("d134_scd2_intervals", d134Scd2Intervals, d134Oracle),
+    Gate("d135_fk_audit", d135FkAudit, d135Oracle),
+    Gate("d136_sequence_packing", d136SequencePacking, d136Oracle),
+    Gate("d137_approx_distinct", d137ApproxDistinct, d137Oracle),
+    Gate("d126_shard_gate", d126ShardGate, d126Oracle),
+    Gate("d119_k_anonymity", d119KAnonymity, d119Oracle),
+    Gate("d120_heaps_growth", d120HeapsGrowth, d120Oracle),
+    Gate("d121_robust_outliers", d121RobustOutliers, d121Oracle),
+    Gate("d122_dp_release", d122DpRelease, d122Oracle),
+    Gate("d123_session_paths", d123SessionPaths, d123Oracle),
+    Gate("d124_rfm_features", d124RfmFeatures, d124Oracle),
+    Gate("d125_join_cardinality", d125JoinCardinality, d125Oracle),
+    Gate("d113_token_entropy", d113TokenEntropy, d113Oracle),
+    Gate("d114_ks_drift", d114KsDrift, d114Oracle),
+    Gate("d115_gini_sources", d115GiniSources, d115Oracle),
+    Gate("d116_feature_hash", d116FeatureHash, d116Oracle),
+    Gate("d117_chi2_terms", d117Chi2Terms, d117Oracle),
+    Gate("d118_value_trend", d118ValueTrend, d118Oracle),
+    Gate("d102_dsir_weights", d102DsirWeights, d102Oracle),
+    Gate("d103_ab_test", d103AbTest, d103Oracle),
+    Gate("d106_eval_coverage", d106EvalCoverage, d106Oracle),
+    Gate("d108_poisson_bootstrap", d108PoissonBootstrap, d108Oracle),
+    Gate("d109_retention_cohorts", d109RetentionCohorts, d109Oracle),
+    Gate("d71_heavy_hitters", d71HeavyHitters, d71Oracle),
+    Gate("d72_zipf_fit", d72ZipfFit, d72Oracle),
+    Gate("d73_key_skew", d73KeySkew, d73Oracle),
+    Gate("d74_bpe_merges", d74BpeMerges, d74Oracle),
+    Gate("d75_zorder_layout", d75ZorderLayout, d75Oracle),
+    Gate("d77_snapshot_diff", d77SnapshotDiff, d77Oracle),
+    Gate("d78_weighted_sample", d78WeightedSample, d78Oracle),
+    Gate("d79_event_debounce", d79EventDebounce, d79Oracle),
+    Gate("d80_training_sequences", d80TrainingSequences, d80Oracle),
+    Gate("d85_cdc_chunks", d85CdcChunks, d85Oracle),
+    Gate("d86_ordered_funnel", d86OrderedFunnel, d86Oracle),
+    Gate("d88_rate_anomaly", d88RateAnomaly, d88Oracle),
+    Gate("d89_score_calibration", d89ScoreCalibration, d89Oracle),
+    Gate("d90_event_transitions", d90EventTransitions, d90Oracle),
+    Gate("d91_pmi_collocations", d91PmiCollocations, d91Oracle),
+    Gate("d92_skew_sessions", d92SkewSessions, d92Oracle),
+    Gate("d93_bucketed_join", d93BucketedJoin, d93Oracle),
+    Gate("d94_json_props", d94JsonProps, d94Oracle),
+    Gate("d95_partitioned_scan", d95PartitionedScan, d95Oracle),
+    Gate("d96_props_schema", d96PropsSchema, d96Oracle),
+    Gate("d97_attribution", d97Attribution, d97Oracle),
+    Gate("d23_chunking", d23Chunking, d23Oracle),
+    Gate("d24_tfidf", d24Tfidf, d24Oracle),
+    Gate("d25_surprisal", d25Surprisal, d25Oracle),
+    Gate("d56_curriculum_rank", d56CurriculumRank, d56Oracle),
+    Gate("d61_token_budget", d61TokenBudget, d61Oracle),
+    Gate("d41_bigram_surprisal", d41BigramSurprisal, d41Oracle),
+    Gate("d26_pii_scrub", d26PiiScrub, d26Oracle),
+    Gate("d28_cardinality", d28Cardinality, d28Oracle),
+    Gate("d29_curation_gate", d29CurationGate, d29Oracle),
+    Gate("d31_dup_report", d31DupReport, d31Oracle),
+    Gate("d32_integrity_audit", d32IntegrityAudit, d32Oracle),
+    Gate("d33_train_split", d33TrainSplit, d33Oracle),
+    Gate("d60_data_card", d60DataCard, d60Oracle),
+    Gate("d62_split_drift", d62SplitDrift, d62Oracle),
+    Gate("d63_normalize", d63Normalize, d63Oracle),
+    Gate("d65_salted_enrich", d65SaltedEnrich, d65Oracle),
+    Gate("d34_boilerplate", d34Boilerplate, d34Oracle),
+    Gate("d58_boiler_scrub", d58BoilerScrub, d58Oracle),
+    Gate("d35_source_overlap", d35SourceOverlap, d35Oracle),
+    Gate("d37_bm25", d37Bm25, d37Oracle),
+    Gate("d38_funnel", d38Funnel, d38Oracle))
 }

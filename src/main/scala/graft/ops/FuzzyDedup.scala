@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Near-duplicate detection over `documents` — the fuzzy half of the
   * dedup surface (BASELINE.json north-star; SURVEY.md §7.1 step 5).
@@ -1676,49 +1676,25 @@ object FuzzyDedup {
            10000 * neardup_tokens // total_tokens END AS neardup_bp
        FROM a"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d206_effective_tokens" -> (d206EffectiveTokens _),
-    "d101_fuzzy_match" -> (d101FuzzyMatch _),
-    "d27_incremental_novelty" -> (d27IncrementalNovelty _),
-    "d216_minhash_delta" -> (d216MinhashDelta _),
-    "d221_index_nightly" -> (d221IndexNightly _),
-    "d2_minhash_dedup" -> (d2MinhashDedup _),
-    "d84_minhash_recall" -> (d84MinhashRecall _),
-    "d3_simhash" -> (d3Simhash _),
-    "d4_ngram_jaccard" -> (d4NgramJaccard _),
-    "d15_dedup_clusters" -> (d15DedupClusters _),
-    "d16_simhash_dedup" -> (d16SimhashDedup _),
-    "d17_decontaminate" -> (d17Decontaminate _),
-    "d40_contamination_by_source" -> (d40ContaminationBySource _),
-    "d43_bloom_decontaminate" -> (d43BloomDecontaminate _),
-    "d45_decontaminate_w8" -> (d45DecontaminateW8 _),
-    "d52_containment" -> (d52Containment _),
-    "d54_split_leakage" -> (d54SplitLeakage _),
-    "d55_top_dup_clusters" -> (d55TopDupClusters _),
-    "d57_cluster_best" -> (d57ClusterBest _),
-    "d20_repetition" -> (d20Repetition _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d206_effective_tokens" -> d206Oracle,
-    "d101_fuzzy_match" -> d101Oracle,
-    "d27_incremental_novelty" -> d27Oracle,
-    "d216_minhash_delta" -> d216Oracle,
-    "d221_index_nightly" -> d221Oracle,
-    "d2_minhash_dedup" -> d2Oracle,
-    "d84_minhash_recall" -> d84Oracle,
-    "d3_simhash" -> d3Oracle,
-    "d4_ngram_jaccard" -> d4Oracle,
-    "d15_dedup_clusters" -> d15Oracle,
-    "d16_simhash_dedup" -> d16Oracle,
-    "d17_decontaminate" -> d17Oracle,
-    "d40_contamination_by_source" -> d40Oracle,
-    "d43_bloom_decontaminate" -> d43Oracle,
-    "d45_decontaminate_w8" -> d45Oracle,
-    "d52_containment" -> d52Oracle,
-    "d54_split_leakage" -> d54Oracle,
-    "d55_top_dup_clusters" -> d55Oracle,
-    "d57_cluster_best" -> d57Oracle,
-    "d20_repetition" -> d20Oracle
-  )
+  val gates: Seq[Gate] = Seq(
+    Gate("d206_effective_tokens", d206EffectiveTokens, d206Oracle),
+    Gate("d101_fuzzy_match", d101FuzzyMatch, d101Oracle),
+    Gate("d27_incremental_novelty", d27IncrementalNovelty, d27Oracle),
+    Gate("d216_minhash_delta", d216MinhashDelta, d216Oracle),
+    Gate("d221_index_nightly", d221IndexNightly, d221Oracle),
+    Gate("d2_minhash_dedup", d2MinhashDedup, d2Oracle),
+    Gate("d84_minhash_recall", d84MinhashRecall, d84Oracle),
+    Gate("d3_simhash", d3Simhash, d3Oracle),
+    Gate("d4_ngram_jaccard", d4NgramJaccard, d4Oracle),
+    Gate("d15_dedup_clusters", d15DedupClusters, d15Oracle),
+    Gate("d16_simhash_dedup", d16SimhashDedup, d16Oracle),
+    Gate("d17_decontaminate", d17Decontaminate, d17Oracle),
+    Gate("d40_contamination_by_source", d40ContaminationBySource, d40Oracle),
+    Gate("d43_bloom_decontaminate", d43BloomDecontaminate, d43Oracle),
+    Gate("d45_decontaminate_w8", d45DecontaminateW8, d45Oracle),
+    Gate("d52_containment", d52Containment, d52Oracle),
+    Gate("d54_split_leakage", d54SplitLeakage, d54Oracle),
+    Gate("d55_top_dup_clusters", d55TopDupClusters, d55Oracle),
+    Gate("d57_cluster_best", d57ClusterBest, d57Oracle),
+    Gate("d20_repetition", d20Repetition, d20Oracle))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Iterative graph analytics over the event log.
   *
@@ -132,11 +132,6 @@ object GraphOps {
   }
 
   // ---------------------------------------------------------- registry
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d98_pagerank" -> (d98PageRank _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d98_pagerank" -> d98Oracle
-  )
+  val gates: Seq[Gate] = Seq(
+    Gate("d98_pagerank", d98PageRank, d98Oracle))
 }

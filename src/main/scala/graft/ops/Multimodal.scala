@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Multimodal-column support: image/audio/video payloads as opaque
   * `binary` columns with typed metadata, plus decode/feature-extract
@@ -806,23 +806,12 @@ object Multimodal {
            AS last_batch_fill
        FROM b ORDER BY r12"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d11_multimodal_meta" -> (d11MultimodalMeta _),
-    "d70_image_dhash" -> (d70ImageDhash _),
-    "d81_audio_dhash" -> (d81AudioDhash _),
-    "d139_mp3_meta" -> (d139Mp3Meta _),
-    "d198_transcode_dups" -> (d198TranscodeDups _),
-    "d210_source_transcode_report" -> (d210SourceTranscodeReport _),
-    "d215_aspect_buckets" -> (d215AspectBuckets _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d11_multimodal_meta" -> d11Oracle,
-    "d70_image_dhash" -> d70Oracle,
-    "d81_audio_dhash" -> d81Oracle,
-    "d139_mp3_meta" -> d139Oracle,
-    "d198_transcode_dups" -> d198Oracle,
-    "d210_source_transcode_report" -> d210Oracle,
-    "d215_aspect_buckets" -> d215Oracle
-  )
+  val gates: Seq[Gate] = Seq(
+    Gate("d11_multimodal_meta", d11MultimodalMeta, d11Oracle),
+    Gate("d70_image_dhash", d70ImageDhash, d70Oracle),
+    Gate("d81_audio_dhash", d81AudioDhash, d81Oracle),
+    Gate("d139_mp3_meta", d139Mp3Meta, d139Oracle),
+    Gate("d198_transcode_dups", d198TranscodeDups, d198Oracle),
+    Gate("d210_source_transcode_report", d210SourceTranscodeReport, d210Oracle),
+    Gate("d215_aspect_buckets", d215AspectBuckets, d215Oracle))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Similarity search over the `embeddings` table
   * (vec_id, embedding: Array[Float] (64-dim), label).
@@ -2564,63 +2564,32 @@ object Similarity {
        ORDER BY p.vec_id"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d231_index_compact" -> (d231IndexCompact _),
-    "d219_ivfpq" -> (d219Ivfpq _),
-    "d224_ivfpq_refine" -> (d224IvfpqRefine _),
-    "d223_ivfpq_recall" -> (d223IvfpqRecall _),
-    "d192_embedding_norms" -> (d192EmbeddingNorms _),
-    "d217_pq_adc" -> (d217PqAdc _),
-    "d143_bitext_mining" -> (d143BitextMining _),
-    "d129_semantic_decontam" -> (d129SemanticDecontam _),
-    "d110_power_pca" -> (d110PowerPca _),
-    "d111_knn_labels" -> (d111KnnLabels _),
-    "d112_rrf_fusion" -> (d112RrfFusion _),
-    "d30_label_profiles" -> (d30LabelProfiles _),
-    "d9_cosine_topk" -> (d9CosineTopk _),
-    "d10_ann_lsh" -> (d10AnnLsh _),
-    "d12_embedding_dedup" -> (d12EmbeddingDedup _),
-    "d14_ann_ivf" -> (d14AnnIvf _),
-    "d22_embedding_clusters" -> (d22EmbeddingClusters _),
-    "d36_balanced_sample" -> (d36BalancedSample _),
-    "d42_quantization" -> (d42Quantization _),
-    "d44_balanced_quota" -> (d44BalancedQuota _),
-    "d51_quantized_ann" -> (d51QuantizedAnn _),
-    "d53_ann_recall" -> (d53AnnRecall _),
-    "d83_matryoshka_audit" -> (d83MatryoshkaAudit _),
-    "d87_hybrid_dedup" -> (d87HybridDedup _),
-    "d59_semantic_dedup" -> (d59SemanticDedup _),
-    "d67_embedding_outliers" -> (d67EmbeddingOutliers _),
-    "d69_hard_negatives" -> (d69HardNegatives _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d231_index_compact" -> d231Oracle,
-    "d219_ivfpq" -> d219Oracle,
-    "d223_ivfpq_recall" -> d223Oracle,
-    "d224_ivfpq_refine" -> d224Oracle,
-    "d192_embedding_norms" -> d192Oracle,
-    "d217_pq_adc" -> d217Oracle,
-    "d143_bitext_mining" -> d143Oracle,
-    "d129_semantic_decontam" -> d129Oracle,
-    "d110_power_pca" -> d110Oracle,
-    "d111_knn_labels" -> d111Oracle,
-    "d112_rrf_fusion" -> d112Oracle,
-    "d30_label_profiles" -> d30Oracle,
-    "d9_cosine_topk" -> d9Oracle,
-    "d10_ann_lsh" -> d10Oracle,
-    "d12_embedding_dedup" -> d12Oracle,
-    "d14_ann_ivf" -> d14Oracle,
-    "d22_embedding_clusters" -> d22Oracle,
-    "d36_balanced_sample" -> d36Oracle,
-    "d42_quantization" -> d42Oracle,
-    "d44_balanced_quota" -> d44Oracle,
-    "d51_quantized_ann" -> d51Oracle,
-    "d53_ann_recall" -> d53Oracle,
-    "d83_matryoshka_audit" -> d83Oracle,
-    "d87_hybrid_dedup" -> d87Oracle,
-    "d59_semantic_dedup" -> d59Oracle,
-    "d67_embedding_outliers" -> d67Oracle,
-    "d69_hard_negatives" -> d69Oracle
-  )
+  val gates: Seq[Gate] = Seq(
+    Gate("d231_index_compact", d231IndexCompact, d231Oracle),
+    Gate("d219_ivfpq", d219Ivfpq, d219Oracle),
+    Gate("d224_ivfpq_refine", d224IvfpqRefine, d224Oracle),
+    Gate("d223_ivfpq_recall", d223IvfpqRecall, d223Oracle),
+    Gate("d192_embedding_norms", d192EmbeddingNorms, d192Oracle),
+    Gate("d217_pq_adc", d217PqAdc, d217Oracle),
+    Gate("d143_bitext_mining", d143BitextMining, d143Oracle),
+    Gate("d129_semantic_decontam", d129SemanticDecontam, d129Oracle),
+    Gate("d110_power_pca", d110PowerPca, d110Oracle),
+    Gate("d111_knn_labels", d111KnnLabels, d111Oracle),
+    Gate("d112_rrf_fusion", d112RrfFusion, d112Oracle),
+    Gate("d30_label_profiles", d30LabelProfiles, d30Oracle),
+    Gate("d9_cosine_topk", d9CosineTopk, d9Oracle),
+    Gate("d10_ann_lsh", d10AnnLsh, d10Oracle),
+    Gate("d12_embedding_dedup", d12EmbeddingDedup, d12Oracle),
+    Gate("d14_ann_ivf", d14AnnIvf, d14Oracle),
+    Gate("d22_embedding_clusters", d22EmbeddingClusters, d22Oracle),
+    Gate("d36_balanced_sample", d36BalancedSample, d36Oracle),
+    Gate("d42_quantization", d42Quantization, d42Oracle),
+    Gate("d44_balanced_quota", d44BalancedQuota, d44Oracle),
+    Gate("d51_quantized_ann", d51QuantizedAnn, d51Oracle),
+    Gate("d53_ann_recall", d53AnnRecall, d53Oracle),
+    Gate("d83_matryoshka_audit", d83MatryoshkaAudit, d83Oracle),
+    Gate("d87_hybrid_dedup", d87HybridDedup, d87Oracle),
+    Gate("d59_semantic_dedup", d59SemanticDedup, d59Oracle),
+    Gate("d67_embedding_outliers", d67EmbeddingOutliers, d67Oracle),
+    Gate("d69_hard_negatives", d69HardNegatives, d69Oracle))
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
+import graft.{Gate, Tables}
 import graft.functions.GraftFunctions
 
 /** The engine's pure-SQL surface: pipelines expressed entirely as SQL
@@ -234,17 +234,10 @@ object SqlSurface {
 
   val d82Oracle: String = CorpusOps.d71Oracle
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d46_sql_simhash" -> (d46SqlSimhash _),
-    "d47_sql_cosine" -> (d47SqlCosine _),
-    "d48_sql_repetition" -> (d48SqlRepetition _),
-    "d49_sql_decontaminate" -> (d49SqlDecontaminate _),
-    "d82_sql_heavy_hitters" -> (d82SqlHeavyHitters _))
-
-  val oracles: Map[String, String] = Map(
-    "d46_sql_simhash" -> d46Oracle,
-    "d47_sql_cosine" -> d47Oracle,
-    "d48_sql_repetition" -> d48Oracle,
-    "d49_sql_decontaminate" -> d49Oracle,
-    "d82_sql_heavy_hitters" -> d82Oracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("d46_sql_simhash", d46SqlSimhash, d46Oracle),
+    Gate("d47_sql_cosine", d47SqlCosine, d47Oracle),
+    Gate("d48_sql_repetition", d48SqlRepetition, d48Oracle),
+    Gate("d49_sql_decontaminate", d49SqlDecontaminate, d49Oracle),
+    Gate("d82_sql_heavy_hitters", d82SqlHeavyHitters, d82Oracle))
 }

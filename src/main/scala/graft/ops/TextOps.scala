@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Text-analysis operators for large-scale training-data pipelines, over
   * the `documents` table (doc_id, text, lang, source, n_chars).
@@ -897,43 +897,22 @@ object TextOps {
        FROM allr GROUP BY lower(text), md5(lower(text))
        ORDER BY survivor_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d1_exact_dedup" -> (d1ExactDedup _),
-    "d229_collation_dedup" -> (d229CollationDedup _),
-    "d5_text_stats" -> (d5TextStats _),
-    "d6_quality_score" -> (d6QualityScore _),
-    "d7_token_count" -> (d7TokenCount _),
-    "d8_fingerprint" -> (d8Fingerprint _),
-    "d13_lang_id" -> (d13LangId _),
-    "d18_sample_mix" -> (d18SampleMix _),
-    "d39_mixture_tokens" -> (d39MixtureTokens _),
-    "d66_mixture_weights" -> (d66MixtureWeights _),
-    "d68_length_buckets" -> (d68LengthBuckets _),
-    "d19_vocab" -> (d19Vocab _),
-    "d21_packing" -> (d21Packing _),
-    "d99_epoch_mix" -> (d99EpochMix _),
-    "d132_epoch_plan" -> (d132EpochPlan _),
-    "d100_oov_rate" -> (d100OovRate _),
-    "d105_tokenizer_fertility" -> (d105TokenizerFertility _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "d1_exact_dedup" -> d1Oracle,
-    "d229_collation_dedup" -> d229Oracle,
-    "d5_text_stats" -> d5Oracle,
-    "d6_quality_score" -> d6Oracle,
-    "d7_token_count" -> d7Oracle,
-    "d8_fingerprint" -> d8Oracle,
-    "d13_lang_id" -> d13Oracle,
-    "d18_sample_mix" -> d18Oracle,
-    "d39_mixture_tokens" -> d39Oracle,
-    "d66_mixture_weights" -> d66Oracle,
-    "d68_length_buckets" -> d68Oracle,
-    "d19_vocab" -> d19Oracle,
-    "d21_packing" -> d21Oracle,
-    "d99_epoch_mix" -> d99Oracle,
-    "d132_epoch_plan" -> d132Oracle,
-    "d100_oov_rate" -> d100Oracle,
-    "d105_tokenizer_fertility" -> d105Oracle
-  )
+  val gates: Seq[Gate] = Seq(
+    Gate("d1_exact_dedup", d1ExactDedup, d1Oracle),
+    Gate("d229_collation_dedup", d229CollationDedup, d229Oracle),
+    Gate("d5_text_stats", d5TextStats, d5Oracle),
+    Gate("d6_quality_score", d6QualityScore, d6Oracle),
+    Gate("d7_token_count", d7TokenCount, d7Oracle),
+    Gate("d8_fingerprint", d8Fingerprint, d8Oracle),
+    Gate("d13_lang_id", d13LangId, d13Oracle),
+    Gate("d18_sample_mix", d18SampleMix, d18Oracle),
+    Gate("d39_mixture_tokens", d39MixtureTokens, d39Oracle),
+    Gate("d66_mixture_weights", d66MixtureWeights, d66Oracle),
+    Gate("d68_length_buckets", d68LengthBuckets, d68Oracle),
+    Gate("d19_vocab", d19Vocab, d19Oracle),
+    Gate("d21_packing", d21Packing, d21Oracle),
+    Gate("d99_epoch_mix", d99EpochMix, d99Oracle),
+    Gate("d132_epoch_plan", d132EpochPlan, d132Oracle),
+    Gate("d100_oov_rate", d100OovRate, d100Oracle),
+    Gate("d105_tokenizer_fertility", d105TokenizerFertility, d105Oracle))
 }

@@ -5,9 +5,9 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.Tables
+import graft.{Gate, Tables}
 
 /** Driver-gated STREAMING queries — until round 9 every streaming
   * operator was sbt-tested only (batch-equality in `StreamingSpec`);
@@ -49,11 +49,9 @@ object StreamGates {
     * per-batch store overhead of the previous 8 (measured r17:
     * 6-gate streaming probe 21.2 s → 16.7 s isolated — 2 partitions
     * measured no better at 16.9 s; every gate hash-identical at
-    * sf0.01/sf0.1). Env-overridable for production
-    * replays (SPARK_GRAFT_STREAM_STATE_PARTS), where a real deployment
-    * sizes it to sustained events/sec x state bytes per key. */
-  private[streaming] val StatePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS", "4")
+    * sf0.01/sf0.1). A real deployment sizes it to sustained
+    * events/sec x state bytes per key. */
+  private[streaming] val StatePartitions = "4"
 
   /** Stage `<dir>/<table>.parquet` behind a fresh symlink directory for
     * a file-stream source — per-run unique (concurrent runs can't
@@ -137,24 +135,22 @@ object StreamGates {
     * file); per-user timestamps are batch-sorted inside the state
     * function, so the counts equal the batch window formulation
     * exactly — which is precisely the claim the gate hash-checks. */
-  def d64StreamSessions(spark: SparkSession, dir: String): DataFrame =
-      withStateParts(spark) {
+  def d64StreamSessions(spark: SparkSession, dir: String): DataFrame = {
     val staged = stage(dir, "events", "graft-d64")
     // readEvents declares the µs-long ts and normalizes to a real
     // TimestampType at ingest — the same scan contract as the batch side
     val stream = EventStreams.readEvents(spark, staged.toString)
     val name = s"graft_d64_run${runSeq.incrementAndGet()}"
-    val query = EventStreams.sessionCounts(stream)
+    val query = startStateful(spark, EventStreams.sessionCounts(stream)
       .writeStream.format("memory").queryName(name)
       .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(staged)
     spark.table(name)
       .select(col("user_id"), col("n_sessions"), col("n_events"))
       .orderBy("user_id")
-  } // withStateParts
+  }
 
   /** q18's oracle verbatim — the streaming path must agree with the
     * batch sessionization definition, not a streaming-specific one. */
@@ -175,17 +171,10 @@ object StreamGates {
       val staged = stage(dir, "events", "graft-d204")
       val stream = EventStreams.readEvents(spark, staged.toString)
       val name = s"graft_d204_run${runSeq.incrementAndGet()}"
-      // one state store per shuffle partition — pin to the gate fixture
-      // and restore (the d107/d179 conf discipline)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      val query =
-        try EventStreams.sessionCountsTws(stream)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      val query = startStateful(spark, EventStreams.sessionCountsTws(stream)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("update")
+        .trigger(Trigger.AvailableNow()))
       query.awaitTermination()
       requireRocksDb(query)
       unstage(staged)
@@ -221,18 +210,11 @@ object StreamGates {
       val staged = stageWithSentinels(spark, dir, "graft-d211", Seq("flush"))
       val stream = EventStreams.readEvents(spark, staged.toString)
       val name = s"graft_d211_run${runSeq.incrementAndGet()}"
-      // one state store per shuffle partition — pin to the gate fixture
-      // and restore (the d107/d179 conf discipline)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      val query =
-        try EventStreams.closedSessionsTws(stream)
-          .filter(col("user_id") >= 0)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      val query = startStateful(spark, EventStreams.closedSessionsTws(stream)
+        .filter(col("user_id") >= 0)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow()))
       query.awaitTermination()
       requireRocksDb(query)
       unstage(staged)
@@ -302,17 +284,12 @@ object StreamGates {
       .withColumn("ingest_ts",
         timestamp_micros((col("doc_id") % 3000L + 86400L) * 1000000L))
     val name = s"graft_d225_run${runSeq.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    val query =
-      try IngestStreams.dedupedDocs(stream)
-        .select(col("text_hash"))
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val query = startStateful(spark, IngestStreams.dedupedDocs(stream)
+      .select(col("text_hash"))
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", ckpt.toString)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(staged)
     // the batch-side state read: keys held by the dedup operator's
@@ -402,17 +379,11 @@ object StreamGates {
         staged, "log.parquet", "graft-d222")
       val stream = EventStreams.readEvents(spark, staged.toString)
       val name = s"graft_d222_run${runSeq.incrementAndGet()}"
-      // one state store per shuffle partition — pin to the gate fixture
-      // and restore (the d107/d179 conf discipline)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      val query =
-        try EventStreams.sessionCountsTwsBootstrapped(stream, initial)
+      val query = startStateful(spark,
+        EventStreams.sessionCountsTwsBootstrapped(stream, initial)
           .writeStream.format("memory").queryName(name)
           .outputMode("update")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+          .trigger(Trigger.AvailableNow()))
       query.awaitTermination()
       requireRocksDb(query)
       unstage(staged)
@@ -470,18 +441,11 @@ object StreamGates {
       val staged = stageWithSentinels(spark, dir, "graft-d220", Seq("flush"))
       val stream = EventStreams.readEvents(spark, staged.toString)
       val name = s"graft_d220_run${runSeq.incrementAndGet()}"
-      // one state store per shuffle partition — pin to the gate fixture
-      // and restore (the d107/d179 conf discipline)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      val query =
-        try EventStreams.typeBurstsTws(stream)
-          .filter(col("user_id") >= 0)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      val query = startStateful(spark, EventStreams.typeBurstsTws(stream)
+        .filter(col("user_id") >= 0)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow()))
       query.awaitTermination()
       requireRocksDb(query)
       val finalState =
@@ -545,8 +509,7 @@ object StreamGates {
     * the oracle can pin deterministically. Covers the state-store
     * dedup path (d50 covers stateless broadcast maps, d64 covers
     * `mapGroupsWithState`). */
-  def d76StreamDedup(spark: SparkSession, dir: String): DataFrame =
-      withStateParts(spark) {
+  def d76StreamDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val staged = stage(dir, "documents", "graft-d76")
     val stream = spark.readStream.schema(docs.schema).parquet(staged.toString)
@@ -558,16 +521,15 @@ object StreamGates {
       .withColumn("ingest_ts",
         timestamp_micros((col("doc_id") + 86400L) * 1000000L))
     val name = s"graft_d76_run${runSeq.incrementAndGet()}"
-    val query = IngestStreams.dedupedDocs(stream)
+    val query = startStateful(spark, IngestStreams.dedupedDocs(stream)
       .select(col("text_hash"))
       .writeStream.format("memory").queryName(name)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(staged)
     spark.table(name).orderBy("text_hash")
-  } // withStateParts
+  }
 
   /** One row per distinct content — the arrival-order-free projection
     * of d1's exact dedup. */
@@ -595,20 +557,18 @@ object StreamGates {
     * all window state, which is fine for a gate over a finite table and
     * wrong for an unbounded stream — the mode choice, not the plan, is
     * what differs. */
-  def d104StreamHourly(spark: SparkSession, dir: String): DataFrame =
-      withStateParts(spark) {
+  def d104StreamHourly(spark: SparkSession, dir: String): DataFrame = {
     val staged = stage(dir, "events", "graft-d104")
     val stream = EventStreams.readEvents(spark, staged.toString)
     val name = s"graft_d104_run${runSeq.incrementAndGet()}"
-    val query = EventStreams.hourlyCounts(stream)
+    val query = startStateful(spark, EventStreams.hourlyCounts(stream)
       .writeStream.format("memory").queryName(name)
       .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(staged)
     spark.table(name).orderBy("hour", "event_type")
-  } // withStateParts
+  }
 
   /** q17's oracle verbatim — the streaming windowed aggregation must
     * agree with the batch hourly rollup definition. */
@@ -643,26 +603,18 @@ object StreamGates {
     val name = s"graft_d107_run${runSeq.incrementAndGet()}"
     // a stream-stream join allocates TWO state stores per shuffle
     // partition; at gate scale store init dominates (measured 7.5 s at
-    // 32 partitions vs 2.0 s at 8 for identical results). State
-    // partitioning is captured at query START, so pin it for this
-    // stream and restore after — production sizes this to key
-    // cardinality, the gate to its fixture (the d93 conf discipline).
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    val query =
-      try purchases
-        .join(views,
-          col("v_user") === col("user_id") &&
-            col("view_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-            col("view_ts") < col("p_ts"))
-        .select(col("p_id"), col("view_id"),
-          (unix_micros(col("p_ts")) - unix_micros(col("view_ts")))
-            .as("gap_us"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // 32 partitions vs 2.0 s at 8 for identical results)
+    val query = startStateful(spark, purchases
+      .join(views,
+        col("v_user") === col("user_id") &&
+          col("view_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
+          col("view_ts") < col("p_ts"))
+      .select(col("p_id"), col("view_id"),
+        (unix_micros(col("p_ts")) - unix_micros(col("view_ts")))
+          .as("gap_us"))
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(staged)
     spark.table(name).orderBy("p_id", "view_id")
@@ -733,8 +685,7 @@ object StreamGates {
       d127Body(spark, dir, rocksdb = true, changelog = true)))
 
   private def d127Body(spark: SparkSession, dir: String,
-      rocksdb: Boolean, changelog: Boolean = false): DataFrame =
-      withStateParts(spark) {
+      rocksdb: Boolean, changelog: Boolean = false): DataFrame = {
     val staged = Files.createTempDirectory("graft-d127-src")
     val ckpt = Files.createTempDirectory("graft-d127-ckpt")
     // split the raw file (read WITHOUT timestamp normalization, so the
@@ -746,13 +697,12 @@ object StreamGates {
     var sawRows = false
     def run(): String = {
       val name = s"graft_d127_run${runSeq.incrementAndGet()}"
-      val query = EventStreams
+      val query = startStateful(spark, EventStreams
         .hourlyCounts(EventStreams.readEvents(spark, staged.toString))
         .writeStream.format("memory").queryName(name)
         .outputMode("complete")
         .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
+        .trigger(Trigger.AvailableNow()))
       query.awaitTermination()
       if (rocksdb) requireRocksDb(query)
       sawRows ||= movedRows(query)
@@ -766,7 +716,7 @@ object StreamGates {
     // the memory table is driver-resident; the temp trees can go now
     deltree(staged); deltree(ckpt)
     spark.table(name2).orderBy("hour", "event_type")
-  } // withStateParts
+  }
 
   /** q17's oracle verbatim over the WHOLE log — only a true resume
     * (recovered state + no reprocessing) reproduces it. */
@@ -806,8 +756,7 @@ object StreamGates {
     * At scale the watermark is THE state bound: allowed lateness ×
     * input rate caps the state store; this gate is the contract for
     * what that cap costs in data. */
-  def d145StreamLateDrops(spark: SparkSession, dir: String): DataFrame =
-      withStateParts(spark) {
+  def d145StreamLateDrops(spark: SparkSession, dir: String): DataFrame = {
     val staged = Files.createTempDirectory("graft-d145-src")
     val ckpt = Files.createTempDirectory("graft-d145-ckpt")
     // the raw encoding (no ts normalization), exactly as d127 — the
@@ -825,15 +774,14 @@ object StreamGates {
     // commit log, which the final batch read consults
     val out = Files.createTempDirectory("graft-d145-out")
     def run(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val query = EventStreams
+      val query = startStateful(spark, EventStreams
         .hourlyCounts(EventStreams.readEvents(spark, staged.toString),
           delay = LateDelayStr)
         .writeStream.format("parquet")
         .option("path", out.toString)
         .outputMode("append")
         .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
+        .trigger(Trigger.AvailableNow()))
       query.awaitTermination()
       query
     }
@@ -875,7 +823,7 @@ object StreamGates {
       .localCheckpoint() // the temp sink dir can be deleted after this
     deltree(staged); deltree(ckpt); deltree(out)
     result
-  } // withStateParts
+  }
 
   /** Batch replay of the watermark semantics: on-time rows always
     * count; a late row counts iff its hour window was still open at
@@ -1134,26 +1082,19 @@ object StreamGates {
         col("event_id").as("p_id"))
       .withWatermark("p_ts", "1 hour")
     val name = s"graft_d179_run${runSeq.incrementAndGet()}"
-    // two state stores per shuffle partition — pin partitions to the
-    // gate fixture and restore (the d107 conf discipline)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    val query =
-      try purchases
-        .join(views,
-          col("v_user") === col("user_id") &&
-            col("view_ts") >=
-              col("p_ts") - expr(s"INTERVAL $OuterLookbackMin MINUTES") &&
-            col("view_ts") < col("p_ts"),
-          "left_outer")
-        .select(col("p_id"), col("view_id"),
-          (unix_micros(col("p_ts")) - unix_micros(col("view_ts")))
-            .as("gap_us"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val query = startStateful(spark, purchases
+      .join(views,
+        col("v_user") === col("user_id") &&
+          col("view_ts") >=
+            col("p_ts") - expr(s"INTERVAL $OuterLookbackMin MINUTES") &&
+          col("view_ts") < col("p_ts"),
+        "left_outer")
+      .select(col("p_id"), col("view_id"),
+        (unix_micros(col("p_ts")) - unix_micros(col("view_ts")))
+          .as("gap_us"))
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     if (rocksdb) requireRocksDb(query)
     unstage(staged)
@@ -1219,19 +1160,14 @@ object StreamGates {
     val b = EventStreams.readEvents(spark, dirB.toString)
       .withWatermark("ts", "1 hour")
     val name = s"graft_d218_run${runSeq.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    val query =
-      try a.unionByName(b)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total_value"))
-        .select(col("window.start").as("hour"), col("event_type"),
-          col("n"), col("total_value"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val query = startStateful(spark, a.unionByName(b)
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total_value"))
+      .select(col("window.start").as("hour"), col("event_type"),
+        col("n"), col("total_value"))
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(dirA); unstage(dirB)
     val out = spark.table(name)
@@ -1282,25 +1218,18 @@ object StreamGates {
         col("event_id").as("p_id"))
       .withWatermark("p_ts", "1 hour")
     val name = s"graft_d212_run${runSeq.incrementAndGet()}"
-    // two state stores per shuffle partition — pin partitions to the
-    // gate fixture and restore (the d107 conf discipline)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    val query =
-      try purchases
-        .join(views,
-          col("v_user") === col("user_id") &&
-            col("view_ts") >=
-              col("p_ts") - expr(s"INTERVAL $OuterLookbackMin MINUTES") &&
-            col("view_ts") < col("p_ts"),
-          "left_semi")
-        .select(col("p_id"), col("user_id"),
-          unix_micros(col("p_ts")).as("p_ts_us"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val query = startStateful(spark, purchases
+      .join(views,
+        col("v_user") === col("user_id") &&
+          col("view_ts") >=
+            col("p_ts") - expr(s"INTERVAL $OuterLookbackMin MINUTES") &&
+          col("view_ts") < col("p_ts"),
+        "left_semi")
+      .select(col("p_id"), col("user_id"),
+        unix_micros(col("p_ts")).as("p_ts_us"))
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(staged)
     spark.table(name).filter(col("p_id") >= 0).orderBy("p_id")
@@ -1341,10 +1270,8 @@ object StreamGates {
     val staged = stageWithSentinels(spark, dir, "graft-d205",
       Seq("zz_flush"))
     val name = s"graft_d205_run${runSeq.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    val query =
-      try EventStreams.readEvents(spark, staged.toString)
+    val query = startStateful(spark,
+      EventStreams.readEvents(spark, staged.toString)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour", "15 minutes"),
           col("event_type"))
@@ -1353,9 +1280,7 @@ object StreamGates {
           col("event_type"), col("n"))
         .writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(staged)
     spark.table(name).filter(col("event_type") =!= "zz_flush")
@@ -1402,13 +1327,12 @@ object StreamGates {
     * session) record bounded by the watermark horizon — the unbounded
     *-session risk d92 handles in batch is exactly what the gap bound
     * prevents live. */
-  def d180SessionWindows(spark: SparkSession, dir: String): DataFrame =
-      withStateParts(spark) {
+  def d180SessionWindows(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageWithSentinels(spark, dir, "graft-d180", Seq("view"))
     val stream = EventStreams.readEvents(spark, staged.toString)
       .withWatermark("ts", "1 hour")
     val name = s"graft_d180_run${runSeq.incrementAndGet()}"
-    val query = stream
+    val query = startStateful(spark, stream
       .groupBy(session_window(col("ts"), SessionGapStr), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(round(col("value") * 100).cast("long")).as("cents"))
@@ -1417,13 +1341,12 @@ object StreamGates {
         col("cents"))
       .writeStream.format("memory").queryName(name)
       .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     unstage(staged)
     spark.table(name).filter(col("user_id") >= 0)
       .orderBy("user_id", "s_start")
-  } // withStateParts
+  }
 
   /** Gaps-and-islands replay of the session semantics: a new session
     * starts when the inter-event gap STRICTLY exceeds the inactivity
@@ -1527,22 +1450,17 @@ object StreamGates {
         lit(null).cast("string").as("props"))
     var sawRows = false
     def run(): Unit = {
-      // dedup state store per shuffle partition × THREE drains — pin
-      // partitions to the gate fixture and restore (the d107/d179
-      // conf discipline; store init dominates the gate's cost)
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-      val q =
-        try EventStreams.readEvents(spark, staged.toString)
+      // one dedup state store per shuffle partition × THREE drains;
+      // store init dominates the gate's cost
+      val q = startStateful(spark,
+        EventStreams.readEvents(spark, staged.toString)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("user_id")
           .select(col("user_id"), unix_micros(col("ts")).as("emit_us"))
           .writeStream.format("parquet").option("path", out.toString)
           .outputMode("append")
           .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+          .trigger(Trigger.AvailableNow()))
       q.awaitTermination()
       if (rocksdb) requireRocksDb(q)
       sawRows ||= movedRows(q)
@@ -1624,7 +1542,7 @@ object StreamGates {
       // force the planted order so slice k IS micro-batch k
       staged.resolve(name).toFile.setLastModified(modBase + i * 1000L)
     }
-    // the 11 staged slices are independent single-file writes to one
+    // the 10 staged slices are independent single-file writes to one
     // target dir — overlap them from a small pool (guide §2.6); each
     // file's mtime is a pure function of its index, so the planted
     // batch order is unchanged by the write schedule
@@ -1644,17 +1562,12 @@ object StreamGates {
         lit(0.0).as("value"), lit(null).cast("string").as("props"))
     plant(sentinel, 10)
     val name = s"graft_d209_run${runSeq.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    val query =
-      try EventStreams.hourlyCounts(
-          EventStreams.readEvents(spark, staged.toString,
-            Map("maxFilesPerTrigger" -> "1")))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val query = startStateful(spark, EventStreams.hourlyCounts(
+        EventStreams.readEvents(spark, staged.toString,
+          Map("maxFilesPerTrigger" -> "1")))
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow()))
     query.awaitTermination()
     val progs = query.recentProgress.toSeq
     val rowBatches = progs.count(_.numInputRows > 0L)
@@ -1717,25 +1630,25 @@ object StreamGates {
     withConf(spark, "spark.sql.streaming.stateStore.providerClass",
       RocksDbProvider)(body)
 
-  /** Set one session conf around `body`, restoring the previous value
-    * (the withRocksDb discipline, generalized: the conf is read at
-    * query start, so the wrapper must span every `start()` including
-    * checkpoint resumes). */
-  /** Pin the state-partition count around a stateful gate's `start()`
-    * — the [[StatePartitions]] sizing discipline as a wrapper, so the
-    * gates that predate it (d64/d76/d104/d127-family/d145/d180) ride
-    * the same pin as the fourteen explicit sites. The shuffle-partition
-    * count at query START is the state-store instance count frozen
-    * into the checkpoint, and every instance pays open/commit per
-    * micro-batch: at the session's 32 scan-width partitions these six
-    * gates burned 20-100 CPU-seconds of per-store machinery per run on
-    * a few hundred rows of state (profiled r17: d195 102 s, d145 61 s,
-    * d180 55 s, d207 50 s, d127 38 s, d104 36 s task-time against
-    * 1-5 s wall). Stateful-op results are partition-count-independent:
-    * every group lives in exactly one store whatever the count. */
-  private def withStateParts[T](spark: SparkSession)(body: => T): T =
-    withConf(spark, "spark.sql.shuffle.partitions", StatePartitions)(body)
+  /** Start a stateful stream with [[StatePartitions]] shuffle
+    * partitions. The count at query START is the state-store instance
+    * count frozen into the checkpoint, and every instance pays
+    * open/commit per micro-batch: at 32 partitions the stateful gates
+    * burned 20-100 CPU-seconds of per-store machinery per run on a few
+    * hundred rows of state (profiled r17: d195 102 s, d145 61 s, d180
+    * 55 s, d207 50 s, d127 38 s, d104 36 s task-time against 1-5 s
+    * wall). Stateful-op results are partition-count-independent: every
+    * group lives in exactly one store whatever the count. The query
+    * copies the session conf at `start()`, so the pin spans that call
+    * alone and the gate's batch work keeps the session's width. */
+  private def startStateful(spark: SparkSession,
+      writer: DataStreamWriter[_]): StreamingQuery =
+    withConf(spark, "spark.sql.shuffle.partitions", StatePartitions)(
+      writer.start())
 
+  /** Set one session conf around `body`, restoring the previous value
+    * (the conf is read at query start, so the wrapper must span every
+    * `start()` including checkpoint resumes). */
   private[graft] def withConf[T](spark: SparkSession, key: String,
       value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
@@ -1886,8 +1799,6 @@ object StreamGates {
         val staged = Files.createTempDirectory("graft-d228-src")
         val ckpt = Files.createTempDirectory("graft-d228-ckpt")
         val out = Files.createTempDirectory("graft-d228-out")
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
         try {
           val modBase = System.currentTimeMillis()
           // the memory sink cannot resume a checkpoint; both phases
@@ -1897,7 +1808,7 @@ object StreamGates {
           stagePart(raw.filter(usCol < cutUs), staged, "a.parquet",
             "graft-d228-w")
           staged.resolve("a.parquet").toFile.setLastModified(modBase); ()
-          val q1 = EventStreams
+          val q1 = startStateful(spark, EventStreams
             .sessionCountsTws(EventStreams.readEvents(spark, staged.toString))
             .writeStream
             // the batch must be fully CONSUMED or the state stores never
@@ -1908,15 +1819,14 @@ object StreamGates {
               df.toDF().write.format("noop").mode("overwrite").save())
             .outputMode("update")
             .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
+            .trigger(Trigger.AvailableNow()))
           q1.awaitTermination()
           // phase 2 (v2 schema, SAME checkpoint): post-cut arrivals
           stagePart(raw.filter(usCol >= cutUs), staged, "b.parquet",
             "graft-d228-w")
           staged.resolve("b.parquet").toFile
             .setLastModified(modBase + 1000L); ()
-          val q2 = EventStreams
+          val q2 = startStateful(spark, EventStreams
             .sessionCountsTwsV2(
               EventStreams.readEvents(spark, staged.toString))
             .writeStream
@@ -1925,8 +1835,7 @@ object StreamGates {
               df.toDF().write.mode("overwrite").parquet(s"$out/b$id"))
             .outputMode("update")
             .option("checkpointLocation", ckpt.toString)
-            .trigger(Trigger.AvailableNow())
-            .start()
+            .trigger(Trigger.AvailableNow()))
           q2.awaitTermination()
           requireRocksDb(q2)
           // all counters are monotone, so the per-user LAST emission is
@@ -1939,7 +1848,6 @@ object StreamGates {
             .orderBy("user_id").localCheckpoint()
             .orderBy("user_id")
         } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prev)
           deltree(staged); deltree(ckpt); deltree(out)
         }
       }
@@ -2006,7 +1914,6 @@ object StreamGates {
     val staged = Files.createTempDirectory("graft-d227-src")
     val out = Files.createTempDirectory("graft-d227-out")
     val ckpt = Files.createTempDirectory("graft-d227-ckpt")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       // batch 1 = the same contents re-sent PLUS one probe doc that
       // exists only there: batch 1 then has output under ANY TTL
@@ -2023,7 +1930,6 @@ object StreamGates {
         staged.resolve(nm).toFile.setLastModified(modBase + i * 1000L); ()
       }))
       val admitted = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-      spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
       // NOT AvailableNow: a processing-time-mode stateful operator
       // reports shouldRunAnotherBatch = true unconditionally (TTL
       // sweeps and processing-time timers can always have more work),
@@ -2034,29 +1940,26 @@ object StreamGates {
       // once the second data batch has committed; no-data maintenance
       // batches in between carry no rows and are skipped by the
       // isEmpty guard, so the artifact layout stays exactly b0/b1.
-      val query =
-        try EventStreams.ttlDedup(
-            spark.readStream.schema(docs.schema)
-              .option("maxFilesPerTrigger", "1").parquet(staged.toString),
-            ttlMs)
-          .toDF("text_hash")
-          .writeStream
-          .foreachBatch { (df: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], id: Long) =>
-            if (!df.isEmpty) {
-              df.select(lit(id).as("batch"), col("text_hash"))
-                .write.mode("overwrite").parquet(s"$out/b$id")
-              admitted.put(id, spark.read.parquet(s"$out/b$id").count())
-              // the TTL clock is the next batch's timestamp: force it
-              // ≥100 ms past this one so the 1 ms TTL has provably
-              // lapsed (never bet on scheduler latency)
-              Thread.sleep(100)
-            }
+      val query = startStateful(spark, EventStreams.ttlDedup(
+          spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", "1").parquet(staged.toString),
+          ttlMs)
+        .toDF("text_hash")
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[
+            org.apache.spark.sql.Row], id: Long) =>
+          if (!df.isEmpty) {
+            df.select(lit(id).as("batch"), col("text_hash"))
+              .write.mode("overwrite").parquet(s"$out/b$id")
+            admitted.put(id, spark.read.parquet(s"$out/b$id").count())
+            // the TTL clock is the next batch's timestamp: force it
+            // ≥100 ms past this one so the 1 ms TTL has provably
+            // lapsed (never bet on scheduler latency)
+            Thread.sleep(100)
           }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.ProcessingTime("50 milliseconds"))
-          .start()
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+        }
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.ProcessingTime("50 milliseconds")))
       val deadline = System.currentTimeMillis() + 120000L
       while (!admitted.containsKey(1L) &&
           System.currentTimeMillis() < deadline)
@@ -2492,69 +2395,37 @@ object StreamGates {
          CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
        FROM events GROUP BY 1 ORDER BY batch"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d234_stream_observe" -> (d234StreamObserve _),
-    "d233_dim_refresh" -> (d233DimRefresh _),
-    "d50_stream_decontaminate" -> (d50StreamDecontaminate _),
-    "d64_stream_sessions" -> (d64StreamSessions _),
-    "d76_stream_dedup" -> (d76StreamDedup _),
-    "d104_stream_hourly" -> (d104StreamHourly _),
-    "d107_stream_join" -> (d107StreamJoin _),
-    "d127_stream_recovery" -> (d127StreamRecovery _),
-    "d145_stream_late_drops" -> (d145StreamLateDrops _),
-    "d159_stream_static" -> (d159StreamStatic _),
-    "d170_stream_upsert" -> (d170StreamUpsert _),
-    "d179_stream_outer_join" -> (d179StreamOuterJoin _),
-    "d180_session_windows" -> (d180SessionWindows _),
-    "d187_stream_dedup_expiry" -> (d187StreamDedupExpiry _),
-    "d195_rocksdb_recovery" -> (d195RocksdbRecovery _),
-    "d196_rocksdb_outer_join" -> (d196RocksdbOuterJoin _),
-    "d197_rocksdb_dedup_expiry" -> (d197RocksdbDedupExpiry _),
-    "d204_tws_sessions" -> (d204TwsSessions _),
-    "d205_sliding_windows" -> (d205SlidingWindows _),
-    "d207_changelog_recovery" -> (d207ChangelogRecovery _),
-    "d208_changelog_dedup_expiry" -> (d208ChangelogDedupExpiry _),
-    "d209_live_cadence" -> (d209LiveCadence _),
-    "d211_tws_timers" -> (d211TwsTimers _),
-    "d220_tws_map_bursts" -> (d220TwsMapBursts _),
-    "d222_tws_bootstrap" -> (d222TwsBootstrap _),
-    "d225_state_reader" -> (d225StateReader _),
-    "d212_stream_semi_join" -> (d212StreamSemiJoin _),
-    "d218_union_watermarks" -> (d218UnionWatermarks _),
-    "d226_stream_ann_ingest" -> (d226StreamAnnIngest _),
-    "d227_ttl_expiry" -> (d227TtlExpiry _),
-    "d228_state_evolution" -> (d228StateEvolution _))
-
-  val oracles: Map[String, String] = Map(
-    "d50_stream_decontaminate" -> d50Oracle,
-    "d64_stream_sessions" -> d64Oracle,
-    "d76_stream_dedup" -> d76Oracle,
-    "d104_stream_hourly" -> d104Oracle,
-    "d107_stream_join" -> d107Oracle,
-    "d127_stream_recovery" -> d127Oracle,
-    "d145_stream_late_drops" -> d145Oracle,
-    "d159_stream_static" -> d159Oracle,
-    "d170_stream_upsert" -> d170Oracle,
-    "d179_stream_outer_join" -> d179Oracle,
-    "d180_session_windows" -> d180Oracle,
-    "d187_stream_dedup_expiry" -> d187Oracle,
-    "d195_rocksdb_recovery" -> d127Oracle,
-    "d196_rocksdb_outer_join" -> d179Oracle,
-    "d197_rocksdb_dedup_expiry" -> d187Oracle,
-    "d204_tws_sessions" -> d204Oracle,
-    "d205_sliding_windows" -> d205Oracle,
-    "d207_changelog_recovery" -> d127Oracle,
-    "d208_changelog_dedup_expiry" -> d187Oracle,
-    "d209_live_cadence" -> d209Oracle,
-    "d211_tws_timers" -> d211Oracle,
-    "d220_tws_map_bursts" -> d220Oracle,
-    "d222_tws_bootstrap" -> d222Oracle,
-    "d225_state_reader" -> d225Oracle,
-    "d212_stream_semi_join" -> d212Oracle,
-    "d218_union_watermarks" -> d218Oracle,
-    "d226_stream_ann_ingest" -> graft.ops.Similarity.d226Oracle,
-    "d227_ttl_expiry" -> d227Oracle,
-    "d228_state_evolution" -> d228Oracle,
-    "d233_dim_refresh" -> d233Oracle,
-    "d234_stream_observe" -> d234Oracle)
+  val gates: Seq[Gate] = Seq(
+    Gate("d234_stream_observe", d234StreamObserve, d234Oracle),
+    Gate("d233_dim_refresh", d233DimRefresh, d233Oracle),
+    Gate("d50_stream_decontaminate", d50StreamDecontaminate, d50Oracle),
+    Gate("d64_stream_sessions", d64StreamSessions, d64Oracle),
+    Gate("d76_stream_dedup", d76StreamDedup, d76Oracle),
+    Gate("d104_stream_hourly", d104StreamHourly, d104Oracle),
+    Gate("d107_stream_join", d107StreamJoin, d107Oracle),
+    Gate("d127_stream_recovery", d127StreamRecovery, d127Oracle),
+    Gate("d145_stream_late_drops", d145StreamLateDrops, d145Oracle),
+    Gate("d159_stream_static", d159StreamStatic, d159Oracle),
+    Gate("d170_stream_upsert", d170StreamUpsert, d170Oracle),
+    Gate("d179_stream_outer_join", d179StreamOuterJoin, d179Oracle),
+    Gate("d180_session_windows", d180SessionWindows, d180Oracle),
+    Gate("d187_stream_dedup_expiry", d187StreamDedupExpiry, d187Oracle),
+    Gate("d195_rocksdb_recovery", d195RocksdbRecovery, d127Oracle),
+    Gate("d196_rocksdb_outer_join", d196RocksdbOuterJoin, d179Oracle),
+    Gate("d197_rocksdb_dedup_expiry", d197RocksdbDedupExpiry, d187Oracle),
+    Gate("d204_tws_sessions", d204TwsSessions, d204Oracle),
+    Gate("d205_sliding_windows", d205SlidingWindows, d205Oracle),
+    Gate("d207_changelog_recovery", d207ChangelogRecovery, d127Oracle),
+    Gate("d208_changelog_dedup_expiry", d208ChangelogDedupExpiry, d187Oracle),
+    Gate("d209_live_cadence", d209LiveCadence, d209Oracle),
+    Gate("d211_tws_timers", d211TwsTimers, d211Oracle),
+    Gate("d220_tws_map_bursts", d220TwsMapBursts, d220Oracle),
+    Gate("d222_tws_bootstrap", d222TwsBootstrap, d222Oracle),
+    Gate("d225_state_reader", d225StateReader, d225Oracle),
+    Gate("d212_stream_semi_join", d212StreamSemiJoin, d212Oracle),
+    Gate("d218_union_watermarks", d218UnionWatermarks, d218Oracle),
+    Gate("d226_stream_ann_ingest", d226StreamAnnIngest,
+      graft.ops.Similarity.d226Oracle),
+    Gate("d227_ttl_expiry", d227TtlExpiry, d227Oracle),
+    Gate("d228_state_evolution", d228StateEvolution, d228Oracle))
 }

@@ -34,10 +34,8 @@ final class TableValidator(
     spark: SparkSession,
     meta: TableMetadata,
     tablePath: String,
-    badRowPath: String,
-    corruptCol: String = "CorruptRecCol",
-    exactLineNumbers: Boolean = true,
-    typedChecks: Boolean = true) {
+    badRowPath: String) {
+  import TableValidator.CorruptCol
 
   // ------------------------------------------------------------ header
 
@@ -111,16 +109,14 @@ final class TableValidator(
     * paid only on the failure path, like the reference's `take(1)` log
     * (`big_data_validator.py:202,251`). */
   private def firstOffender(counts: DataFrame, expected: Int): String =
-    if (!exactLineNumbers) "line numbers disabled"
-    else
-      counts.rdd
-        .map(_.getInt(0))
-        .zipWithIndex()
-        .filter { case (n, _) => n != expected }
-        .take(1)
-        .map { case (n, i) => s"(count=$n, line=$i)" }
-        .headOption
-        .getOrElse("")
+    counts.rdd
+      .map(_.getInt(0))
+      .zipWithIndex()
+      .filter { case (n, _) => n != expected }
+      .take(1)
+      .map { case (n, i) => s"(count=$n, line=$i)" }
+      .headOption
+      .getOrElse("")
 
   private def fieldCountCheck(
       name: String,
@@ -168,7 +164,7 @@ final class TableValidator(
     if (names.length >= 2 && names(names.length - 2).isEmpty)
       return CheckResult("csv_fallback", passed = true, 0,
         "unnamed empty trailing column — count mismatch ignored")
-    val badRows = df.filter(col(corruptCol).isNotNull)
+    val badRows = df.filter(col(CorruptCol).isNotNull)
     badRows.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       if (badRows.head(1).nonEmpty) {
@@ -186,7 +182,7 @@ final class TableValidator(
   /** The parsed table (S2 scan) — built from the ACTUAL header schema,
     * like the reference (extra columns tolerated). */
   lazy val csvTable: DataFrame =
-    Sources.csv(spark, meta, actualColumns, tablePath, corruptCol)
+    Sources.csv(spark, meta, actualColumns, tablePath, CorruptCol)
 
   // ------------------------------------------------- typed enforcement
 
@@ -221,17 +217,22 @@ final class TableValidator(
     * whether a quote char is declared. V1 does NOT short-circuit the
     * field checks (`big_data_validator.py:258-281`). Typed enforcement
     * (an extension beyond the reference — it declared these in metadata
-    * but never ran them) appends per-column results; disable via the
-    * `typedChecks` constructor flag for bit-exact reference behavior. */
+    * but never ran them) appends per-column results. */
   def performValidation(): Seq[CheckResult] = {
     val nameCheck = validateColumnNames()
     val countCheck =
       if (meta.hasQuote) validateNumberOfFieldsQuoteAware(csvTable)
       else validateNumberOfFields(csvTable)
-    val typed = if (typedChecks) typedCheckResults() else Seq.empty
-    Seq(nameCheck, countCheck) ++ typed
+    Seq(nameCheck, countCheck) ++ typedCheckResults()
   }
 
   /** V6 verdict: all checks pass. */
   def validate(): Boolean = performValidation().forall(_.passed)
+}
+
+object TableValidator {
+
+  /** The column the PERMISSIVE readers put an unparseable line in
+    * (`base_data_validation.py:16`). */
+  val CorruptCol = "CorruptRecCol"
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{Gate, Tables}
 import graft.meta.{ColumnMeta, TableMetadata}
 
 /** Driver-gated queries over the VALIDATION surface (VERDICT r2 task #5):
@@ -128,15 +128,8 @@ object ValidationQueries {
        FROM src
        ORDER BY col_name, check_name"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "v20_field_count" -> (v20FieldCount _),
-    "v21_quote_field_count" -> (v21QuoteFieldCount _),
-    "v22_typed_errors" -> (v22TypedErrors _)
-  )
-
-  val oracles: Map[String, String] = Map(
-    "v20_field_count" -> v20Oracle,
-    "v21_quote_field_count" -> v21Oracle,
-    "v22_typed_errors" -> v22Oracle
-  )
+  val gates: Seq[Gate] = Seq(
+    Gate("v20_field_count", v20FieldCount, v20Oracle),
+    Gate("v21_quote_field_count", v21QuoteFieldCount, v21Oracle),
+    Gate("v22_typed_errors", v22TypedErrors, v22Oracle))
 }

@@ -9,7 +9,7 @@ import graft.validate.TableValidator
   * plus adversarial counting cases (SURVEY.md §5). */
 class ChecksSpec extends SparkSpec {
 
-  private val refBase = "/root/reference/bigDataValidator/validator"
+  private val refBase = ReferenceFixtures.path("bigDataValidator/validator")
   private def tmp(): Path = Files.createTempDirectory("graftchk")
 
   private def validator(tablePath: String, metaCsv: String,
@@ -30,8 +30,8 @@ class ChecksSpec extends SparkSpec {
   }
 
   test("tableExamples fixture fails column names (BIRH_DATE typo)") {
-    val v = validator("/root/reference/tableExamples/success (1).csv",
-      "/root/reference/tableExamples/success_metadata (1).csv")
+    val v = validator(ReferenceFixtures.path("tableExamples/success (1).csv"),
+      ReferenceFixtures.path("tableExamples/success_metadata (1).csv"))
     val r = v.validateColumnNames()
     assert(!r.passed)
     assert(r.detail.contains("BIRH_DATE"))

@@ -6,14 +6,14 @@ import graft.meta.MetadataCompiler
 import graft.validate.TableValidator
 
 /** End-to-end exit semantics of `graft.Main.run` over the reference's own
-  * fixtures (all four files under `/root/reference/tableExamples/` and
+  * fixtures (all four files under `tableExamples/` of [[ReferenceFixtures]] and
   * the installed pair under `bigDataValidator/validator/`), plus a
   * crafted fixture proving
   * the typed-enforcement path a CLI user now gets (VERDICT r2 task #3).
   */
 class MainEndToEndSpec extends SparkSpec {
 
-  private val refRoot = "/root/reference"
+  private val refRoot = ReferenceFixtures.path("")
 
   /** Stage `<base>/inputs/<table>.csv` + `<base>/metadata/csv/<table>_metadata.csv`. */
   private def stage(input: Path, metadata: Path, table: String): Path = {

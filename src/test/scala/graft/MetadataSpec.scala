@@ -7,13 +7,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.meta.{ColumnMeta, MetadataCompiler, TableMetadata}
 
 /** Metadata compiler parity against the reference's golden fixtures
-  * (read-only at /root/reference — behavior studied, no code copied). */
+  * (rebuilt in [[ReferenceFixtures]] — behavior studied, no code copied). */
 class MetadataSpec extends AnyFunSuite {
 
-  private val refMetaCsv =
-    "/root/reference/bigDataValidator/validator/metadata/csv/success_metadata.csv"
-  private val refGoldenJson =
-    "/root/reference/bigDataValidator/validator/metadata/json/success_metadata.json"
+  private val refMetaCsv = ReferenceFixtures.path(
+    "bigDataValidator/validator/metadata/csv/success_metadata.csv")
+  private val refGoldenJson = ReferenceFixtures.path(
+    "bigDataValidator/validator/metadata/json/success_metadata.json")
 
   test("CSV parse matches reference semantics") {
     val m = MetadataCompiler.parseCsvFile(refMetaCsv)

@@ -2767,7 +2767,7 @@ class NewOpsSpec extends SparkSpec {
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
-    val got = graft.ops.Similarity.queries("d231_index_compact")(spark, dir)
+    val got = SparkEntry.queries("d231_index_compact")(spark, dir)
       .collect()
     val panel = (0L until n).filter(_ % graft.ops.Similarity.AuditMod == 0)
     assert(got.map(_.getLong(0)).toSeq == panel,

@@ -5,46 +5,39 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Invariants of the gated-query registry itself — the layer the
   * driver's correctness harness trusts blindly.
   *
-  * The registry is assembled by `Map ++` over per-module maps
-  * (`Queries.all`), and `++` SILENTLY keeps the right-hand entry on a
-  * key collision: two modules registering the same gate name would
-  * shadow one operator with zero signal anywhere — the shadowed op
-  * simply stops being verified. These tests make that (and oracle
-  * drift) a build failure instead.
+  * The registry is assembled into a `Map` from the per-module gate
+  * lists (`SparkEntry.gates`), and `toMap` SILENTLY keeps the last
+  * entry on a key collision: two gates with the same name would shadow
+  * one operator with zero signal anywhere — the shadowed op simply
+  * stops being verified. These tests make that a build failure
+  * instead. Every gate carries its oracle by construction (`Gate`).
   */
 class RegistrySpec extends AnyFunSuite {
 
-  private val modules: Seq[(String, Set[String])] = Seq(
-    "relational" -> Queries.relational.keySet,
-    "TextOps" -> ops.TextOps.queries.keySet,
-    "FuzzyDedup" -> ops.FuzzyDedup.queries.keySet,
-    "Similarity" -> ops.Similarity.queries.keySet,
-    "Multimodal" -> ops.Multimodal.queries.keySet,
-    "CorpusOps" -> ops.CorpusOps.queries.keySet,
-    "GraphOps" -> ops.GraphOps.queries.keySet,
-    "SqlSurface" -> ops.SqlSurface.queries.keySet,
-    "StreamGates" -> streaming.StreamGates.queries.keySet,
-    "ValidationQueries" -> validate.ValidationQueries.queries.keySet)
+  private val modules: Seq[(String, Seq[String])] = Seq(
+    "relational" -> Queries.gates,
+    "TextOps" -> ops.TextOps.gates,
+    "FuzzyDedup" -> ops.FuzzyDedup.gates,
+    "Similarity" -> ops.Similarity.gates,
+    "Multimodal" -> ops.Multimodal.gates,
+    "CorpusOps" -> ops.CorpusOps.gates,
+    "GraphOps" -> ops.GraphOps.gates,
+    "SqlSurface" -> ops.SqlSurface.gates,
+    "StreamGates" -> streaming.StreamGates.gates,
+    "ValidationQueries" -> validate.ValidationQueries.gates)
+    .map { case (m, gs) => m -> gs.map(_.name) }
 
   test("no gate name is registered by two modules (Map ++ would shadow one)") {
     val collisions = modules.combinations(2).flatMap {
       case Seq((ma, ka), (mb, kb)) =>
-        (ka & kb).map(k => s"$k (in $ma AND $mb)")
-    }.toSeq
+        ka.intersect(kb).map(k => s"$k (in $ma AND $mb)")
+    }.toSeq ++ modules.flatMap { case (m, ks) =>
+      ks.diff(ks.distinct).map(k => s"$k (twice in $m)")
+    }
     assert(collisions.isEmpty,
       s"gate names registered twice — one implementation is silently " +
         s"shadowed:\n${collisions.mkString("\n")}")
     assert(modules.map(_._2.size).sum == SparkEntry.queries.size)
-  }
-
-  test("every gated query carries a DuckDB oracle, and no oracle is orphaned") {
-    val queries = SparkEntry.queries.keySet
-    val oracles = SparkEntry.oracleSql.keySet
-    assert((queries -- oracles).isEmpty,
-      s"queries without an oracle (driver falls back to a weak rows>0 " +
-        s"check): ${(queries -- oracles).toSeq.sorted.mkString(", ")}")
-    assert((oracles -- queries).isEmpty,
-      s"oracles with no query: ${(oracles -- queries).toSeq.sorted.mkString(", ")}")
   }
 
   test("gate names follow the driver convention q*/v*/d* with unique numbers") {

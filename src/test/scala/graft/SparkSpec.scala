@@ -3,25 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites — one JVM-wide SparkSession. */
+/** Shared session for all suites — one JVM-wide SparkSession, built by
+  * the same factory as the entry points. */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = Session.create("graft-test",
     // keep catalog tables (bucketing tests) out of the repo tree
-    .config("spark.sql.warehouse.dir",
+    "spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
 }
 
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSpec.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkSpec.spark
 }

@@ -2,10 +2,16 @@
 """Local stand-in for the driver's DuckDB correctness gate.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+       python3 tools/check_oracle.py --compare <verifyOutA> <verifyOutB>
 
 Loads each <verifyOutDir>/<name> parquet (Spark result), runs the matching
 oracle SQL from oracle_sql.json in DuckDB with the sfDir tables registered
 as views, sorts columns by name, and compares row-by-row hashes.
+
+--compare hash-compares two Verify outputs with the same canonicalisation
+(e.g. the same sf run at SPARK_GRAFT_CPUS=1 and at nproc, or a parent and a
+change): per gate, the column types plus the sorted canonical rows must be
+identical, and so must the two parsed oracle_sql.json maps.
 
 Type-aware (round 10): also compares DuckDB's result-column TYPES against
 the Spark parquet schema. DuckDB types integer sum() as HUGEINT (int128)
@@ -15,7 +21,7 @@ matches, so a value-blind comparison here ships red gates (d60/d73/d80 in
 round 9). Any oracle column typed HUGEINT, or typed DECIMAL where Spark
 says DOUBLE/FLOAT, is a FAIL here regardless of values.
 """
-import json, sys, glob, os
+import json, sys, glob, hashlib, os
 import duckdb
 
 # Oracle-side types the driver's hasher canonicalizes differently than the
@@ -124,6 +130,62 @@ def run_oracle(con, sql, timeout=None):
                 pass
 
 
+def result_digest(con, out_dir, name):
+    """sha256 over a Verify result's sorted column names, their types and
+    its canonical rows, plus the row count."""
+    rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
+    cols, types = list(rel.columns), [str(t) for t in rel.types]
+    rows, sorted_cols = canon(rel.fetchall(), cols)
+    type_of = dict(zip(cols, types))
+    typed = [(c, type_of[c]) for c in sorted_cols]
+    return hashlib.sha256(repr((typed, rows)).encode()).hexdigest(), len(rows)
+
+
+def compare(dir_a, dir_b, json_out=None):
+    """Two Verify outputs must hold the same gates with identical results
+    and identical oracle SQL."""
+    con = duckdb.connect()
+    def gates(d):
+        return {n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+    names = sorted(gates(dir_a) | gates(dir_b))
+    n_same = n_diff = 0
+    results = {}
+    for name in names:
+        got = []
+        for d in (dir_a, dir_b):
+            if not os.path.isdir(os.path.join(d, name)):
+                got.append(("missing", None))
+                continue
+            try:
+                got.append(result_digest(con, d, name))
+            except Exception as e:
+                got.append((f"unreadable: {e}", None))
+        (ha, ra), (hb, rb) = got
+        if ha == hb and ra is not None:
+            n_same += 1
+            results[name] = {"status": "SAME", "rows": ra}
+        else:
+            n_diff += 1
+            results[name] = {"status": "DIFF", "a": [ha, ra], "b": [hb, rb]}
+            print(f"  {name}: DIFF a={ha[:16]} rows={ra} b={hb[:16]} rows={rb}",
+                  flush=True)
+    oracles = [json.load(open(os.path.join(d, "oracle_sql.json")))
+               for d in (dir_a, dir_b)]
+    oracle_diff = sorted(k for k in oracles[0].keys() | oracles[1].keys()
+                         if oracles[0].get(k) != oracles[1].get(k))
+    for k in oracle_diff:
+        print(f"  {k}: ORACLE-SQL-DIFF")
+    print(f"== {n_same} same, {n_diff} differ; oracle_sql.json: "
+          f"{len(oracles[0])} vs {len(oracles[1])} entries, "
+          f"{len(oracle_diff)} differ ==")
+    if json_out:
+        with open(json_out, "w") as f:
+            json.dump({"a": dir_a, "b": dir_b, "n_same": n_same,
+                       "n_diff": n_diff, "oracle_diff": oracle_diff,
+                       "queries": results}, f, indent=1, sort_keys=True)
+    return 1 if n_diff or oracle_diff else 0
+
+
 def main(sf_dir, out_dir, json_out=None, timeout=None):
     con = duckdb.connect()
     register_views(con, sf_dir)
@@ -216,6 +278,8 @@ def main(sf_dir, out_dir, json_out=None, timeout=None):
 
 USAGE = ("usage: check_oracle.py <sf_dir> <verify_out_dir> "
          "[--json OUT.json] [--timeout SEC] [--lint]\n"
+         "       check_oracle.py --compare <verify_out_a> <verify_out_b> "
+         "[--json OUT.json]\n"
          "exit codes: 0 green, 1 mismatch/error, 2 timeouts-only\n"
          "--lint binds (doesn't run) every oracle; --timeout is ignored "
          "there, --json still written")
@@ -237,9 +301,12 @@ if __name__ == "__main__":
     args, jout = _flag_value(args, "--json")
     args, tmo = _flag_value(args, "--timeout")
     do_lint = "--lint" in args
-    args = [a for a in args if a != "--lint"]
+    do_compare = "--compare" in args
+    args = [a for a in args if a not in ("--lint", "--compare")]
     if len(args) < 2:
         sys.exit(USAGE)
+    if do_compare:
+        sys.exit(compare(args[0], args[1], jout))
     if do_lint:
         sys.exit(lint(args[0], args[1], jout))
     sys.exit(main(args[0], args[1], jout, float(tmo) if tmo else None))
