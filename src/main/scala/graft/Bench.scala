@@ -1,5 +1,7 @@
 package graft
 
+import graft.meta.MetadataCompiler.jsonString
+
 /** Benchmark main (driver-run per round → BENCH_r{N}.json).
   *
   * Harness rules (VERDICT r2 "what's wrong" #1):
@@ -33,13 +35,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.create("graft-bench")
 
-    // SPARK_GRAFT_ONLY=d15_dedup_clusters,d22_… restricts the suite —
-    // an iteration convenience (time one query without 70 others); the
-    // driver never sets it, so the gated run is always the full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    // SPARK_GRAFT_ONLY=d15_dedup_clusters,d22_… restricts the suite
+    // (SparkEntry.selected) — an iteration convenience (time one query
+    // without 70 others); unset, the run is the full suite.
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(SparkEntry.selected)
     def runOnce(name: String): Option[String] =
       try {
         SparkEntry.queries(name)(spark, sfDir)
@@ -95,18 +94,11 @@ object Bench {
       }
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    val qs = times.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+    val qs = times.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
     val total = times.map(_._2).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"sf":${jsonString(sfDir)}}"""
     println(line)
     // The driver's BENCH_r{N}.json artifact keeps only a 2000-char
     // stdout tail — at 170+ queries that truncates 2/3 of the map, so
@@ -138,12 +130,12 @@ object Bench {
     // last write this JVM makes.
     val slow = times.sortBy(-_._2).take(15)
     val qsShort =
-      slow.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+      slow.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
     val esShort = errors.take(5)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v.take(60))}" }
+      .map { case (k, v) => s"${jsonString(k)}:${jsonString(v.take(60))}" }
       .mkString("{", ",", "}")
     val compact =
-      s"""{"metric":"total","summary":true,"value":$total,"unit":"sec","n_queries":${times.size},"n_errors":${errors.size},"queries":$qsShort,"errors":$esShort,"queries_full":${jstr(out)},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","summary":true,"value":$total,"unit":"sec","n_queries":${times.size},"n_errors":${errors.size},"queries":$qsShort,"errors":$esShort,"queries_full":${jsonString(out)},"sf":${jsonString(sfDir)}}"""
     println(compact)
     System.err.println(compact)
     spark.sparkContext.setLogLevel("ERROR")

@@ -38,4 +38,11 @@ object SparkEntry {
     * the same parquet tables. */
   val oracleSql: Map[String, String] =
     gates.map(g => g.name -> g.oracle).toMap
+
+  /** Whether `SPARK_GRAFT_ONLY` (comma-separated gate names; unset means
+    * every gate) selects gate `name` — Bench's and Verify's filter. */
+  def selected(name: String): Boolean = only.forall(_.contains(name))
+
+  private lazy val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 }

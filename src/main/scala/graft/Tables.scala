@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Parquet table catalog over a scale-factor directory
   * (`/root/testdata/sf*` layout — see TESTDATA.md).
@@ -16,32 +14,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A table's parquet scan; `events.ts` arrives as TimestampType
+    * whichever encoding the file holds ([[EventTime.normalized]]). */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     val df = spark.read.parquet(s"$sfDir/$table.parquet")
-    // events.ts has shipped as two physical forms across testdata
-    // generations: TIMESTAMP(NANOS) (Spark reads it only as a raw nanos
-    // long, under spark.sql.legacy.parquet.nanosAsLong — set by our
-    // session builders) and TIMESTAMP(MICROS, isAdjustedToUTC=false)
-    // (read as TIMESTAMP_NTZ). Normalize both to TimestampType right at
-    // the scan so every downstream operator sees one timestamp type; the
-    // session timezone is pinned to UTC, so the NTZ cast preserves the
-    // wall clock — the same value the DuckDB oracle reads natively.
-    if (table == "events")
-      df.schema.fields.find(_.name == "ts").map(_.dataType) match {
-        case Some(LongType) =>
-          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case Some(TimestampNTZType) =>
-          df.withColumn("ts", col("ts").cast(TimestampType))
-        case _ => df
-      }
-    else df
+    if (table == "events") EventTime.normalized(df) else df
   }
 
   /** Register all tables as temp views for `spark.sql` paths. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 
-  /** Restore scan-stage parallelism on narrow inputs (optimization
+  /** [[load]] `table`, then restore scan-stage parallelism on narrow
+    * inputs — the one scan-spread rule (optimization
     * guide §2.5 "input skew: one huge unsplittable file … repartition
     * immediately after the read"). The test corpora ship each table as
     * ONE parquet file with ONE row group, so every scan — and with it
@@ -64,19 +49,15 @@ object Tables {
     * groups) make the partition-count gate a strict no-op, so nothing
     * here is tuned to local mode — the bytes/quantum ratio IS the
     * scale adaptation. */
-  def spread(df: DataFrame, inputBytes: Long,
+  def loadSpread(spark: SparkSession, sfDir: String, table: String,
       bytesPerTask: Long = 1L << 20): DataFrame = {
-    val spark = df.sparkSession
+    val df = load(spark, sfDir, table)
+    // compressed on-disk bytes: a conservative proxy for map work
+    val inputBytes = new java.io.File(s"$sfDir/$table.parquet").length()
     val target = math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L, (inputBytes + bytesPerTask - 1) / bytesPerTask)).toInt
     if (target > 1 && df.rdd.getNumPartitions < target)
       df.repartition(target)
     else df
   }
-
-  /** On-disk size of a table's parquet file — the input-bytes argument
-    * for [[spread]] (compressed bytes: a conservative proxy for map
-    * work). */
-  def sizeOf(sfDir: String, table: String): Long =
-    new java.io.File(s"$sfDir/$table.parquet").length()
 }

@@ -1,5 +1,9 @@
 package graft
+
 import java.nio.file.{Files, Paths}
+
+import graft.meta.MetadataCompiler.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,13 +11,10 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Session.create("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=<names> restricts the dump — iteration
-    // convenience mirroring Bench; the driver never sets it, so the
-    // gated run always dumps the full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // SPARK_GRAFT_ONLY restricts the dump (see SparkEntry.selected);
+    // unset, every gate is dumped.
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => SparkEntry.selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -21,20 +22,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // jsonString escapes every control char, so a tab or CR in an
+    // oracle's SQL still parses with Python's json.load
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -52,6 +52,27 @@ object MetadataCompiler {
 
   // ------------------------------------------------------------- JSON out
 
+  /** `s` as a JSON string literal, escaped exactly as Python's
+    * `json.dump` with its default `ensure_ascii=True`: quote, backslash,
+    * newline, CR and tab take their short escapes; every other char
+    * outside printable ASCII (space to tilde) takes a 4-hex-digit
+    * unicode escape of its UTF-16 unit, so astral chars become surrogate
+    * pairs, as in Python. The one JSON escaper: the metadata IR,
+    * `Verify`'s `oracle_sql.json` and `Bench`'s result lines use it. */
+  def jsonString(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"'          => sb.append("\\\"")
+      case '\\'         => sb.append("\\\\")
+      case '\n'         => sb.append("\\n")
+      case '\r'         => sb.append("\\r")
+      case '\t'         => sb.append("\\t")
+      case c if c < ' ' || c > '~' => sb.append(f"\\u${c.toInt}%04x")
+      case c            => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+
   /** Serialize to the reference's JSON IR shape. Matches Python
     * `json.dump(..., indent=4)` formatting (4-space indent, `": "` and
     * `", "` separators, insertion order TypeMapping → DecimalSeparator →
@@ -59,37 +80,21 @@ object MetadataCompiler {
     * default `ensure_ascii=True`). SourceNullable is the raw metadata
     * cell passed through verbatim, like the reference. */
   def toJson(meta: TableMetadata): String = {
-    def jstr(s: String): String = {
-      val sb = new StringBuilder("\"")
-      s.foreach {
-        case '"'            => sb.append("\\\"")
-        case '\\'           => sb.append("\\\\")
-        case '\n'           => sb.append("\\n")
-        case '\r'           => sb.append("\\r")
-        case '\t'           => sb.append("\\t")
-        case c if c < ' '   => sb.append(f"\\u${c.toInt}%04x")
-        // ensure_ascii: escape everything past 0x7f (UTF-16 units, so
-        // astral chars become surrogate pairs — Python's encoding too)
-        case c if c > '~' => sb.append(f"\\u${c.toInt}%04x")
-        case c              => sb.append(c)
-      }
-      sb.append('"').toString
-    }
     val cols = meta.typeMapping.map { c =>
       s"""        {
-         |            "ColumnName": ${jstr(c.name)},
-         |            "SourceDataType": ${jstr(c.sourceType)},
-         |            "SourceDataFormat": ${jstr(c.format)},
-         |            "SourceNullable": ${jstr(c.nullableRaw)}
+         |            "ColumnName": ${jsonString(c.name)},
+         |            "SourceDataType": ${jsonString(c.sourceType)},
+         |            "SourceDataFormat": ${jsonString(c.format)},
+         |            "SourceNullable": ${jsonString(c.nullableRaw)}
          |        }""".stripMargin
     }.mkString(",\n")
     s"""{
        |    "TypeMapping": [
        |$cols
        |    ],
-       |    "DecimalSeparator": ${jstr(meta.decimalSeparator)},
-       |    "FieldSeparator": ${jstr(meta.fieldSeparator)},
-       |    "StringSeparator": ${jstr(meta.stringSeparator)}
+       |    "DecimalSeparator": ${jsonString(meta.decimalSeparator)},
+       |    "FieldSeparator": ${jsonString(meta.fieldSeparator)},
+       |    "StringSeparator": ${jsonString(meta.stringSeparator)}
        |}""".stripMargin
   }
 

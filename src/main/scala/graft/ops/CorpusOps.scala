@@ -21,10 +21,6 @@ import graft.{Gate, Tables}
   */
 object CorpusOps {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    Tables.spread(Tables.load(spark, dir, "documents"),
-      Tables.sizeOf(dir, "documents"))
-
   import TextOps.tokens
 
   /** Salt distinguishing the SPLIT hash (d33/d38) from every other
@@ -56,7 +52,7 @@ object CorpusOps {
     * a lossless re-sharding; dropping empties is the curation gate's
     * job ([[d29CurationGate]]), not the chunker's. */
   def d23Chunking(spark: SparkSession, dir: String): DataFrame =
-    chunks(docs(spark, dir)).orderBy("doc_id", "chunk_id")
+    chunks(Tables.loadSpread(spark, dir, "documents")).orderBy("doc_id", "chunk_id")
 
   /** The chunking transform itself — a STATELESS narrow map (no sort,
     * no shuffle), so the same call chunks a streaming frame at ingest
@@ -125,7 +121,7 @@ object CorpusOps {
     * broadcasts the vocab side when it fits). Nothing document-sized
     * moves. */
   def d24Tfidf(spark: SparkSession, dir: String): DataFrame = {
-    val tok = docs(spark, dir)
+    val tok = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
       .select(col("doc_id"), size(col("toks")).as("dl"),
         explode(col("toks")).as("term"))
@@ -133,7 +129,8 @@ object CorpusOps {
       .agg(count(lit(1)).as("tf"), max("dl").as("dl"))
       .localCheckpoint()
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val ndocs = docs(spark, dir).agg(count(lit(1)).as("n_docs"))
+    val ndocs = Tables.loadSpread(spark, dir, "documents")
+      .agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy("doc_id").orderBy(col("tfidf").desc, col("term"))
     tf.join(dfreq, "term").crossJoin(broadcast(ndocs))
       .select(col("doc_id"), col("term"),
@@ -185,7 +182,7 @@ object CorpusOps {
     * consumers reuse it), the same trade d2 documents for its shingle
     * stage. Revisit if the corpus-to-local-disk ratio changes. */
   def d25Surprisal(spark: SparkSession, dir: String): DataFrame = {
-    val tok = docs(spark, dir)
+    val tok = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
     val freq = tok.groupBy("term").agg(count(lit(1)).as("cnt"))
     val total = freq.agg(sum("cnt").as("total"))
@@ -265,7 +262,7 @@ object CorpusOps {
     * in-bucket sort. A kept document's `keep` depends only on content
     * and corpus statistics, so the selection is re-run-stable. */
   def d61TokenBudget(spark: SparkSession, dir: String): DataFrame = {
-    val nTok = docs(spark, dir)
+    val nTok = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("n_tok"))
     val scored = d25Surprisal(spark, dir).join(nTok, "doc_id")
     GlobalOrder.runningTotal(scored,
@@ -324,7 +321,7 @@ object CorpusOps {
     * fits), then one per-doc aggregate. Docs with <2 tokens keep a row
     * (LEFT join) with zero bigrams and null surprisal. */
   def d41BigramSurprisal(spark: SparkSession, dir: String): DataFrame =
-    bigramSurprisal(docs(spark, dir))
+    bigramSurprisal(Tables.loadSpread(spark, dir, "documents"))
 
   /** The bigram scorer on an arbitrary (doc_id, text) frame. */
   private[graft] def bigramSurprisal(src: DataFrame): DataFrame = {
@@ -431,7 +428,7 @@ object CorpusOps {
       .orderBy("source")
 
   def d26PiiScrub(spark: SparkSession, dir: String): DataFrame =
-    piiStats(docs(spark, dir))
+    piiStats(Tables.loadSpread(spark, dir, "documents"))
 
   val d26Oracle: String =
     s"""SELECT source, count(*) AS n_docs,
@@ -467,7 +464,7 @@ object CorpusOps {
     * report cardinalities, quadratic pain when keys approach corpus
     * size. */
   def d28Cardinality(spark: SparkSession, dir: String): DataFrame =
-    cardinality(docs(spark, dir))
+    cardinality(Tables.loadSpread(spark, dir, "documents"))
 
   private[graft] def cardinality(d: DataFrame): DataFrame = {
     // The doc-level distincts (doc_id, text hash) are aggregated on the
@@ -589,7 +586,7 @@ object CorpusOps {
     import graft.functions.ShingleHashes
     val toks = tokens(col("text"))
     val sh = ShingleHashes(toks, TextOps.hash60(col("text")) % ShingleHashes.M)
-    docs(spark, dir).select(
+    Tables.loadSpread(spark, dir, "documents").select(
       col("doc_id"),
       size(toks).as("n_tokens"),
       when(col("n_chars").between(150, 450), lit(1)).otherwise(lit(0))
@@ -653,7 +650,7 @@ object CorpusOps {
     * over the kept subset and tiny per-stage aggregates; stage tables
     * are doc_id-only and eagerly checkpointed where consumed twice. */
   def d38Funnel(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.loadSpread(spark, dir, "documents")
     val kept = qualitySignals(spark, dir).filter(curationPass)
       .select("doc_id").localCheckpoint()
     val surv = FuzzyDedup.representatives(d.join(kept, "doc_id"))
@@ -713,7 +710,7 @@ object CorpusOps {
     * rows. The leaf is checkpointed: three consumers, one corpus
     * scan. */
   def d60DataCard(spark: SparkSession, dir: String): DataFrame = {
-    val leaf = docs(spark, dir)
+    val leaf = Tables.loadSpread(spark, dir, "documents")
       .select(splitOf(col("doc_id")).as("split"), col("source"),
         size(tokens(col("text"))).cast("long").as("n_tok"), col("n_chars"))
       .groupBy("split", "source")
@@ -760,7 +757,7 @@ object CorpusOps {
     * is worth re-crawling or down-weighting). One shuffle on the
     * 16-byte content hash per source; text never moves. */
   def d31DupReport(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), md5(col("text")).as("h"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
@@ -783,7 +780,8 @@ object CorpusOps {
     * id ranges for triage. Two LEFT ANTI joins on the id — each is one
     * hash-keyed shuffle of ids only; neither text nor vectors move. */
   def d32IntegrityAudit(spark: SparkSession, dir: String): DataFrame = {
-    val dIds = docs(spark, dir).select(col("doc_id").as("id"))
+    val dIds = Tables.loadSpread(spark, dir, "documents")
+      .select(col("doc_id").as("id"))
     val eIds = Tables.load(spark, dir, "embeddings")
       .select(col("vec_id").as("id"))
     def side(name: String, missing: DataFrame): DataFrame =
@@ -832,7 +830,7 @@ object CorpusOps {
   }
 
   def d33TrainSplit(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), splitOf(col("doc_id")).as("split"))
       .groupBy("source", "split")
       .agg(count(lit(1)).as("n_docs"))
@@ -874,7 +872,7 @@ object CorpusOps {
     * ≤ V×3-row grid with broadcast joins. */
   def d62SplitDrift(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val counts = docs(spark, dir)
+    val counts = Tables.loadSpread(spark, dir, "documents")
       .select(splitOf(col("doc_id")).as("split"),
         explode(tokens(lower(col("text")))).as("term"))
       .groupBy("split", "term").agg(count(lit(1)).as("c"))
@@ -958,7 +956,7 @@ object CorpusOps {
     * plants combining marks, C1 debris, and astral-plane text for the
     * transforming cases — the d26 PII split. */
   def d63Normalize(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), col("text"),
         graft.functions.NfcClean(col("text")).as("clean_text"))
       .select(col("doc_id"),
@@ -997,10 +995,11 @@ object CorpusOps {
     * The oracle is the PLAIN join — salting must be bitwise invisible
     * in the result, which is exactly what the gate checks. */
   def d65SaltedEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val dim = docs(spark, dir).select("source").distinct()
+    val dim = Tables.loadSpread(spark, dir, "documents").select("source").distinct()
       .withColumn("weight", TextOps.hash60(col("source")) % 5 + 1)
     Relational.saltedJoin(
-      docs(spark, dir).select("doc_id", "source", "n_chars"),
+      Tables.loadSpread(spark, dir, "documents")
+        .select("doc_id", "source", "n_chars"),
       dim, Seq("source"),
       TextOps.hash60(col("doc_id").cast("string")), salts = 8)
       .select(col("doc_id"), col("source"), col("weight"),
@@ -1036,7 +1035,7 @@ object CorpusOps {
     * single-partition ranking window touches ≤ 10k rows no matter the
     * corpus — the same bounded-window discipline as d19/d56. */
   def d72ZipfFit(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = docs(spark, dir)
+    val vocab = Tables.loadSpread(spark, dir, "documents")
       .select(explode(tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token")).limit(ZipfTopV)
@@ -1116,7 +1115,7 @@ object CorpusOps {
     * TakeOrdered. A 100× corpus grows the first aggregate linearly
     * and everything after it barely at all. */
   def d74BpeMerges(spark: SparkSession, dir: String): DataFrame = {
-    val words = docs(spark, dir)
+    val words = Tables.loadSpread(spark, dir, "documents")
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wc"))
     // single-char words carry no pairs — and must be guarded explicitly:
@@ -1170,7 +1169,7 @@ object CorpusOps {
   def d75ZorderLayout(spark: SparkSession, dir: String): DataFrame = {
     val z = graft.io.Layouts.mortonSql(
       "(n_chars & 65535)", "(n_toks & 65535)")
-    val keyed = docs(spark, dir)
+    val keyed = Tables.loadSpread(spark, dir, "documents")
       .withColumn("n_toks", size(tokens(col("text"))).cast("long"))
       .withColumn("zkey", expr(z))
     val total = keyed.agg(count(lit(1)).as("n_total"))
@@ -1210,12 +1209,15 @@ object CorpusOps {
     * key — never text. One exchange per side, output is
     * change-set-sized. */
   def d77SnapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val a = docs(spark, dir).select(col("doc_id"), md5(col("text")).as("ha"))
-    val base = docs(spark, dir).filter(col("doc_id") % 97 =!= 0)
+    val a = Tables.loadSpread(spark, dir, "documents")
+      .select(col("doc_id"), md5(col("text")).as("ha"))
+    val base = Tables.loadSpread(spark, dir, "documents")
+      .filter(col("doc_id") % 97 =!= 0)
       .select(col("doc_id"),
         md5(when(col("doc_id") % 13 === 0, concat(col("text"), lit(" v2")))
           .otherwise(col("text"))).as("hb"))
-    val added = docs(spark, dir).filter(col("doc_id") % 89 === 0)
+    val added = Tables.loadSpread(spark, dir, "documents")
+      .filter(col("doc_id") % 89 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
         md5(concat(lit("new:"), col("text"))).as("hb"))
     a.join(base.union(added), Seq("doc_id"), "full_outer")
@@ -1270,7 +1272,7 @@ object CorpusOps {
     * TakeOrdered (per-partition heaps of k, driver merges k) — no
     * global sort, no shuffle of non-winners. */
   def d78WeightedSample(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       // a zero-weight doc is never selected under the scheme — and under
       // ANSI the division would throw rather than yield the +inf key the
       // math implies, so exclude it explicitly (oracle mirrors)
@@ -1927,7 +1929,7 @@ object CorpusOps {
   def d85CdcChunks(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val m = graft.functions.ShingleHashes.M
-    val toks = docs(spark, dir)
+    val toks = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"),
         posexplode(graft.functions.TokenHashes(tokens(col("text")), m))
           .as(Seq("pos", "h")))
@@ -2154,14 +2156,14 @@ object CorpusOps {
     * nothing single-tasked. */
   def d89ScoreCalibration(spark: SparkSession, dir: String): DataFrame = {
     val probs = array(CalibEdges.map(lit(_)): _*)
-    val edges = docs(spark, dir).groupBy("source")
+    val edges = Tables.loadSpread(spark, dir, "documents").groupBy("source")
       .agg(percentile_approx(col("n_chars"), probs, lit(1000000)).as("es"))
       .select(col("source") +: CalibEdges.indices.map(i =>
         col("es").getItem(i).as(s"e_$i")): _*)
     val bucket = CalibEdges.indices.map(i =>
       when(col(s"e_$i") < col("n_chars"), 1).otherwise(0))
       .reduce(_ + _)
-    docs(spark, dir).select("doc_id", "source", "n_chars")
+    Tables.loadSpread(spark, dir, "documents").select("doc_id", "source", "n_chars")
       .join(broadcast(edges), "source")
       .select(col("doc_id"), col("source"), col("n_chars"),
         round(bucket.cast("double") / CalibEdges.size.toDouble, 4)
@@ -2244,7 +2246,7 @@ object CorpusOps {
     * report is human-readable pairs. */
   def d91PmiCollocations(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs(spark, dir)
+    val toks = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "t")))
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val pairs = toks
@@ -2311,7 +2313,7 @@ object CorpusOps {
     * stream (no second corpus shuffle); final per-doc agg shuffles tiny
     * count rows on doc_id. Document text never moves. */
   def d34Boilerplate(spark: SparkSession, dir: String): DataFrame =
-    boilerplate(docs(spark, dir))
+    boilerplate(Tables.loadSpread(spark, dir, "documents"))
 
   /** The boilerplate scorer on an arbitrary (doc_id, text) frame. */
   private[graft] def boilerplate(d: DataFrame): DataFrame = {
@@ -2376,7 +2378,7 @@ object CorpusOps {
     import graft.functions.ShingleHashes
     val toks = tokens(col("text"))
     val sh = ShingleHashes(toks, TextOps.hash60(col("text")) % ShingleHashes.M)
-    val base = docs(spark, dir)
+    val base = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), toks.as("toks"), sh.as("shingles"))
       .localCheckpoint()
     val boiler = base
@@ -2467,7 +2469,7 @@ object CorpusOps {
     * ≤ C(4,2) rows per shingle; final count shuffles tiny pair keys.
     * Text never moves; nothing is ever all-pairs. */
   def d35SourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlap(docs(spark, dir))
+    sourceOverlap(Tables.loadSpread(spark, dir, "documents"))
 
   /** The overlap matrix on an arbitrary (source, text) frame. */
   private[graft] def sourceOverlap(d: DataFrame): DataFrame = {
@@ -2532,7 +2534,7 @@ object CorpusOps {
     * (thousands of concurrent queries) batches by making the query a
     * table and keying the filter-join on term. */
   def d37Bm25(spark: SparkSession, dir: String): DataFrame =
-    bm25(docs(spark, dir), Bm25Query)
+    bm25(Tables.loadSpread(spark, dir, "documents"), Bm25Query)
 
   /** The BM25 scorer on an arbitrary (doc_id, text) frame. */
   private[graft] def bm25(d: DataFrame, query: Seq[String]): DataFrame = {
@@ -2615,7 +2617,7 @@ object CorpusOps {
     * only ADD candidates, never drop one. */
   def d71HeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.CmsSketch
-    val tok = docs(spark, dir)
+    val tok = Tables.loadSpread(spark, dir, "documents")
       .select(explode(tokens(col("text"))).as("token"))
       .withColumn("th", xxhash64(col("token")))
     // pass 1: one distributed aggregation → sketch + exact N (no rows
@@ -2679,7 +2681,7 @@ object CorpusOps {
     * [[graft.functions.BigramHashes]] — codegen'd, oracle-interpolated. */
   def d102DsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val m = graft.functions.ShingleHashes.M
-    val d = docs(spark, dir)
+    val d = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"),
         (col("lang") === DsirTargetLang).cast("int").as("is_t"),
         graft.functions.TokenHashes(tokens(lower(col("text"))), m).as("hs"))
@@ -2826,7 +2828,7 @@ object CorpusOps {
     * [[graft.functions.BigramHashes]], oracle-interpolated. */
   def d106EvalCoverage(spark: SparkSession, dir: String): DataFrame = {
     val m = graft.functions.ShingleHashes.M
-    val d = docs(spark, dir)
+    val d = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"),
         graft.functions.TokenHashes(tokens(lower(col("text"))), m).as("hs"))
       .localCheckpoint()
@@ -3060,7 +3062,7 @@ object CorpusOps {
     * entropy reduction collapses it to one row per source, and the
     * token totals ride the same aggregate (no second corpus scan). */
   def d113TokenEntropy(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), explode(tokens(lower(col("text")))).as("term"))
       .groupBy("source", "term")
       .agg(count(lit(1)).as("c"))
@@ -3111,7 +3113,7 @@ object CorpusOps {
     * one row (the d19 idiom), and the final max is a 1-row
     * TakeOrdered. */
   def d114KsDrift(spark: SparkSession, dir: String): DataFrame = {
-    val bySrc = docs(spark, dir)
+    val bySrc = Tables.loadSpread(spark, dir, "documents")
       .groupBy("source").agg(count(lit(1)).as("n"))
     val roles = broadcast(bySrc
       .orderBy(col("n").desc, col("source")).limit(2)
@@ -3129,7 +3131,7 @@ object CorpusOps {
         struct(col("src_a").as("source"), lit(1).as("r")),
         struct(col("src_b").as("source"), lit(2).as("r")))).as("x"))
       .select(col("x.source"), col("x.r"))
-    val pooled = docs(spark, dir)
+    val pooled = Tables.loadSpread(spark, dir, "documents")
       .join(broadcast(top2), "source")
       .select(col("n_chars").as("value"), col("r"), col("doc_id"))
     val walked = GlobalOrder.runningTotal(pooled,
@@ -3206,7 +3208,7 @@ object CorpusOps {
     * the n·Σx integer product, for the same overflow reason. */
   def d115GiniSources(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("source").orderBy(col("n_chars"), col("doc_id"))
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), col("doc_id"), col("n_chars"))
       .withColumn("i", row_number().over(w))
       .groupBy("source")
@@ -3273,7 +3275,7 @@ object CorpusOps {
     * log2(D) bits vs bit [[SignShift]] = log2(D)), so index and sign
     * stay independent at ANY power-of-two dimension. */
   def d116FeatureHash(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
       .withColumn("h", TextOps.hash60(col("term")))
       .select(col("doc_id"),
@@ -3323,7 +3325,7 @@ object CorpusOps {
     * guard still protects the division under ANSI. */
   def d130LinearProbe(spark: SparkSession, dir: String): DataFrame = {
     val w = ((col("idx") * 37 % 101) - 50) / lit(100.0)
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
       .withColumn("h", TextOps.hash60(col("term")))
       .select(col("doc_id"),
@@ -3401,7 +3403,7 @@ object CorpusOps {
       lit(0L))
     val b = coalesce((size(tokens(col("text"))) >= KappaTokensHigh)
       .cast("long"), lit(0L))
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(a.as("a"), b.as("b"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("a") * col("b")).as("n_both_high"),
@@ -3478,7 +3480,7 @@ object CorpusOps {
     * IDENTICAL double expression tree, and n=1 groups yield NULL
     * variance by guard, not by division semantics. */
   def d133IncrementalStats(spark: SparkSession, dir: String): DataFrame = {
-    val x = docs(spark, dir)
+    val x = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), col("doc_id"),
         size(tokens(col("text"))).cast("long").as("x"))
     def batch(pred: org.apache.spark.sql.Column, tag: String): DataFrame =
@@ -3690,7 +3692,7 @@ object CorpusOps {
     * pack-keyed aggregate with map-side partials. Output is
     * pack-sized, not doc-sized. */
   def d136SequencePacking(spark: SparkSession, dir: String): DataFrame = {
-    val toks = docs(spark, dir)
+    val toks = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"),
         size(tokens(col("text"))).cast("long").as("t"),
         TextOps.hash60(concat(lit("pack:"), col("doc_id").cast("string")))
@@ -3750,7 +3752,7 @@ object CorpusOps {
     * answer stays exact; here the sketch IS the answer and this audit
     * is the periodic recalibration that keeps trusting it honest. */
   def d137ApproxDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val out = docs(spark, dir)
+    val out = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), explode(tokens(lower(col("text")))).as("term"))
       .groupBy("source")
       .agg(count_distinct(col("term")).as("exact_distinct"),
@@ -3803,14 +3805,16 @@ object CorpusOps {
     * four-factor denominator overflows any integer width at corpus
     * scale) with an identical expression tree in both engines. */
   def d117Chi2Terms(spark: SparkSession, dir: String): DataFrame = {
-    val td = docs(spark, dir)
+    val td = Tables.loadSpread(spark, dir, "documents")
       .select(col("lang"),
         explode(array_distinct(tokens(lower(col("text"))))).as("term"))
     val tl = td.groupBy("term", "lang").agg(count(lit(1)).as("a"))
     val dfr = tl.groupBy("term").agg(sum("a").as("df"))
       .filter(col("df") >= Chi2MinDf)
-    val nl = docs(spark, dir).groupBy("lang").agg(count(lit(1)).as("nl"))
-    val tot = broadcast(docs(spark, dir).agg(count(lit(1)).as("n")))
+    val nl = Tables.loadSpread(spark, dir, "documents")
+      .groupBy("lang").agg(count(lit(1)).as("nl"))
+    val tot = broadcast(Tables.loadSpread(spark, dir, "documents")
+      .agg(count(lit(1)).as("n")))
     val aD = col("a").cast("double")
     val bD = (col("df") - col("a")).cast("double")
     val cD = (col("nl") - col("a")).cast("double")
@@ -3954,7 +3958,7 @@ object CorpusOps {
     * no join. Empty corpus ⇒ NULL share (guarded division), zero
     * counts. */
   def d119KAnonymity(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .groupBy(col("lang"), col("source"),
         // integer `div`, mirroring the oracle's `//` exactly — never
         // a double divide + truncate
@@ -4023,7 +4027,7 @@ object CorpusOps {
   def d120HeapsGrowth(spark: SparkSession, dir: String): DataFrame = {
     val bucket = TextOps.hash60(
       concat(lit(HeapsSalt), col("doc_id").cast("string"))) % HeapsBuckets
-    val d = docs(spark, dir)
+    val d = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), col("text"), bucket.as("b"))
       .localCheckpoint()
     val tser = d.select(col("b"), size(tokens(lower(col("text")))).as("nt"))
@@ -4105,7 +4109,8 @@ object CorpusOps {
     * deterministic rank-based values, so the gate needs no float
     * tolerance beyond presentation rounding. */
   def d121RobustOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val base = docs(spark, dir).select(col("source"), col("n_chars"))
+    val base = Tables.loadSpread(spark, dir, "documents")
+      .select(col("source"), col("n_chars"))
       .localCheckpoint()
     val med = base.groupBy("source")
       .agg(percentile(col("n_chars"), lit(0.5)).as("med"),
@@ -4173,7 +4178,7 @@ object CorpusOps {
       col("source"))).cast("double") / lit(1.152921504606846976e18)
     val lap = -(lit(1.0) / DpEpsilon) * signum(u - 0.5) *
       log(lit(1.0) - lit(2.0) * abs(u - 0.5))
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("c"))
       .select(col("lang"), col("source"),
@@ -4422,7 +4427,7 @@ object CorpusOps {
     // Cleanup runs on EVERY exit — including a failed require() pin —
     // so a failed gate never strands the sharded parquet copy on disk.
     try {
-      val d = docs(spark, dir).select("doc_id", "text")
+      val d = Tables.loadSpread(spark, dir, "documents").select("doc_id", "text")
       Layouts.writeShards(d, path.toString, GateShards,
         key = "doc_id", shuffled = true, seed = 42L,
         assign = Some(pmod(TextOps.hash60(col("doc_id").cast("string")),
@@ -4679,7 +4684,7 @@ object CorpusOps {
     * so the UNIQUE `doc_id` is the tie column on both sides — rank
     * order is total, no sort ambiguity. */
   def d140ReservoirPerKey(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), col("doc_id"),
         TextOps.hash60(col("doc_id").cast("string")).cast("double").as("s"))
       .groupBy("source")
@@ -4900,7 +4905,7 @@ object CorpusOps {
     import graft.io.Layouts
     val path = java.nio.file.Files.createTempDirectory("graft-d146")
     try {
-      val d = docs(spark, dir).select("doc_id", "text")
+      val d = Tables.loadSpread(spark, dir, "documents").select("doc_id", "text")
       Layouts.writeRangeShards(d, path.toString, GateShards, "doc_id")
       val shardDirs = Option(path.toFile.list()).getOrElse(Array.empty[String])
         .toSeq.filter(_.startsWith("shard="))
@@ -4987,7 +4992,7 @@ object CorpusOps {
     * exact audit's hash self-join expands each hash to ≤ C(sources,2)
     * pairs, the d35 bound. */
   def d147KmvOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val dh = docs(spark, dir)
+    val dh = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), TextOps.hash60(col("text")).as("h"))
       .distinct()
       .localCheckpoint() // feeds sketch, exact audit, and per-source counts
@@ -5208,7 +5213,7 @@ object CorpusOps {
     * (libm-ulp class, the d113 precedent). */
   def d150NdcgEval(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val d = docs(spark, dir)
+    val d = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         TextOps.tokens(lower(col("text"))).as("toks"))
       .localCheckpoint() // one corpus scan feeds queries, tf, df, rel
@@ -5728,7 +5733,8 @@ object CorpusOps {
     // corpus ships 10 copies per doc) both the shingle pass and the
     // candidate mass fall by the replication factor. Measured 10x:
     // 85 s of task time -> ~6 s, wall 4.3 s -> 2.1 s.
-    val base = docs(spark, dir).select(col("doc_id"), col("text"))
+    val base = Tables.loadSpread(spark, dir, "documents")
+      .select(col("doc_id"), col("text"))
     val mapped = base
       .select(col("doc_id"), md5(col("text")).as("h"))
       .withColumn("rep", min("doc_id").over(Window.partitionBy("h")))
@@ -5910,7 +5916,8 @@ object CorpusOps {
     * deterministic under any tie order — equal n_chars rows cross the
     * bound inside a run of the same value. */
   def d157WeightedQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir).select(col("source"), col("doc_id"),
+    val d = Tables.loadSpread(spark, dir, "documents")
+      .select(col("source"), col("doc_id"),
       col("n_chars"), size(tokens(col("text"))).cast("long").as("w"))
     val run = Window.partitionBy("source")
       .orderBy(col("n_chars"), col("doc_id"))
@@ -6027,7 +6034,7 @@ object CorpusOps {
     * K-source-sized (collect_list → array_sort → posexplode, the d19
     * ≤K-row idiom — no global window); the corpus never shuffles. */
   def d160Apportion(spark: SparkSession, dir: String): DataFrame = {
-    val w = docs(spark, dir)
+    val w = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), size(tokens(col("text"))).cast("long").as("w"))
       .groupBy("source").agg(sum("w").as("w_tokens"))
     val tot = w.agg(sum("w_tokens").as("wsum"))
@@ -6240,7 +6247,7 @@ object CorpusOps {
     * output is K·bins rows. */
   def d163QuartileBins(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("source").orderBy(col("n_chars"), col("doc_id"))
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), col("doc_id"), col("n_chars"))
       .withColumn("q", ntile(NtileBins).over(w).cast("long"))
       .groupBy("source", "q")
@@ -6376,7 +6383,7 @@ object CorpusOps {
     * (BIGINT in the moving frame) — so engines cannot disagree on a
     * digit. Sources missing a class report NULL, not 0.5. */
   def d165Auc(spark: SparkSession, dir: String): DataFrame = {
-    val g = docs(spark, dir)
+    val g = Tables.loadSpread(spark, dir, "documents")
       .groupBy(col("source"), col("n_chars"))
       .agg(
         sum(when(col("lang") === AucPosLang, 1L).otherwise(0L)).as("np"),
@@ -6496,7 +6503,7 @@ object CorpusOps {
     * group table, no join); one (fold)-keyed aggregate with map-side
     * partials, K rows out. */
   def d167GroupFolds(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .withColumn("fold",
         (TextOps.hash60(concat(lit(CvSalt), col("source"))) % CvK)
           .cast("int"))
@@ -6545,7 +6552,7 @@ object CorpusOps {
       length(regexp_replace(col("text"), "[\\x{4e00}-\\x{9fff}]", ""))
     val nRepl = nChars -
       length(regexp_replace(col("text"), "\\x{fffd}", ""))
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), nChars.as("nc"), nAscii.as("na"),
         nCjk.as("nk"), nRepl.as("nr"))
       .groupBy("source")
@@ -6663,7 +6670,7 @@ object CorpusOps {
     * Degenerate single-source corpora emit NULL (guarded division).
     * All shares/means 4dp from exact integer sums. */
   def d171LooInfluence(spark: SparkSession, dir: String): DataFrame = {
-    val per = docs(spark, dir).groupBy("source")
+    val per = Tables.loadSpread(spark, dir, "documents").groupBy("source")
       .agg(count(lit(1)).as("n"), sum("n_chars").as("chars"),
         sum(when(col("lang") === AucPosLang, 1L).otherwise(0L)).as("en"))
       .localCheckpoint() // one corpus pass; totals + result reuse it
@@ -6717,7 +6724,7 @@ object CorpusOps {
     * join is the same bucketed equi-join discipline as the dedup
     * family (hashes move, docs don't). */
   def d172SourceAffinity(spark: SparkSession, dir: String): DataFrame = {
-    val freq = docs(spark, dir)
+    val freq = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), explode(tokens(lower(col("text")))).as("term"))
       .groupBy("source", "term").agg(count(lit(1)).as("c"))
       .localCheckpoint() // feeds norms AND the pairwise dot product
@@ -6838,7 +6845,7 @@ object CorpusOps {
     * frame (broadcast 1-row total), so the corpus is read once and
     * nothing data-sized shuffles. */
   def d174SourceLangNmi(spark: SparkSession, dir: String): DataFrame = {
-    val cells = docs(spark, dir)
+    val cells = Tables.loadSpread(spark, dir, "documents")
       .groupBy("source", "lang").agg(count(lit(1)).as("c"))
       .localCheckpoint() // one corpus pass feeds cells + marginals
     val n = broadcast(cells.agg(sum("c").as("n")))
@@ -6919,7 +6926,7 @@ object CorpusOps {
     * exchange moves ≤ budget·mapPartitions rows per source, never the
     * corpus — the d140 discipline), sliced to the quota. */
   def d175NeymanSample(spark: SparkSession, dir: String): DataFrame = {
-    val per = docs(spark, dir).groupBy("source")
+    val per = Tables.loadSpread(spark, dir, "documents").groupBy("source")
       .agg(count(lit(1)).as("n"), sum("n_chars").as("s1"),
         sum(col("n_chars") * col("n_chars")).as("s2"))
     // population variance from exact sums; greatest(0) absorbs the
@@ -6946,7 +6953,7 @@ object CorpusOps {
         (col("x.alloc0") +
           when(col("pos") < col("leftover"), 1L).otherwise(0L))
           .as("quota"))
-    val picks = docs(spark, dir)
+    val picks = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"),
         TextOps.hash60(concat(lit(NeymanSalt), col("doc_id")
           .cast("string"))).cast("double").as("s"),
@@ -7121,7 +7128,7 @@ object CorpusOps {
     * SUPPORT-sized frame (distinct lengths, not docs); Δv comes from
     * a rank self-join, not a global window. */
   def d177WassersteinDrift(spark: SparkSession, dir: String): DataFrame = {
-    val counts = docs(spark, dir)
+    val counts = Tables.loadSpread(spark, dir, "documents")
       .select(col("n_chars").as("v"), splitOf(col("doc_id")).as("split"))
       .filter(col("split") =!= "test")
       .groupBy("v")
@@ -7202,7 +7209,7 @@ object CorpusOps {
     * K-source frame normalizes against two 1-row broadcast totals.
     * Zero-token sources keep p=q=0 (no 0^α NaN: guarded). */
   def d178TemperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    val mass = docs(spark, dir)
+    val mass = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), size(tokens(col("text"))).cast("long").as("w"))
       .groupBy("source").agg(sum("w").as("tokens"))
     val tot = broadcast(mass.agg(sum("tokens").as("m")))
@@ -7262,7 +7269,7 @@ object CorpusOps {
     * frame; fof is a second tiny aggregate on counts; the r-spine
     * join is 11 rows against a broadcast total. */
   def d181GoodTuring(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = docs(spark, dir)
+    val vocab = Tables.loadSpread(spark, dir, "documents")
       .select(explode(tokens(lower(col("text")))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("c"))
     val fof = vocab.groupBy(col("c").as("r"))
@@ -7385,7 +7392,7 @@ object CorpusOps {
     * second corpus scan); the join moves (term, source, count) rows
     * — the d172 discipline. */
   def d183SourcePerplexity(spark: SparkSession, dir: String): DataFrame = {
-    val st = docs(spark, dir)
+    val st = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), explode(tokens(lower(col("text")))).as("term"))
       .groupBy("source", "term").agg(count(lit(1)).as("c"))
       .localCheckpoint() // feeds the global re-agg AND the join
@@ -7453,7 +7460,7 @@ object CorpusOps {
     * k-row exchange — never a global sort); the estimator folds the
     * k-row frame against its broadcast minimum. */
   def d184HillTail(spark: SparkSession, dir: String): DataFrame = {
-    val topk = docs(spark, dir)
+    val topk = Tables.loadSpread(spark, dir, "documents")
       .select(col("n_chars"), col("doc_id"))
       .orderBy(col("n_chars").desc, col("doc_id"))
       .limit(HillK)
@@ -7645,7 +7652,8 @@ object CorpusOps {
     * 3-row broadcast joined by range, aggregated to one row each. */
   def d188LorenzMass(spark: SparkSession, dir: String): DataFrame = {
     val walked = GlobalOrder.runningTotal(
-      docs(spark, dir).select(col("n_chars"), col("doc_id")),
+      Tables.loadSpread(spark, dir, "documents")
+        .select(col("n_chars"), col("doc_id")),
       Seq(col("n_chars").asc, col("doc_id").asc), col("n_chars"))
     val tot = broadcast(walked.agg(count(lit(1)).as("n"),
       sum("n_chars").as("mass")))
@@ -7889,7 +7897,7 @@ object CorpusOps {
   def d193TypedVariance(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import TypedStats._
-    val xs = docs(spark, dir)
+    val xs = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), size(tokens(col("text"))).cast("long").as("x"))
     val typed = xs.as[Keyed].groupByKey(_.source)
       .agg(WelfordAgg.toColumn.name("w"))

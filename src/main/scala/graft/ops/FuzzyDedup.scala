@@ -32,10 +32,6 @@ import graft.{Gate, Tables}
   */
 object FuzzyDedup {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    Tables.spread(Tables.load(spark, dir, "documents"),
-      Tables.sizeOf(dir, "documents"))
-
   /** MinHash parameters: 8 signatures → 4 bands × 2 rows. With the
     * band-collision probability 1-(1-j^2)^4, pairs at Jaccard 0.9 are
     * caught with p≈0.995 while 0.2-similar pairs collide with p≈0.16 —
@@ -221,7 +217,7 @@ object FuzzyDedup {
     * banding uses — auditing a reimplementation would audit nothing. */
   def d84MinhashRecall(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.{MinHashSigs, ShingleHashes}
-    val sample = docs(spark, dir)
+    val sample = Tables.loadSpread(spark, dir, "documents")
       .filter(col("doc_id") % RecallSampleMod === 0 &&
         col("doc_id") < RecallSampleMax)
       .select(col("doc_id"), col("text"), TextOps.tokens(col("text")).as("toks"))
@@ -339,7 +335,8 @@ object FuzzyDedup {
     * checkpointed; here it is recomputed (two scans of a columnar source
     * beat materializing shingle arrays). */
   def d2MinhashDedup(spark: SparkSession, dir: String): DataFrame =
-    verifiedPairs(docs(spark, dir)).orderBy("doc_a", "doc_b")
+    verifiedPairs(Tables.loadSpread(spark, dir, "documents"))
+      .orderBy("doc_a", "doc_b")
 
   /** The d2 pipeline as DuckDB CTEs (band hashes written out: 4 bands of
     * 2 md5-minhashes each), shared by the d2 and d15 oracles. Mirrors the
@@ -404,7 +401,7 @@ object FuzzyDedup {
     * exactly twice: once to build edges, once for the final left-join
     * that assigns singleton clusters. */
   def d15DedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.loadSpread(spark, dir, "documents")
     val near = verifiedPairs(d).select("doc_a", "doc_b")
     val exact = exactGroups(d).filter(col("doc_id") =!= col("rep"))
       .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
@@ -465,7 +462,8 @@ object FuzzyDedup {
     * top-10 TakeOrderedAndProject — nothing new moves. */
   def d55TopDupClusters(spark: SparkSession, dir: String): DataFrame =
     d15DedupClusters(spark, dir)
-      .join(docs(spark, dir).select("doc_id", "n_chars"), "doc_id")
+      .join(Tables.loadSpread(spark, dir, "documents")
+        .select("doc_id", "n_chars"), "doc_id")
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("n_members"),
         sum(when(col("keep") === 0, col("n_chars")).otherwise(0L))
@@ -502,7 +500,8 @@ object FuzzyDedup {
     * at 100 TB. */
   def d57ClusterBest(spark: SparkSession, dir: String): DataFrame = {
     val members = d15DedupClusters(spark, dir)
-      .join(docs(spark, dir).select("doc_id", "n_chars"), "doc_id")
+      .join(Tables.loadSpread(spark, dir, "documents")
+        .select("doc_id", "n_chars"), "doc_id")
       .select("doc_id", "cluster_id", "n_chars")
     val best = members.groupBy("cluster_id")
       .agg(min(struct((-col("n_chars")).as("neg_chars"),
@@ -537,7 +536,7 @@ object FuzzyDedup {
     * map stage; the cheap grouping key consumed by the banded near-dup
     * join in [[d16SimhashDedup]]. */
   def d3Simhash(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .withColumn("hs",
         graft.functions.TokenHashes(TextOps.tokens(col("text")), 0L))
       .select(col("doc_id"), simhashOf(col("hs")).as("simhash"))
@@ -591,7 +590,7 @@ object FuzzyDedup {
     // localCheckpoint: the fingerprint table (doc_id, 48-bit long) is
     // tiny but feeds BOTH sides of the band self-join — without it the
     // tokenize+hash scan runs twice
-    val fp = representatives(docs(spark, dir))
+    val fp = representatives(Tables.loadSpread(spark, dir, "documents"))
       .withColumn("hs",
         graft.functions.TokenHashes(TextOps.tokens(col("text")), 0L))
       .select(col("doc_id"), simhashOf(col("hs")).as("simhash"))
@@ -672,7 +671,7 @@ object FuzzyDedup {
     * [[d45DecontaminateW8]]; a unit test additionally runs window = 8
     * against a planted 8-token leak. */
   def d17Decontaminate(spark: SparkSession, dir: String): DataFrame =
-    decontaminateTopK(docs(spark, dir), window = 3)
+    decontaminateTopK(Tables.loadSpread(spark, dir, "documents"), window = 3)
 
   /** d17 at the PRODUCTION decontamination window (8 tokens) — the
     * precision configuration real pipelines run (3-token spans collide
@@ -682,7 +681,7 @@ object FuzzyDedup {
     * that the window parameter reaches codegen AND the SQL twin
     * correctly, not just the default path. */
   def d45DecontaminateW8(spark: SparkSession, dir: String): DataFrame =
-    decontaminateTopK(docs(spark, dir), window = 8)
+    decontaminateTopK(Tables.loadSpread(spark, dir, "documents"), window = 8)
 
   val d45Oracle: String = overlapTopKOracle(window = 8)
 
@@ -738,7 +737,7 @@ object FuzzyDedup {
     * overlap rows — source rides through the shared helper from the
     * single documents scan, no second scan or corpus-row join. */
   def d40ContaminationBySource(spark: SparkSession, dir: String): DataFrame =
-    docOverlapOf(docs(spark, dir), window = 3)
+    docOverlapOf(Tables.loadSpread(spark, dir, "documents"), window = 3)
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("overlap") >= 0.5, 1L).otherwise(0L))
@@ -797,7 +796,7 @@ object FuzzyDedup {
     * the probe-side scan, the verify join, and the n_shingles join-back
     * (~5 corpus scans for one answer). */
   def d43BloomDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    bloomDecontaminate(docs(spark, dir), window = 3)
+    bloomDecontaminate(Tables.loadSpread(spark, dir, "documents"), window = 3)
 
   /** The bloom-prefiltered scan on an arbitrary (doc_id, text) frame
     * with an explicit shingle window. */
@@ -866,7 +865,7 @@ object FuzzyDedup {
     * pipeline drops or truncates before training. */
   def d20Repetition(spark: SparkSession, dir: String): DataFrame = {
     val s = col("shingles")
-    shingleHashes(docs(spark, dir))
+    shingleHashes(Tables.loadSpread(spark, dir, "documents"))
       .select(col("doc_id"),
         size(s).as("n_shingles"),
         round(lit(1.0) - size(array_distinct(s)).cast("double") / size(s), 4)
@@ -910,7 +909,7 @@ object FuzzyDedup {
     * interpreted two lambdas per gram); set ops then compare longs,
     * not strings. */
   def d4NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    val g = docs(spark, dir)
+    val g = Tables.loadSpread(spark, dir, "documents")
       .withColumn("tl", lower(col("text")))
       .select(col("doc_id"), array_distinct(
         graft.functions.CharGramHashes(col("tl"),
@@ -980,7 +979,7 @@ object FuzzyDedup {
     * reason: it feeds the explode and both size join-backs, and the
     * md5 token pass dominates the stage. */
   def d52Containment(spark: SparkSession, dir: String): DataFrame =
-    containmentPairs(docs(spark, dir))
+    containmentPairs(Tables.loadSpread(spark, dir, "documents"))
 
   /** The containment report on an arbitrary (doc_id, text) frame. */
   private[graft] def containmentPairs(d: DataFrame): DataFrame = {
@@ -1068,7 +1067,7 @@ object FuzzyDedup {
     * text never does) plus one md5-keyed window for the exact channel;
     * the split columns are pure per-row functions of the ids. */
   def d54SplitLeakage(spark: SparkSession, dir: String): DataFrame =
-    splitLeakage(docs(spark, dir))
+    splitLeakage(Tables.loadSpread(spark, dir, "documents"))
 
   /** The leakage audit on an arbitrary (doc_id, text) frame. */
   private[graft] def splitLeakage(d: DataFrame): DataFrame = {
@@ -1143,7 +1142,7 @@ object FuzzyDedup {
     * hashes. Work is O(batch + corpus-set lookup), not
     * O(batch × corpus), and no document text ever shuffles. */
   def d27IncrementalNovelty(spark: SparkSession, dir: String): DataFrame =
-    incrementalNovelty(docs(spark, dir), IncSplit)
+    incrementalNovelty(Tables.loadSpread(spark, dir, "documents"), IncSplit)
 
   private[graft] def incrementalNovelty(d: DataFrame,
       split: Long): DataFrame = {
@@ -1241,7 +1240,7 @@ object FuzzyDedup {
     * one equi-join; shingle sets travel only for verified CANDIDATES.
     * Work is O(batch × bucket-hits), never O(batch × corpus). */
   def d216MinhashDelta(spark: SparkSession, dir: String): DataFrame =
-    minhashDelta(docs(spark, dir), IncSplit)
+    minhashDelta(Tables.loadSpread(spark, dir, "documents"), IncSplit)
 
   private[graft] def minhashDelta(d: DataFrame, split: Long): DataFrame = {
     // corpus index over exact-representatives (the corpus is already
@@ -1394,7 +1393,8 @@ object FuzzyDedup {
     * O(index) with no text moving; the artifacts are (band, bh, doc)
     * hash rows, amortized across every future night. */
   def d221IndexNightly(spark: SparkSession, dir: String): DataFrame =
-    indexNightly(spark, docs(spark, dir), NightlySplit1, NightlySplit2)
+    indexNightly(spark, Tables.loadSpread(spark, dir, "documents"),
+      NightlySplit1, NightlySplit2)
 
   private[graft] def indexNightly(spark: SparkSession, d: DataFrame,
       split1: Long, split2: Long): DataFrame = {
@@ -1638,7 +1638,7 @@ object FuzzyDedup {
     * Scale: d15's machinery plus one token-length projection and a
     * 1-row aggregate; nothing new moves. */
   def d206EffectiveTokens(spark: SparkSession, dir: String): DataFrame = {
-    val d = docs(spark, dir)
+    val d = Tables.loadSpread(spark, dir, "documents")
     val tok = d.select(col("doc_id"),
       size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
         .cast("long").as("n_tok"))

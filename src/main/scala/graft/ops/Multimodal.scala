@@ -32,7 +32,7 @@ import graft.{Gate, Tables}
   */
 object Multimodal {
 
-  /** Decode-path spread quantum (see [[graft.Tables.spread]]): media
+  /** Decode-path spread quantum (see [[graft.Tables.loadSpread]]): media
     * decode costs ~10× more CPU per source byte than text regex work
     * (payloads are synthesized at ~8× the source text bytes, then
     * resampled/hashed per pixel or per PCM window), so the decode
@@ -126,8 +126,7 @@ object Multimodal {
     * deterministically from doc_id — stand-in for a real media table). */
   def blobs(spark: SparkSession, dir: String): Dataset[MediaBlob] = {
     import spark.implicits._
-    Tables.spread(Tables.load(spark, dir, "documents"),
-        Tables.sizeOf(dir, "documents"), bytesPerTask = MediaSpreadQuantum)
+    Tables.loadSpread(spark, dir, "documents", MediaSpreadQuantum)
       .select(
         col("doc_id"),
         when(col("doc_id") % 3 === 0, lit("image"))
@@ -252,8 +251,7 @@ object Multimodal {
       encode(lit(s"P5\n$DHashW $DHashH\n255\n"), "UTF-8"),
       encode(expr(s"substr(repeat(text, cast(ceil($n.0 / length(text)) as int)), 1, $n)"),
         "UTF-8"))
-    val blobs = Tables.spread(Tables.load(spark, dir, "documents"),
-        Tables.sizeOf(dir, "documents"), bytesPerTask = MediaSpreadQuantum)
+    val blobs = Tables.loadSpread(spark, dir, "documents", MediaSpreadQuantum)
       // an empty document cannot pad a payload (ANSI: ceil(n/0) throws)
       // and would decode to nothing anyway — excluded in both engines
       .filter(length(col("text")) > 0)
@@ -328,8 +326,7 @@ object Multimodal {
     * front half, shared with the d198 transcode audit. */
   private[graft] def audioHashes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val blobs = Tables.spread(Tables.load(spark, dir, "documents"),
-        Tables.sizeOf(dir, "documents"), bytesPerTask = MediaSpreadQuantum)
+    val blobs = Tables.loadSpread(spark, dir, "documents", MediaSpreadQuantum)
       // same empty-payload exclusion as d70 (ANSI ceil-by-zero)
       .filter(length(col("text")) > 0)
       .select(col("doc_id"), concat(
@@ -428,9 +425,8 @@ object Multimodal {
     * values (417/418 bytes at 44.1 kHz 128 kbps) in `MediaSpec`. */
   def d139Mp3Meta(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val ids = Tables.spread(
-        Tables.load(spark, dir, "documents").select("doc_id"),
-        Tables.sizeOf(dir, "documents"), bytesPerTask = MediaSpreadQuantum)
+    val ids = Tables.loadSpread(spark, dir, "documents", MediaSpreadQuantum)
+      .select("doc_id")
       .as[Long]
     val parsed = ids.mapPartitions { it =>
       it.flatMap { id =>
@@ -755,8 +751,7 @@ object Multimodal {
       encode(concat(lit("P5\n"), w.cast("string"), lit(" "),
         h.cast("string"), lit("\n255\n")), "UTF-8"),
       expr("substring(encode(repeat(text, cast(ceil((wh + 0.0) / length(text)) as int)), 'UTF-8'), 1, wh)"))
-    val blobs = Tables.spread(Tables.load(spark, dir, "documents"),
-        Tables.sizeOf(dir, "documents"), bytesPerTask = MediaSpreadQuantum)
+    val blobs = Tables.loadSpread(spark, dir, "documents", MediaSpreadQuantum)
       .filter(length(col("text")) > 0) // cannot pad a payload (d70)
       .withColumn("wh", n)
       .select(col("doc_id"), pgm.as("data"))

@@ -24,12 +24,11 @@ import graft.{Gate, Tables}
   */
 object Similarity {
 
-  private def emb(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def emb(spark: SparkSession, dir: String): DataFrame =
     // 2 MB/task: the embedding store is dense fixed-width vectors and
     // its consumers re-read checkpointed frames many times per query —
     // finer grains multiply every downstream job's task count
-    Tables.spread(Tables.load(spark, dir, "embeddings"),
-      Tables.sizeOf(dir, "embeddings"), bytesPerTask = 2L << 20)
+    Tables.loadSpread(spark, dir, "embeddings", 2L << 20)
       .select(col("vec_id"), col("label"),
         // array cast, not transform(_.cast): Cast widens float→double
         // element-wise inside codegen; the HOF form is an interpreted
@@ -2122,10 +2121,6 @@ object Similarity {
     * integers on both engines, so the gate is hash-exact at any scale
     * regardless of the mix this particular constant yields. */
   private[graft] val IngestDupE4 = 8700L // ≈5-10% of the sf0.01 batches
-
-  /** [[emb]] for the streaming gate (same float→double array cast). */
-  private[graft] def embOf(spark: SparkSession, dir: String): DataFrame =
-    emb(spark, dir)
 
   /** FROZEN serving artifacts — coarse centroids, residual codebooks,
     * and the corpus's code index — trained on the CORPUS ALONE. d219

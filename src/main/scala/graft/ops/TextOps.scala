@@ -19,10 +19,6 @@ import graft.{Gate, Tables}
   */
 object TextOps {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    Tables.spread(Tables.load(spark, dir, "documents"),
-      Tables.sizeOf(dir, "documents"))
-
   /** Whitespace tokens of a text column (`\S+` runs, like a whitespace
     * pre-tokenizer). */
   def tokens(text: Column): Column =
@@ -45,7 +41,7 @@ object TextOps {
     * (no skew: identical docs are exactly the duplicates being removed). */
   def d1ExactDedup(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("text_hash")).orderBy(col("doc_id"))
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .withColumn("text_hash", md5(col("text")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -64,7 +60,7 @@ object TextOps {
     * key has ~languages cardinality, so partial aggregation collapses
     * everything before the (tiny) shuffle. */
   def d5TextStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .withColumn("n_tokens", size(tokens(col("text"))))
       .groupBy("lang")
       .agg(
@@ -95,7 +91,7 @@ object TextOps {
   def d6QualityScore(spark: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
     val nTok = size(toks)
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(
         col("doc_id"),
         nTok.as("n_tokens"),
@@ -127,7 +123,7 @@ object TextOps {
   def d7TokenCount(spark: SparkSession, dir: String): DataFrame = {
     val bpe = size(regexp_extract_all(
       col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .withColumn("n_bpe", bpe)
       .groupBy("source")
       .agg(
@@ -151,7 +147,7 @@ object TextOps {
     * used for sharded dedup joins (band = shuffle key → co-locates likely
     * duplicates without moving full texts). */
   def d8Fingerprint(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(
         col("doc_id"),
         hash60(lower(col("text"))).as("fp"))
@@ -195,7 +191,7 @@ object TextOps {
       val laterScores = scores.drop(i + 1).map(_._2)
       when(laterScores.map(s >= _).reduce(_ && _), lit(langName)).otherwise(rest)
     }
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("lang"), predicted.as("predicted"))
       .groupBy("lang", "predicted")
       .agg(count(lit(1)).as("n"))
@@ -238,7 +234,7 @@ object TextOps {
     (hash60(col("doc_id").cast("string")) % 100) < mixRate
 
   def d18SampleMix(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -273,7 +269,7 @@ object TextOps {
     * map; token arrays never leave the scan stage) + a tiny per-source
     * aggregate; the TOTAL row is a rollup of the same partials. */
   def d39MixtureTokens(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), size(tokens(col("text"))).as("n_tok"),
         when(mixKeep, lit(1L)).otherwise(0L).as("k"))
       .rollup("source")
@@ -322,7 +318,7 @@ object TextOps {
   private val MixAlpha = 0.3
 
   def d66MixtureWeights(spark: SparkSession, dir: String): DataFrame = {
-    val perSource = docs(spark, dir)
+    val perSource = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), size(tokens(col("text"))).as("n_tok"))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
@@ -380,7 +376,7 @@ object TextOps {
     val bucket = SeqBuckets.init.foldRight(lit(SeqBuckets.last): Column) {
       (b, rest) => when(col("n_tok") <= b, lit(b)).otherwise(rest)
     }
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(size(tokens(col("text"))).as("n_tok"))
       .withColumn("bucket", bucket)
       .groupBy("bucket")
@@ -436,7 +432,7 @@ object TextOps {
     * Sort + GlobalLimit plan whose fetch order is unspecified. The
     * global aggregate sees only the 30 post-limit rows. */
   def d19Vocab(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(explode(tokens(lower(col("text")))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token"))
@@ -473,7 +469,7 @@ object TextOps {
   def d21Packing(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .withColumn("n_tokens", size(tokens(col("text"))))
       .withColumn("cum_tokens", sum("n_tokens").over(w))
       .select(col("doc_id"), col("source"), col("n_tokens"),
@@ -553,7 +549,7 @@ object TextOps {
     * what "the mixture" means between the decision and its
     * execution). */
   private[graft] def epochAlloc(spark: SparkSession, dir: String): DataFrame = {
-    val per = docs(spark, dir)
+    val per = Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), size(tokens(col("text"))).cast("long").as("n_tok"))
       .groupBy("source").agg(sum("n_tok").as("n_tokens"))
       .withColumn("cap", col("n_tokens") * EpochCap)
@@ -659,7 +655,7 @@ object TextOps {
       .select("source", "n_tokens", "alloc_tokens", "n_full_epochs",
         "frac_target"))
     val w = Window.partitionBy("source").orderBy("hh", "doc_id")
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("source"), col("doc_id"),
         size(tokens(col("text"))).cast("long").as("t"))
       .withColumn("hh", hash60(concat(col("source"), lit(":"),
@@ -739,7 +735,7 @@ object TextOps {
     * the broadcast, re-aggregate on doc_id. Zero-token docs are kept
     * (NULL rate) — dropping rows is the curation gate's job. */
   def d100OovRate(spark: SparkSession, dir: String): DataFrame = {
-    val t = docs(spark, dir)
+    val t = Tables.loadSpread(spark, dir, "documents")
       .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
       .localCheckpoint()
     val tok = t.select(col("doc_id"), explode(col("toks")).as("token"))
@@ -800,7 +796,7 @@ object TextOps {
   def d105TokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
     val bpe = size(regexp_extract_all(
       col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
-    docs(spark, dir)
+    Tables.loadSpread(spark, dir, "documents")
       .select(col("lang"), size(tokens(col("text"))).cast("long").as("n_ws"),
         bpe.cast("long").as("n_bpe"),
         length(col("text")).cast("long").as("n_ch"))
@@ -871,7 +867,8 @@ object TextOps {
     * `md5(lower(text))` first and keep the collated type for the
     * survivor table's downstream joins. */
   def d229CollationDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = docs(spark, dir).select(col("doc_id"), col("text"))
+    val base = Tables.loadSpread(spark, dir, "documents")
+      .select(col("doc_id"), col("text"))
     val clones = base.filter(col("doc_id") % CloneMod === 0)
       .select((col("doc_id") + CloneIdOffset).as("doc_id"),
         upper(col("text")).as("text"))

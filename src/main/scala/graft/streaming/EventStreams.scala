@@ -38,11 +38,9 @@ object EventStreams {
     * normalized to a real TimestampType at ingest. A file stream
     * declares its schema up front and cannot inspect annotations, so
     * the UNIT of the raw long is probed from the directory's footers
-    * via a one-time driver-side batch read (the same dispatch
-    * `Tables.load` does): a batch LongType means TIMESTAMP(NANOS)
-    * surfaced under `nanosAsLong` → divide to µs; anything else is the
-    * MICROS generation → the long already IS µs. Hard-coding one
-    * encoding silently mis-scaled the other generation by 1000×. */
+    * via a one-time driver-side batch read ([[graft.EventTime]], the
+    * probe `Tables.load` uses). Hard-coding one encoding silently
+    * mis-scaled the other generation by 1000×. */
   def readEvents(spark: SparkSession, dir: String,
       sourceOptions: Map[String, String] = Map.empty): DataFrame = {
     // the staged entry can be a bare parquet FILE (testdata layout) or
@@ -50,8 +48,7 @@ object EventStreams {
     // not recurse, so try both shapes
     val probed = Seq(dir, s"$dir/*").view
       .flatMap(p => scala.util.Try(spark.read.parquet(p).schema).toOption)
-      .headOption
-      .flatMap(_.find(_.name == "ts"))
+      .headOption.filter(_.fieldNames.contains("ts"))
     // a day-one-empty dir has no footer to probe: we must still pick a
     // unit (the stream cannot re-declare its schema later), but doing
     // so SILENTLY is how a NANOS-generation file landing after stream
@@ -63,11 +60,10 @@ object EventStreams {
           "the MICROS timestamp generation. If NANOS-generation files " +
           "arrive on this stream their event times will be wrong by " +
           "1000x — restart the stream once files exist to re-probe.")
-    val isNanos = probed.exists(_.dataType == LongType)
-    val raw = spark.readStream.schema(eventSchema)
+    spark.readStream.schema(eventSchema)
       .options(sourceOptions).parquet(dir)
-    if (isNanos) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else raw.withColumn("ts", timestamp_micros(col("ts")))
+      .withColumn("ts", timestamp_micros(
+        graft.EventTime.longMicros(probed.exists(graft.EventTime.isNanos))))
   }
 
   /** Tumbling 1-hour aggregation — streaming q17. The watermark (default

@@ -1,13 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.{Gate, Tables}
+import graft.{EventTime, Gate, Tables}
 
 /** Driver-gated STREAMING queries — until round 9 every streaming
   * operator was sbt-tested only (batch-equality in `StreamingSpec`);
@@ -16,16 +16,25 @@ import graft.{Gate, Tables}
   * #7), so a regression in the streaming code paths trips the hard
   * signal, not just the unit suite.
   *
-  * Gate-scale mechanics (NOT the production sink): the documents table
-  * is staged behind a symlink directory for the file-stream source
-  * (read-only testdata is never touched), the stream runs to completion
-  * with `Trigger.AvailableNow`, and the surviving rows land in a memory
-  * sink the query result reads back. A production deployment replaces
-  * the two ends — Kafka/files in, parquet out — and keeps the middle;
-  * the middle is what the oracle checks. The memory sink bounds this
-  * entry to gate scale by construction (driver-resident result), which
-  * is fine: the gated semantics are per-row and stateless, so scale
-  * behavior is the batch d17/d43 story, validated there.
+  * Gate-scale mechanics (NOT the production sink): a production
+  * deployment replaces the two ends — Kafka/files in, parquet out — and
+  * keeps the middle; the middle is what the oracle checks. Every gate
+  * runs on the same harness:
+  *  - [[withScratch]] gives the run one temp directory under
+  *    `java.io.tmpdir`. Staged sources (symlinks over the read-only
+  *    testdata, or planted part-files), checkpoints and sink output all
+  *    live inside it, and it is deleted in `finally`, so a failing pin
+  *    or stream error leaks nothing.
+  *  - [[Scratch.drain]] runs a plan to completion with
+  *    `Trigger.AvailableNow` into a memory sink and hands back its rows.
+  *    It owns the sink name, the checkpoint, the state-partition pin,
+  *    the RocksDB fingerprint and the post-drain checks, and drops the
+  *    sink's view before it returns. The memory
+  *    sink bounds a gate to gate scale by construction (driver-resident
+  *    result); gates that must resume or exercise a sink (file sink,
+  *    `foreachBatch`) drive their own writer inside the same scope.
+  *  - [[graft.EventTime]] decides the two raw `events.ts` encodings; the
+  *    sentinels that flush watermarks are built once, by [[sentinelRows]].
   */
 object StreamGates {
 
@@ -53,27 +62,95 @@ object StreamGates {
     * events/sec x state bytes per key. */
   private[streaming] val StatePartitions = "4"
 
-  /** Stage `<dir>/<table>.parquet` behind a fresh symlink directory for
-    * a file-stream source — per-run unique (concurrent runs can't
-    * clobber each other) and read-only over the source testdata. */
-  private def stage(dir: String, table: String,
-      prefix: String): java.nio.file.Path = {
-    val staged = Files.createTempDirectory(prefix)
-    Files.createSymbolicLink(
-      staged.resolve(s"$table.parquet"),
-      Paths.get(s"$dir/$table.parquet").toAbsolutePath)
-    staged
+  /** Run `body` in a fresh `graft-<gate>*` directory under
+    * `java.io.tmpdir`, deleted in `finally` however the run ends. What
+    * `body` returns must not read the directory lazily: memory-sink rows
+    * are driver-resident, and file-sink reads are `localCheckpoint`ed. */
+  private def withScratch[T](gate: String)(body: Scratch => T): T = {
+    val root = Files.createTempDirectory(s"graft-$gate")
+    try body(new Scratch(root))
+    finally deltree(root)
   }
 
-  /** Delete a staged directory once its stream has drained: the memory
-    * sink's rows are driver-resident, so nothing reads the files after
-    * `awaitTermination` — without this every gate run leaks a temp
-    * directory. Best-effort (a failed delete must not fail the gate). */
-  private def unstage(staged: java.nio.file.Path): Unit =
-    try {
-      Files.list(staged).forEach(p => Files.deleteIfExists(p))
-      Files.deleteIfExists(staged)
-    } catch { case _: java.io.IOException => () }
+  /** One gate run's temp space (see [[withScratch]]). */
+  private final class Scratch(root: Path) {
+    private val modBase = System.currentTimeMillis()
+
+    /** A fresh empty directory inside the scope. */
+    def dir(role: String): Path = Files.createTempDirectory(root, role)
+
+    /** `<sfDir>/<table>.parquet` linked into a fresh directory for a
+      * file-stream source — read-only over the source testdata. */
+    def stage(sfDir: String, table: String): Path = {
+      val staged = dir("src")
+      Files.createSymbolicLink(staged.resolve(s"$table.parquet"),
+        Paths.get(s"$sfDir/$table.parquet").toAbsolutePath)
+      staged
+    }
+
+    /** Write `df` into the file-stream source dir `into` as one bare
+      * part-file `name` (the source lists FILES, so phases are planted
+      * as part-files, never Spark-written directories), its mtime
+      * `order` seconds past the scope's start: the source lists
+      * oldest-first, so `order` is the file's micro-batch order.
+      * Thread-safe, so independent slices can be written together. */
+    def plant(df: DataFrame, into: Path, name: String, order: Int): Unit = {
+      val tmp = dir("w")
+      try {
+        val outDir = tmp.resolve("out")
+        df.coalesce(1).write.mode("overwrite").parquet(outDir.toString)
+        // File.list (not Files.list) — no stream handle to leak
+        val part = Option(outDir.toFile.list())
+          .getOrElse(Array.empty[String]).find(_.endsWith(".parquet"))
+          .getOrElse(throw new IllegalStateException(
+            s"no part-file written under $outDir"))
+        Files.move(outDir.resolve(part), into.resolve(name))
+        into.resolve(name).toFile.setLastModified(modBase + order * 1000L)
+      } finally deltree(tmp)
+    }
+
+    /** Run a streaming `plan` to completion into a memory sink and
+      * return its rows. The one place that names the sink, checkpoints
+      * inside the scope (`ckpt`, or a fresh dir: Spark's own temporary
+      * checkpoint outlives a failed query), pins the state partitions
+      * on `start()` ([[startStateful]]), drains with `AvailableNow`,
+      * fingerprints the state provider ([[requireRocksDb]]), runs the
+      * caller's post-drain `check` on the query and its rows, and drops
+      * the sink's view: the returned frame keeps the rows, while the
+      * session no longer holds them under a name. A `stateful = false`
+      * plan holds no store, so it gets neither the pin nor the
+      * fingerprint. Pass the same `ckpt` twice to resume. */
+    def drain[T](plan: Dataset[T], mode: String,
+        ckpt: Option[Path] = None, stateful: Boolean = true)(
+        check: (StreamingQuery, DataFrame) => Unit = (_, _) => ()): DataFrame = {
+      val spark = plan.sparkSession
+      val name = s"graft_drain_run${runSeq.incrementAndGet()}"
+      val writer = plan.writeStream.format("memory").queryName(name)
+        .outputMode(mode).trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt.getOrElse(dir("ckpt")).toString)
+      try {
+        val query =
+          if (stateful) startStateful(spark, writer) else writer.start()
+        try {
+          query.awaitTermination()
+          if (stateful) requireRocksDb(query)
+          val rows = spark.table(name)
+          check(query, rows)
+          rows
+        } finally query.stop()
+      } finally spark.catalog.dropTempView(name)
+    }
+  }
+
+  /** The sorted entries of `out`, which must be exactly `expected`: one
+    * batchId-keyed output directory per micro-batch. */
+  private def requireBatchDirs(out: Path,
+      expected: Seq[String] = Seq("b0", "b1")): Unit = {
+    val dirs = Option(out.toFile.list())
+      .getOrElse(Array.empty[String]).toSeq.sorted
+    require(dirs == expected,
+      s"expected exactly one output dir per micro-batch ($expected), got $dirs")
+  }
 
   // --------------------------------------------------------------- d50
   /** The streaming DECONTAMINATION gate ([[IngestStreams.decontaminated]])
@@ -86,23 +163,17 @@ object StreamGates {
     * state store — pinned in `StreamingSpec`). Gated against a DuckDB
     * oracle sharing d17's shingle CTEs, so "contaminated" provably
     * means the same thing on the batch and streaming paths. */
-  def d50StreamDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val bench = docs.filter(col("doc_id") < 5).select("doc_id", "text")
-    val staged = stage(dir, "documents", "graft-d50")
-    val stream = spark.readStream.schema(docs.schema).parquet(staged.toString)
-    val name = s"graft_d50_run${runSeq.incrementAndGet()}"
-    val query = IngestStreams.decontaminated(stream, bench)
-      .filter(col("doc_id") >= 5) // the corpus side, as in d17
-      .select(col("doc_id"), col("overlap"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name).orderBy("doc_id")
-  }
+  def d50StreamDecontaminate(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d50") { s =>
+      val docs = Tables.load(spark, dir, "documents")
+      val bench = docs.filter(col("doc_id") < 5).select("doc_id", "text")
+      val stream = spark.readStream.schema(docs.schema)
+        .parquet(s.stage(dir, "documents").toString)
+      s.drain(IngestStreams.decontaminated(stream, bench)
+        .filter(col("doc_id") >= 5) // the corpus side, as in d17
+        .select(col("doc_id"), col("overlap")), "append", stateful = false)()
+        .orderBy("doc_id")
+    }
 
   /** Same shingle scheme as d17's oracle; the report differs — d17
     * ranks the worst 20 offenders, the gate emits the KEPT documents
@@ -135,22 +206,15 @@ object StreamGates {
     * file); per-user timestamps are batch-sorted inside the state
     * function, so the counts equal the batch window formulation
     * exactly — which is precisely the claim the gate hash-checks. */
-  def d64StreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stage(dir, "events", "graft-d64")
-    // readEvents declares the µs-long ts and normalizes to a real
-    // TimestampType at ingest — the same scan contract as the batch side
-    val stream = EventStreams.readEvents(spark, staged.toString)
-    val name = s"graft_d64_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, EventStreams.sessionCounts(stream)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name)
-      .select(col("user_id"), col("n_sessions"), col("n_events"))
-      .orderBy("user_id")
-  }
+  def d64StreamSessions(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d64") { s =>
+      // readEvents declares the µs-long ts and normalizes to a real
+      // TimestampType at ingest — the same scan contract as the batch side
+      val stream = EventStreams.readEvents(spark, s.stage(dir, "events").toString)
+      s.drain(EventStreams.sessionCounts(stream), "update")()
+        .select(col("user_id"), col("n_sessions"), col("n_events"))
+        .orderBy("user_id")
+    }
 
   /** q18's oracle verbatim — the streaming path must agree with the
     * batch sessionization definition, not a streaming-specific one. */
@@ -167,21 +231,12 @@ object StreamGates {
     * scale will eventually make, pre-verified. The provider pin rides
     * the same in-op discipline as d195-d197. */
   def d204TwsSessions(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark) {
-      val staged = stage(dir, "events", "graft-d204")
-      val stream = EventStreams.readEvents(spark, staged.toString)
-      val name = s"graft_d204_run${runSeq.incrementAndGet()}"
-      val query = startStateful(spark, EventStreams.sessionCountsTws(stream)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow()))
-      query.awaitTermination()
-      requireRocksDb(query)
-      unstage(staged)
-      spark.table(name)
+    withRocksDb(spark)(withScratch("d204") { s =>
+      val stream = EventStreams.readEvents(spark, s.stage(dir, "events").toString)
+      s.drain(EventStreams.sessionCountsTws(stream), "update")()
         .select(col("user_id"), col("n_sessions"), col("n_events"))
         .orderBy("user_id")
-    }
+    })
 
   /** q18's oracle verbatim, like d64 — both state APIs must agree with
     * the one batch sessionization definition. */
@@ -206,23 +261,15 @@ object StreamGates {
     * (its close time sits past the final watermark by construction)
     * and is excluded by key. */
   def d211TwsTimers(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark) {
-      val staged = stageWithSentinels(spark, dir, "graft-d211", Seq("flush"))
-      val stream = EventStreams.readEvents(spark, staged.toString)
-      val name = s"graft_d211_run${runSeq.incrementAndGet()}"
-      val query = startStateful(spark, EventStreams.closedSessionsTws(stream)
-        .filter(col("user_id") >= 0)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()))
-      query.awaitTermination()
-      requireRocksDb(query)
-      unstage(staged)
-      spark.table(name)
+    withRocksDb(spark)(withScratch("d211") { s =>
+      val stream = EventStreams.readEvents(spark,
+        stageWithSentinels(spark, dir, s, Seq("flush")).toString)
+      s.drain(EventStreams.closedSessionsTws(stream)
+        .filter(col("user_id") >= 0), "append")()
         .select(col("user_id"), col("start_us"), col("end_us"),
           col("n_events"))
         .orderBy("user_id", "start_us")
-    }
+    })
 
   /** Batch gap-sessionization emitting one row PER SESSION — the same
     * 30-minute-gap definition as q18's oracle, grouped one level finer
@@ -266,57 +313,50 @@ object StreamGates {
     * is exactly why it is the production debugging path: inspecting
     * TBs of RocksDB state costs one parquet-shaped scan, not a
     * re-run of the pipeline. */
-  def d225StateReader(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val staged = stage(dir, "documents", "graft-d225")
-    val ckpt = Files.createTempDirectory("graft-d225-ckpt")
-    val stream = spark.readStream.schema(docs.schema).parquet(staged.toString)
-      // d76's deterministic event time and epoch offset, but with the
-      // synthetic clock FOLDED to a 50-minute span (doc_id mod 3000
-      // seconds): dropDuplicatesWithinWatermark stores first-arrival
-      // + 1 h expiry, and the drain's final no-data batch advances the
-      // watermark to max(ts) − 1 h — a clock that grows 1 s per doc
-      // would sweep EVERY key out of state at a large-enough corpus
-      // (observed at the 10× sweep: 13.9 h span, zero keys held). The
-      // gate's subject is state retention, so the clock must stay
-      // inside one watermark horizon at every scale; dedup semantics
-      // are untouched (the key set never depends on the timestamps).
-      .withColumn("ingest_ts",
-        timestamp_micros((col("doc_id") % 3000L + 86400L) * 1000000L))
-    val name = s"graft_d225_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, IngestStreams.dedupedDocs(stream)
-      .select(col("text_hash"))
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(staged)
-    // the batch-side state read: keys held by the dedup operator's
-    // store at the last committed batch. A zero-row corpus commits no
-    // micro-batch at all (AvailableNow with nothing to read), so there
-    // is no state to inspect — the empty hash set, not an error.
-    // (a no-data run still emits progress events, so lastProgress is a
-    // false signal — the checkpoint's commit log is the truth)
-    val committed = {
-      val commits = ckpt.resolve("commits")
-      Files.exists(commits) && {
-        val s = Files.list(commits)
-        try s.anyMatch(p => !p.getFileName.toString.startsWith("."))
-        finally s.close()
+  def d225StateReader(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d225") { s =>
+      val docs = Tables.load(spark, dir, "documents")
+      val ckpt = s.dir("ckpt")
+      val stream = spark.readStream.schema(docs.schema)
+        .parquet(s.stage(dir, "documents").toString)
+        // d76's deterministic event time and epoch offset, but with the
+        // synthetic clock FOLDED to a 50-minute span (doc_id mod 3000
+        // seconds): dropDuplicatesWithinWatermark stores first-arrival
+        // + 1 h expiry, and the drain's final no-data batch advances the
+        // watermark to max(ts) − 1 h — a clock that grows 1 s per doc
+        // would sweep EVERY key out of state at a large-enough corpus
+        // (observed at the 10× sweep: 13.9 h span, zero keys held). The
+        // gate's subject is state retention, so the clock must stay
+        // inside one watermark horizon at every scale; dedup semantics
+        // are untouched (the key set never depends on the timestamps).
+        .withColumn("ingest_ts",
+          timestamp_micros((col("doc_id") % 3000L + 86400L) * 1000000L))
+      s.drain(IngestStreams.dedupedDocs(stream).select(col("text_hash")),
+        "append", Some(ckpt))()
+      // the batch-side state read: keys held by the dedup operator's
+      // store at the last committed batch. A zero-row corpus commits no
+      // micro-batch at all (AvailableNow with nothing to read), so there
+      // is no state to inspect — the empty hash set, not an error.
+      // (a no-data run still emits progress events, so lastProgress is a
+      // false signal — the checkpoint's commit log is the truth)
+      val committed = {
+        val commits = ckpt.resolve("commits")
+        Files.exists(commits) && {
+          val ls = Files.list(commits)
+          try ls.anyMatch(p => !p.getFileName.toString.startsWith("."))
+          finally ls.close()
+        }
       }
+      val held =
+        if (!committed)
+          spark.emptyDataFrame.select(lit("").as("text_hash")).limit(0)
+        else
+          spark.read.format("statestore").load(ckpt.toString)
+            .select(col("key.text_hash").as("text_hash"))
+            .orderBy("text_hash")
+            .localCheckpoint() // materialize before the checkpoint dir dies
+      held.orderBy("text_hash")
     }
-    val held =
-      if (!committed)
-        spark.emptyDataFrame.select(lit("").as("text_hash")).limit(0)
-      else
-        spark.read.format("statestore").load(ckpt.toString)
-          .select(col("key.text_hash").as("text_hash"))
-          .orderBy("text_hash")
-          .localCheckpoint() // materialize before the checkpoint dir dies
-    deltree(ckpt)
-    held.orderBy("text_hash")
-  }
 
   /** d76's oracle verbatim — the offline state read must see exactly
     * one held key per distinct content. (lazy: d76Oracle initializes
@@ -347,51 +387,43 @@ object StreamGates {
     * cutover; thereafter state is one record per active user, exactly
     * d204's. */
   def d222TwsBootstrap(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark) {
+    withRocksDb(spark)(withScratch("d222") { s =>
       import spark.implicits._
       // split the RAW log (original physical ts form) so the staged
-      // half round-trips byte-faithfully through the file-stream
-      // source; micros for the cut arithmetic come from the same
-      // generation probe readEvents uses
+      // half round-trips byte-faithfully through the file-stream source
       val raw = spark.read.parquet(s"$dir/events.parquet")
-      val isNanos =
-        raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-      val usCol =
-        if (isNanos) expr("ts div 1000")
-        else unix_micros(col("ts").cast("timestamp"))
-      val mm = raw.agg(min(usCol), max(usCol)).head()
-      if (mm.isNullAt(0)) { // zero-row log: nothing to bootstrap or stream
-        spark.emptyDataFrame
-          .select(lit(0L).as("user_id"), lit(0L).as("n_sessions"),
-            lit(0L).as("n_events"))
-      } else {
-      val cutUs = (mm.getLong(0) + mm.getLong(1)) / 2
-      val initial = raw.filter(usCol < cutUs)
-        .select(col("user_id"), usCol.as("us"))
-        .as[(Long, Long)]
-        .groupByKey(_._1)
-        .mapGroups { (u, it) =>
-          (u, EventStreams.foldSessionState(EventStreams.EmptySession,
-            it.map(_._2).toSeq.sorted))
-        }
-      val staged = Files.createTempDirectory("graft-d222")
-      stagePart(raw.filter(usCol >= cutUs),
-        staged, "log.parquet", "graft-d222")
-      val stream = EventStreams.readEvents(spark, staged.toString)
-      val name = s"graft_d222_run${runSeq.incrementAndGet()}"
-      val query = startStateful(spark,
-        EventStreams.sessionCountsTwsBootstrapped(stream, initial)
-          .writeStream.format("memory").queryName(name)
-          .outputMode("update")
-          .trigger(Trigger.AvailableNow()))
-      query.awaitTermination()
-      requireRocksDb(query)
-      unstage(staged)
-      spark.table(name)
-        .select(col("user_id"), col("n_sessions"), col("n_events"))
-        .orderBy("user_id")
+      val usCol = EventTime.micros(raw.schema)
+      midpointUs(raw) match {
+        case None => // zero-row log: nothing to bootstrap or stream
+          spark.emptyDataFrame
+            .select(lit(0L).as("user_id"), lit(0L).as("n_sessions"),
+              lit(0L).as("n_events"))
+        case Some(cutUs) =>
+          val initial = raw.filter(usCol < cutUs)
+            .select(col("user_id"), usCol.as("us"))
+            .as[(Long, Long)]
+            .groupByKey(_._1)
+            .mapGroups { (u, it) =>
+              (u, EventStreams.foldSessionState(EventStreams.EmptySession,
+                it.map(_._2).toSeq.sorted))
+            }
+          val staged = s.dir("src")
+          s.plant(raw.filter(usCol >= cutUs), staged, "log.parquet", 0)
+          val stream = EventStreams.readEvents(spark, staged.toString)
+          s.drain(EventStreams.sessionCountsTwsBootstrapped(stream, initial),
+            "update")()
+            .select(col("user_id"), col("n_sessions"), col("n_events"))
+            .orderBy("user_id")
       }
-    }
+    })
+
+  /** The midpoint of the raw log's event-time span in µs (the d222/d228
+    * cut), or None for a zero-row log. */
+  private def midpointUs(raw: DataFrame): Option[Long] = {
+    val usCol = EventTime.micros(raw.schema)
+    val mm = raw.agg(min(usCol), max(usCol)).head()
+    if (mm.isNullAt(0)) None else Some((mm.getLong(0) + mm.getLong(1)) / 2)
+  }
 
   /** q18's sessionization over the FULL log, restricted to users with
     * at least one event at-or-after the midpoint cut — the exact
@@ -437,41 +469,35 @@ object StreamGates {
     * sentinel user alone), never the user population — i.e. map
     * entries really do leave state at their close, not at stream end. */
   def d220TwsMapBursts(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark) {
-      val staged = stageWithSentinels(spark, dir, "graft-d220", Seq("flush"))
-      val stream = EventStreams.readEvents(spark, staged.toString)
-      val name = s"graft_d220_run${runSeq.incrementAndGet()}"
-      val query = startStateful(spark, EventStreams.typeBurstsTws(stream)
-        .filter(col("user_id") >= 0)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()))
-      query.awaitTermination()
-      requireRocksDb(query)
-      val finalState =
-        (query.recentProgress.toSeq ++ Option(query.lastProgress))
-          .flatMap(_.stateOperators).map(_.numRowsTotal)
-          .lastOption.getOrElse(0L)
-      // Exact residue, derived (r16 ADVICE #1): the only open entry at
-      // drain end is the sentinel user's single "flush" burst (its
-      // close needs ts+gap < watermark, but the final watermark trails
-      // the sentinel — the log's max event time — by the 1 h horizon,
-      // so it can never close); every real (user, type) burst closes
-      // 2.5 h earlier. `numRowsTotal` counts state-variable rows only
-      // (timer column families are reported separately), so the bound
-      // is exactly ONE map entry — measured 1 at sf0.01; any slack
-      // here would let leaked closed entries pass silently.
-      require(finalState <= 1,
-        s"state not horizon-bounded: $finalState rows survive the " +
-          "drain — closed map entries must leave state at their close, " +
-          "not persist per user (expected residue: the sentinel " +
-          "user's single open map entry)")
-      unstage(staged)
-      spark.table(name)
-        .select(col("user_id"), col("event_type"), col("start_us"),
+    withRocksDb(spark)(withScratch("d220") { s =>
+      val stream = EventStreams.readEvents(spark,
+        stageWithSentinels(spark, dir, s, Seq("flush")).toString)
+      val bursts = s.drain(
+          EventStreams.typeBurstsTws(stream).filter(col("user_id") >= 0),
+          "append") { (query, _) =>
+        val finalState =
+          (query.recentProgress.toSeq ++ Option(query.lastProgress))
+            .flatMap(_.stateOperators).map(_.numRowsTotal)
+            .lastOption.getOrElse(0L)
+        // Exact residue, derived (r16 ADVICE #1): the only open entry at
+        // drain end is the sentinel user's single "flush" burst (its
+        // close needs ts+gap < watermark, but the final watermark trails
+        // the sentinel — the log's max event time — by the 1 h horizon,
+        // so it can never close); every real (user, type) burst closes
+        // 2.5 h earlier. `numRowsTotal` counts state-variable rows only
+        // (timer column families are reported separately), so the bound
+        // is exactly ONE map entry — measured 1 at sf0.01; any slack
+        // here would let leaked closed entries pass silently.
+        require(finalState <= 1,
+          s"state not horizon-bounded: $finalState rows survive the " +
+            "drain — closed map entries must leave state at their close, " +
+            "not persist per user (expected residue: the sentinel " +
+            "user's single open map entry)")
+      }
+      bursts.select(col("user_id"), col("event_type"), col("start_us"),
           col("end_us"), col("n_events"))
         .orderBy("user_id", "event_type", "start_us")
-    }
+    })
 
   /** d211's per-session oracle keyed one level finer — the same
     * 30-minute-gap definition PARTITIONed and GROUPed by
@@ -509,27 +535,22 @@ object StreamGates {
     * the oracle can pin deterministically. Covers the state-store
     * dedup path (d50 covers stateless broadcast maps, d64 covers
     * `mapGroupsWithState`). */
-  def d76StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val staged = stage(dir, "documents", "graft-d76")
-    val stream = spark.readStream.schema(docs.schema).parquet(staged.toString)
-      // deterministic event time (1 s per id) — the watermark column;
-      // one AvailableNow batch, so nothing ages past the 1 h horizon.
-      // Offset well past epoch 0: the stream's INITIAL watermark is 0,
-      // and a row whose event time ties it counts as expired — doc 0
-      // at exactly 1970-01-01T00:00:00 would be silently dropped.
-      .withColumn("ingest_ts",
-        timestamp_micros((col("doc_id") + 86400L) * 1000000L))
-    val name = s"graft_d76_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, IngestStreams.dedupedDocs(stream)
-      .select(col("text_hash"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name).orderBy("text_hash")
-  }
+  def d76StreamDedup(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d76") { s =>
+      val docs = Tables.load(spark, dir, "documents")
+      val stream = spark.readStream.schema(docs.schema)
+        .parquet(s.stage(dir, "documents").toString)
+        // deterministic event time (1 s per id) — the watermark column;
+        // one AvailableNow batch, so nothing ages past the 1 h horizon.
+        // Offset well past epoch 0: the stream's INITIAL watermark is 0,
+        // and a row whose event time ties it counts as expired — doc 0
+        // at exactly 1970-01-01T00:00:00 would be silently dropped.
+        .withColumn("ingest_ts",
+          timestamp_micros((col("doc_id") + 86400L) * 1000000L))
+      s.drain(IngestStreams.dedupedDocs(stream).select(col("text_hash")),
+        "append")()
+        .orderBy("text_hash")
+    }
 
   /** One row per distinct content — the arrival-order-free projection
     * of d1's exact dedup. */
@@ -557,18 +578,12 @@ object StreamGates {
     * all window state, which is fine for a gate over a finite table and
     * wrong for an unbounded stream — the mode choice, not the plan, is
     * what differs. */
-  def d104StreamHourly(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stage(dir, "events", "graft-d104")
-    val stream = EventStreams.readEvents(spark, staged.toString)
-    val name = s"graft_d104_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, EventStreams.hourlyCounts(stream)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name).orderBy("hour", "event_type")
-  }
+  def d104StreamHourly(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d104") { s =>
+      val stream = EventStreams.readEvents(spark, s.stage(dir, "events").toString)
+      s.drain(EventStreams.hourlyCounts(stream), "complete")()
+        .orderBy("hour", "event_type")
+    }
 
   /** q17's oracle verbatim — the streaming windowed aggregation must
     * agree with the batch hourly rollup definition. */
@@ -588,37 +603,32 @@ object StreamGates {
     * deterministic pair set — hash-checked against the identical
     * interval self-join in DuckDB. Emits (purchase, view, gap-µs)
     * pairs; the gap arithmetic is integer microseconds end to end. */
-  def d107StreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stage(dir, "events", "graft-d107")
-    val views = EventStreams.readEvents(spark, staged.toString)
-      .filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = EventStreams.readEvents(spark, staged.toString)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("p_ts"),
-        col("event_id").as("p_id"))
-      .withWatermark("p_ts", "1 hour")
-    val name = s"graft_d107_run${runSeq.incrementAndGet()}"
-    // a stream-stream join allocates TWO state stores per shuffle
-    // partition; at gate scale store init dominates (measured 7.5 s at
-    // 32 partitions vs 2.0 s at 8 for identical results)
-    val query = startStateful(spark, purchases
-      .join(views,
-        col("v_user") === col("user_id") &&
-          col("view_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
-          col("view_ts") < col("p_ts"))
-      .select(col("p_id"), col("view_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("view_ts")))
-          .as("gap_us"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name).orderBy("p_id", "view_id")
-  }
+  def d107StreamJoin(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d107") { s =>
+      val staged = s.stage(dir, "events")
+      val views = EventStreams.readEvents(spark, staged.toString)
+        .filter(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts").as("view_ts"),
+          col("event_id").as("view_id"))
+        .withWatermark("view_ts", "1 hour")
+      val purchases = EventStreams.readEvents(spark, staged.toString)
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"))
+        .withWatermark("p_ts", "1 hour")
+      // a stream-stream join allocates TWO state stores per shuffle
+      // partition; at gate scale store init dominates (measured 7.5 s at
+      // 32 partitions vs 2.0 s at 8 for identical results)
+      s.drain(purchases
+        .join(views,
+          col("v_user") === col("user_id") &&
+            col("view_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES") &&
+            col("view_ts") < col("p_ts"))
+        .select(col("p_id"), col("view_id"),
+          (unix_micros(col("p_ts")) - unix_micros(col("view_ts")))
+            .as("gap_us")), "append")()
+        .orderBy("p_id", "view_id")
+    }
 
   /** The identical interval self-join in DuckDB. */
   val d107Oracle: String =
@@ -658,7 +668,7 @@ object StreamGates {
     * path — offset log, state-store reload, no-reprocess — is the same
     * machinery this gate drives. */
   def d127StreamRecovery(spark: SparkSession, dir: String): DataFrame =
-    d127Body(spark, dir, rocksdb = false)
+    d127Body(spark, dir)
 
   /** d127's exactly-once recovery contract re-run on the PRODUCTION
     * state-store backend: both drains (initial + resume) run with
@@ -668,7 +678,7 @@ object StreamGates {
     * state sizes a 100 TB deployment carries. Same oracle as d127;
     * the provider is pinned in-op from the drain's own progress. */
   def d195RocksdbRecovery(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark)(d127Body(spark, dir, rocksdb = true))
+    withRocksDb(spark)(d127Body(spark, dir))
 
   /** d195's recovery contract under CHANGELOG CHECKPOINTING — the
     * configuration a production RocksDB stream actually runs (commit
@@ -682,40 +692,27 @@ object StreamGates {
     * drain's own metrics — a conf typo fails loudly on either axis. */
   def d207ChangelogRecovery(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark)(withConf(spark, ChangelogKey, "true")(
-      d127Body(spark, dir, rocksdb = true, changelog = true)))
+      d127Body(spark, dir, changelog = true)))
 
   private def d127Body(spark: SparkSession, dir: String,
-      rocksdb: Boolean, changelog: Boolean = false): DataFrame = {
-    val staged = Files.createTempDirectory("graft-d127-src")
-    val ckpt = Files.createTempDirectory("graft-d127-ckpt")
+      changelog: Boolean = false): DataFrame = withScratch("d127") { s =>
+    val staged = s.dir("src")
+    val ckpt = s.dir("ckpt")
     // split the raw file (read WITHOUT timestamp normalization, so the
     // written halves keep the source generation's ts encoding and
     // readEvents' unit probe applies unchanged)
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    def drop(pred: org.apache.spark.sql.Column, name: String): Unit =
-      stagePart(raw.filter(pred), staged, name, "graft-d127-w")
     var sawRows = false
-    def run(): String = {
-      val name = s"graft_d127_run${runSeq.incrementAndGet()}"
-      val query = startStateful(spark, EventStreams
-        .hourlyCounts(EventStreams.readEvents(spark, staged.toString))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()))
-      query.awaitTermination()
-      if (rocksdb) requireRocksDb(query)
-      sawRows ||= movedRows(query)
-      name
-    }
-    drop(col("event_id") % 2 === 0, "a.parquet")
+    def run(): DataFrame =
+      s.drain(EventStreams.hourlyCounts(
+          EventStreams.readEvents(spark, staged.toString)),
+        "complete", Some(ckpt)) { (query, _) => sawRows ||= movedRows(query) }
+    s.plant(raw.filter(col("event_id") % 2 === 0), staged, "a.parquet", 0)
     run() // phase 1: even half, then a clean stop
-    drop(col("event_id") % 2 === 1, "b.parquet")
-    val name2 = run() // phase 2: resume from the same checkpoint
+    s.plant(raw.filter(col("event_id") % 2 === 1), staged, "b.parquet", 1)
+    val resumed = run() // phase 2: resume from the same checkpoint
     if (changelog) requireChangelog(ckpt, sawRows)
-    // the memory table is driver-resident; the temp trees can go now
-    deltree(staged); deltree(ckpt)
-    spark.table(name2).orderBy("hour", "event_type")
+    resumed.orderBy("hour", "event_type")
   }
 
   /** q17's oracle verbatim over the WHOLE log — only a true resume
@@ -756,74 +753,62 @@ object StreamGates {
     * At scale the watermark is THE state bound: allowed lateness ×
     * input rate caps the state store; this gate is the contract for
     * what that cap costs in data. */
-  def d145StreamLateDrops(spark: SparkSession, dir: String): DataFrame = {
-    val staged = Files.createTempDirectory("graft-d145-src")
-    val ckpt = Files.createTempDirectory("graft-d145-ckpt")
-    // the raw encoding (no ts normalization), exactly as d127 — the
-    // written phase files keep the source generation's ts physical
-    // type, so readEvents' unit probe applies unchanged
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val isNanos =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    val late = col("event_id") % LateMod === LateRem
-    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-      stagePart(df, staged, name, "graft-d145-w")
-    // append + restart needs a fault-tolerant sink (memory only
-    // recovers in complete mode) — the parquet FILE sink is the
-    // production shape anyway: exactly-once via its _spark_metadata
-    // commit log, which the final batch read consults
-    val out = Files.createTempDirectory("graft-d145-out")
-    def run(): org.apache.spark.sql.streaming.StreamingQuery = {
-      val query = startStateful(spark, EventStreams
-        .hourlyCounts(EventStreams.readEvents(spark, staged.toString),
-          delay = LateDelayStr)
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()))
-      query.awaitTermination()
-      query
+  def d145StreamLateDrops(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d145") { s =>
+      val staged = s.dir("src")
+      val ckpt = s.dir("ckpt")
+      // the raw encoding (no ts normalization), exactly as d127 — the
+      // written phase files keep the source generation's ts physical
+      // type, so readEvents' unit probe applies unchanged
+      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val late = col("event_id") % LateMod === LateRem
+      // append + restart needs a fault-tolerant sink (memory only
+      // recovers in complete mode) — the parquet FILE sink is the
+      // production shape anyway: exactly-once via its _spark_metadata
+      // commit log, which the final batch read consults
+      val out = s.dir("out")
+      def run(): StreamingQuery = {
+        val query = startStateful(spark, EventStreams
+          .hourlyCounts(EventStreams.readEvents(spark, staged.toString),
+            delay = LateDelayStr)
+          .writeStream.format("parquet")
+          .option("path", out.toString)
+          .outputMode("append")
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow()))
+        query.awaitTermination()
+        query
+      }
+      val onTime = raw.filter(!late)
+      s.plant(onTime, staged, "a.parquet", 0)
+      run() // phase 1: on-time rows; commits W = max−30min
+      // sentinel = the max-ts on-time row, pushed 2.5 h past the log:
+      // finalizes every real window, while its own window (end > final
+      // watermark) is never emitted. An empty log yields an empty
+      // sentinel (limit over nothing) — nothing to flush.
+      val sentinel = sentinelRows(onTime,
+        Seq("view" -> (LateDelayUs + 2L * 3600 * 1000000)))
+      val hasOnTime = !onTime.isEmpty
+      s.plant(raw.filter(late).unionByName(sentinel), staged, "b.parquet", 1)
+      val q2 = run() // phase 2: resume; stragglers judged against W
+      if (hasOnTime) {
+        val dropped = q2.recentProgress
+          .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+        require(dropped > 0,
+          "the resumed run must report watermark drops — a 30-day log's " +
+            "late seventh cannot all land inside the final 1.5 h horizon")
+      }
+      // explicit schema: an all-dropped run leaves only the metadata log,
+      // where schema inference has nothing to read
+      import org.apache.spark.sql.types._
+      spark.read
+        .schema(StructType(Seq(
+          StructField("hour", TimestampType), StructField("event_type", StringType),
+          StructField("n", LongType), StructField("total_value", DoubleType))))
+        .parquet(out.toString)
+        .orderBy("hour", "event_type")
+        .localCheckpoint() // the temp sink dir is deleted after this
     }
-    val onTime = raw.filter(!late)
-    drop(onTime, "a.parquet")
-    run() // phase 1: on-time rows; commits W = max−30min
-    // sentinel = the max-ts on-time row, pushed 2.5 h past the log in
-    // the RAW encoding: finalizes every real window, while its own
-    // window (end > final watermark) is never emitted. An empty log
-    // yields an empty sentinel (limit over nothing) — nothing to flush.
-    val bumpUs = LateDelayUs + 2L * 3600 * 1000000
-    val sentinel = onTime.orderBy(col("ts").desc).limit(1)
-      .select(
-        lit(-1L).as("event_id"),
-        (if (isNanos) col("ts") + lit(bumpUs * 1000L)
-         else col("ts") + expr(s"INTERVAL ${bumpUs / 60000000L} MINUTES"))
-          .as("ts"),
-        lit(-1L).as("user_id"), lit("view").as("event_type"),
-        lit(0.0).as("value"), lit(null).cast("string").as("props"))
-    val hasOnTime = !onTime.isEmpty
-    drop(raw.filter(late).unionByName(sentinel), "b.parquet")
-    val q2 = run() // phase 2: resume; stragglers judged against W
-    if (hasOnTime) {
-      val dropped = q2.recentProgress
-        .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-      require(dropped > 0,
-        "the resumed run must report watermark drops — a 30-day log's " +
-          "late seventh cannot all land inside the final 1.5 h horizon")
-    }
-    // explicit schema: an all-dropped run leaves only the metadata log,
-    // where schema inference has nothing to read
-    import org.apache.spark.sql.types._
-    val result = spark.read
-      .schema(StructType(Seq(
-        StructField("hour", TimestampType), StructField("event_type", StringType),
-        StructField("n", LongType), StructField("total_value", DoubleType))))
-      .parquet(out.toString)
-      .orderBy("hour", "event_type")
-      .localCheckpoint() // the temp sink dir can be deleted after this
-    deltree(staged); deltree(ckpt); deltree(out)
-    result
-  }
 
   /** Batch replay of the watermark semantics: on-time rows always
     * count; a late row counts iff its hour window was still open at
@@ -860,26 +845,21 @@ object StreamGates {
     * shuffle of the stream. The oracle replays the identical
     * enrichment as one batch join — stream-vs-batch equality is the
     * gate. */
-  def d159StreamStatic(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stage(dir, "events", "graft-d159")
-    val dim = Tables.load(spark, dir, "events")
-      .filter(col("event_type") === "purchase")
-      .groupBy("user_id")
-      .agg(round(sum("value"), 2).as("ltv"))
-    val clicks = EventStreams.readEvents(spark, staged.toString)
-      .filter(col("event_type") === "click")
-      .select("event_id", "user_id")
-    val name = s"graft_d159_run${runSeq.incrementAndGet()}"
-    val query = clicks.join(broadcast(dim), Seq("user_id"))
-      .writeStream.format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name)
-      .select(col("event_id"), col("user_id"), col("ltv"))
-      .orderBy("event_id")
-  }
+  def d159StreamStatic(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d159") { s =>
+      val dim = Tables.load(spark, dir, "events")
+        .filter(col("event_type") === "purchase")
+        .groupBy("user_id")
+        .agg(round(sum("value"), 2).as("ltv"))
+      val clicks = EventStreams.readEvents(spark,
+          s.stage(dir, "events").toString)
+        .filter(col("event_type") === "click")
+        .select("event_id", "user_id")
+      s.drain(clicks.join(broadcast(dim), Seq("user_id")), "append",
+          stateful = false)()
+        .select(col("event_id"), col("user_id"), col("ltv"))
+        .orderBy("event_id")
+    }
 
   /** The same enrichment as one batch join — inner, so clicks from
     * users who never purchased drop on both paths. */
@@ -917,42 +897,35 @@ object StreamGates {
     * one partitioned write. The merge-on-read is one (user)-keyed
     * aggregate over delta files — the compaction a production layout
     * runs periodically. */
-  def d170StreamUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val staged = Files.createTempDirectory("graft-d170-src")
-    val ckpt = Files.createTempDirectory("graft-d170-ckpt")
-    val out = Files.createTempDirectory("graft-d170-out")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    def drop(pred: org.apache.spark.sql.Column, name: String): Unit =
-      stagePart(raw.filter(pred), staged, name, "graft-d170-w")
-    // the idempotent batch writer: deterministic path keyed on batchId,
-    // overwrite mode — a retry of the same batch rewrites the same
-    // bytes instead of appending a second copy
-    def writeBatch(df: DataFrame, id: Long): Unit =
-      df.groupBy("user_id")
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long")).as("cents"))
-        .write.mode("overwrite").parquet(s"$out/b$id")
-    def run(): Unit = {
-      val query = EventStreams.readEvents(spark, staged.toString)
-        .filter(col("event_type") === "purchase")
-        .writeStream
-        .foreachBatch((df: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], id: Long) => writeBatch(df, id))
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    try {
-      drop(col("event_id") % 2 === 0, "a.parquet")
+  def d170StreamUpsert(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d170") { s =>
+      val staged = s.dir("src")
+      val ckpt = s.dir("ckpt")
+      val out = s.dir("out")
+      val raw = spark.read.parquet(s"$dir/events.parquet")
+      // the idempotent batch writer: deterministic path keyed on batchId,
+      // overwrite mode — a retry of the same batch rewrites the same
+      // bytes instead of appending a second copy
+      def writeBatch(df: DataFrame, id: Long): Unit =
+        df.groupBy("user_id")
+          .agg(count(lit(1)).as("n"),
+            sum(round(col("value") * 100).cast("long")).as("cents"))
+          .write.mode("overwrite").parquet(s"$out/b$id")
+      def run(): Unit = {
+        val query = EventStreams.readEvents(spark, staged.toString)
+          .filter(col("event_type") === "purchase")
+          .writeStream
+          .foreachBatch((df: DataFrame, id: Long) => writeBatch(df, id))
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        query.awaitTermination()
+      }
+      s.plant(raw.filter(col("event_id") % 2 === 0), staged, "a.parquet", 0)
       run() // phase 1: even half -> batch 0
-      drop(col("event_id") % 2 === 1, "b.parquet")
+      s.plant(raw.filter(col("event_id") % 2 === 1), staged, "b.parquet", 1)
       run() // phase 2: resume -> batch 1 (odd half only)
-      // File.list (not Files.list) — no stream handle to leak
-      val dirs = Option(out.toFile.list())
-        .getOrElse(Array.empty[String]).toSeq.sorted
-      require(dirs == Seq("b0", "b1"),
-        s"expected exactly one delta dir per micro-batch, got $dirs")
+      requireBatchDirs(out)
       def merged(): DataFrame = spark.read
         .parquet(s"$out/b0", s"$out/b1")
         .groupBy("user_id")
@@ -972,10 +945,7 @@ object StreamGates {
         "replaying a committed batch changed the sink — the write is " +
           "not idempotent")
       after.orderBy("user_id")
-    } finally { // failed pins must not strand the delta/source copies
-      deltree(staged); deltree(ckpt); deltree(out)
     }
-  }
 
   /** The one-shot batch aggregate the two-phase delta merge must
     * reproduce — exact cent arithmetic end to end. */
@@ -993,41 +963,34 @@ object StreamGates {
     * watermark delay + margin, the d145 constant). */
   private[streaming] val FlushBumpUs = FlushDelayUs + 90L * 60 * 1000000
 
-  /** The full event log plus `extra` sentinel rows, staged as ONE
-    * part-file in the RAW ts encoding (d145's discipline: the bump is
-    * applied in the source generation's physical type so readEvents'
-    * unit probe applies unchanged). The sentinels advance the final
-    * watermark past every real row, flushing state the one-shot
-    * AvailableNow drain would otherwise withhold. */
   /** One sentinel row per (event_type, bump-µs) spec, each sitting its
-    * spec's offset past the log's max event time. The raw/staged `ts`
-    * encoding probe (nanos-long vs real timestamp) and the two bump
-    * arithmetics live HERE and only here — d218 used to carry its own
-    * copy of the `*1000` nanos scaling and the INTERVAL-minutes form,
-    * which a future change to the staging encoding could silently
-    * desynchronize by 1000× (r15 ADVICE #2). */
+    * spec's offset past the max event time of `raw` (a raw-encoded
+    * events frame), with event_id −1, −2, … and user_id −1. Every gate
+    * that flushes or shifts a watermark with a sentinel builds it HERE
+    * and only here, and the bump goes through [[EventTime.shifted]]: a
+    * local copy of the nanos scaling or the INTERVAL form could drift
+    * 1000× from the staging encoding without any gate noticing. */
   private def sentinelRows(raw: DataFrame,
-      specs: Seq[(String, Long)]): DataFrame = {
-    val isNanos =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
+      specs: Seq[(String, Long)]): DataFrame =
     specs.zipWithIndex.map { case ((t, bumpUs), i) =>
       raw.orderBy(col("ts").desc).limit(1)
         .select(lit(-1L - i).as("event_id"),
-          (if (isNanos) col("ts") + lit(bumpUs * 1000L)
-           else col("ts") +
-             expr(s"INTERVAL ${bumpUs / 60000000L} MINUTES")).as("ts"),
+          EventTime.shifted(raw.schema, col("ts"), bumpUs).as("ts"),
           lit(-1L).as("user_id"), lit(t).as("event_type"),
           lit(0.0).as("value"), lit(null).cast("string").as("props"))
     }.reduce(_ unionByName _)
-  }
 
+  /** The full event log plus one [[FlushBumpUs]] sentinel per type in
+    * `types`, staged in `s` as ONE part-file in the RAW ts encoding, so
+    * readEvents' unit probe applies unchanged. The sentinels advance the
+    * final watermark past every real row, flushing state the one-shot
+    * AvailableNow drain would otherwise withhold. */
   private def stageWithSentinels(spark: SparkSession, dir: String,
-      prefix: String, types: Seq[String]): java.nio.file.Path = {
-    val staged = Files.createTempDirectory(prefix)
+      s: Scratch, types: Seq[String]): Path = {
+    val staged = s.dir("src")
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    stagePart(raw.unionByName(
-        sentinelRows(raw, types.map(_ -> FlushBumpUs))),
-      staged, "log.parquet", prefix)
+    s.plant(raw.unionByName(sentinelRows(raw, types.map(_ -> FlushBumpUs))),
+      staged, "log.parquet", 0)
     staged
   }
 
@@ -1058,49 +1021,41 @@ object StreamGates {
     * Scale: state is interval + watermark horizon per side, as d107;
     * the outer emission adds no extra pass — eviction IS the emit. */
   def d179StreamOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    d179Body(spark, dir, rocksdb = false)
+    d179Body(spark, dir)
 
   /** d179's watermark-evicted outer join re-run on RocksDB: the
     * null-padding rows are produced by state EVICTION, so this pins
     * that eviction order/completeness survives the production
     * provider swap. Same oracle as d179; provider pinned in-op. */
   def d196RocksdbOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark)(d179Body(spark, dir, rocksdb = true))
+    withRocksDb(spark)(d179Body(spark, dir))
 
-  private def d179Body(spark: SparkSession, dir: String,
-      rocksdb: Boolean): DataFrame = {
-    val staged = stageWithSentinels(spark, dir, "graft-d179",
-      Seq("view", "purchase"))
-    val views = EventStreams.readEvents(spark, staged.toString)
-      .filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"),
-        col("event_id").as("view_id"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = EventStreams.readEvents(spark, staged.toString)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("p_ts"),
-        col("event_id").as("p_id"))
-      .withWatermark("p_ts", "1 hour")
-    val name = s"graft_d179_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, purchases
-      .join(views,
-        col("v_user") === col("user_id") &&
-          col("view_ts") >=
-            col("p_ts") - expr(s"INTERVAL $OuterLookbackMin MINUTES") &&
-          col("view_ts") < col("p_ts"),
-        "left_outer")
-      .select(col("p_id"), col("view_id"),
-        (unix_micros(col("p_ts")) - unix_micros(col("view_ts")))
-          .as("gap_us"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    if (rocksdb) requireRocksDb(query)
-    unstage(staged)
-    spark.table(name).filter(col("p_id") >= 0)
-      .orderBy("p_id", "view_id")
-  }
+  private def d179Body(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d179") { s =>
+      val staged = stageWithSentinels(spark, dir, s, Seq("view", "purchase"))
+      val views = EventStreams.readEvents(spark, staged.toString)
+        .filter(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts").as("view_ts"),
+          col("event_id").as("view_id"))
+        .withWatermark("view_ts", "1 hour")
+      val purchases = EventStreams.readEvents(spark, staged.toString)
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"))
+        .withWatermark("p_ts", "1 hour")
+      s.drain(purchases
+        .join(views,
+          col("v_user") === col("user_id") &&
+            col("view_ts") >=
+              col("p_ts") - expr(s"INTERVAL $OuterLookbackMin MINUTES") &&
+            col("view_ts") < col("p_ts"),
+          "left_outer")
+        .select(col("p_id"), col("view_id"),
+          (unix_micros(col("p_ts")) - unix_micros(col("view_ts")))
+            .as("gap_us")), "append")()
+        .filter(col("p_id") >= 0)
+        .orderBy("p_id", "view_id")
+    }
 
   /** The identical LEFT interval self-join in DuckDB — unmatched
     * purchases must appear exactly once, NULL-padded. */
@@ -1141,43 +1096,34 @@ object StreamGates {
     * Scale: same shuffle/state shape as d104 — the union is free
     * (narrow), the agg shuffles on (window, type), state bounded by
     * the min-watermark horizon. */
-  def d218UnionWatermarks(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    // per-source bump offsets through the ONE shared sentinel builder
-    // (no local copy of the encoding probe — r15 ADVICE #2)
-    def sentinel(bumpUs: Long): DataFrame =
-      sentinelRows(raw, Seq("sentinel" -> bumpUs))
-    val dirA = Files.createTempDirectory("graft-d218-a")
-    val dirB = Files.createTempDirectory("graft-d218-b")
-    stagePart(raw.filter(col("event_type") === "view")
-      .unionByName(sentinel(FlushBumpUs)), dirA, "log.parquet", "graft-d218")
-    stagePart(raw.filter(col("event_type") =!= "view")
-      .unionByName(sentinel(LateBumpUs)), dirB, "log.parquet", "graft-d218")
-    // each source carries its OWN watermark; the union's aggregate then
-    // runs under the min of the two — the semantics under test
-    val a = EventStreams.readEvents(spark, dirA.toString)
-      .withWatermark("ts", "1 hour")
-    val b = EventStreams.readEvents(spark, dirB.toString)
-      .withWatermark("ts", "1 hour")
-    val name = s"graft_d218_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, a.unionByName(b)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total_value"))
-      .select(col("window.start").as("hour"), col("event_type"),
-        col("n"), col("total_value"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(dirA); unstage(dirB)
-    val out = spark.table(name)
-    // the alignment pin: under min-policy neither sentinel's window can
-    // have closed; a max-aligned watermark would have emitted source
-    // A's — fail loudly rather than hand the oracle a spurious row
-    require(out.filter(col("event_type") === "sentinel").isEmpty,
-      "a sentinel window was emitted — watermark alignment is not min")
-    out.orderBy("hour", "event_type")
-  }
+  def d218UnionWatermarks(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d218") { s =>
+      val raw = spark.read.parquet(s"$dir/events.parquet")
+      // one source per topic, each with its own sentinel bump
+      def source(topic: org.apache.spark.sql.Column, bumpUs: Long) = {
+        val staged = s.dir("src")
+        s.plant(raw.filter(topic)
+            .unionByName(sentinelRows(raw, Seq("sentinel" -> bumpUs))),
+          staged, "log.parquet", 0)
+        EventStreams.readEvents(spark, staged.toString)
+          .withWatermark("ts", "1 hour")
+      }
+      // each source carries its OWN watermark; the union's aggregate then
+      // runs under the min of the two — the semantics under test
+      val a = source(col("event_type") === "view", FlushBumpUs)
+      val b = source(col("event_type") =!= "view", LateBumpUs)
+      val out = s.drain(a.unionByName(b)
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total_value"))
+        .select(col("window.start").as("hour"), col("event_type"),
+          col("n"), col("total_value")), "append")()
+      // the alignment pin: under min-policy neither sentinel's window can
+      // have closed; a max-aligned watermark would have emitted source
+      // A's — fail loudly rather than hand the oracle a spurious row
+      require(out.filter(col("event_type") === "sentinel").isEmpty,
+        "a sentinel window was emitted — watermark alignment is not min")
+      out.orderBy("hour", "event_type")
+    }
 
   /** q17's oracle verbatim — the two topics reunite to exactly the
     * events table, and every real window must have closed. */
@@ -1205,35 +1151,29 @@ object StreamGates {
     * the semi join additionally SHRINKS the output (≤1 row per left
     * row), so the shape is strictly cheaper downstream than the inner
     * join at any fan-out. */
-  def d212StreamSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageWithSentinels(spark, dir, "graft-d212",
-      Seq("view", "purchase"))
-    val views = EventStreams.readEvents(spark, staged.toString)
-      .filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val purchases = EventStreams.readEvents(spark, staged.toString)
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("p_ts"),
-        col("event_id").as("p_id"))
-      .withWatermark("p_ts", "1 hour")
-    val name = s"graft_d212_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, purchases
-      .join(views,
-        col("v_user") === col("user_id") &&
-          col("view_ts") >=
-            col("p_ts") - expr(s"INTERVAL $OuterLookbackMin MINUTES") &&
-          col("view_ts") < col("p_ts"),
-        "left_semi")
-      .select(col("p_id"), col("user_id"),
-        unix_micros(col("p_ts")).as("p_ts_us"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name).filter(col("p_id") >= 0).orderBy("p_id")
-  }
+  def d212StreamSemiJoin(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d212") { s =>
+      val staged = stageWithSentinels(spark, dir, s, Seq("view", "purchase"))
+      val views = EventStreams.readEvents(spark, staged.toString)
+        .filter(col("event_type") === "view")
+        .select(col("user_id").as("v_user"), col("ts").as("view_ts"))
+        .withWatermark("view_ts", "1 hour")
+      val purchases = EventStreams.readEvents(spark, staged.toString)
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts").as("p_ts"),
+          col("event_id").as("p_id"))
+        .withWatermark("p_ts", "1 hour")
+      s.drain(purchases
+        .join(views,
+          col("v_user") === col("user_id") &&
+            col("view_ts") >=
+              col("p_ts") - expr(s"INTERVAL $OuterLookbackMin MINUTES") &&
+            col("view_ts") < col("p_ts"),
+          "left_semi")
+        .select(col("p_id"), col("user_id"),
+          unix_micros(col("p_ts")).as("p_ts_us")), "append")()
+        .filter(col("p_id") >= 0).orderBy("p_id")
+    }
 
   /** The identical qualification as a batch EXISTS — each qualifying
     * purchase exactly once, however many views touched it. */
@@ -1266,26 +1206,19 @@ object StreamGates {
     * Scale: per-batch partial aggregation on (window, type); state is
     * one row per open (window, type), bounded by watermark horizon ×
     * 4-fold overlap. */
-  def d205SlidingWindows(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageWithSentinels(spark, dir, "graft-d205",
-      Seq("zz_flush"))
-    val name = s"graft_d205_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark,
-      EventStreams.readEvents(spark, staged.toString)
+  def d205SlidingWindows(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d205") { s =>
+      val staged = stageWithSentinels(spark, dir, s, Seq("zz_flush"))
+      s.drain(EventStreams.readEvents(spark, staged.toString)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour", "15 minutes"),
           col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(unix_micros(col("window.start")).as("win_us"),
-          col("event_type"), col("n"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name).filter(col("event_type") =!= "zz_flush")
-      .orderBy("win_us", "event_type")
-  }
+          col("event_type"), col("n")), "append")()
+        .filter(col("event_type") =!= "zz_flush")
+        .orderBy("win_us", "event_type")
+    }
 
   /** The 4-offset closed form: an event at t belongs to the four
     * 15-min-aligned hour windows starting at ⌊t/15m⌋·15m − k·15m. */
@@ -1327,26 +1260,21 @@ object StreamGates {
     * session) record bounded by the watermark horizon — the unbounded
     *-session risk d92 handles in batch is exactly what the gap bound
     * prevents live. */
-  def d180SessionWindows(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageWithSentinels(spark, dir, "graft-d180", Seq("view"))
-    val stream = EventStreams.readEvents(spark, staged.toString)
-      .withWatermark("ts", "1 hour")
-    val name = s"graft_d180_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, stream
-      .groupBy(session_window(col("ts"), SessionGapStr), col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(round(col("value") * 100).cast("long")).as("cents"))
-      .select(col("user_id"), col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"), col("n_events"),
-        col("cents"))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    unstage(staged)
-    spark.table(name).filter(col("user_id") >= 0)
-      .orderBy("user_id", "s_start")
-  }
+  def d180SessionWindows(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d180") { s =>
+      val staged = stageWithSentinels(spark, dir, s, Seq("view"))
+      val stream = EventStreams.readEvents(spark, staged.toString)
+        .withWatermark("ts", "1 hour")
+      s.drain(stream
+        .groupBy(session_window(col("ts"), SessionGapStr), col("user_id"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(round(col("value") * 100).cast("long")).as("cents"))
+        .select(col("user_id"), col("session_window.start").as("s_start"),
+          col("session_window.end").as("s_end"), col("n_events"),
+          col("cents")), "append")()
+        .filter(col("user_id") >= 0)
+        .orderBy("user_id", "s_start")
+    }
 
   /** Gaps-and-islands replay of the session semantics: a new session
     * starts when the inter-event gap STRICTLY exceeds the inactivity
@@ -1402,14 +1330,14 @@ object StreamGates {
     * eviction this gate pins is the ONLY thing standing between a
     * long-running dedup stream and unbounded state. */
   def d187StreamDedupExpiry(spark: SparkSession, dir: String): DataFrame =
-    d187Body(spark, dir, rocksdb = false)
+    d187Body(spark, dir)
 
   /** d187's three-phase dedup state EXPIRY re-run on RocksDB: state
     * eviction at the watermark horizon — the one thing bounding a
     * long-running dedup stream's state — plus two checkpoint resumes,
     * all on the production provider. Same oracle; pinned in-op. */
   def d197RocksdbDedupExpiry(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark)(d187Body(spark, dir, rocksdb = true))
+    withRocksDb(spark)(d187Body(spark, dir))
 
   /** d197's three-phase expiry walk under CHANGELOG CHECKPOINTING —
     * the stress case for the delta format: dedup state is written,
@@ -1419,33 +1347,22 @@ object StreamGates {
     * pinned in-op. */
   def d208ChangelogDedupExpiry(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark)(withConf(spark, ChangelogKey, "true")(
-      d187Body(spark, dir, rocksdb = true, changelog = true)))
+      d187Body(spark, dir, changelog = true)))
 
   private def d187Body(spark: SparkSession, dir: String,
-      rocksdb: Boolean, changelog: Boolean = false): DataFrame = {
-    val staged = Files.createTempDirectory("graft-d187-src")
-    val ckpt = Files.createTempDirectory("graft-d187-ckpt")
-    val out = Files.createTempDirectory("graft-d187-out")
+      changelog: Boolean = false): DataFrame = withScratch("d187") { s =>
+    val staged = s.dir("src")
+    val ckpt = s.dir("ckpt")
+    val out = s.dir("out")
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    val isNanos =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    // day shifts in the RAW encoding (the d145 sentinel discipline):
-    // raw-nanos generation adds a long, MICROS-timestamp an interval
-    def shifted(c: org.apache.spark.sql.Column, days: Long) =
-      if (isNanos) c + lit(days * 86400L * 1000000000L)
-      else c + expr(s"INTERVAL $days DAYS")
     // each user's earliest raw-encoded event time; event_id re-derived
     // so the planted copies differ in id (dedup must key on user alone)
     val t0 = raw.groupBy("user_id").agg(min("ts").as("ts"))
+    val dayUs = 86400L * 1000000
     def phase(days: Long, idBase: Long) = t0
       .select((col("user_id") + idBase).as("event_id"),
-        shifted(col("ts"), days).as("ts"), col("user_id"),
-        lit("view").as("event_type"), lit(0.0).as("value"),
-        lit(null).cast("string").as("props"))
-    val sentinel = raw.orderBy(col("ts").desc).limit(1)
-      .select(lit(-1L).as("event_id"),
-        shifted(col("ts"), ExpirySentinelDays).as("ts"),
-        lit(-1L).as("user_id"),
+        EventTime.shifted(raw.schema, col("ts"), days * dayUs).as("ts"),
+        col("user_id"),
         lit("view").as("event_type"), lit(0.0).as("value"),
         lit(null).cast("string").as("props"))
     var sawRows = false
@@ -1462,30 +1379,29 @@ object StreamGates {
           .option("checkpointLocation", ckpt.toString)
           .trigger(Trigger.AvailableNow()))
       q.awaitTermination()
-      if (rocksdb) requireRocksDb(q)
+      requireRocksDb(q)
       sawRows ||= movedRows(q)
     }
-    try {
-      stagePart(phase(0, 1000000L).unionByName(phase(0, 2000000L)),
-        staged, "a.parquet", "graft-d187-w")
-      run() // phase 1: one emit per user, the copy suppressed
-      stagePart(sentinel, staged, "b.parquet", "graft-d187-w")
-      run() // phase 2: watermark jumps 15d — every key's state evicts
-      stagePart(
-        phase(ExpiryResendDays, 3000000L)
-          .unionByName(phase(ExpiryResendDays, 4000000L)),
-        staged, "c.parquet", "graft-d187-w")
-      run() // phase 3: fresh state — one emit per user AGAIN
-      if (changelog) requireChangelog(ckpt, sawRows)
-      import org.apache.spark.sql.types._
-      spark.read
-        .schema(StructType(Seq(StructField("user_id", LongType),
-          StructField("emit_us", LongType))))
-        .parquet(out.toString)
-        .filter(col("user_id") >= 0)
-        .orderBy("user_id", "emit_us")
-        .localCheckpoint() // temp sink dir is deleted in finally
-    } finally { deltree(staged); deltree(ckpt); deltree(out) }
+    s.plant(phase(0, 1000000L).unionByName(phase(0, 2000000L)),
+      staged, "a.parquet", 0)
+    run() // phase 1: one emit per user, the copy suppressed
+    s.plant(sentinelRows(raw, Seq("view" -> ExpirySentinelDays * dayUs)),
+      staged, "b.parquet", 1)
+    run() // phase 2: watermark jumps 15d — every key's state evicts
+    s.plant(
+      phase(ExpiryResendDays, 3000000L)
+        .unionByName(phase(ExpiryResendDays, 4000000L)),
+      staged, "c.parquet", 2)
+    run() // phase 3: fresh state — one emit per user AGAIN
+    if (changelog) requireChangelog(ckpt, sawRows)
+    import org.apache.spark.sql.types._
+    spark.read
+      .schema(StructType(Seq(StructField("user_id", LongType),
+        StructField("emit_us", LongType))))
+      .parquet(out.toString)
+      .filter(col("user_id") >= 0)
+      .orderBy("user_id", "emit_us")
+      .localCheckpoint() // the temp sink dir is deleted after this
   }
 
   /** Exactly-once per horizon, at-least-once across horizons: each
@@ -1522,91 +1438,67 @@ object StreamGates {
     * bounded by the watermark horizon (1 h of open windows), not the
     * stream's length; the 10-slice drain walks 30 days of event time
     * through that bounded window exactly as a live cluster would. */
-  def d209LiveCadence(spark: SparkSession, dir: String): DataFrame = {
-    val staged = Files.createTempDirectory("graft-d209-src")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val isNanos =
-      raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-    // micros generation reads as TIMESTAMP_NTZ — cast to instant
-    // (session tz is UTC) before unix_micros
-    val tnum =
-      if (isNanos) col("ts") else unix_micros(col("ts").cast("timestamp"))
-    val b = raw.agg(min(tnum).as("t0"), max(tnum).as("t1")).collect()(0)
-    val (t0, t1) = if (b.isNullAt(0)) (0L, 9L) else (b.getLong(0), b.getLong(1))
-    val step = (t1 - t0) / 10 + 1 // 10 slices cover [t0, t1]
-    val modBase = System.currentTimeMillis()
-    def plant(df: DataFrame, i: Int): Unit = {
-      val name = f"s$i%02d.parquet"
-      stagePart(df, staged, name, "graft-d209-w")
-      // the file source lists oldest-first by modification time —
-      // force the planted order so slice k IS micro-batch k
-      staged.resolve(name).toFile.setLastModified(modBase + i * 1000L)
+  def d209LiveCadence(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d209") { s =>
+      val staged = s.dir("src")
+      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val tnum = EventTime.micros(raw.schema)
+      val b = raw.agg(min(tnum).as("t0"), max(tnum).as("t1")).collect()(0)
+      val (t0, t1) =
+        if (b.isNullAt(0)) (0L, 9L) else (b.getLong(0), b.getLong(1))
+      val step = (t1 - t0) / 10 + 1 // 10 slices cover [t0, t1]
+      // the 10 staged slices are independent single-file writes to one
+      // target dir — overlap them from a small pool (guide §2.6); each
+      // file's mtime is a pure function of its index, so the planted
+      // batch order (slice k IS micro-batch k) is unchanged by the
+      // write schedule
+      graft.Par.actions((0 until 10).map(i => () =>
+        s.plant(raw.filter(tnum >= t0 + i * step && tnum < t0 + (i + 1) * step),
+          staged, f"s$i%02d.parquet", i)))
+      // flush sentinel 2.5 h past the log (raw encoding): its batch
+      // advances the watermark past every real window's end, while its
+      // OWN window (end > final watermark) is never emitted — the d145
+      // idiom, so no result filtering is needed
+      s.plant(sentinelRows(raw, Seq("view" -> FlushBumpUs)),
+        staged, "s10.parquet", 10)
+      s.drain(EventStreams.hourlyCounts(
+          EventStreams.readEvents(spark, staged.toString,
+            Map("maxFilesPerTrigger" -> "1"))), "append") { (query, sink) =>
+        val progs = query.recentProgress.toSeq
+        val rowBatches = progs.count(_.numInputRows > 0L)
+        if (rowBatches > 0) { // zero-row corpus: nothing drained, no pins
+          require(rowBatches >= 10,
+            s"expected >=10 single-file micro-batches, got $rowBatches")
+          val wms = progs.flatMap(p => Option(p.eventTime.get("watermark")))
+            .map(java.time.Instant.parse)
+          require(wms.sliding(2).forall {
+            case Seq(a, w) => !w.isBefore(a); case _ => true },
+            s"watermark regressed across the batch sequence: $wms")
+          val advances = wms.sliding(2).count {
+            case Seq(a, w) => w.isAfter(a); case _ => false }
+          require(advances >= 8,
+            s"watermark strictly advanced only $advances times — " +
+              "a terminal jump, not a live cadence")
+          val emitted = sink.count()
+          val keys = sink.select("hour", "event_type").distinct().count()
+          require(emitted == keys,
+            s"re-emission across batches: $emitted rows over $keys keys")
+          // THE 100 TB claim, pinned as data: state at any batch end is
+          // bounded by the watermark HORIZON (open windows over one
+          // slice + delay), never by the stream's length — the complete-
+          // mode counterfactual would hold every window ever seen
+          val maxState = progs.flatMap(_.stateOperators)
+            .map(_.numRowsTotal).foldLeft(0L)(math.max)
+          val stepHours = step / (3600L * 1000000L) + 1
+          val nTypes = sink.select("event_type").distinct().count()
+          val horizonBound = 2L * (stepHours + 3) * nTypes // 2x eviction slack
+          require(maxState > 0 && maxState <= horizonBound &&
+              horizonBound < emitted,
+            s"state not horizon-bounded: max $maxState rows vs bound " +
+              s"$horizonBound over $emitted total windows")
+        }
+      }.orderBy("hour", "event_type")
     }
-    // the 10 staged slices are independent single-file writes to one
-    // target dir — overlap them from a small pool (guide §2.6); each
-    // file's mtime is a pure function of its index, so the planted
-    // batch order is unchanged by the write schedule
-    graft.Par.actions((0 until 10).map(i => () =>
-      plant(raw.filter(tnum >= t0 + i * step && tnum < t0 + (i + 1) * step),
-        i)))
-    // flush sentinel 2.5 h past the log (raw encoding): its batch
-    // advances the watermark past every real window's end, while its
-    // OWN window (end > final watermark) is never emitted — the d145
-    // idiom, so no result filtering is needed
-    val sentinel = raw.orderBy(col("ts").desc).limit(1)
-      .select(lit(-1L).as("event_id"),
-        (if (isNanos) col("ts") + lit(FlushBumpUs * 1000L)
-         else col("ts") + expr(s"INTERVAL ${FlushBumpUs / 60000000L} MINUTES"))
-          .as("ts"),
-        lit(-1L).as("user_id"), lit("view").as("event_type"),
-        lit(0.0).as("value"), lit(null).cast("string").as("props"))
-    plant(sentinel, 10)
-    val name = s"graft_d209_run${runSeq.incrementAndGet()}"
-    val query = startStateful(spark, EventStreams.hourlyCounts(
-        EventStreams.readEvents(spark, staged.toString,
-          Map("maxFilesPerTrigger" -> "1")))
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow()))
-    query.awaitTermination()
-    val progs = query.recentProgress.toSeq
-    val rowBatches = progs.count(_.numInputRows > 0L)
-    if (rowBatches > 0) { // zero-row corpus: nothing drained, no pins
-      require(rowBatches >= 10,
-        s"expected >=10 single-file micro-batches, got $rowBatches")
-      val wms = progs.flatMap(p => Option(p.eventTime.get("watermark")))
-        .map(java.time.Instant.parse)
-      require(wms.sliding(2).forall {
-        case Seq(a, w) => !w.isBefore(a); case _ => true },
-        s"watermark regressed across the batch sequence: $wms")
-      val advances = wms.sliding(2).count {
-        case Seq(a, w) => w.isAfter(a); case _ => false }
-      require(advances >= 8,
-        s"watermark strictly advanced only $advances times — " +
-          "a terminal jump, not a live cadence")
-      val sink = spark.table(name)
-      val emitted = sink.count()
-      val keys = sink.select("hour", "event_type").distinct().count()
-      require(emitted == keys,
-        s"re-emission across batches: $emitted rows over $keys keys")
-      // THE 100 TB claim, pinned as data: state at any batch end is
-      // bounded by the watermark HORIZON (open windows over one
-      // slice + delay), never by the stream's length — the complete-
-      // mode counterfactual would hold every window ever seen
-      val maxState = progs.flatMap(_.stateOperators)
-        .map(_.numRowsTotal).foldLeft(0L)(math.max)
-      val stepHours =
-        step / (if (isNanos) 3600L * 1000000000L else 3600L * 1000000L) + 1
-      val nTypes = sink.select("event_type").distinct().count()
-      val horizonBound = 2L * (stepHours + 3) * nTypes // 2x eviction slack
-      require(maxState > 0 && maxState <= horizonBound &&
-          horizonBound < emitted,
-        s"state not horizon-bounded: max $maxState rows vs bound " +
-          s"$horizonBound over $emitted total windows")
-    }
-    deltree(staged)
-    spark.table(name).orderBy("hour", "event_type")
-  }
 
   /** q17's oracle verbatim — ten live micro-batches must reassemble
     * exactly the batch hourly rollup, each window emitted once. */
@@ -1627,8 +1519,9 @@ object StreamGates {
     * including checkpoint RESUMES: the two providers' on-disk state
     * formats are incompatible, so a mid-checkpoint swap would fail). */
   private def withRocksDb[T](spark: SparkSession)(body: => T): T =
-    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-      RocksDbProvider)(body)
+    withConf(spark, ProviderKey, RocksDbProvider)(body)
+
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** Start a stateful stream with [[StatePartitions]] shuffle
     * partitions. The count at query START is the state-store instance
@@ -1675,7 +1568,7 @@ object StreamGates {
     * back to snapshot-only uploads and nothing else in the run would
     * notice). Exempt only when the drains processed zero rows (the
     * zero-row corpus commits no state versions). */
-  private def requireChangelog(ckpt: java.nio.file.Path,
+  private def requireChangelog(ckpt: Path,
       sawRows: Boolean): Unit = {
     import scala.jdk.CollectionConverters._
     val walk = Files.walk(ckpt)
@@ -1689,11 +1582,11 @@ object StreamGates {
 
   /** True when any progress of `q` moved input rows — the earned-
     * exemption signal for the fingerprint pins above. */
-  private def movedRows(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Boolean =
+  private def movedRows(q: StreamingQuery): Boolean =
     q.recentProgress.exists(_.numInputRows > 0L)
 
-  /** Pin that a drained query really ran its state on RocksDB — the
+  /** When the query's session selects RocksDB ([[withRocksDb]]), pin
+    * that the drain really ran its state on it — the
     * provider fingerprints every progress's stateOperators with
     * `rocksdb*` custom metrics, which the default provider never
     * emits (the d93/d138 in-op pin discipline: a conf typo or a
@@ -1703,47 +1596,32 @@ object StreamGates {
     * ZERO input rows (the zero-row corpus) — a drain that moved rows
     * yet planned no stateful operator fails loudly instead of
     * counting as a RocksDB-pinned run. */
-  private def requireRocksDb(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+  private def requireRocksDb(q: StreamingQuery): Unit = {
     import scala.jdk.CollectionConverters._
-    val progresses = q.recentProgress.toSeq ++ Option(q.lastProgress)
-    val stateOps = progresses.flatMap(_.stateOperators)
-    if (stateOps.isEmpty)
-      require(progresses.forall(_.numInputRows == 0L),
-        "drain processed rows but reported no state operator — cannot pin RocksDB")
-    else require(stateOps.exists(
-      _.customMetrics.keySet().asScala.exists(
-        _.toLowerCase(java.util.Locale.ROOT).contains("rocksdb"))),
-      "state ran on the default provider, not RocksDB")
-  }
-
-  /** Stage `df` into the file-stream source dir as one bare part-file
-    * named `name` (the source lists FILES, so phases are planted as
-    * part-file copies, never Spark-written directories). Shared by the
-    * two-phase gates d127/d145/d170. File.list (not Files.list) — no
-    * stream handle to leak. */
-  private def stagePart(df: DataFrame, staged: java.nio.file.Path,
-      name: String, prefix: String): Unit = {
-    val tmp = Files.createTempDirectory(prefix)
-    try {
-      val outDir = tmp.resolve("out")
-      df.coalesce(1).write.mode("overwrite").parquet(outDir.toString)
-      val part = Option(outDir.toFile.list())
-        .getOrElse(Array.empty[String]).find(_.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(
-          s"no part-file written under $outDir"))
-      Files.move(outDir.resolve(part), staged.resolve(name))
-    } finally deltree(tmp)
+    if (q.sparkSession.conf.getOption(ProviderKey).contains(RocksDbProvider)) {
+      val progresses = q.recentProgress.toSeq ++ Option(q.lastProgress)
+      val stateOps = progresses.flatMap(_.stateOperators)
+      if (stateOps.isEmpty)
+        require(progresses.forall(_.numInputRows == 0L),
+          "drain processed rows but reported no state operator — cannot pin RocksDB")
+      else require(stateOps.exists(
+        _.customMetrics.keySet().asScala.exists(
+          _.toLowerCase(java.util.Locale.ROOT).contains("rocksdb"))),
+        "state ran on the default provider, not RocksDB")
+    }
   }
 
   /** Best-effort recursive delete (checkpoint trees are directories of
     * directories; a failed delete must not fail the gate). */
-  private def deltree(root: java.nio.file.Path): Unit =
+  private def deltree(root: Path): Unit =
     try {
-      Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder())
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p))
-    } catch { case _: java.io.IOException => () }
+      finally walk.close()
+    } catch {
+      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+    }
 
   // -------------------------------------------------------------- d228
   /** The Avro state-encoding conf — schema evolution on
@@ -1782,32 +1660,23 @@ object StreamGates {
 
   private[graft] def stateEvolution(spark: SparkSession, dir: String,
       encoding: String): DataFrame = withRocksDb(spark) {
-    withConf(spark, StateEncodingKey, encoding) {
+    withConf(spark, StateEncodingKey, encoding)(withScratch("d228") { s =>
       val raw = spark.read.parquet(s"$dir/events.parquet")
-      val isNanos =
-        raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
-      val usCol =
-        if (isNanos) expr("ts div 1000")
-        else unix_micros(col("ts").cast("timestamp"))
-      val mm = raw.agg(min(usCol), max(usCol)).head()
-      if (mm.isNullAt(0)) {
-        spark.emptyDataFrame
-          .select(lit(0L).as("user_id"), lit(0L).as("n_sessions"),
-            lit(0L).as("n_events"), lit(0L).as("n_upgrade_events"))
-      } else {
-        val cutUs = (mm.getLong(0) + mm.getLong(1)) / 2
-        val staged = Files.createTempDirectory("graft-d228-src")
-        val ckpt = Files.createTempDirectory("graft-d228-ckpt")
-        val out = Files.createTempDirectory("graft-d228-out")
-        try {
-          val modBase = System.currentTimeMillis()
+      val usCol = EventTime.micros(raw.schema)
+      midpointUs(raw) match {
+        case None =>
+          spark.emptyDataFrame
+            .select(lit(0L).as("user_id"), lit(0L).as("n_sessions"),
+              lit(0L).as("n_events"), lit(0L).as("n_upgrade_events"))
+        case Some(cutUs) =>
+          val staged = s.dir("src")
+          val ckpt = s.dir("ckpt")
+          val out = s.dir("out")
           // the memory sink cannot resume a checkpoint; both phases
           // sink through foreachBatch (recovery-capable), phase 2 to
           // idempotent batchId-keyed parquet (the d170 discipline)
           // phase 1 (v1 schema): pre-cut history
-          stagePart(raw.filter(usCol < cutUs), staged, "a.parquet",
-            "graft-d228-w")
-          staged.resolve("a.parquet").toFile.setLastModified(modBase); ()
+          s.plant(raw.filter(usCol < cutUs), staged, "a.parquet", 0)
           val q1 = startStateful(spark, EventStreams
             .sessionCountsTws(EventStreams.readEvents(spark, staged.toString))
             .writeStream
@@ -1822,10 +1691,7 @@ object StreamGates {
             .trigger(Trigger.AvailableNow()))
           q1.awaitTermination()
           // phase 2 (v2 schema, SAME checkpoint): post-cut arrivals
-          stagePart(raw.filter(usCol >= cutUs), staged, "b.parquet",
-            "graft-d228-w")
-          staged.resolve("b.parquet").toFile
-            .setLastModified(modBase + 1000L); ()
+          s.plant(raw.filter(usCol >= cutUs), staged, "b.parquet", 1)
           val q2 = startStateful(spark, EventStreams
             .sessionCountsTwsV2(
               EventStreams.readEvents(spark, staged.toString))
@@ -1847,11 +1713,8 @@ object StreamGates {
               max("n_upgrade_events").as("n_upgrade_events"))
             .orderBy("user_id").localCheckpoint()
             .orderBy("user_id")
-        } finally {
-          deltree(staged); deltree(ckpt); deltree(out)
-        }
       }
-    }
+    })
   }
 
   /** d222's full-log sessionization for post-cut users, plus each
@@ -1908,91 +1771,82 @@ object StreamGates {
     twsTtlDedup(spark, dir, ttlMs = 1L)
 
   private[graft] def twsTtlDedup(spark: SparkSession, dir: String,
-      ttlMs: Long): DataFrame = withRocksDb(spark) {
+      ttlMs: Long): DataFrame = withRocksDb(spark)(withScratch("d227") { s =>
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val staged = Files.createTempDirectory("graft-d227-src")
-    val out = Files.createTempDirectory("graft-d227-out")
-    val ckpt = Files.createTempDirectory("graft-d227-ckpt")
-    try {
-      // batch 1 = the same contents re-sent PLUS one probe doc that
-      // exists only there: batch 1 then has output under ANY TTL
-      // config (the drain poll never blocks on a fully-suppressed
-      // batch), and the re-admission require below stays loud and fast
-      // when expiry is broken
-      val probe = spark.range(1)
-        .select(lit(-1L).as("doc_id"), lit(TtlProbeText).as("text"))
-      val modBase = System.currentTimeMillis()
-      graft.Par.actions((0 to 1).map(i => () => {
-        val nm = s"d$i.parquet"
-        stagePart(if (i == 0) docs else docs.unionByName(probe),
-          staged, nm, "graft-d227-w")
-        staged.resolve(nm).toFile.setLastModified(modBase + i * 1000L); ()
-      }))
-      val admitted = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-      // NOT AvailableNow: a processing-time-mode stateful operator
-      // reports shouldRunAnotherBatch = true unconditionally (TTL
-      // sweeps and processing-time timers can always have more work),
-      // so an AvailableNow drain never terminates — it schedules
-      // no-data maintenance batches forever (observed, and pinned in
-      // TransformWithStateExecBase.shouldRunAnotherBatch). The gate
-      // instead runs a short processing-time trigger and STOPS itself
-      // once the second data batch has committed; no-data maintenance
-      // batches in between carry no rows and are skipped by the
-      // isEmpty guard, so the artifact layout stays exactly b0/b1.
-      val query = startStateful(spark, EventStreams.ttlDedup(
-          spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1").parquet(staged.toString),
-          ttlMs)
-        .toDF("text_hash")
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], id: Long) =>
-          if (!df.isEmpty) {
-            df.select(lit(id).as("batch"), col("text_hash"))
-              .write.mode("overwrite").parquet(s"$out/b$id")
-            admitted.put(id, spark.read.parquet(s"$out/b$id").count())
-            // the TTL clock is the next batch's timestamp: force it
-            // ≥100 ms past this one so the 1 ms TTL has provably
-            // lapsed (never bet on scheduler latency)
-            Thread.sleep(100)
-          }
+    val staged = s.dir("src")
+    val out = s.dir("out")
+    val ckpt = s.dir("ckpt")
+    // batch 1 = the same contents re-sent PLUS one probe doc that
+    // exists only there: batch 1 then has output under ANY TTL
+    // config (the drain poll never blocks on a fully-suppressed
+    // batch), and the re-admission require below stays loud and fast
+    // when expiry is broken
+    val probe = spark.range(1)
+      .select(lit(-1L).as("doc_id"), lit(TtlProbeText).as("text"))
+    graft.Par.actions((0 to 1).map(i => () =>
+      s.plant(if (i == 0) docs else docs.unionByName(probe),
+        staged, s"d$i.parquet", i)))
+    val admitted = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+    // NOT AvailableNow: a processing-time-mode stateful operator
+    // reports shouldRunAnotherBatch = true unconditionally (TTL
+    // sweeps and processing-time timers can always have more work),
+    // so an AvailableNow drain never terminates — it schedules
+    // no-data maintenance batches forever (observed, and pinned in
+    // TransformWithStateExecBase.shouldRunAnotherBatch). The gate
+    // instead runs a short processing-time trigger and STOPS itself
+    // once the second data batch has committed; no-data maintenance
+    // batches in between carry no rows and are skipped by the
+    // isEmpty guard, so the artifact layout stays exactly b0/b1.
+    val query = startStateful(spark, EventStreams.ttlDedup(
+        spark.readStream.schema(docs.schema)
+          .option("maxFilesPerTrigger", "1").parquet(staged.toString),
+        ttlMs)
+      .toDF("text_hash")
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[
+          org.apache.spark.sql.Row], id: Long) =>
+        if (!df.isEmpty) {
+          df.select(lit(id).as("batch"), col("text_hash"))
+            .write.mode("overwrite").parquet(s"$out/b$id")
+          admitted.put(id, spark.read.parquet(s"$out/b$id").count())
+          // the TTL clock is the next batch's timestamp: force it
+          // ≥100 ms past this one so the 1 ms TTL has provably
+          // lapsed (never bet on scheduler latency)
+          Thread.sleep(100)
         }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.ProcessingTime("50 milliseconds")))
-      val deadline = System.currentTimeMillis() + 120000L
-      while (!admitted.containsKey(1L) &&
-          System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      query.stop()
-      query.awaitTermination()
-      require(admitted.containsKey(1L),
-        "drain timed out before the second data batch committed")
-      requireRocksDb(query)
-      val dirs = Option(out.toFile.list())
-        .getOrElse(Array.empty[String]).toSeq.sorted
-      // a zero-row corpus is degenerate but legal (the EmptyCorpusSpec
-      // contract): batch 0 then carries no rows, is skipped by the
-      // isEmpty guard like a maintenance batch, and only the probe's
-      // b1 exists — admitted(0) defaults to 0 and the re-admission
-      // arithmetic still pins the probe
-      val expectDirs =
-        if (admitted.containsKey(0L)) Seq("b0", "b1") else Seq("b1")
-      require(dirs == expectDirs,
-        s"expected one admitted-set dir per data micro-batch, got $dirs")
-      // CHM.get on an absent key unboxes null to 0L — exactly the
-      // zero-admissions default the empty-corpus batch needs
-      val admitted0: Long = admitted.get(0L)
-      require(admitted.get(1L) == admitted0 + 1,
-        s"TTL did not expire: batch 1 admitted ${admitted.get(1L)} keys, " +
-          s"expected batch 0's $admitted0 re-admissions plus " +
-          "the probe — expired state must leave the store and forget " +
-          "the key")
-      spark.read.parquet(dirs.map(d => s"$out/$d"): _*)
-        .orderBy("batch", "text_hash").localCheckpoint()
-        .orderBy("batch", "text_hash")
-    } finally { deltree(staged); deltree(out); deltree(ckpt) }
-  }
+      }
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.ProcessingTime("50 milliseconds")))
+    val deadline = System.currentTimeMillis() + 120000L
+    while (!admitted.containsKey(1L) &&
+        System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    query.stop()
+    query.awaitTermination()
+    require(admitted.containsKey(1L),
+      "drain timed out before the second data batch committed")
+    requireRocksDb(query)
+    // a zero-row corpus is degenerate but legal (the EmptyCorpusSpec
+    // contract): batch 0 then carries no rows, is skipped by the
+    // isEmpty guard like a maintenance batch, and only the probe's
+    // b1 exists — admitted(0) defaults to 0 and the re-admission
+    // arithmetic still pins the probe
+    val expectDirs =
+      if (admitted.containsKey(0L)) Seq("b0", "b1") else Seq("b1")
+    requireBatchDirs(out, expectDirs)
+    // CHM.get on an absent key unboxes null to 0L — exactly the
+    // zero-admissions default the empty-corpus batch needs
+    val admitted0: Long = admitted.get(0L)
+    require(admitted.get(1L) == admitted0 + 1,
+      s"TTL did not expire: batch 1 admitted ${admitted.get(1L)} keys, " +
+        s"expected batch 0's $admitted0 re-admissions plus " +
+        "the probe — expired state must leave the store and forget " +
+        "the key")
+    spark.read.parquet(expectDirs.map(d => s"$out/$d"): _*)
+      .orderBy("batch", "text_hash").localCheckpoint()
+      .orderBy("batch", "text_hash")
+  })
 
   /** Batch-1-only probe content — ONE constant deriving both the
     * staged row and the oracle's md5 literal. */
@@ -2061,15 +1915,15 @@ object StreamGates {
       graft.ops.Similarity.IngestSplit2, graft.ops.Similarity.IngestDupE4)
 
   private[graft] def streamAnnIngest(spark: SparkSession, dir: String,
-      split1: Long, split2: Long, threshE4: Long): DataFrame = {
-    import graft.ops.Similarity
-    val art = Files.createTempDirectory("graft-d226-art")
-    val idxRoot = Files.createTempDirectory("graft-d226-idx")
-    val verdRoot = Files.createTempDirectory("graft-d226-verd")
-    val staged = Files.createTempDirectory("graft-d226-src")
-    val ckpt = Files.createTempDirectory("graft-d226-ckpt")
-    try {
-      val corpus = Similarity.embOf(spark, dir)
+      split1: Long, split2: Long, threshE4: Long): DataFrame =
+    withScratch("d226") { s =>
+      import graft.ops.Similarity
+      val art = s.dir("art")
+      val idxRoot = s.dir("idx")
+      val verdRoot = s.dir("verd")
+      val staged = s.dir("src")
+      val ckpt = s.dir("ckpt")
+      val corpus = Similarity.emb(spark, dir)
         .filter(col("vec_id") < split1)
       val (cents0, books0, codes0) = Similarity.ingestArtifacts(corpus)
       // freeze through real parquet bytes (the d221 discipline): the
@@ -2096,15 +1950,11 @@ object StreamGates {
       val baseRows = graft.io.ParquetMeta.rowCount(s"$idxRoot/base")
 
       val raw = spark.read.parquet(s"$dir/embeddings.parquet")
-      val modBase = System.currentTimeMillis()
-      def plant(pred: org.apache.spark.sql.Column, i: Int): Unit = {
-        val nm = s"a$i.parquet"
-        stagePart(raw.filter(pred), staged, nm, "graft-d226-w")
-        staged.resolve(nm).toFile.setLastModified(modBase + i * 1000L); ()
-      }
       graft.Par.actions(Seq(
-        () => plant(col("vec_id") >= split1 && col("vec_id") < split2, 0),
-        () => plant(col("vec_id") >= split2, 1)))
+        () => s.plant(raw.filter(col("vec_id") >= split1 &&
+          col("vec_id") < split2), staged, "a0.parquet", 0),
+        () => s.plant(raw.filter(col("vec_id") >= split2),
+          staged, "a1.parquet", 1)))
 
       val idxRead = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
       val codesAdded = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
@@ -2147,10 +1997,7 @@ object StreamGates {
         .trigger(Trigger.AvailableNow())
         .start()
       query.awaitTermination()
-      val vd = Option(verdRoot.toFile.list())
-        .getOrElse(Array.empty[String]).toSeq.sorted
-      require(vd == Seq("b0", "b1"),
-        s"expected exactly one verdict dir per micro-batch, got $vd")
+      requireBatchDirs(verdRoot)
       require(idxRead.get(0L) == baseRows,
         s"batch 0 probed ${idxRead.get(0L)} index rows, " +
           s"expected the $baseRows-row base artifact")
@@ -2160,11 +2007,7 @@ object StreamGates {
       spark.read.parquet(s"$verdRoot/b0", s"$verdRoot/b1")
         .orderBy("vec_id").localCheckpoint()
         .orderBy("vec_id")
-    } finally {
-      deltree(art); deltree(idxRoot); deltree(verdRoot)
-      deltree(staged); deltree(ckpt)
     }
-  }
 
   // -------------------------------------------------------------- d233
   /** DIMENSION REFRESH under a live stream — the operational hole in
@@ -2196,12 +2039,11 @@ object StreamGates {
     * stateless map+broadcast-join per batch (no state store, no
     * watermark), and the batchId-keyed overwrite sink keeps retries
     * idempotent (d170's discipline). */
-  def d233DimRefresh(spark: SparkSession, dir: String): DataFrame = {
-    val staged = Files.createTempDirectory("graft-d233-src")
-    val dimRoot = Files.createTempDirectory("graft-d233-dim")
-    val outRoot = Files.createTempDirectory("graft-d233-out")
-    val ckpt = Files.createTempDirectory("graft-d233-ckpt")
-    try {
+  def d233DimRefresh(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d233") { s =>
+      val dimRoot = s.dir("dim")
+      val outRoot = s.dir("out")
+      val ckpt = s.dir("ckpt")
       val dimPath = dimRoot.resolve("user_dim").toString
       def publishDim(version: Int): Unit = {
         val types =
@@ -2215,15 +2057,7 @@ object StreamGates {
       }
       publishDim(1)
       val raw = spark.read.parquet(s"$dir/events.parquet")
-      val modBase = System.currentTimeMillis()
-      def plant(pred: org.apache.spark.sql.Column, i: Int): Unit = {
-        val nm = s"a$i.parquet"
-        stagePart(raw.filter(pred), staged, nm, "graft-d233-w")
-        staged.resolve(nm).toFile.setLastModified(modBase + i * 1000L); ()
-      }
-      graft.Par.actions(Seq(
-        () => plant(col("event_id") % 2 === 0, 0),
-        () => plant(col("event_id") % 2 =!= 0, 1)))
+      val staged = plantHalves(s, raw)
       def processBatch(df: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], id: Long): Unit = {
         // fresh DataFrame → fresh file index → the CURRENT dim version
@@ -2247,10 +2081,7 @@ object StreamGates {
         .trigger(Trigger.AvailableNow())
         .start()
       query.awaitTermination()
-      val od = Option(outRoot.toFile.list())
-        .getOrElse(Array.empty[String]).toSeq.sorted
-      require(od == Seq("b0", "b1"),
-        s"expected exactly one output dir per micro-batch, got $od")
+      requireBatchDirs(outRoot)
       val out = spark.read.parquet(s"$outRoot/b0", s"$outRoot/b1")
         .localCheckpoint()
       // the refresh pin: matched rows must carry exactly their batch's
@@ -2269,10 +2100,7 @@ object StreamGates {
       }
       out.select("event_id", "user_id", "batch", "dim_v", "feat")
         .orderBy("event_id")
-    } finally {
-      deltree(staged); deltree(dimRoot); deltree(outRoot); deltree(ckpt)
     }
-  }
 
   /** Both halves replayed against their own dimension definition: the
     * even-id clicks against the v1 (purchase-count) dim, the odd-id
@@ -2323,21 +2151,12 @@ object StreamGates {
     * already flowing (no extra scan, no shuffle — accumulator merge on
     * the driver); the verification re-aggregation here is gate
     * machinery, not part of the pattern's production cost. */
-  def d234StreamObserve(spark: SparkSession, dir: String): DataFrame = {
-    val staged = Files.createTempDirectory("graft-d234-src")
-    val outRoot = Files.createTempDirectory("graft-d234-out")
-    val ckpt = Files.createTempDirectory("graft-d234-ckpt")
-    try {
+  def d234StreamObserve(spark: SparkSession, dir: String): DataFrame =
+    withScratch("d234") { s =>
+      val outRoot = s.dir("out")
+      val ckpt = s.dir("ckpt")
       val raw = spark.read.parquet(s"$dir/events.parquet")
-      val modBase = System.currentTimeMillis()
-      def plant(pred: org.apache.spark.sql.Column, i: Int): Unit = {
-        val nm = s"a$i.parquet"
-        stagePart(raw.filter(pred), staged, nm, "graft-d234-w")
-        staged.resolve(nm).toFile.setLastModified(modBase + i * 1000L); ()
-      }
-      graft.Par.actions(Seq(
-        () => plant(col("event_id") % 2 === 0, 0),
-        () => plant(col("event_id") % 2 =!= 0, 1)))
+      val staged = plantHalves(s, raw)
       val query = spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged.toString)
@@ -2381,9 +2200,19 @@ object StreamGates {
       import spark.implicits._
       observed.toDF("batch", "n_rows", "n_purchases", "cents")
         .orderBy("batch")
-    } finally {
-      deltree(staged); deltree(outRoot); deltree(ckpt)
     }
+
+  /** A fresh source dir holding the even event_ids, then the odd ones,
+    * as two mtime-ordered files — two micro-batches under
+    * `maxFilesPerTrigger=1` (d233, d234). */
+  private def plantHalves(s: Scratch, raw: DataFrame): Path = {
+    val staged = s.dir("src")
+    graft.Par.actions(Seq(
+      () => s.plant(raw.filter(col("event_id") % 2 === 0),
+        staged, "a0.parquet", 0),
+      () => s.plant(raw.filter(col("event_id") % 2 =!= 0),
+        staged, "a1.parquet", 1)))
+    staged
   }
 
   /** Both batches' counters from the raw table by the staging parity. */

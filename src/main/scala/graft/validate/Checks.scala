@@ -55,16 +55,16 @@ final class TableValidator(
     * (`big_data_validator.py:39-47`). The stripped set is the RAW
     * metadata cell — for the `nan` sentinel the reference strips the
     * chars {n,a} here (no nan→\ mapping on this path), and parity
-    * requires doing the same. */
-  lazy val actualColumns: Seq[String] = {
-    val header = textDf.head().getString(0)
-    header
-      .split(Pattern.quote(meta.fieldSeparator), -1)
-      .toSeq
-      .map(c =>
-        (if (meta.hasQuote) stripCharSet(c, meta.rawQuoteCharSet) else c)
-          .toUpperCase)
-  }
+    * requires doing the same. An empty file has no header, hence no
+    * columns: V1 then reports every declared column missing. */
+  lazy val actualColumns: Seq[String] =
+    textDf.head(1).headOption.toSeq.flatMap(
+      _.getString(0)
+        .split(Pattern.quote(meta.fieldSeparator), -1)
+        .toSeq
+        .map(c =>
+          (if (meta.hasQuote) stripCharSet(c, meta.rawQuoteCharSet) else c)
+            .toUpperCase))
 
   // ---------------------------------------------------------------- V1
 

@@ -1,12 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ParquetMeta
+import graft.streaming.StreamGates
 
 /** `Par.actions` failure path: a failing action must not leave its
   * siblings running once the call has returned. */
@@ -81,5 +82,64 @@ class ParquetMetaSpec extends AnyFunSuite with SparkSpec {
     }
     assert(spark.read.parquet(dir.toString).count() == 3)
     assert(ParquetMeta.rowCount(dir.toString) == 3)
+  }
+}
+
+/** The streaming gates' harness: a gate run leaves no memory-sink view,
+  * no running query and no temp directory behind, whether it returns
+  * or fails mid-drain. */
+class StreamHarnessSpec extends SparkSpec {
+
+  /** The entries of `java.io.tmpdir` named `prefix*`. */
+  private def tmpEntries(prefix: String): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .getOrElse(Array.empty[String])
+      .filter(_.startsWith(prefix)).toSet
+
+  private def sinkViews(): Seq[String] =
+    spark.catalog.listTables().collect().toSeq.map(_.name)
+      .filter(_.matches("graft_.*_run\\d+"))
+
+  /** `rows` as `<dir>/<table>.parquet`, one bare part-file as the gates'
+    * inputs ship. */
+  private def table(dir: Path, name: String,
+      rows: org.apache.spark.sql.DataFrame): Unit = {
+    val out = dir.resolve(s"$name-w")
+    rows.coalesce(1).write.parquet(out.toString)
+    val part = Files.list(out).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get()
+    Files.move(part, dir.resolve(s"$name.parquet"))
+  }
+
+  test("a memory-sink gate returns its rows and drops its view and temp dir") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-harness")
+    table(dir, "documents", Seq((0L, "alpha"), (1L, "beta"), (2L, "alpha"))
+      .toDF("doc_id", "text"))
+    val before = tmpEntries("graft-d76")
+    val got = StreamGates.d76StreamDedup(spark, dir.toString)
+    assert(sinkViews().isEmpty, "the memory sink's view outlived the gate")
+    assert(tmpEntries("graft-d76") == before, "the gate left a temp directory")
+    val hashes = Seq("alpha", "beta").map(t =>
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString).sorted
+    assert(got.collect().map(_.getString(0)).toSeq == hashes)
+  }
+
+  test("a gate failing mid-drain leaves no temp dir, view or running query") {
+    val dir = Files.createTempDirectory("graft-harness-bad")
+    Files.writeString(dir.resolve("events.parquet"), "not a parquet file")
+    val before = tmpEntries("graft-d104")
+    // Spark's own checkpoint for a query started without one; it is
+    // kept when the query fails
+    val sparkCkpts = tmpEntries("temporary")
+    intercept[Exception](
+      StreamGates.d104StreamHourly(spark, dir.toString).collect())
+    assert(tmpEntries("graft-d104") == before,
+      "the failed gate left a temp directory")
+    assert(tmpEntries("temporary") == sparkCkpts,
+      "the failed gate left a checkpoint outside its scope")
+    assert(sinkViews().isEmpty, "the failed gate left its sink's view")
+    assert(spark.streams.active.isEmpty, "the failed gate left a query running")
   }
 }

@@ -165,4 +165,38 @@ class MainEndToEndSpec extends SparkSpec {
     // V1 fails on GHOST, but the typed pass must not crash resolving it
     assert(Main.run(spark, base.toString, "m") == 1)
   }
+
+  /** `Main.run` on `<base>/inputs/<table>.csv` holding `input`, with a
+    * two-column `|` metadata; returns the exit code and what it printed. */
+  private def runOn(table: String, input: String): (Int, String) = {
+    val base = Files.createTempDirectory("graft-hostile")
+    Files.createDirectories(base.resolve("inputs"))
+    Files.createDirectories(base.resolve("metadata/csv"))
+    Files.writeString(base.resolve(s"inputs/$table.csv"), input)
+    Files.writeString(base.resolve(s"metadata/csv/${table}_metadata.csv"),
+      """COLUMN_NAME;DATA_TYPE;STRING_SEPARATOR;FIELD_SEPARATOR;DECIMAL_SEPARATOR;NULLABLE;DATA_FORMAT
+        |ID;VARCHAR2;;|;.;FALSE;
+        |AMOUNT;NUMBER;;|;.;TRUE;
+        |""".stripMargin)
+    val out = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(out)(Main.run(spark, base.toString, table))
+    (code, out.toString("UTF-8"))
+  }
+
+  test("an empty CSV gets a verdict: every declared column is missing") {
+    val (code, printed) = runOn("empty", "")
+    assert(code == 1, printed)
+    val names = printed.linesIterator.find(_.startsWith("column_names"))
+    assert(names.exists(l => l.contains("FAIL") &&
+      l.contains("missing columns: ID, AMOUNT")), printed)
+    assert(printed.contains("validation failed!"), printed)
+  }
+
+  test("a header-only CSV passes: no data row can break a check") {
+    val (code, printed) = runOn("header", "ID|AMOUNT\n")
+    assert(code == 0, printed)
+    assert(printed.linesIterator.forall(l =>
+      !l.contains(" FAIL ")), printed)
+    assert(printed.contains("validation success"), printed)
+  }
 }

@@ -78,7 +78,7 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     // the probe must prune the token stream BEFORE the count shuffle:
     // no KEYED exchange may sit below it, or the vocabulary-sized
     // exchange the sketch exists to shrink already happened. A
-    // round-robin exchange is exempt: that is Tables.spread restoring
+    // round-robin exchange is exempt: that is Tables.loadSpread restoring
     // scan width on the single-row-group test corpus (a no-op at any
     // production layout), which moves raw doc rows, not the exploded
     // token stream the pin protects.
