@@ -57,13 +57,19 @@ object Sources {
       // FIXME in reference kept as-is: escape duplicates the quote char
       .option("escape", quote)
       .option("header", "true")
-      .option("delimiter", meta.fieldSeparator)
+      // the option reads `\` as the start of an escape (`\t`, `\\`):
+      // doubled, every separator char stays literal
+      .option("delimiter", meta.fieldSeparator.replace("\\", "\\\\"))
       .option("enforceSchema", "false")
       .option("ignoreLeadingWhiteSpace", "true")
       .option("ignoreTrailingWhiteSpace", "true")
       .option("multiLine", meta.hasQuote.toString)
       .option("columnNameOfCorruptRecord", corruptCol)
       .option("mode", "PERMISSIVE")
+      // a line is corrupt when its token count differs from the schema's;
+      // a pruned parse counts only the columns a query reads, so an
+      // aggregate over a few columns would see no extra-field line
+      .option("columnPruning", "false")
       .schema(meta.readSchema(actualColumns, corruptCol))
       .csv(path)
   }

@@ -2,10 +2,13 @@ package graft.validate
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Par
 import graft.io.Sources
 import graft.meta.TableMetadata
 
@@ -24,18 +27,29 @@ final case class CheckResult(
   *
   * Design rules carried over from the reference's structure (and kept as
   * hard constraints for 100 TB): every check is map-only + a scalar
-  * aggregate — no shuffles anywhere; the input is scanned at most twice
-  * (raw-text pass for counting, CSV parse only in the fallback).
-  * Unlike the reference there is no per-row JVM→Python crossing: field
-  * counting is `size(split(...))` / `size(regexp_extract_all(...))`,
-  * whole-stage-codegen'd.
+  * aggregate — no shuffles anywhere. The pass plan:
+  *  1. the header: `head(1)` of the raw text;
+  *  2. two independent passes, run concurrently ([[graft.Par.actions]]):
+  *     (a) the raw-text pass counts every line's fields with the
+  *     [[FieldCounting]] expressions (`size(split(...))` or
+  *     `size(regexp_extract_all(...))`, whole-stage-codegen'd) and takes,
+  *     per partition, its line count, its mismatch count and its first
+  *     mismatching line, in one job; (b) the CSV summary pass is one aggregate of
+  *     the typed error sums and the corrupt-row count, which is the
+  *     CSV-reader fallback's verdict. With no typed check to take, (b)
+  *     runs only after (a) found a mismatch;
+  *  3. only when a bad-row sink is due, one more CSV pass keeps just the
+  *     failing rows and writes both sinks from them.
+  * So a clean file is read once as text and parsed at most once as CSV,
+  * and a dirty one is parsed twice. There is no per-row JVM→Python
+  * crossing.
   */
 final class TableValidator(
     spark: SparkSession,
     meta: TableMetadata,
     tablePath: String,
     badRowPath: String) {
-  import TableValidator.CorruptCol
+  import TableValidator.{CorruptCol, Findings}
 
   // ------------------------------------------------------------ header
 
@@ -92,90 +106,40 @@ final class TableValidator(
   def quoteAwareRegex: String =
     FieldCounting.quoteAwareRegex(meta.fieldSeparator, meta.stringSeparator)
 
-  /** Per-line field counts, naive split (V2 projection): literal-split
-    * like Python `str.split`, trailing empties kept. */
-  private def naiveCounts: DataFrame =
-    textDf.select(
-      FieldCounting.naiveCount(col("value"), meta.fieldSeparator).as("n"))
-
-  /** Per-line field counts, quote-aware (V3 projection). */
-  private def quoteAwareCounts: DataFrame =
-    textDf.select(
-      FieldCounting.quoteAwareCount(col("value"), meta.fieldSeparator,
-        meta.stringSeparator).as("n"))
-
-  /** Diagnostic only: first offending (count, 0-based line index). Exact
-    * line numbers need `zipWithIndex` (two narrow passes, no shuffle) —
-    * paid only on the failure path, like the reference's `take(1)` log
-    * (`big_data_validator.py:202,251`). */
-  private def firstOffender(counts: DataFrame, expected: Int): String =
-    counts.rdd
-      .map(_.getInt(0))
-      .zipWithIndex()
-      .filter { case (n, _) => n != expected }
-      .take(1)
-      .map { case (n, i) => s"(count=$n, line=$i)" }
-      .headOption
-      .getOrElse("")
-
-  private def fieldCountCheck(
-      name: String,
-      counts: DataFrame,
-      csvTable: => DataFrame): CheckResult = {
-    val expected = actualColumns.size
-    val bad = counts.filter(col("n") =!= lit(expected))
-    val badCount = bad.count()
-    if (badCount == 0L)
-      CheckResult(name, passed = true, 0, s"all rows have $expected fields")
-    else {
-      // Reference behavior: on mismatch, fall back to the Spark CSV
-      // reader's verdict (`big_data_validator.py:197-203`).
-      val offender = firstOffender(counts, expected)
-      val fallback = corruptRecordFallback(csvTable)
-      fallback.copy(
-        check = name,
-        failedCount = badCount,
-        detail = s"naive/regex count mismatch on $badCount lines, " +
-          s"first offender $offender; csv-reader fallback: ${fallback.detail}")
-    }
-  }
-
   /** V2: every line's naive split count must equal the header width
-    * (`big_data_validator.py:174-207`). */
+    * (`big_data_validator.py:174-207`). On a mismatch the verdict is the
+    * CSV reader's (`big_data_validator.py:197-203`). The fallback always
+    * parses [[csvTable]]; the parameter is kept for callers that pass it. */
   def validateNumberOfFields(csvTable: => DataFrame): CheckResult =
-    fieldCountCheck("field_count", naiveCounts, csvTable)
+    findings(quoteAware = false).count
 
   /** V3: same with quote-aware counting — separators inside quoted spans
     * are data (`big_data_validator.py:209-256`). */
   def validateNumberOfFieldsQuoteAware(csvTable: => DataFrame): CheckResult =
-    fieldCountCheck("field_count_quoted", quoteAwareCounts, csvTable)
+    findings(quoteAware = true).count
 
   // ---------------------------------------------------------------- V4
 
-  /** V4: corrupt-record fallback (`big_data_validator.py:150-172`).
+  /** V4: corrupt-record fallback (`big_data_validator.py:150-172`), given
+    * the corrupt-row count of the CSV summary pass:
     * (a) a single unnamed trailing column in the read schema → warn+pass;
-    * (b) otherwise any row the PERMISSIVE CSV parser flagged corrupt →
-    * persist them to the bad-row parquet sink and fail.
-    * The cache around the probe+write is REQUIRED: Spark disallows
-    * filtering a lazily-parsed CSV on only its corrupt-record column
-    * (same reason the reference caches). */
-  def corruptRecordFallback(df: DataFrame): CheckResult = {
-    val names = df.schema.names
-    if (names.length >= 2 && names(names.length - 2).isEmpty)
-      return CheckResult("csv_fallback", passed = true, 0,
+    * (b) otherwise fail iff the PERMISSIVE CSV parser flagged any row
+    * corrupt. The flagged rows are written to the bad-row parquet sink by
+    * the sink pass ([[writeSinks]]), not here. */
+  private def corruptRecordFallback(corrupt: Long): CheckResult =
+    if (unnamedTrailingColumn)
+      CheckResult("csv_fallback", passed = true, 0,
         "unnamed empty trailing column — count mismatch ignored")
-    val badRows = df.filter(col(CorruptCol).isNotNull)
-    badRows.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (badRows.head(1).nonEmpty) {
-        Sources.writeBadRows(badRows, badRowPath)
-        CheckResult("csv_fallback", passed = false, badRows.count(),
-          s"corrupt rows written to $badRowPath")
-      } else
-        CheckResult("csv_fallback", passed = true, 0,
-          "csv reader parsed every row")
-    } finally badRows.unpersist()
-  }
+    else if (corrupt > 0)
+      CheckResult("csv_fallback", passed = false, corrupt,
+        s"corrupt rows written to $badRowPath")
+    else
+      CheckResult("csv_fallback", passed = true, 0,
+        "csv reader parsed every row")
+
+  /** The header ends in an empty name, i.e. with a dangling separator. */
+  private def unnamedTrailingColumn: Boolean =
+    actualColumns.lastOption.contains("")
 
   // ------------------------------------------------------ orchestration
 
@@ -189,29 +153,101 @@ final class TableValidator(
   /** Typed bad rows land next to the corrupt-row sink. */
   def typedBadRowPath: String = badRowPath.stripSuffix("/") + "_TYPED/"
 
+  /** The declared checks on columns actually present in the file — a
+    * missing declared column is V1's finding, not a typed error. */
+  private def checkable: TableMetadata = {
+    val present = actualColumns.toSet
+    meta.copy(typeMapping =
+      meta.typeMapping.filter(c => present.contains(c.name.toUpperCase)))
+  }
+
   /** Typed per-column enforcement (SURVEY §7.1 step 4 — the
     * declared-but-unbuilt half of the reference contract): NUMBER regex,
-    * DATE format parse, NOT-NULL blank check over the parsed table, one
-    * group-less aggregate pass. Only columns actually present in the file
-    * are checked — missing declared columns are V1's finding, not a typed
-    * error. On any violation the offending rows (annotated with their
-    * failing `column:check` labels) are written to [[typedBadRowPath]]. */
-  def typedCheckResults(): Seq[CheckResult] = {
-    val present = actualColumns.toSet
-    val checkable = meta.typeMapping.filter(c => present.contains(c.name.toUpperCase))
-    val subMeta = meta.copy(typeMapping = checkable)
-    val results = TypedChecks.summarize(csvTable, subMeta)
-    if (results.isEmpty) return Seq.empty
-    if (results.exists(!_.passed))
-      Sources.writeBadRows(TypedChecks.badRows(csvTable, subMeta), typedBadRowPath)
-    results.map { r =>
+    * DATE format parse, NOT-NULL blank check over the parsed table, taken
+    * by the CSV summary pass. On any violation the offending rows
+    * (annotated with their failing `column:check` labels) are written to
+    * [[typedBadRowPath]]. */
+  def typedCheckResults(): Seq[CheckResult] = findings(meta.hasQuote).typed
+
+  /** The pass plan's findings per counting mode, each run once: every
+    * public check reads them, so no check has a code path of its own. */
+  private val plans = mutable.Map.empty[Boolean, Findings]
+
+  private def findings(quoteAware: Boolean): Findings = plans.synchronized {
+    plans.getOrElseUpdate(quoteAware, runPlan(quoteAware))
+  }
+
+  /** Steps 2 and 3 of the pass plan (see the class doc). */
+  private def runPlan(quoteAware: Boolean): Findings = {
+    val expected = actualColumns.size
+    val sub = checkable
+    val counts = textDf.select((
+      if (quoteAware) FieldCounting.quoteAwareCount(col("value"),
+        meta.fieldSeparator, meta.stringSeparator)
+      else FieldCounting.naiveCount(col("value"), meta.fieldSeparator)).as("n"))
+    var mismatch: (Long, String) = null
+    var summary: Option[(Seq[TypedChecks.ColumnCheckResult], Long)] = None
+    def summarize(): Unit = summary = Some(summaryPass(sub))
+    Par.actions(Seq(() => mismatch = TableValidator.mismatches(counts, expected)) ++
+      (if (TypedChecks.declaresChecks(sub)) Seq(() => summarize()) else Nil))
+    val (badLines, offender) = mismatch
+    if (badLines > 0 && summary.isEmpty && !unnamedTrailingColumn) summarize()
+    val (typed, corrupt) = summary.getOrElse((Nil, 0L))
+
+    val name = if (quoteAware) "field_count_quoted" else "field_count"
+    val count =
+      if (badLines == 0L)
+        CheckResult(name, passed = true, 0, s"all rows have $expected fields")
+      else {
+        val fallback = corruptRecordFallback(corrupt)
+        fallback.copy(
+          check = name,
+          failedCount = badLines,
+          detail = s"naive/regex count mismatch on $badLines lines, " +
+            s"first offender $offender; csv-reader fallback: ${fallback.detail}")
+      }
+    writeSinks(sub, corruptDue = !count.passed, typedDue = typed.exists(!_.passed))
+    Findings(count, typed.map { r =>
       CheckResult(s"typed:${r.column}:${r.check}", r.passed, r.errorCount,
         if (r.passed) s"${r.sourceType} ok"
         else s"${r.errorCount} rows violate ${r.sourceType}" +
           s"${if (r.check == "not_null") " NOT NULL" else ""} " +
           s"(bad rows: $typedBadRowPath)")
-    }
+    })
   }
+
+  /** The CSV summary pass: the typed error sums of `sub` and the
+    * corrupt-row count in one aggregate. It also counts the first data
+    * column, because Spark refuses a raw CSV scan that reads the
+    * corrupt-record column alone (the case when no typed check applies). */
+  private def summaryPass(sub: TableMetadata): (Seq[TypedChecks.ColumnCheckResult], Long) = {
+    val (typed, extra) = TypedChecks.summarizeWith(csvTable, sub,
+      sum(when(col(CorruptCol).isNotNull, 1L).otherwise(0L)),
+      count(GraftColumns.column(csvTable.queryExecution.analyzed.output.head)))
+    (typed, extra.head)
+  }
+
+  /** The sink pass: one CSV parse keeps just the failing rows (corrupt,
+    * typed-violating, or both, as due), annotated with their `errors`;
+    * it is persisted, both sinks are written from it concurrently, and it
+    * is released in `finally`. */
+  private def writeSinks(sub: TableMetadata, corruptDue: Boolean, typedDue: Boolean): Unit =
+    if (corruptDue || typedDue) {
+      val corrupt = col(CorruptCol).isNotNull
+      val typedBad = size(col("errors")) > 0
+      val failing = (if (typedDue) TypedChecks.labelled(csvTable, sub) else csvTable)
+        .filter(Seq(corruptDue -> corrupt, typedDue -> typedBad)
+          .collect { case (true, c) => c }.reduce(_ || _))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // the writes overlap: the first to reach a cached block parses it,
+      // the other waits on the block and reads it
+      try Par.actions(Seq(
+        corruptDue -> (() => Sources.writeBadRows(
+          failing.filter(corrupt).drop("errors"), badRowPath)),
+        typedDue -> (() => Sources.writeBadRows(
+          failing.filter(typedBad), typedBadRowPath))).collect { case (true, w) => w })
+      finally failing.unpersist()
+    }
 
   /** V5: header check, then quote-aware or naive field count depending on
     * whether a quote char is declared. V1 does NOT short-circuit the
@@ -220,10 +256,8 @@ final class TableValidator(
     * but never ran them) appends per-column results. */
   def performValidation(): Seq[CheckResult] = {
     val nameCheck = validateColumnNames()
-    val countCheck =
-      if (meta.hasQuote) validateNumberOfFieldsQuoteAware(csvTable)
-      else validateNumberOfFields(csvTable)
-    Seq(nameCheck, countCheck) ++ typedCheckResults()
+    val found = findings(meta.hasQuote)
+    Seq(nameCheck, found.count) ++ found.typed
   }
 
   /** V6 verdict: all checks pass. */
@@ -235,4 +269,33 @@ object TableValidator {
   /** The column the PERMISSIVE readers put an unparseable line in
     * (`base_data_validation.py:16`). */
   val CorruptCol = "CorruptRecCol"
+
+  /** What one run of the pass plan found. */
+  private final case class Findings(count: CheckResult, typed: Seq[CheckResult])
+
+  /** The raw-text pass: how many lines of `counts` (one `n` per line)
+    * differ from `expected`, and the first of them as
+    * `(count=N, line=L)` with L the 0-based line index, or "". One job:
+    * each partition reports its line count, its mismatch count and its
+    * first mismatch; partitions are in file order, so L is the one
+    * `zipWithIndex` would give. */
+  private def mismatches(counts: DataFrame, expected: Int): (Long, String) = {
+    val parts = counts.rdd.mapPartitions { rows =>
+      var lines, bad, first = 0L
+      var firstN = 0
+      rows.foreach { r =>
+        val n = r.getInt(0)
+        if (n != expected) {
+          if (bad == 0L) { first = lines; firstN = n }
+          bad += 1
+        }
+        lines += 1
+      }
+      Iterator((lines, bad, first, firstN))
+    }.collect()
+    val at = parts.indexWhere(_._2 > 0)
+    (parts.map(_._2).sum,
+      if (at < 0) ""
+      else s"(count=${parts(at)._4}, line=${parts.take(at).map(_._1).sum + parts(at)._3})")
+  }
 }

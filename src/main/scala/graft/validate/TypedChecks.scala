@@ -76,19 +76,36 @@ object TypedChecks {
         nullCond(c).map((c, "not_null", _)).toSeq
     }
 
-  /** One-pass per-column error summary: a single group-less aggregate of
-    * `sum(when(errorCond, 1))` per declared check. */
-  def summarize(df: DataFrame, meta: TableMetadata): Seq[ColumnCheckResult] = {
-    val cs = conds(meta)
-    if (cs.isEmpty) return Seq.empty
-    val aggs = cs.zipWithIndex.map { case ((_, _, cond), i) =>
+  /** Whether `meta` declares any check a row can fail. */
+  def declaresChecks(meta: TableMetadata): Boolean = conds(meta).nonEmpty
+
+  /** The typed aggregate list, built here only: one
+    * `sum(when(cond, 1))` per declared check, named `e0`, `e1`, … in
+    * [[conds]] order. */
+  private def errorSums(cs: Seq[(ColumnMeta, String, Column)]): Seq[Column] =
+    cs.zipWithIndex.map { case ((_, _, cond), i) =>
       sum(when(cond, 1L).otherwise(0L)).as(s"e$i")
     }
+
+  /** One-pass per-column error summary: a single group-less aggregate of
+    * [[errorSums]]. */
+  def summarize(df: DataFrame, meta: TableMetadata): Seq[ColumnCheckResult] =
+    summarizeWith(df, meta)._1
+
+  /** [[summarize]] with `extra` long-valued aggregates taken in the same
+    * pass; returns the typed results and the extra values in order (a sum
+    * over no rows reads 0). Runs no job when there is nothing to
+    * aggregate. */
+  def summarizeWith(df: DataFrame, meta: TableMetadata, extra: Column*)
+      : (Seq[ColumnCheckResult], Seq[Long]) = {
+    val cs = conds(meta)
+    val aggs = errorSums(cs) ++ extra
+    if (aggs.isEmpty) return (Nil, Nil)
     val row = df.agg(aggs.head, aggs.tail: _*).head()
-    cs.zipWithIndex.map { case ((c, name, _), i) =>
-      ColumnCheckResult(c.name, c.sourceType, name,
-        if (row.isNullAt(i)) 0L else row.getLong(i))
-    }
+    val values = aggs.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
+    (cs.zip(values).map { case ((c, name, _), n) =>
+      ColumnCheckResult(c.name, c.sourceType, name, n)
+    }, values.drop(cs.size))
   }
 
   /** The same one-pass summary as a lazy DataFrame (no driver collect):
@@ -98,9 +115,7 @@ object TypedChecks {
   def summaryDf(df: DataFrame, meta: TableMetadata): DataFrame = {
     val cs = conds(meta)
     require(cs.nonEmpty, "metadata declares no typed checks")
-    val aggs = cs.zipWithIndex.map { case ((_, _, cond), i) =>
-      sum(when(cond, 1L).otherwise(0L)).as(s"e$i")
-    }
+    val aggs = errorSums(cs)
     val stackArgs = cs.zipWithIndex.map { case ((c, name, _), i) =>
       s"'${c.name}', '$name', e$i"
     }.mkString(", ")
@@ -109,17 +124,20 @@ object TypedChecks {
         s"stack(${cs.size}, $stackArgs) AS (col_name, check_name, n_errors)")
   }
 
-  /** Rows violating any declaration, annotated with the list of failing
-    * `column:check` labels — the typed analogue of the corrupt-row sink. */
-  def badRows(df: DataFrame, meta: TableMetadata): DataFrame = {
-    val cs = conds(meta)
-    if (cs.isEmpty) return df.limit(0).withColumn("errors", array())
-    val labels = cs.map { case (c, name, cond) =>
+  /** `df` with an `errors` column: the list of the row's failing
+    * `column:check` labels, empty for a row that passes every check. */
+  def labelled(df: DataFrame, meta: TableMetadata): DataFrame = {
+    val labels = conds(meta).map { case (c, name, cond) =>
       when(cond, lit(s"${c.name}:$name")).otherwise(lit(null))
     }
     df.withColumn("errors", filter(array(labels: _*), _.isNotNull))
-      .filter(size(col("errors")) > 0)
   }
+
+  /** Rows violating any declaration, annotated with the list of failing
+    * `column:check` labels — the typed analogue of the corrupt-row sink. */
+  def badRows(df: DataFrame, meta: TableMetadata): DataFrame =
+    if (conds(meta).isEmpty) df.limit(0).withColumn("errors", array())
+    else labelled(df, meta).filter(size(col("errors")) > 0)
 
   /** Project a (possibly already-typed) table down to the declared
     * columns in lexical string form, so the same typed checks run

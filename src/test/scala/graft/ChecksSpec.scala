@@ -10,7 +10,7 @@ import graft.validate.TableValidator
 class ChecksSpec extends SparkSpec {
 
   private val refBase = ReferenceFixtures.path("bigDataValidator/validator")
-  private def tmp(): Path = Files.createTempDirectory("graftchk")
+  private def tmp(): Path = SparkSpec.tempDir("graftchk")
 
   private def validator(tablePath: String, metaCsv: String,
       badDir: String = tmp().resolve("bad").toString): TableValidator =
@@ -100,6 +100,29 @@ class ChecksSpec extends SparkSpec {
     val badDf = spark.read.parquet(bad)
     assert(badDf.count() == 1)
     assert(badDf.columns.contains("CorruptRecCol"))
+  }
+
+  test("first offender in a later split keeps its file line number") {
+    val dir = tmp()
+    val data = dir.resolve("t.csv")
+    val lines = "a|b|c" +: (1 to 199).map(i =>
+      if (i == 150 || i == 170) s"$i|2|3|4" else s"$i|2|3")
+    Files.writeString(data, lines.mkString("", "\n", "\n"))
+    // small splits: the file is read as several partitions, and line 150
+    // is not in the first
+    val small = spark.newSession()
+    small.conf.set("spark.sql.files.maxPartitionBytes", "256")
+    assert(small.read.text(data.toString).rdd.getNumPartitions > 2)
+    val meta = TableMetadata(Seq(
+      ColumnMeta("A", "VARCHAR2", "", true),
+      ColumnMeta("B", "VARCHAR2", "", true),
+      ColumnMeta("C", "VARCHAR2", "", true)), ".", "|", "")
+    val v = new TableValidator(small, meta, data.toString,
+      dir.resolve("bad").toString)
+    val fc = v.performValidation().find(_.check == "field_count").get
+    assert(!fc.passed)
+    assert(fc.failedCount == 2)
+    assert(fc.detail.contains("first offender (count=4, line=150)"), fc.detail)
   }
 
   test("unnamed trailing column suppresses count mismatch (hotfix parity)") {

@@ -13,8 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class EmptyCorpusSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-empty-corpus").toString
+    val dir = SparkSpec.tempDir("graft-empty-corpus").toString
     Tables.names.foreach { t =>
       Tables.load(spark, "/root/testdata/sf0.001", t)
         .limit(0).coalesce(1)

@@ -71,7 +71,7 @@ class ParquetMetaSpec extends AnyFunSuite with SparkSpec {
 
   test("rowCount skips a leftover _temporary attempt and hidden directories") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-pqmeta").resolve("out")
+    val dir = SparkSpec.tempDir("graft-pqmeta").resolve("out")
     Seq(1, 2, 3).toDF("x").coalesce(1).write.parquet(dir.toString)
     val part = Files.list(dir).filter(_.getFileName.toString.startsWith("part-"))
       .findFirst().get()
@@ -113,7 +113,7 @@ class StreamHarnessSpec extends SparkSpec {
 
   test("a memory-sink gate returns its rows and drops its view and temp dir") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-harness")
+    val dir = SparkSpec.tempDir("graft-harness")
     table(dir, "documents", Seq((0L, "alpha"), (1L, "beta"), (2L, "alpha"))
       .toDF("doc_id", "text"))
     val before = tmpEntries("graft-d76")
@@ -127,7 +127,7 @@ class StreamHarnessSpec extends SparkSpec {
   }
 
   test("a gate failing mid-drain leaves no temp dir, view or running query") {
-    val dir = Files.createTempDirectory("graft-harness-bad")
+    val dir = SparkSpec.tempDir("graft-harness-bad")
     Files.writeString(dir.resolve("events.parquet"), "not a parquet file")
     val before = tmpEntries("graft-d104")
     // Spark's own checkpoint for a query started without one; it is

@@ -17,7 +17,7 @@ import graft.ops.{CorpusOps, Multimodal}
   */
 class GateEdgeSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("gateedge").toString
+  private def tmp(): String = SparkSpec.tempDir("gateedge").toString
 
   private val H = 3600L * 1000000
   private val D = 86400L * 1000000

@@ -63,7 +63,7 @@ class LayoutSpec extends SparkSpec {
 
   test("partitioned layout prunes directories for selective filters") {
     import org.apache.spark.sql.functions.col
-    val out = Files.createTempDirectory("graft-part").toString
+    val out = SparkSpec.tempDir("graft-part").toString
     Layouts.writePartitioned(
       Tables.load(spark, dir, "events")
         .select("event_id", "user_id", "event_type", "value"),
@@ -86,8 +86,8 @@ class LayoutSpec extends SparkSpec {
     val docs = Tables.load(spark, dir, "documents")
       .select("doc_id", "text", "source")
     val n = docs.count()
-    val out1 = Files.createTempDirectory("graft-shards1").toString
-    val out2 = Files.createTempDirectory("graft-shards2").toString
+    val out1 = SparkSpec.tempDir("graft-shards1").toString
+    val out2 = SparkSpec.tempDir("graft-shards2").toString
     Layouts.writeShards(docs, out1, 8)
     // a re-run (even from a differently-partitioned frame) produces the
     // same shard membership — reproducible training inputs
@@ -110,7 +110,7 @@ class LayoutSpec extends SparkSpec {
     val docs = Tables.load(spark, dir, "documents")
       .select("doc_id", "text", "source")
     def write(seed: Long): Seq[Seq[Long]] = {
-      val out = Files.createTempDirectory(s"graft-shuf$seed").toString
+      val out = SparkSpec.tempDir(s"graft-shuf$seed").toString
       Layouts.writeShards(docs, out, 4, shuffled = true, seed = seed)
       // per-shard file order as a loader would stream it
       (0 until 4).map { s =>
@@ -141,7 +141,7 @@ class LayoutSpec extends SparkSpec {
     // writeZOrdered now casts to BIGINT before masking
     val intDf = spark.range(2).selectExpr(
       "CAST(40000 AS INT) AS a", "CAST(40000 AS INT) AS b", "id")
-    val outInt = Files.createTempDirectory("graft-zint").toString
+    val outInt = SparkSpec.tempDir("graft-zint").toString
     Layouts.writeZOrdered(intDf, outInt, 1, "a", "b")
     assert(spark.read.parquet(outInt).count() == 2)
     val zkey = spark.sql(s"SELECT ${Layouts.mortonSql(
@@ -153,7 +153,7 @@ class LayoutSpec extends SparkSpec {
     val grid = spark.range(128L * 128L)
       .select((col("id") / 128).cast("long").as("a"),
         (col("id") % 128).cast("long").as("b"))
-    val out = Files.createTempDirectory("graft-zorder").toString
+    val out = SparkSpec.tempDir("graft-zorder").toString
     Layouts.writeZOrdered(grid, out, 16, "a", "b")
     val back = spark.read.parquet(out)
     assert(back.count() == 128L * 128L, "z-order write must be lossless")

@@ -17,7 +17,7 @@ class MainEndToEndSpec extends SparkSpec {
 
   /** Stage `<base>/inputs/<table>.csv` + `<base>/metadata/csv/<table>_metadata.csv`. */
   private def stage(input: Path, metadata: Path, table: String): Path = {
-    val base = Files.createTempDirectory("graft-e2e")
+    val base = SparkSpec.tempDir("graft-e2e")
     Files.createDirectories(base.resolve("inputs"))
     Files.createDirectories(base.resolve("metadata/csv"))
     Files.copy(input, base.resolve(s"inputs/$table.csv"),
@@ -63,7 +63,7 @@ class MainEndToEndSpec extends SparkSpec {
   }
 
   test("typed enforcement fails a table with bad NUMBER/DATE/NOT-NULL data") {
-    val base = Files.createTempDirectory("graft-typed")
+    val base = SparkSpec.tempDir("graft-typed")
     Files.createDirectories(base.resolve("inputs"))
     Files.createDirectories(base.resolve("metadata/csv"))
     Files.writeString(base.resolve("inputs/acct.csv"),
@@ -102,7 +102,7 @@ class MainEndToEndSpec extends SparkSpec {
 
   test("parquet input validates end-to-end via the format argument") {
     import org.apache.spark.sql.functions.lit
-    val base = Files.createTempDirectory("graft-pq-cli")
+    val base = SparkSpec.tempDir("graft-pq-cli")
     Files.createDirectories(base.resolve("inputs"))
     Files.createDirectories(base.resolve("metadata/csv"))
     Files.writeString(base.resolve("metadata/csv/acct_metadata.csv"),
@@ -128,7 +128,7 @@ class MainEndToEndSpec extends SparkSpec {
   }
 
   test("json input validates end-to-end via the format argument") {
-    val base = Files.createTempDirectory("graft-json-cli")
+    val base = SparkSpec.tempDir("graft-json-cli")
     Files.createDirectories(base.resolve("inputs"))
     Files.createDirectories(base.resolve("metadata/csv"))
     Files.writeString(base.resolve("metadata/csv/acct_metadata.csv"),
@@ -153,7 +153,7 @@ class MainEndToEndSpec extends SparkSpec {
   }
 
   test("typed checks skip declared columns missing from the file") {
-    val base = Files.createTempDirectory("graft-missing")
+    val base = SparkSpec.tempDir("graft-missing")
     Files.createDirectories(base.resolve("inputs"))
     Files.createDirectories(base.resolve("metadata/csv"))
     Files.writeString(base.resolve("inputs/m.csv"), "A|B\n1|2\n")
@@ -167,16 +167,18 @@ class MainEndToEndSpec extends SparkSpec {
   }
 
   /** `Main.run` on `<base>/inputs/<table>.csv` holding `input`, with a
-    * two-column `|` metadata; returns the exit code and what it printed. */
-  private def runOn(table: String, input: String): (Int, String) = {
-    val base = Files.createTempDirectory("graft-hostile")
+    * two-column metadata (ID VARCHAR2 NOT NULL, AMOUNT NUMBER) declaring
+    * `sep` and `quote`; returns the exit code and what it printed. */
+  private def runOn(table: String, input: String, sep: String = "|",
+      quote: String = ""): (Int, String) = {
+    val base = SparkSpec.tempDir("graft-hostile")
     Files.createDirectories(base.resolve("inputs"))
     Files.createDirectories(base.resolve("metadata/csv"))
     Files.writeString(base.resolve(s"inputs/$table.csv"), input)
     Files.writeString(base.resolve(s"metadata/csv/${table}_metadata.csv"),
-      """COLUMN_NAME;DATA_TYPE;STRING_SEPARATOR;FIELD_SEPARATOR;DECIMAL_SEPARATOR;NULLABLE;DATA_FORMAT
-        |ID;VARCHAR2;;|;.;FALSE;
-        |AMOUNT;NUMBER;;|;.;TRUE;
+      s"""COLUMN_NAME;DATA_TYPE;STRING_SEPARATOR;FIELD_SEPARATOR;DECIMAL_SEPARATOR;NULLABLE;DATA_FORMAT
+        |ID;VARCHAR2;$quote;$sep;.;FALSE;
+        |AMOUNT;NUMBER;$quote;$sep;.;TRUE;
         |""".stripMargin)
     val out = new java.io.ByteArrayOutputStream()
     val code = Console.withOut(out)(Main.run(spark, base.toString, table))
@@ -198,5 +200,67 @@ class MainEndToEndSpec extends SparkSpec {
     assert(printed.linesIterator.forall(l =>
       !l.contains(" FAIL ")), printed)
     assert(printed.contains("validation success"), printed)
+  }
+
+  /** The `name STATUS failed=N` head of every check line `Main` printed,
+    * then its verdict line. */
+  private def verdicts(printed: String): Seq[String] =
+    printed.linesIterator.map(_.split(" +").take(3).mkString(" ")).toSeq
+
+  private val cleanVerdicts = Seq(
+    "column_names PASS failed=0",
+    "field_count PASS failed=0",
+    "typed:ID:not_null PASS failed=0",
+    "typed:AMOUNT:type_format PASS failed=0",
+    "validation success")
+
+  test("hostile input: CRLF line endings pass, plain and quoted") {
+    val (code, printed) = runOn("crlf", "ID|AMOUNT\r\n1|2.5\r\n2|3\r\n")
+    assert(code == 0 && verdicts(printed) == cleanVerdicts, printed)
+    val (qCode, qPrinted) =
+      runOn("crlfq", "ID|AMOUNT\r\n\"1\"|\"2.5\"\r\n2|3\r\n", quote = "\"")
+    assert(qCode == 0 && verdicts(qPrinted) ==
+      cleanVerdicts.updated(1, "field_count_quoted PASS failed=0"), qPrinted)
+  }
+
+  test("hostile input: a UTF-8 byte-order mark does not reach the header") {
+    val (code, printed) = runOn("bom", "\uFEFFID|AMOUNT\n1|2.5\n")
+    assert(code == 0 && verdicts(printed) == cleanVerdicts, printed)
+  }
+
+  test("hostile input: an unterminated quote folds the next line into its field") {
+    // the multiLine CSV reader reads `"1|2.5\n2|3\n` as one open field:
+    // one corrupt record, which the fallback sinks
+    val (code, printed) = runOn("open", "ID|AMOUNT\n\"1|2.5\n2|3\n", quote = "\"")
+    assert(code == 1, printed)
+    assert(verdicts(printed) == Seq(
+      "column_names PASS failed=0",
+      "field_count_quoted FAIL failed=1",
+      "typed:ID:not_null PASS failed=0",
+      "typed:AMOUNT:type_format PASS failed=0",
+      "validation failed!"), printed)
+    assert(printed.contains("first offender (count=1, line=1)"), printed)
+  }
+
+  test("hostile input: regex metacharacter separators are literal") {
+    Seq(".", "*", "+", "$", "^").foreach { sep =>
+      val (code, printed) =
+        runOn("meta", s"ID${sep}AMOUNT\n1${sep}2\n2${sep}3\n", sep = sep)
+      assert(code == 0 && verdicts(printed) == cleanVerdicts, s"sep <$sep>: $printed")
+    }
+  }
+
+  test("hostile input: a backslash separator is literal to the CSV reader") {
+    // the CSV `delimiter` option reads `\` as an escape: a lone `\` once
+    // crashed the run, and a two-char `\t` turned into a tab
+    Seq("\\", "\\t").foreach { sep =>
+      val (code, printed) =
+        runOn("bs", s"ID${sep}AMOUNT\n1${sep}2\n2${sep}3\n", sep = sep)
+      assert(code == 0 && verdicts(printed) == cleanVerdicts, s"sep <$sep>: $printed")
+      val (dirty, dirtyPrinted) =
+        runOn("bsd", s"ID${sep}AMOUNT\n1${sep}2\n2${sep}3${sep}4\n", sep = sep)
+      assert(dirty == 1, dirtyPrinted)
+      assert(verdicts(dirtyPrinted)(1) == "field_count FAIL failed=1", dirtyPrinted)
+    }
   }
 }

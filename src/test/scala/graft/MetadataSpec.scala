@@ -88,7 +88,7 @@ class MetadataSpec extends AnyFunSuite {
   }
 
   test("compileToJsonFile uses the substring csv→json path rewrite") {
-    val dir = Files.createTempDirectory("graftmeta")
+    val dir = SparkSpec.tempDir("graftmeta")
     val csvDir = dir.resolve("metadata/csv")
     Files.createDirectories(csvDir)
     val src = csvDir.resolve("t_metadata.csv")

@@ -14,7 +14,7 @@ import graft.ops.{CorpusOps, FuzzyDedup, GraphOps, TextOps}
   */
 class NewOpsSpec extends SparkSpec {
 
-  private def tmp(): String = Files.createTempDirectory("newops").toString
+  private def tmp(): String = SparkSpec.tempDir("newops").toString
 
   // ------------------------------------------------------------- d98
   test("d98 pagerank matches an independent power iteration, dangling included") {

@@ -343,7 +343,7 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     val src = Tables.load(spark, "/root/testdata/sf0.01", "embeddings")
     val replicas = src.filter(col("vec_id") < 4)
       .withColumn("vec_id", col("vec_id") + 100000L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-d59").toString
+    val dir = SparkSpec.tempDir("graft-d59").toString
     src.unionByName(replicas).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val out = Similarity.d59SemanticDedup(spark, dir).collect()
@@ -611,7 +611,7 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
 
   test("binaryFile blob source: ids, modalities, and decode plumbing") {
     import java.nio.file.Files
-    val bdir = Files.createTempDirectory("graft-blobs")
+    val bdir = SparkSpec.tempDir("graft-blobs")
     Files.write(bdir.resolve("0.jpg"), Array.fill[Byte](300)(1))
     Files.write(bdir.resolve("1.wav"), Array.fill[Byte](700)(2))
     Files.write(bdir.resolve("2.bin"), "hello".getBytes)
@@ -740,7 +740,7 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     val short = (1 to 38).map(i => s"tok$i").mkString(" ")
     val long = (1 to 40).map(i => s"tok$i").mkString(" ")
     val other = (1 to 40).map(i => s"zzz$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft-d57").toString
+    val dir = SparkSpec.tempDir("graft-d57").toString
     Seq((0L, short), (1L, long), (2L, other)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("src0"))
       .withColumn("n_chars", length(col("text")).cast("long"))

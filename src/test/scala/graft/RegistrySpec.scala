@@ -60,7 +60,7 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
   import org.apache.spark.sql.functions._
 
   private def roundTrip(write: org.apache.spark.sql.DataFrame): Seq[java.sql.Timestamp] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ts").toString
+    val dir = SparkSpec.tempDir("graft-ts").toString
     write.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = Tables.load(spark, dir, "events")
     assert(got.schema("ts").dataType ==

@@ -20,7 +20,7 @@ class SkewSessionSpec extends SparkSpec {
 
   /** (event_id, us, user_id, event_type) rows → events.parquet dir. */
   private def writeEvents(rows: Seq[(Long, Long, Long, String)]): String = {
-    val dir = Files.createTempDirectory("skewfix").toString
+    val dir = SparkSpec.tempDir("skewfix").toString
     import spark.implicits._
     rows.toDF("event_id", "us", "user_id", "event_type")
       .select(col("event_id"), timestamp_micros(col("us")).as("ts"),

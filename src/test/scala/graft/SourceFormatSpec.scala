@@ -27,7 +27,7 @@ class SourceFormatSpec extends SparkSpec {
 
   test("parquet source validates typed declarations end-to-end") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-pq").resolve("t.parquet").toString
+    val dir = SparkSpec.tempDir("graft-pq").resolve("t.parquet").toString
     // typed source: AMOUNT is already numeric, OPENED is a string date
     Seq(
       ("1", Some(12.5), "23/1/2002"),
@@ -48,7 +48,7 @@ class SourceFormatSpec extends SparkSpec {
   }
 
   test("json source captures corrupt records and validates types") {
-    val dir = Files.createTempDirectory("graft-js").resolve("t.json").toString
+    val dir = SparkSpec.tempDir("graft-js").resolve("t.json").toString
     Files.createDirectories(java.nio.file.Paths.get(dir).getParent)
     Files.writeString(java.nio.file.Paths.get(dir),
       """{"ID":"1","AMOUNT":"12.5","OPENED":"23/1/2002"}

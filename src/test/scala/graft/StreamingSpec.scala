@@ -17,7 +17,7 @@ class StreamingSpec extends SparkSpec {
   /** File-stream sources need a directory; stage the events parquet
     * into a temp dir. */
   private def stageEventsDir(): String = {
-    val dir = Files.createTempDirectory("graft-stream")
+    val dir = SparkSpec.tempDir("graft-stream")
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir.toString
@@ -74,8 +74,8 @@ class StreamingSpec extends SparkSpec {
     * read). */
   private def plantLog(rows: Seq[(Long, Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-stream-plant")
-    val tmp = Files.createTempDirectory("graft-stream-plant-w")
+    val dir = SparkSpec.tempDir("graft-stream-plant")
+    val tmp = SparkSpec.tempDir("graft-stream-plant-w")
     rows.toDF("event_id", "us", "user_id", "event_type", "value")
       .select(col("event_id"), (col("us") * 1000L).as("ts"),
         col("user_id"), col("event_type"), col("value"),
@@ -193,13 +193,13 @@ class StreamingSpec extends SparkSpec {
     val mn = 60L * 1000 * 1000
     def ev(id: Long, tsUs: Long, user: Long) =
       (id, tsUs, user, "click", 1.0, "{}")
-    val staged = Files.createTempDirectory("graft-tws-ooo-in")
+    val staged = SparkSpec.tempDir("graft-tws-ooo-in")
     Seq(
       Seq(ev(1, base + 60 * mn, 100L)),
       Seq(ev(2, base + 20 * mn, 100L)),
       Seq(ev(3, base + 720 * mn, 999L))
     ).zipWithIndex.foreach { case (rows, i) =>
-      val tmp = Files.createTempDirectory(s"graft-tws-ooo-$i")
+      val tmp = SparkSpec.tempDir(s"graft-tws-ooo-$i")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.parquet(tmp.resolve("p").toString)
       val src = Files.list(tmp.resolve("p")).toArray.map(_.toString)
@@ -245,7 +245,7 @@ class StreamingSpec extends SparkSpec {
     val hour = 60 * mn
     def stage(rows: Seq[(Long, Long, Long, String, Double, String)],
         dir: java.nio.file.Path, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft-tws-old-$name")
+      val tmp = SparkSpec.tempDir(s"graft-tws-old-$name")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.parquet(tmp.resolve("p").toString)
       val src = Files.list(tmp.resolve("p")).toArray.map(_.toString)
@@ -254,7 +254,7 @@ class StreamingSpec extends SparkSpec {
       Files.copy(Paths.get(src), dst)
       dst.toFile.setLastModified(mtime)
     }
-    val staged = Files.createTempDirectory("graft-tws-oldsession-in")
+    val staged = SparkSpec.tempDir("graft-tws-oldsession-in")
     val base = 2000000000000000L
     stage(Seq(
       (1L, base, 1L, "click", 0.0, "{}"),
@@ -289,7 +289,7 @@ class StreamingSpec extends SparkSpec {
       "offline read sees the dedup store, not the input") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-d225-spec")
+    val dir = SparkSpec.tempDir("graft-d225-spec")
     Seq((0L, "alpha text"), (1L, "alpha text"), (2L, "beta text"),
       (3L, "alpha text"), (4L, "gamma text"))
       .toDF("doc_id", "text")
@@ -378,7 +378,7 @@ class StreamingSpec extends SparkSpec {
     val hour = 60 * mn
     def stage(rows: Seq[(Long, Long, Long, String, Double, String)],
         dir: java.nio.file.Path, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft-d220-$name")
+      val tmp = SparkSpec.tempDir(s"graft-d220-$name")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.parquet(tmp.resolve("p").toString)
       val src = Files.list(tmp.resolve("p")).toArray.map(_.toString)
@@ -387,7 +387,7 @@ class StreamingSpec extends SparkSpec {
       Files.copy(Paths.get(src), dst)
       dst.toFile.setLastModified(mtime)
     }
-    val staged = Files.createTempDirectory("graft-d220-oldentry-in")
+    val staged = SparkSpec.tempDir("graft-d220-oldentry-in")
     val base = 2000000000000000L
     stage(Seq(
       (1L, base, 1L, "click", 0.0, "{}"),
@@ -511,7 +511,7 @@ class StreamingSpec extends SparkSpec {
     // second hour, planted as a SECOND part-file mid-test (phase 2)
     def plantSecond(): Unit = {
       import spark.implicits._
-      val tmp = Files.createTempDirectory("graft-chlog-w")
+      val tmp = SparkSpec.tempDir("graft-chlog-w")
       Seq((4L, T0 + min(65), 1L, "view", 4.0),
         (5L, T0 + min(70), 2L, "click", 5.0))
         .toDF("event_id", "us", "user_id", "event_type", "value")
@@ -525,7 +525,7 @@ class StreamingSpec extends SparkSpec {
         Paths.get(dir).resolve("events2.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    val ckpt = Files.createTempDirectory("graft-chlog-ckpt")
+    val ckpt = SparkSpec.tempDir("graft-chlog-ckpt")
     def changelogFiles(): Seq[String] = {
       import scala.jdk.CollectionConverters._
       val w = Files.walk(ckpt)
@@ -578,12 +578,12 @@ class StreamingSpec extends SparkSpec {
     // mechanism on a planted log — the resumed run's processed-row
     // count is exactly the second file, so the correct totals can only
     // come from the recovered state store.
-    val staged = Files.createTempDirectory("graft-recovery-src")
-    val ckpt = Files.createTempDirectory("graft-recovery-ckpt")
+    val staged = SparkSpec.tempDir("graft-recovery-src")
+    val ckpt = SparkSpec.tempDir("graft-recovery-ckpt")
     val full = spark.read.parquet(s"$sfDir/events.parquet")
     val nOdd = full.filter(org.apache.spark.sql.functions.col("event_id") % 2 === 1).count()
     def drop(parity: Int, name: String): Unit = {
-      val tmp = Files.createTempDirectory("graft-recovery-w")
+      val tmp = SparkSpec.tempDir("graft-recovery-w")
       full.filter(org.apache.spark.sql.functions.col("event_id") % 2 === parity)
         .coalesce(1).write.mode("overwrite").parquet(tmp.resolve("o").toString)
       val part = Files.list(tmp.resolve("o"))
@@ -630,14 +630,14 @@ class StreamingSpec extends SparkSpec {
     // watermark is max(on-time) - 30 min = 02:40; a phase-2 straggler
     // for window [00:00,01:00) (end <= W) must be DROPPED, one for
     // [02:00,03:00) (end 03:00 > W) must be MERGED into the count.
-    val staged = Files.createTempDirectory("graft-late-src")
-    val ckpt = Files.createTempDirectory("graft-late-ckpt")
+    val staged = SparkSpec.tempDir("graft-late-src")
+    val ckpt = SparkSpec.tempDir("graft-late-ckpt")
     import org.apache.spark.sql.functions._
     val t0 = 1704067200L * 1000000 // 2024-01-01T00:00Z
     def us(h: Long, m: Long, s: Long) = t0 + (h * 3600 + m * 60 + s) * 1000000L
     def write(rows: Seq[(Long, Long)], name: String): Unit = {
       import spark.implicits._
-      val tmp = Files.createTempDirectory("graft-late-w")
+      val tmp = SparkSpec.tempDir("graft-late-w")
       rows.toDF("event_id", "us")
         .select(col("event_id"),
           // NTZ writes INT64 micros — the encoding readEvents probes as
@@ -651,7 +651,7 @@ class StreamingSpec extends SparkSpec {
         .findFirst().get()
       Files.move(part, staged.resolve(name))
     }
-    val out = Files.createTempDirectory("graft-late-out")
+    val out = SparkSpec.tempDir("graft-late-out")
     def run() = {
       val q = EventStreams.hourlyCounts(
           EventStreams.readEvents(spark, staged.toString),
@@ -694,7 +694,7 @@ class StreamingSpec extends SparkSpec {
     // per trigger, so users spanning the split exercise the carried
     // GroupState (a single AvailableNow batch would not)
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-stream-mb")
+    val dir = SparkSpec.tempDir("graft-stream-mb")
     val events = Tables.load(spark, sfDir, "events")
     val midTs = events.select(expr("percentile_approx(unix_micros(ts), 0.5)"))
       .head().getLong(0)
@@ -706,7 +706,7 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.parquet(dir.resolve("batch2").toString)
     // one parquet file per subdir; stage them in arrival order with
     // distinct mod-times so the file source triggers batch1 first
-    val staged = Files.createTempDirectory("graft-stream-mb-in")
+    val staged = SparkSpec.tempDir("graft-stream-mb-in")
     Seq("batch1", "batch2").zipWithIndex.foreach { case (b, i) =>
       val src = Files.list(dir.resolve(b)).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).head
@@ -756,13 +756,13 @@ class StreamingSpec extends SparkSpec {
     val min = 60L * 1000 * 1000
     def ev(id: Long, tsUs: Long, user: Long) =
       (id, tsUs, user, "click", 1.0, "{}")
-    val staged = Files.createTempDirectory("graft-ooo-in")
+    val staged = SparkSpec.tempDir("graft-ooo-in")
     Seq(
       Seq(ev(1, base + 60 * min, 100L)),
       Seq(ev(2, base + 20 * min, 100L)),
       Seq(ev(3, base + 720 * min, 999L))
     ).zipWithIndex.foreach { case (rows, i) =>
-      val tmp = Files.createTempDirectory(s"graft-ooo-$i")
+      val tmp = SparkSpec.tempDir(s"graft-ooo-$i")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.parquet(tmp.resolve("p").toString)
       val src = Files.list(tmp.resolve("p")).toArray.map(_.toString)
@@ -803,7 +803,7 @@ class StreamingSpec extends SparkSpec {
     // and leave A buffered; keyed to the EARLIEST it must emit A now.
     def stage(rows: Seq[(Long, Long, Long, String, Double, String)],
         dir: java.nio.file.Path, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft-old-$name")
+      val tmp = SparkSpec.tempDir(s"graft-old-$name")
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.parquet(tmp.resolve("p").toString)
       val src = Files.list(tmp.resolve("p")).toArray.map(_.toString)
@@ -812,7 +812,7 @@ class StreamingSpec extends SparkSpec {
       Files.copy(Paths.get(src), dst)
       dst.toFile.setLastModified(mtime)
     }
-    val staged = Files.createTempDirectory("graft-oldsession-in")
+    val staged = SparkSpec.tempDir("graft-oldsession-in")
     val base = 2000000000000000L // epoch-0 events collide with the initial watermark
     stage(Seq(
       (1L, base, 1L, "click", 0.0, "{}"),
@@ -846,17 +846,17 @@ class StreamingSpec extends SparkSpec {
     val events = Tables.load(spark, sfDir, "events")
     val asLong = events.withColumn("ts", unix_micros(col("ts")))
     val maxTs = asLong.agg(max("ts")).head().getLong(0)
-    val staged = Files.createTempDirectory("graft-closed-in")
+    val staged = SparkSpec.tempDir("graft-closed-in")
     // batch 1: the real corpus; batch 2: one far-future sentinel event
     // whose watermark closes every real session
-    val tmp1 = Files.createTempDirectory("graft-closed-b1")
+    val tmp1 = SparkSpec.tempDir("graft-closed-b1")
     asLong.coalesce(1).write.parquet(tmp1.resolve("p").toString)
     val src1 = Files.list(tmp1.resolve("p")).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).head
     val dst1 = staged.resolve("b1.parquet")
     Files.copy(Paths.get(src1), dst1)
     dst1.toFile.setLastModified(1000000L)
-    val tmp2 = Files.createTempDirectory("graft-closed-b2")
+    val tmp2 = SparkSpec.tempDir("graft-closed-b2")
     Seq((-1L, maxTs + 20L * 3600 * 1000 * 1000, -1L, "sentinel", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.parquet(tmp2.resolve("p").toString)
@@ -911,9 +911,9 @@ class StreamingSpec extends SparkSpec {
         (3L, "one two three four", base + 5 * min)),
       Seq((4L, "alpha beta gamma delta", base + 20 * min),
         (5L, "five six seven eight", base + 25 * min)))
-    val staged = Files.createTempDirectory("graft-ingest-in")
+    val staged = SparkSpec.tempDir("graft-ingest-in")
     batches.zipWithIndex.foreach { case (rows, i) =>
-      val tmp = Files.createTempDirectory(s"graft-ingest-$i")
+      val tmp = SparkSpec.tempDir(s"graft-ingest-$i")
       rows.toDF("doc_id", "text", "ingest_ts")
         .coalesce(1).write.parquet(tmp.resolve("p").toString)
       val src = Files.list(tmp.resolve("p")).toArray.map(_.toString)
@@ -941,8 +941,8 @@ class StreamingSpec extends SparkSpec {
   test("split routing at ingest matches the batch d33 assignment, statelessly") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val staged = Files.createTempDirectory("graft-route-in")
-    val tmp = Files.createTempDirectory("graft-route-w")
+    val staged = SparkSpec.tempDir("graft-route-in")
+    val tmp = SparkSpec.tempDir("graft-route-w")
     val docs = (0L until 200L).map(i => (i, s"doc number $i body")).toDF("doc_id", "text")
     docs.coalesce(1).write.parquet(tmp.resolve("p").toString)
     val src = Files.list(tmp.resolve("p")).toArray.map(_.toString)
@@ -981,8 +981,8 @@ class StreamingSpec extends SparkSpec {
     val contaminated = // near-copy of the benchmark doc
       "the quick brown fox jumps over the lazy dog again and again indeed"
     val clean = "completely unrelated words about spark shuffles and parquet"
-    val staged = Files.createTempDirectory("graft-decon-in")
-    val tmp = Files.createTempDirectory("graft-decon-w")
+    val staged = SparkSpec.tempDir("graft-decon-in")
+    val tmp = SparkSpec.tempDir("graft-decon-w")
     Seq((1L, contaminated), (2L, clean)).toDF("doc_id", "text")
       .coalesce(1).write.parquet(tmp.resolve("p").toString)
     val src = Files.list(tmp.resolve("p")).toArray.map(_.toString)
@@ -1014,8 +1014,8 @@ class StreamingSpec extends SparkSpec {
   test("pii redaction is stream-safe and agrees with batch") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val staged = Files.createTempDirectory("graft-pii-in")
-    val tmp = Files.createTempDirectory("graft-pii-w")
+    val staged = SparkSpec.tempDir("graft-pii-in")
+    val tmp = SparkSpec.tempDir("graft-pii-w")
     val docs = Seq(
       (1L, "mail bob@example.com or call 555-123-4567 now"),
       (2L, "ssn 123-45-6789 hidden"),
@@ -1050,8 +1050,8 @@ class StreamingSpec extends SparkSpec {
   test("chunking is stream-safe and agrees with the batch chunker") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val staged = Files.createTempDirectory("graft-chunk-in")
-    val tmp = Files.createTempDirectory("graft-chunk-w")
+    val staged = SparkSpec.tempDir("graft-chunk-in")
+    val tmp = SparkSpec.tempDir("graft-chunk-w")
     val docs = Seq(
       (1L, (1 to 60).map(i => s"w$i").mkString(" ")), // 3 chunks
       (2L, "tiny doc"))
@@ -1105,7 +1105,7 @@ class StreamingSpec extends SparkSpec {
     //   23 (batch 1) = b+E+F → cell5, match 5 at 10000 (near-dup 21
     //     is absent from the index, so the original keeps winning).
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-d226-spec")
+    val dir = SparkSpec.tempDir("graft-d226-spec")
     def vec(parts: (Int, Float)*): Array[Float] = {
       val v = Array.fill(64)(0f)
       parts.foreach { case (i, x) => v(i) = x }
@@ -1179,7 +1179,7 @@ class StreamingSpec extends SparkSpec {
   test("d227 ttl dedup: expiry re-admits re-sent contents; in-batch " +
       "dups still collapse; TTL off trips the expiry require") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-d227-spec")
+    val dir = SparkSpec.tempDir("graft-d227-spec")
     // 5 rows, 3 distinct contents — in-batch dups must collapse in
     // BOTH batches regardless of TTL (same-key rows arrive in one
     // handleInputRows call)
@@ -1244,7 +1244,7 @@ class StreamingSpec extends SparkSpec {
       (13L, "view", 2L), (14L, "view", 2L), (15L, "view", 2L),
       (20L, "click", 1L), (21L, "click", 1L),
       (22L, "click", 2L), (23L, "click", 2L))
-    val dir = Files.createTempDirectory("graft-d233-spec").toString
+    val dir = SparkSpec.tempDir("graft-d233-spec").toString
     rows.zipWithIndex.map { case ((id, t, u), i) =>
       (id, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), u, t,
         1.0 + i)
@@ -1270,7 +1270,7 @@ class StreamingSpec extends SparkSpec {
     val rows = Seq(
       (0L, "purchase", 1.25), (1L, "view", 2.50), (2L, "purchase", 3.00),
       (3L, "purchase", 0.50), (4L, "view", 1.00), (5L, "view", 2.00))
-    val dir = Files.createTempDirectory("graft-d234-spec").toString
+    val dir = SparkSpec.tempDir("graft-d234-spec").toString
     rows.zipWithIndex.map { case ((id, t, v), i) =>
       (id, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
         (i % 2).toLong, t, v)

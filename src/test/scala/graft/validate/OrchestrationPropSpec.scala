@@ -133,7 +133,7 @@ class OrchestrationPropSpec extends SparkSpec {
         !c.lines.exists(_.corrupt)
     }, "no counter-blind mismatch case generated — adjust seed/weights")
     cases.zipWithIndex.foreach { case (c, i) =>
-      val dir = Files.createTempDirectory(s"graft-orch-$i")
+      val dir = SparkSpec.tempDir(s"graft-orch-$i")
       val file = dir.resolve("t.csv")
       val content = (c.header.mkString(c.sep) +: c.lines.map(_.text))
         .mkString("\n") + "\n" + (if (c.blankTail) "\n" else "")
