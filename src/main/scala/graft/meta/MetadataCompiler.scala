@@ -74,9 +74,11 @@ object MetadataCompiler {
   }
 
   /** Serialize to the reference's JSON IR shape. Matches Python
-    * `json.dump(..., indent=4)` formatting (4-space indent, `": "` and
-    * `", "` separators, insertion order TypeMapping → DecimalSeparator →
-    * FieldSeparator → StringSeparator, non-ASCII escaped like Python's
+    * `json.dump(..., indent=4)` formatting (4-space indent, every nested
+    * object and array item on its own line, `": "` key separator and
+    * `","` item separator followed by a newline, no trailing newline,
+    * insertion order TypeMapping → DecimalSeparator → FieldSeparator →
+    * StringSeparator, non-ASCII escaped like Python's
     * default `ensure_ascii=True`). SourceNullable is the raw metadata
     * cell passed through verbatim, like the reference. */
   def toJson(meta: TableMetadata): String = {
