@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumns}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, PlanExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{AbstractDataType, BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 import org.apache.spark.util.sketch.CountMinSketch
 
 /** Count-min-sketch build/probe helpers for FREQUENCY prefilters — the

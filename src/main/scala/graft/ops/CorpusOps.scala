@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Gate, Tables}
+import graft.{Gate, Scratch, Tables}
 
 /** Corpus-preparation operators — the steps between a cleaned corpus and
   * training shards: chunking long documents to the context budget,
@@ -1695,12 +1695,12 @@ object CorpusOps {
     * 2/5 of the table vs all of it. The result is hash-checked against
     * DuckDB's plain filtered aggregate over the ORIGINAL table —
     * layout changes the PLAN, never the ANSWER. */
-  def d95PartitionedScan(spark: SparkSession, dir: String): DataFrame = {
+  def d95PartitionedScan(spark: SparkSession,
+      dir: String): DataFrame = Scratch.within("d95") { s =>
     // per-run unique directory (the d104/d107 staging discipline): a
     // fixed shared path lets a concurrent run's overwrite delete the
     // layout mid-scan
-    val path = java.nio.file.Files.createTempDirectory("graft-d95")
-      .resolve("events_p").toString
+    val path = s.dir("layout").resolve("events_p").toString
     val src = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
     graft.io.Layouts.writePartitioned(src, path, "event_type")
@@ -1767,9 +1767,10 @@ object CorpusOps {
     * Result is hash-checked against DuckDB's plain dim join over the
     * ORIGINAL table — the layout + DPP change the PLAN, never the
     * ANSWER. */
-  def d230DppPrune(spark: SparkSession, dir: String): DataFrame = {
+  def d230DppPrune(spark: SparkSession,
+      dir: String): DataFrame = Scratch.within("d230") { s =>
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-d230")
+    val root = s.dir("layout")
     val path = root.resolve("events_p").toString
     val src = Tables.load(spark, dir, "events")
       .select(col("event_id"), col("event_type"), col("value"))
@@ -4421,12 +4422,10 @@ object CorpusOps {
     * shuffle; the read-back summary is one scan + shard-keyed
     * aggregate with map-side partials. Byte-stable determinism of the
     * shard files themselves is pinned by `LayoutSpec`. */
-  def d126ShardGate(spark: SparkSession, dir: String): DataFrame = {
-    import graft.io.Layouts
-    val path = java.nio.file.Files.createTempDirectory("graft-d126")
-    // Cleanup runs on EVERY exit — including a failed require() pin —
-    // so a failed gate never strands the sharded parquet copy on disk.
-    try {
+  def d126ShardGate(spark: SparkSession, dir: String): DataFrame =
+    Scratch.within("d126") { s =>
+      import graft.io.Layouts
+      val path = s.dir("shards")
       val d = Tables.loadSpread(spark, dir, "documents").select("doc_id", "text")
       Layouts.writeShards(d, path.toString, GateShards,
         key = "doc_id", shuffled = true, seed = 42L,
@@ -4440,7 +4439,7 @@ object CorpusOps {
       // directory-count nor the balance pin applies to nothing
       if (shardDirs.isEmpty) {
         import org.apache.spark.sql.types._
-        return spark.createDataFrame(
+        spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(
             StructField("shard", IntegerType),
@@ -4448,32 +4447,26 @@ object CorpusOps {
             StructField("xor_content", LongType),
             StructField("min_id", LongType),
             StructField("max_id", LongType))))
+      } else {
+        require(shardDirs.size == GateShards,
+          s"expected $GateShards shard directories, found ${shardDirs.size}")
+        // fingerprint the CONTENT as stored — read back from the shards
+        val summarized = spark.read.parquet(path.toString)
+          .withColumn("h", TextOps.hash60(col("text")))
+          .groupBy(col("shard").cast("int").as("shard"))
+          .agg(count(lit(1)).as("n_docs"),
+            expr("bit_xor(h)").as("xor_content"),
+            min("doc_id").as("min_id"), max("doc_id").as("max_id"))
+          .orderBy("shard")
+          .localCheckpoint() // read by the balance pins AND returned
+        val counts = summarized.select("n_docs").collect().map(_.getLong(0))
+        require(counts.length == GateShards && counts.forall(_ > 0L),
+          s"every shard must be nonempty: ${counts.mkString(",")}")
+        require(counts.max.toDouble <= 2.5 * (counts.sum.toDouble / counts.length),
+          s"shard imbalance beyond 2.5x mean: ${counts.mkString(",")}")
+        summarized
       }
-      require(shardDirs.size == GateShards,
-        s"expected $GateShards shard directories, found ${shardDirs.size}")
-      // fingerprint the CONTENT as stored — read back from the shards
-      val summarized = spark.read.parquet(path.toString)
-        .withColumn("h", TextOps.hash60(col("text")))
-        .groupBy(col("shard").cast("int").as("shard"))
-        .agg(count(lit(1)).as("n_docs"),
-          expr("bit_xor(h)").as("xor_content"),
-          min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-        .orderBy("shard")
-        .localCheckpoint() // the temp layout can be deleted after this
-      val counts = summarized.select("n_docs").collect().map(_.getLong(0))
-      require(counts.length == GateShards && counts.forall(_ > 0L),
-        s"every shard must be nonempty: ${counts.mkString(",")}")
-      require(counts.max.toDouble <= 2.5 * (counts.sum.toDouble / counts.length),
-        s"shard imbalance beyond 2.5x mean: ${counts.mkString(",")}")
-      summarized
-    } finally {
-      try {
-        java.nio.file.Files.walk(path)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: java.io.IOException => () }
     }
-  }
 
   val d126Oracle: String =
     s"""WITH a AS (
@@ -4901,10 +4894,10 @@ object CorpusOps {
     * (losslessness). At 100 TB this is the terminal step of any
     * pipeline whose consumer wants key-ordered data: the sort cost is
     * one range exchange + local sorts, paid once at write time. */
-  def d146RangeShards(spark: SparkSession, dir: String): DataFrame = {
-    import graft.io.Layouts
-    val path = java.nio.file.Files.createTempDirectory("graft-d146")
-    try {
+  def d146RangeShards(spark: SparkSession, dir: String): DataFrame =
+    Scratch.within("d146") { s =>
+      import graft.io.Layouts
+      val path = s.dir("shards")
       val d = Tables.loadSpread(spark, dir, "documents").select("doc_id", "text")
       Layouts.writeRangeShards(d, path.toString, GateShards, "doc_id")
       val shardDirs = Option(path.toFile.list()).getOrElse(Array.empty[String])
@@ -4912,46 +4905,40 @@ object CorpusOps {
       // a zero-row corpus writes no shard directories — nothing to pin
       if (shardDirs.isEmpty) {
         import org.apache.spark.sql.types._
-        return spark.createDataFrame(
+        spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(
             StructField("doc_id", LongType),
             StructField("h", LongType))))
+      } else {
+        require(shardDirs.size == GateShards,
+          s"expected $GateShards range shards, found ${shardDirs.size}")
+        val back = spark.read.parquet(path.toString)
+          .select(col("doc_id"), TextOps.hash60(col("text")).as("h"),
+            col("shard").cast("int").as("shard"))
+          .localCheckpoint() // read by the shard pins AND returned
+        val stats = back.groupBy("shard")
+          .agg(min("doc_id").as("mn"), max("doc_id").as("mx"),
+            count(lit(1)).as("n"))
+          .orderBy("shard").collect() // GateShards rows
+        val counts = stats.map(_.getAs[Long]("n"))
+        require(counts.forall(_ > 0L),
+          s"every range shard must be nonempty: ${counts.mkString(",")}")
+        require(counts.max.toDouble <= 2.5 * (counts.sum.toDouble / counts.length),
+          s"range-shard imbalance beyond 2.5x mean: ${counts.mkString(",")}")
+        // strict disjointness: shard i's max key below shard i+1's min —
+        // (shard, doc_id) order is then provably GLOBAL doc_id order
+        stats.toList.sliding(2).foreach {
+          case List(a, b) =>
+            require(a.getAs[Long]("mx") < b.getAs[Long]("mn"),
+              s"shard ranges overlap: ${a.getAs[Int]("shard")} " +
+                s"[..${a.getAs[Long]("mx")}] vs ${b.getAs[Int]("shard")} " +
+                s"[${b.getAs[Long]("mn")}..]")
+          case _ => ()
+        }
+        back.select("doc_id", "h").orderBy("doc_id")
       }
-      require(shardDirs.size == GateShards,
-        s"expected $GateShards range shards, found ${shardDirs.size}")
-      val back = spark.read.parquet(path.toString)
-        .select(col("doc_id"), TextOps.hash60(col("text")).as("h"),
-          col("shard").cast("int").as("shard"))
-        .localCheckpoint() // the temp layout can be deleted after this
-      val stats = back.groupBy("shard")
-        .agg(min("doc_id").as("mn"), max("doc_id").as("mx"),
-          count(lit(1)).as("n"))
-        .orderBy("shard").collect() // GateShards rows
-      val counts = stats.map(_.getAs[Long]("n"))
-      require(counts.forall(_ > 0L),
-        s"every range shard must be nonempty: ${counts.mkString(",")}")
-      require(counts.max.toDouble <= 2.5 * (counts.sum.toDouble / counts.length),
-        s"range-shard imbalance beyond 2.5x mean: ${counts.mkString(",")}")
-      // strict disjointness: shard i's max key below shard i+1's min —
-      // (shard, doc_id) order is then provably GLOBAL doc_id order
-      stats.toList.sliding(2).foreach {
-        case List(a, b) =>
-          require(a.getAs[Long]("mx") < b.getAs[Long]("mn"),
-            s"shard ranges overlap: ${a.getAs[Int]("shard")} " +
-              s"[..${a.getAs[Long]("mx")}] vs ${b.getAs[Int]("shard")} " +
-              s"[${b.getAs[Long]("mn")}..]")
-        case _ => ()
-      }
-      back.select("doc_id", "h").orderBy("doc_id")
-    } finally {
-      try {
-        java.nio.file.Files.walk(path)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: java.io.IOException => () }
     }
-  }
 
   /** Losslessness in global key order — the placement pins live in-op
     * (sampled range boundaries are legitimately run-dependent). */
@@ -5108,9 +5095,9 @@ object CorpusOps {
     * planning time, not data; at 100 TB the cost is file-listing, and
     * the practice it gates — additive columns only, never retyping —
     * is what keeps decade-old partitions readable. */
-  def d148SchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val path = java.nio.file.Files.createTempDirectory("graft-d148")
-    try {
+  def d148SchemaEvolution(spark: SparkSession, dir: String): DataFrame =
+    Scratch.within("d148") { s =>
+      val path = s.dir("gens")
       val o = Tables.load(spark, dir, "orders")
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -5129,15 +5116,7 @@ object CorpusOps {
         .agg(count(lit(1)).as("n"),
           round(sum("o_totalprice"), 2).as("total"))
         .orderBy("priority")
-        .localCheckpoint() // the staged generations can be deleted now
-    } finally {
-      try {
-        java.nio.file.Files.walk(path)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: java.io.IOException => () }
     }
-  }
 
   val d148Oracle: String =
     """SELECT coalesce(CASE WHEN o_orderkey % 2 = 1
@@ -5846,9 +5825,9 @@ object CorpusOps {
     * over literals away, and the pruning rule keys on a surviving
     * selective Filter on the dim side). Gate: the in-op require pins
     * the injected subquery; the oracle pins the answer. */
-  def d156DppScan(spark: SparkSession, dir: String): DataFrame = {
-    val path = java.nio.file.Files.createTempDirectory("graft-d156")
-    try {
+  def d156DppScan(spark: SparkSession, dir: String): DataFrame =
+    Scratch.within("d156") { s =>
+      val path = s.dir("layout")
       val src = Tables.load(spark, dir, "events")
         .select(col("event_id"), col("event_type"), col("value"))
       val layout = path.resolve("events_p").toString
@@ -5861,7 +5840,6 @@ object CorpusOps {
         .groupBy("event_type", "min_value")
         .agg(count(lit(1)).as("n_events"),
           round(sum("value"), 2).as("total_value"))
-      val out = joined.localCheckpoint()
       // a zero-row source writes no partition directories, so there is
       // no partition schema to prune — the pin applies iff the layout
       // exists (the d95 discipline)
@@ -5872,17 +5850,10 @@ object CorpusOps {
         require(plan.toLowerCase.contains("dynamicpruning"),
           s"the dim join must prune fact partitions at runtime:\n$plan")
       }
-      out.select(col("event_type"), col("n_events"), col("total_value"),
+      joined.select(col("event_type"), col("n_events"), col("total_value"),
           col("min_value"))
         .orderBy("event_type")
-    } finally {
-      try {
-        java.nio.file.Files.walk(path)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: java.io.IOException => () }
     }
-  }
 
   val d156Oracle: String = {
     val keep = DppKeepTypes.map(t => s"'$t'").mkString(", ")
@@ -8547,9 +8518,9 @@ object CorpusOps {
     * days-sized artifact rows. The exact leg is the one full shuffle
     * — exactly the cost the pattern amortizes away, kept here only as
     * the oracle-visible truth. */
-  def d232HllRollup(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-d232")
-    try {
+  def d232HllRollup(spark: SparkSession, dir: String): DataFrame =
+    Scratch.within("d232") { s =>
+      val root = s.dir("sketches")
       val ev = Tables.load(spark, dir, "events")
         .select(to_date(col("ts")).as("day"),
           trunc(to_date(col("ts")), "month").as("month"), col("user_id"))
@@ -8584,14 +8555,7 @@ object CorpusOps {
           (abs(col("est_union") - col("est_direct")) <=
             col("n_exact") * 2 * HllTol).as("merge_ok"))
         .orderBy("month")
-    } finally {
-      try {
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: java.io.IOException => () }
     }
-  }
 
   val d232Oracle: String =
     """SELECT CAST(date_trunc('month', ts) AS DATE) AS month,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Gate, Tables}
+import graft.{Gate, Scratch, Tables}
 
 /** Near-duplicate detection over `documents` — the fuzzy half of the
   * dedup surface (BASELINE.json north-star; SURVEY.md §7.1 step 5).
@@ -1397,8 +1397,7 @@ object FuzzyDedup {
       NightlySplit1, NightlySplit2)
 
   private[graft] def indexNightly(spark: SparkSession, d: DataFrame,
-      split1: Long, split2: Long): DataFrame = {
-    import java.nio.file.Files
+      split1: Long, split2: Long): DataFrame = Scratch.within("d221") { s =>
     val corpusSh = shingleHashes(
         representatives(d.filter(col("doc_id") < split1)))
       .localCheckpoint() // feeds night-0 banding and night-1/2 verify
@@ -1440,20 +1439,14 @@ object FuzzyDedup {
           col("corpus_id").as("near_dup_of"), col("jaccard"),
           when(col("corpus_id").isNotNull, "near_dup").otherwise("novel")
             .as("verdict"))
-    /** Persist an index and load it back FROM ITS BYTES; the loaded
-      * frame is checkpointed so the parquet files can be deleted while
-      * downstream still consumes the data (bench runs this gate
-      * repeatedly — artifacts must not accumulate). */
+    /** Persist an index in the gate's scope and load it back FROM ITS
+      * BYTES. Night 0's loaded index is both probed and merged into
+      * night 1's, so it is checkpointed; night 1's takes the same cut,
+      * which keeps the result off the scope's files. */
     def persistAndLoad(idx: DataFrame, night: String): DataFrame = {
-      val dir = Files.createTempDirectory(s"graft-d221-$night")
-      val path = dir.resolve("index.parquet").toString
+      val path = s.dir(night).resolve("index.parquet").toString
       idx.write.mode("overwrite").parquet(path)
-      val loaded = spark.read.parquet(path).localCheckpoint()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(); ()
-      }
-      rm(dir.toFile)
-      loaded
+      spark.read.parquet(path).localCheckpoint()
     }
 
     // night 0: build + persist the corpus index

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Gate, Tables}
+import graft.{Gate, Scratch, Tables}
 
 /** Similarity search over the `embeddings` table
   * (vec_id, embedding: Array[Float] (64-dim), label).
@@ -2365,9 +2365,9 @@ object Similarity {
     * ALL arrivals encoded against the frozen codebooks (no novelty
     * filter — d226 owns probe-before-add; compaction must preserve
     * whatever the store holds). */
-  def d231IndexCompact(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft-d231")
-    try {
+  def d231IndexCompact(spark: SparkSession, dir: String): DataFrame =
+    Scratch.within("d231") { s =>
+      val root = s.dir("store")
       val e = emb(spark, dir)
         .localCheckpoint() // feeds training, three encodes, and the panel
       val corpus = e.filter(col("vec_id") < IngestSplit1)
@@ -2437,14 +2437,7 @@ object Similarity {
           before.exceptAll(audit).isEmpty,
         "compaction changed serving results on the audit panel")
       audit.orderBy("vec_id")
-    } finally {
-      try {
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: java.io.IOException => () }
     }
-  }
 
   /** The compacted store's panel audit in DuckDB: the full store (base
     * corpus + both arrival batches, all encoded against the

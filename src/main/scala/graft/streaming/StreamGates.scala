@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-import graft.{EventTime, Gate, Tables}
+import graft.{EventTime, Gate, Scratch, Tables}
 
 /** Driver-gated STREAMING queries — until round 9 every streaming
   * operator was sbt-tested only (batch-equality in `StreamingSpec`);
@@ -20,19 +20,22 @@ import graft.{EventTime, Gate, Tables}
   * deployment replaces the two ends — Kafka/files in, parquet out — and
   * keeps the middle; the middle is what the oracle checks. Every gate
   * runs on the same harness:
-  *  - [[withScratch]] gives the run one temp directory under
+  *  - [[graft.Scratch.within]] gives the run one temp directory under
   *    `java.io.tmpdir`. Staged sources (symlinks over the read-only
   *    testdata, or planted part-files), checkpoints and sink output all
   *    live inside it, and it is deleted in `finally`, so a failing pin
-  *    or stream error leaks nothing.
-  *  - [[Scratch.drain]] runs a plan to completion with
-  *    `Trigger.AvailableNow` into a memory sink and hands back its rows.
-  *    It owns the sink name, the checkpoint, the state-partition pin,
-  *    the RocksDB fingerprint and the post-drain checks, and drops the
-  *    sink's view before it returns. The memory
-  *    sink bounds a gate to gate scale by construction (driver-resident
-  *    result); gates that must resume or exercise a sink (file sink,
-  *    `foreachBatch`) drive their own writer inside the same scope.
+  *    or stream error leaks nothing. A gate that returns a read of its
+  *    file sink is cut off the directory there.
+  *  - [[StreamScratch]] adds the stream-only helpers to that scope.
+  *    `stage` and `plant` fill a file-stream source. `drain` runs a
+  *    plan to completion with `Trigger.AvailableNow` into a memory sink
+  *    and hands back its rows, which read nothing in the scope. It owns
+  *    the sink name, the checkpoint, the state-partition pin, the
+  *    RocksDB fingerprint and the post-drain checks, and drops the
+  *    sink's view before it returns. The memory sink bounds a gate to
+  *    gate scale by construction (driver-resident result); gates that
+  *    must resume or exercise a sink (file sink, `foreachBatch`) drive
+  *    their own writer inside the same scope.
   *  - [[graft.EventTime]] decides the two raw `events.ts` encodings; the
   *    sentinels that flush watermarks are built once, by [[sentinelRows]].
   */
@@ -62,27 +65,14 @@ object StreamGates {
     * events/sec x state bytes per key. */
   private[streaming] val StatePartitions = "4"
 
-  /** Run `body` in a fresh `graft-<gate>*` directory under
-    * `java.io.tmpdir`, deleted in `finally` however the run ends. What
-    * `body` returns must not read the directory lazily: memory-sink rows
-    * are driver-resident, and file-sink reads are `localCheckpoint`ed. */
-  private def withScratch[T](gate: String)(body: Scratch => T): T = {
-    val root = Files.createTempDirectory(s"graft-$gate")
-    try body(new Scratch(root))
-    finally deltree(root)
-  }
-
-  /** One gate run's temp space (see [[withScratch]]). */
-  private final class Scratch(root: Path) {
-    private val modBase = System.currentTimeMillis()
-
-    /** A fresh empty directory inside the scope. */
-    def dir(role: String): Path = Files.createTempDirectory(root, role)
+  /** The stream-only helpers on a gate's [[graft.Scratch]]. */
+  private implicit final class StreamScratch(private val scope: Scratch)
+      extends AnyVal {
 
     /** `<sfDir>/<table>.parquet` linked into a fresh directory for a
       * file-stream source — read-only over the source testdata. */
     def stage(sfDir: String, table: String): Path = {
-      val staged = dir("src")
+      val staged = scope.dir("src")
       Files.createSymbolicLink(staged.resolve(s"$table.parquet"),
         Paths.get(s"$sfDir/$table.parquet").toAbsolutePath)
       staged
@@ -95,18 +85,15 @@ object StreamGates {
       * oldest-first, so `order` is the file's micro-batch order.
       * Thread-safe, so independent slices can be written together. */
     def plant(df: DataFrame, into: Path, name: String, order: Int): Unit = {
-      val tmp = dir("w")
-      try {
-        val outDir = tmp.resolve("out")
-        df.coalesce(1).write.mode("overwrite").parquet(outDir.toString)
-        // File.list (not Files.list) — no stream handle to leak
-        val part = Option(outDir.toFile.list())
-          .getOrElse(Array.empty[String]).find(_.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(
-            s"no part-file written under $outDir"))
-        Files.move(outDir.resolve(part), into.resolve(name))
-        into.resolve(name).toFile.setLastModified(modBase + order * 1000L)
-      } finally deltree(tmp)
+      val outDir = scope.dir("w").resolve("out")
+      df.coalesce(1).write.mode("overwrite").parquet(outDir.toString)
+      // File.list (not Files.list) — no stream handle to leak
+      val part = Option(outDir.toFile.list())
+        .getOrElse(Array.empty[String]).find(_.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException(
+          s"no part-file written under $outDir"))
+      Files.move(outDir.resolve(part), into.resolve(name))
+      into.resolve(name).toFile.setLastModified(scope.opened + order * 1000L)
     }
 
     /** Run a streaming `plan` to completion into a memory sink and
@@ -127,7 +114,7 @@ object StreamGates {
       val name = s"graft_drain_run${runSeq.incrementAndGet()}"
       val writer = plan.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.getOrElse(dir("ckpt")).toString)
+        .option("checkpointLocation", ckpt.getOrElse(scope.dir("ckpt")).toString)
       try {
         val query =
           if (stateful) startStateful(spark, writer) else writer.start()
@@ -164,7 +151,7 @@ object StreamGates {
     * oracle sharing d17's shingle CTEs, so "contaminated" provably
     * means the same thing on the batch and streaming paths. */
   def d50StreamDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d50") { s =>
+    Scratch.within("d50") { s =>
       val docs = Tables.load(spark, dir, "documents")
       val bench = docs.filter(col("doc_id") < 5).select("doc_id", "text")
       val stream = spark.readStream.schema(docs.schema)
@@ -207,7 +194,7 @@ object StreamGates {
     * function, so the counts equal the batch window formulation
     * exactly — which is precisely the claim the gate hash-checks. */
   def d64StreamSessions(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d64") { s =>
+    Scratch.within("d64") { s =>
       // readEvents declares the µs-long ts and normalizes to a real
       // TimestampType at ingest — the same scan contract as the batch side
       val stream = EventStreams.readEvents(spark, s.stage(dir, "events").toString)
@@ -231,7 +218,7 @@ object StreamGates {
     * scale will eventually make, pre-verified. The provider pin rides
     * the same in-op discipline as d195-d197. */
   def d204TwsSessions(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark)(withScratch("d204") { s =>
+    withRocksDb(spark)(Scratch.within("d204") { s =>
       val stream = EventStreams.readEvents(spark, s.stage(dir, "events").toString)
       s.drain(EventStreams.sessionCountsTws(stream), "update")()
         .select(col("user_id"), col("n_sessions"), col("n_events"))
@@ -261,7 +248,7 @@ object StreamGates {
     * (its close time sits past the final watermark by construction)
     * and is excluded by key. */
   def d211TwsTimers(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark)(withScratch("d211") { s =>
+    withRocksDb(spark)(Scratch.within("d211") { s =>
       val stream = EventStreams.readEvents(spark,
         stageWithSentinels(spark, dir, s, Seq("flush")).toString)
       s.drain(EventStreams.closedSessionsTws(stream)
@@ -314,7 +301,7 @@ object StreamGates {
     * TBs of RocksDB state costs one parquet-shaped scan, not a
     * re-run of the pipeline. */
   def d225StateReader(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d225") { s =>
+    Scratch.within("d225") { s =>
       val docs = Tables.load(spark, dir, "documents")
       val ckpt = s.dir("ckpt")
       val stream = spark.readStream.schema(docs.schema)
@@ -387,7 +374,7 @@ object StreamGates {
     * cutover; thereafter state is one record per active user, exactly
     * d204's. */
   def d222TwsBootstrap(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark)(withScratch("d222") { s =>
+    withRocksDb(spark)(Scratch.within("d222") { s =>
       import spark.implicits._
       // split the RAW log (original physical ts form) so the staged
       // half round-trips byte-faithfully through the file-stream source
@@ -469,7 +456,7 @@ object StreamGates {
     * sentinel user alone), never the user population — i.e. map
     * entries really do leave state at their close, not at stream end. */
   def d220TwsMapBursts(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark)(withScratch("d220") { s =>
+    withRocksDb(spark)(Scratch.within("d220") { s =>
       val stream = EventStreams.readEvents(spark,
         stageWithSentinels(spark, dir, s, Seq("flush")).toString)
       val bursts = s.drain(
@@ -536,7 +523,7 @@ object StreamGates {
     * dedup path (d50 covers stateless broadcast maps, d64 covers
     * `mapGroupsWithState`). */
   def d76StreamDedup(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d76") { s =>
+    Scratch.within("d76") { s =>
       val docs = Tables.load(spark, dir, "documents")
       val stream = spark.readStream.schema(docs.schema)
         .parquet(s.stage(dir, "documents").toString)
@@ -579,7 +566,7 @@ object StreamGates {
     * wrong for an unbounded stream — the mode choice, not the plan, is
     * what differs. */
   def d104StreamHourly(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d104") { s =>
+    Scratch.within("d104") { s =>
       val stream = EventStreams.readEvents(spark, s.stage(dir, "events").toString)
       s.drain(EventStreams.hourlyCounts(stream), "complete")()
         .orderBy("hour", "event_type")
@@ -604,7 +591,7 @@ object StreamGates {
     * interval self-join in DuckDB. Emits (purchase, view, gap-µs)
     * pairs; the gap arithmetic is integer microseconds end to end. */
   def d107StreamJoin(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d107") { s =>
+    Scratch.within("d107") { s =>
       val staged = s.stage(dir, "events")
       val views = EventStreams.readEvents(spark, staged.toString)
         .filter(col("event_type") === "view")
@@ -695,7 +682,7 @@ object StreamGates {
       d127Body(spark, dir, changelog = true)))
 
   private def d127Body(spark: SparkSession, dir: String,
-      changelog: Boolean = false): DataFrame = withScratch("d127") { s =>
+      changelog: Boolean = false): DataFrame = Scratch.within("d127") { s =>
     val staged = s.dir("src")
     val ckpt = s.dir("ckpt")
     // split the raw file (read WITHOUT timestamp normalization, so the
@@ -754,7 +741,7 @@ object StreamGates {
     * input rate caps the state store; this gate is the contract for
     * what that cap costs in data. */
   def d145StreamLateDrops(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d145") { s =>
+    Scratch.within("d145") { s =>
       val staged = s.dir("src")
       val ckpt = s.dir("ckpt")
       // the raw encoding (no ts normalization), exactly as d127 — the
@@ -807,7 +794,6 @@ object StreamGates {
           StructField("n", LongType), StructField("total_value", DoubleType))))
         .parquet(out.toString)
         .orderBy("hour", "event_type")
-        .localCheckpoint() // the temp sink dir is deleted after this
     }
 
   /** Batch replay of the watermark semantics: on-time rows always
@@ -846,7 +832,7 @@ object StreamGates {
     * enrichment as one batch join — stream-vs-batch equality is the
     * gate. */
   def d159StreamStatic(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d159") { s =>
+    Scratch.within("d159") { s =>
       val dim = Tables.load(spark, dir, "events")
         .filter(col("event_type") === "purchase")
         .groupBy("user_id")
@@ -898,7 +884,7 @@ object StreamGates {
     * aggregate over delta files — the compaction a production layout
     * runs periodically. */
   def d170StreamUpsert(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d170") { s =>
+    Scratch.within("d170") { s =>
       val staged = s.dir("src")
       val ckpt = s.dir("ckpt")
       val out = s.dir("out")
@@ -1031,7 +1017,7 @@ object StreamGates {
     withRocksDb(spark)(d179Body(spark, dir))
 
   private def d179Body(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d179") { s =>
+    Scratch.within("d179") { s =>
       val staged = stageWithSentinels(spark, dir, s, Seq("view", "purchase"))
       val views = EventStreams.readEvents(spark, staged.toString)
         .filter(col("event_type") === "view")
@@ -1097,7 +1083,7 @@ object StreamGates {
     * (narrow), the agg shuffles on (window, type), state bounded by
     * the min-watermark horizon. */
   def d218UnionWatermarks(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d218") { s =>
+    Scratch.within("d218") { s =>
       val raw = spark.read.parquet(s"$dir/events.parquet")
       // one source per topic, each with its own sentinel bump
       def source(topic: org.apache.spark.sql.Column, bumpUs: Long) = {
@@ -1152,7 +1138,7 @@ object StreamGates {
     * row), so the shape is strictly cheaper downstream than the inner
     * join at any fan-out. */
   def d212StreamSemiJoin(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d212") { s =>
+    Scratch.within("d212") { s =>
       val staged = stageWithSentinels(spark, dir, s, Seq("view", "purchase"))
       val views = EventStreams.readEvents(spark, staged.toString)
         .filter(col("event_type") === "view")
@@ -1207,7 +1193,7 @@ object StreamGates {
     * one row per open (window, type), bounded by watermark horizon ×
     * 4-fold overlap. */
   def d205SlidingWindows(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d205") { s =>
+    Scratch.within("d205") { s =>
       val staged = stageWithSentinels(spark, dir, s, Seq("zz_flush"))
       s.drain(EventStreams.readEvents(spark, staged.toString)
         .withWatermark("ts", "1 hour")
@@ -1261,7 +1247,7 @@ object StreamGates {
     *-session risk d92 handles in batch is exactly what the gap bound
     * prevents live. */
   def d180SessionWindows(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d180") { s =>
+    Scratch.within("d180") { s =>
       val staged = stageWithSentinels(spark, dir, s, Seq("view"))
       val stream = EventStreams.readEvents(spark, staged.toString)
         .withWatermark("ts", "1 hour")
@@ -1350,7 +1336,7 @@ object StreamGates {
       d187Body(spark, dir, changelog = true)))
 
   private def d187Body(spark: SparkSession, dir: String,
-      changelog: Boolean = false): DataFrame = withScratch("d187") { s =>
+      changelog: Boolean = false): DataFrame = Scratch.within("d187") { s =>
     val staged = s.dir("src")
     val ckpt = s.dir("ckpt")
     val out = s.dir("out")
@@ -1401,7 +1387,6 @@ object StreamGates {
       .parquet(out.toString)
       .filter(col("user_id") >= 0)
       .orderBy("user_id", "emit_us")
-      .localCheckpoint() // the temp sink dir is deleted after this
   }
 
   /** Exactly-once per horizon, at-least-once across horizons: each
@@ -1439,7 +1424,7 @@ object StreamGates {
     * stream's length; the 10-slice drain walks 30 days of event time
     * through that bounded window exactly as a live cluster would. */
   def d209LiveCadence(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d209") { s =>
+    Scratch.within("d209") { s =>
       val staged = s.dir("src")
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val tnum = EventTime.micros(raw.schema)
@@ -1611,18 +1596,6 @@ object StreamGates {
     }
   }
 
-  /** Best-effort recursive delete (checkpoint trees are directories of
-    * directories; a failed delete must not fail the gate). */
-  private def deltree(root: Path): Unit =
-    try {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    } catch {
-      case _: java.io.IOException | _: java.io.UncheckedIOException => ()
-    }
-
   // -------------------------------------------------------------- d228
   /** The Avro state-encoding conf — schema evolution on
     * `transformWithState` is Avro-rule-based and works ONLY under this
@@ -1660,7 +1633,7 @@ object StreamGates {
 
   private[graft] def stateEvolution(spark: SparkSession, dir: String,
       encoding: String): DataFrame = withRocksDb(spark) {
-    withConf(spark, StateEncodingKey, encoding)(withScratch("d228") { s =>
+    withConf(spark, StateEncodingKey, encoding)(Scratch.within("d228") { s =>
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val usCol = EventTime.micros(raw.schema)
       midpointUs(raw) match {
@@ -1711,7 +1684,6 @@ object StreamGates {
             .agg(max("n_sessions").as("n_sessions"),
               max("n_events").as("n_events"),
               max("n_upgrade_events").as("n_upgrade_events"))
-            .orderBy("user_id").localCheckpoint()
             .orderBy("user_id")
       }
     })
@@ -1771,7 +1743,7 @@ object StreamGates {
     twsTtlDedup(spark, dir, ttlMs = 1L)
 
   private[graft] def twsTtlDedup(spark: SparkSession, dir: String,
-      ttlMs: Long): DataFrame = withRocksDb(spark)(withScratch("d227") { s =>
+      ttlMs: Long): DataFrame = withRocksDb(spark)(Scratch.within("d227") { s =>
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val staged = s.dir("src")
@@ -1844,7 +1816,6 @@ object StreamGates {
         "the probe — expired state must leave the store and forget " +
         "the key")
     spark.read.parquet(expectDirs.map(d => s"$out/$d"): _*)
-      .orderBy("batch", "text_hash").localCheckpoint()
       .orderBy("batch", "text_hash")
   })
 
@@ -1916,7 +1887,7 @@ object StreamGates {
 
   private[graft] def streamAnnIngest(spark: SparkSession, dir: String,
       split1: Long, split2: Long, threshE4: Long): DataFrame =
-    withScratch("d226") { s =>
+    Scratch.within("d226") { s =>
       import graft.ops.Similarity
       val art = s.dir("art")
       val idxRoot = s.dir("idx")
@@ -2005,7 +1976,6 @@ object StreamGates {
         s"batch 1 probed a STALE index: read ${idxRead.get(1L)} rows, " +
           s"expected base $baseRows + batch-0 append ${codesAdded.get(0L)}")
       spark.read.parquet(s"$verdRoot/b0", s"$verdRoot/b1")
-        .orderBy("vec_id").localCheckpoint()
         .orderBy("vec_id")
     }
 
@@ -2040,7 +2010,7 @@ object StreamGates {
     * watermark), and the batchId-keyed overwrite sink keeps retries
     * idempotent (d170's discipline). */
   def d233DimRefresh(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d233") { s =>
+    Scratch.within("d233") { s =>
       val dimRoot = s.dir("dim")
       val outRoot = s.dir("out")
       val ckpt = s.dir("ckpt")
@@ -2152,7 +2122,7 @@ object StreamGates {
     * the driver); the verification re-aggregation here is gate
     * machinery, not part of the pattern's production cost. */
   def d234StreamObserve(spark: SparkSession, dir: String): DataFrame =
-    withScratch("d234") { s =>
+    Scratch.within("d234") { s =>
       val outRoot = s.dir("out")
       val ckpt = s.dir("ckpt")
       val raw = spark.read.parquet(s"$dir/events.parquet")

@@ -17,8 +17,11 @@ object FieldCounting {
     s.flatMap(c =>
       if ("\\^$.|?*+()[]{}".contains(c)) s"\\$c" else c.toString)
 
+  /** `c` as a literal inside a `[...]` class: besides `\`, `^` and `]`,
+    * `[` would open a nested class, `-` a range and `&&` an
+    * intersection. */
   private[validate] def charClassEscape(c: Char): String =
-    if (c == '\\' || c == '^' || c == ']') s"\\$c" else c.toString
+    if ("\\^[]-&".contains(c)) s"\\$c" else c.toString
 
   /** Quote-aware field-matching regex: same shape as the reference's
     * pattern (`big_data_validator.py:221`, itself from a public

@@ -23,6 +23,8 @@ class EmptyCorpusSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("every gated query runs on a zero-row corpus without throwing") {
+    // and none may leave its temp dir behind
+    val before = SparkSpec.tmpEntries("graft-d")
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         try { fn(spark, emptyDir).collect(); None }
@@ -33,5 +35,7 @@ class EmptyCorpusSpec extends AnyFunSuite with SparkSpec {
     assert(failures.isEmpty,
       s"${failures.size} queries throw on an empty corpus:\n" +
         failures.mkString("\n"))
+    val left = SparkSpec.tmpEntries("graft-d") -- before
+    assert(left.isEmpty, s"gates left temp dirs: ${left.toSeq.sorted}")
   }
 }

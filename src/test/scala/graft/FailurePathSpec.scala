@@ -90,11 +90,7 @@ class ParquetMetaSpec extends AnyFunSuite with SparkSpec {
   * or fails mid-drain. */
 class StreamHarnessSpec extends SparkSpec {
 
-  /** The entries of `java.io.tmpdir` named `prefix*`. */
-  private def tmpEntries(prefix: String): Set[String] =
-    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
-      .getOrElse(Array.empty[String])
-      .filter(_.startsWith(prefix)).toSet
+  import SparkSpec.tmpEntries
 
   private def sinkViews(): Seq[String] =
     spark.catalog.listTables().collect().toSeq.map(_.name)
@@ -141,5 +137,15 @@ class StreamHarnessSpec extends SparkSpec {
       "the failed gate left a checkpoint outside its scope")
     assert(sinkViews().isEmpty, "the failed gate left its sink's view")
     assert(spark.streams.active.isEmpty, "the failed gate left a query running")
+  }
+
+  test("a batch gate failing mid-body leaves no temp dir") {
+    val dir = SparkSpec.tempDir("graft-harness-bad-batch")
+    Files.writeString(dir.resolve("orders.parquet"), "not a parquet file")
+    val before = tmpEntries("graft-d148")
+    intercept[Exception](
+      graft.ops.CorpusOps.d148SchemaEvolution(spark, dir.toString).collect())
+    assert(tmpEntries("graft-d148") == before,
+      "the failed gate left a temp directory")
   }
 }

@@ -248,6 +248,29 @@ class MainEndToEndSpec extends SparkSpec {
         runOn("meta", s"ID${sep}AMOUNT\n1${sep}2\n2${sep}3\n", sep = sep)
       assert(code == 0 && verdicts(printed) == cleanVerdicts, s"sep <$sep>: $printed")
     }
+    // metacharacters of the quote-aware count's character class: `[`
+    // opens a nested class, `-` a range and `&&` an intersection
+    val q = "\""
+    Seq("[", "-", "&&", "[]").foreach { sep =>
+      val (code, printed) =
+        runOn("cls", s"ID${sep}AMOUNT\n1${sep}2\n2${sep}3\n", sep = sep)
+      assert(code == 0 && verdicts(printed) == cleanVerdicts, s"sep <$sep>: $printed")
+      val (dirty, dirtyPrinted) =
+        runOn("clsd", s"ID${sep}AMOUNT\n1${sep}2\n2${sep}3${sep}4\n", sep = sep)
+      assert(dirty == 1 && verdicts(dirtyPrinted)(1) == "field_count FAIL failed=1",
+        s"sep <$sep>: $dirtyPrinted")
+      val (quoted, qPrinted) = runOn("clsq",
+        s"ID${sep}AMOUNT\n${q}1$q$sep${q}2$q\n2${sep}3\n", sep = sep, quote = q)
+      assert(quoted == 0 && verdicts(qPrinted) ==
+        cleanVerdicts.updated(1, "field_count_quoted PASS failed=0"),
+        s"sep <$sep>: $qPrinted")
+      val (qDirty, qdPrinted) = runOn("clsqd",
+        s"ID${sep}AMOUNT\n${q}1$q$sep${q}2$q\n2${sep}3${sep}4\n", sep = sep,
+        quote = q)
+      assert(qDirty == 1 &&
+        verdicts(qdPrinted)(1) == "field_count_quoted FAIL failed=1",
+        s"sep <$sep>: $qdPrinted")
+    }
   }
 
   test("hostile input: a backslash separator is literal to the CSV reader") {

@@ -2663,6 +2663,20 @@ class NewOpsSpec extends SparkSpec {
     rows.toDF("event_id", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
 
+    // the gate executes its plan inside its temp scope and returns rows
+    // that no longer read the layout, so the executed plans come from
+    // the session's listener
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     val df = CorpusOps.d230DppPrune(spark, dir)
     val got = df.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -2680,10 +2694,17 @@ class NewOpsSpec extends SparkSpec {
         s +: walk(s.plan)
       case q => q +: (q.children.flatMap(walk) ++ q.subqueries.flatMap(walk))
     }
-    val factScans = walk(df.queryExecution.executedPlan).collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.relation.partitionSchema.nonEmpty => f
+    def factScans = {
+      import scala.jdk.CollectionConverters._
+      executed.asScala.toSeq.flatMap(walk).collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.relation.partitionSchema.nonEmpty => f
+      }
     }
+    // listener events arrive asynchronously
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (factScans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    spark.listenerManager.unregister(listener)
     assert(factScans.nonEmpty, "expected a partitioned fact scan")
     factScans.foreach { f =>
       val nFiles = f.metrics("numFiles").value

@@ -256,11 +256,15 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     // 1-row scalar broadcasts plan as BroadcastNestedLoopJoin and are
     // deliberate; an unkeyed CartesianProduct is never acceptable in
     // this surface — catch regressions across the whole registry
+    // the same pass over every gate checks that none leaves a temp dir
+    val before = SparkSpec.tmpEntries("graft-d")
     for ((name, q) <- SparkEntry.queries) {
       val bad = collectPlans(q(spark, dir).queryExecution.executedPlan)
         .filter(_.isInstanceOf[CartesianProductExec])
       assert(bad.isEmpty, s"$name plans a CartesianProduct")
     }
+    val left = SparkSpec.tmpEntries("graft-d") -- before
+    assert(left.isEmpty, s"gates left temp dirs: ${left.toSeq.sorted}")
   }
 
   test("no registered query windows over an empty partition spec") {

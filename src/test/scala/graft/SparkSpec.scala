@@ -25,6 +25,14 @@ object SparkSpec {
     * dir is made here, so a test run leaves nothing in `java.io.tmpdir`. */
   def tempDir(prefix: String): Path = Files.createTempDirectory(scratch, prefix)
 
+  /** The entries of `java.io.tmpdir` named `prefix*`: diffed before and
+    * after a run, they show what the run left behind, whatever was
+    * there already. */
+  def tmpEntries(prefix: String): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .getOrElse(Array.empty[String])
+      .filter(_.startsWith(prefix)).toSet
+
   lazy val spark: SparkSession = Session.create("graft-test",
     // keep catalog tables (bucketing tests) out of the repo tree
     "spark.sql.warehouse.dir" -> tempDir("graft-warehouse").toString)
