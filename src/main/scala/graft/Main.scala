@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.io.{SourceFormat, Sources}
+import graft.io.SourceFormat
 import graft.meta.MetadataCompiler
-import graft.validate.{TableValidator, TypedChecks}
+import graft.validate.TableValidator
 
 /** CLI entry point — same run contract as the reference
   * (`spark-submit ... big_data_validator.py <TABLE_NAME>` with the
@@ -19,9 +19,11 @@ import graft.validate.{TableValidator, TypedChecks}
   * `<T>_TMP_TYPED/`, both snappy parquet). Beyond the reference, the
   * run also ENFORCES the metadata-declared types (the reference only
   * declared them) — per-column `typed:*` lines in the report — and
-  * accepts Parquet/JSON inputs (the reference's file-type-enum TODO):
-  * for the self-describing formats the header/field-count checks are
-  * the format's own guarantees, so the run is typed enforcement only.
+  * accepts Parquet/JSON inputs (the reference's file-type-enum TODO),
+  * validated by the same [[TableValidator]]: a Parquet file's schema is
+  * its header, so a missing declared column fails `column_names`; a JSON
+  * read has no header, and its unparseable lines fail `corrupt_records`
+  * and land in `<T>_TMP/`. Neither has raw lines to count fields in.
   */
 object Main {
 
@@ -37,31 +39,9 @@ object Main {
     val meta = MetadataCompiler.fromJson(
       java.nio.file.Files.readString(java.nio.file.Paths.get(jsonPath)))
 
-    val ext = format match {
-      case SourceFormat.Csv => "csv"
-      case SourceFormat.Parquet => "parquet"
-      case SourceFormat.Json => "json"
-    }
-    val tablePath = s"$baseDir/inputs/$table.$ext"
-    val badRowPath = s"$baseDir/inputs/VALIDATION/${table}_TMP/"
-
-    val results = format match {
-      case SourceFormat.Csv =>
-        new TableValidator(spark, meta, tablePath, badRowPath)
-          .performValidation()
-      case _ =>
-        // self-describing / non-delimited source: typed enforcement only
-        val df = Sources.table(spark, meta, meta.typeMapping.map(_.name),
-          tablePath, TableValidator.CorruptCol, format)
-        val summary = TypedChecks.summarize(TypedChecks.lexical(df, meta), meta)
-        if (summary.exists(!_.passed))
-          Sources.writeBadRows(
-            TypedChecks.badRows(TypedChecks.lexical(df, meta), meta),
-            badRowPath.stripSuffix("/") + "_TYPED/")
-        summary.map(r => graft.validate.CheckResult(
-          s"typed:${r.column}:${r.check}", r.passed, r.errorCount,
-          s"${r.sourceType}${if (r.passed) " ok" else " violations"}"))
-    }
+    val results = new TableValidator(spark, meta,
+      s"$baseDir/inputs/$table.${format.ext}",
+      s"$baseDir/inputs/VALIDATION/${table}_TMP/", format).performValidation()
     results.foreach(r =>
       println(f"${r.check}%-28s ${if (r.passed) "PASS" else "FAIL"}%-5s " +
         s"failed=${r.failedCount} ${r.detail}"))

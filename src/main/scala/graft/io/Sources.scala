@@ -6,20 +6,19 @@ import graft.meta.TableMetadata
 
 /** Table source formats — the reference's own TODO
   * ("Enumerator - file types: CSV, Parquet or JSON",
-  * `big_data_validator.py:134`), completed here. */
-sealed trait SourceFormat
+  * `big_data_validator.py:134`), completed here. `ext` is the input
+  * file's extension and the format's CLI name. */
+sealed abstract class SourceFormat(val ext: String)
 object SourceFormat {
-  case object Csv extends SourceFormat
-  case object Parquet extends SourceFormat
-  case object Json extends SourceFormat
+  case object Csv extends SourceFormat("csv")
+  case object Parquet extends SourceFormat("parquet")
+  case object Json extends SourceFormat("json")
 
-  def parse(s: String): SourceFormat = s.trim.toLowerCase match {
-    case "csv"     => Csv
-    case "parquet" => Parquet
-    case "json"    => Json
-    case other =>
+  def parse(s: String): SourceFormat = {
+    val name = s.trim.toLowerCase
+    Seq(Csv, Parquet, Json).find(_.ext == name).getOrElse(
       throw new IllegalArgumentException(
-        s"unknown source format '$other' (expected csv|parquet|json)")
+        s"unknown source format '$name' (expected csv|parquet|json)"))
   }
 }
 
@@ -74,10 +73,10 @@ object Sources {
       .csv(path)
   }
 
-  /** Format-dispatching table read for the typed-validation path.
-    *  - CSV: the full PERMISSIVE reader above (header/quote/corrupt-col);
-    *  - Parquet: self-describing schema — header and field-count checks
-    *    are moot (the format enforces both), typed checks still apply;
+  /** Format-dispatching table read — the one reader behind
+    * [[graft.validate.TableValidator]]:
+    *  - CSV: the full PERMISSIVE reader above, schema'd by the header;
+    *  - Parquet: the file's own schema (`actualColumns` is not read);
     *  - JSON: schema'd PERMISSIVE read with corrupt-record capture, the
     *    JSON analogue of the CSV path (all-string fields from metadata
     *    columns so typed checks see the raw lexical values).
@@ -85,7 +84,7 @@ object Sources {
   def table(
       spark: SparkSession,
       meta: TableMetadata,
-      actualColumns: Seq[String],
+      actualColumns: => Seq[String],
       path: String,
       corruptCol: String,
       format: SourceFormat): DataFrame = format match {

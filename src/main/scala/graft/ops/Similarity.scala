@@ -2384,9 +2384,8 @@ object Similarity {
             cents, books)
           .write.mode("overwrite").parquet(s"$root/idx/b1")))
       def dataFiles(sub: String): Long =
-        java.nio.file.Files.walk(root.resolve(sub))
-          .filter(p => p.getFileName.toString.startsWith("part-"))
-          .count()
+        scala.util.Using.resource(java.nio.file.Files.walk(root.resolve(sub)))(
+          _.filter(p => p.getFileName.toString.startsWith("part-")).count())
       val parts = spark.read.parquet(
           Seq("base", "b0", "b1").map(n => s"$root/idx/$n"): _*)
         .localCheckpoint()

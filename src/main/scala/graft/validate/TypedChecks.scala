@@ -88,11 +88,7 @@ object TypedChecks {
     }
 
   /** One-pass per-column error summary: a single group-less aggregate of
-    * [[errorSums]]. */
-  def summarize(df: DataFrame, meta: TableMetadata): Seq[ColumnCheckResult] =
-    summarizeWith(df, meta)._1
-
-  /** [[summarize]] with `extra` long-valued aggregates taken in the same
+    * [[errorSums]], with `extra` long-valued aggregates taken in the same
     * pass; returns the typed results and the extra values in order (a sum
     * over no rows reads 0). Runs no job when there is nothing to
     * aggregate. */
@@ -133,15 +129,9 @@ object TypedChecks {
     df.withColumn("errors", filter(array(labels: _*), _.isNotNull))
   }
 
-  /** Rows violating any declaration, annotated with the list of failing
-    * `column:check` labels — the typed analogue of the corrupt-row sink. */
-  def badRows(df: DataFrame, meta: TableMetadata): DataFrame =
-    if (conds(meta).isEmpty) df.limit(0).withColumn("errors", array())
-    else labelled(df, meta).filter(size(col("errors")) > 0)
-
   /** Project a (possibly already-typed) table down to the declared
     * columns in lexical string form, so the same typed checks run
-    * unchanged over Parquet/JSON sources ([[graft.io.SourceFormat]]) —
+    * unchanged over Parquet sources ([[graft.io.SourceFormat]]) —
     * a typed source value that can't round-trip its declared lexical
     * form (e.g. a double in a NUMBER column) is still checkable, and a
     * null stays a null for the NOT-NULL check. Columns missing from the

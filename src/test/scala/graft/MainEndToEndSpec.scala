@@ -152,6 +152,79 @@ class MainEndToEndSpec extends SparkSpec {
       .count() == 2)
   }
 
+  /** `<base>/metadata/csv/acct_metadata.csv` declaring ID VARCHAR2
+    * (nullable as given) and AMOUNT NUMBER (nullable); returns `base`. */
+  private def acctBase(prefix: String, idNullable: Boolean = false): Path = {
+    val base = SparkSpec.tempDir(prefix)
+    Files.createDirectories(base.resolve("inputs"))
+    Files.createDirectories(base.resolve("metadata/csv"))
+    Files.writeString(base.resolve("metadata/csv/acct_metadata.csv"),
+      s"""COLUMN_NAME;DATA_TYPE;STRING_SEPARATOR;FIELD_SEPARATOR;DECIMAL_SEPARATOR;NULLABLE;DATA_FORMAT
+        |ID;VARCHAR2;;|;.;${idNullable.toString.toUpperCase};
+        |AMOUNT;NUMBER;;|;.;TRUE;
+        |""".stripMargin)
+    base
+  }
+
+  /** `Main.run` on table `acct` under `base`; the exit code and stdout. */
+  private def runAcct(base: Path, format: graft.io.SourceFormat): (Int, String) = {
+    val out = new java.io.ByteArrayOutputStream()
+    val code = Console.withOut(out)(
+      Main.run(spark, base.toString, "acct", format))
+    (code, out.toString("UTF-8"))
+  }
+
+  test("a parquet file missing a declared column fails column_names, " +
+      "not with an exception") {
+    import spark.implicits._
+    val base = acctBase("graft-pq-missing")
+    Seq("1", "2").toDF("ID")
+      .write.mode("overwrite").parquet(base.resolve("inputs/acct.parquet").toString)
+    val (code, printed) = runAcct(base, graft.io.SourceFormat.Parquet)
+    assert(code == 1, printed)
+    assert(printed.linesIterator.exists(l => l.startsWith("column_names") &&
+      l.contains("FAIL") && l.contains("missing columns: AMOUNT")), printed)
+    // the present column is still checked; the missing one is not
+    assert(printed.contains("typed:ID:not_null"), printed)
+    assert(!printed.contains("typed:AMOUNT"), printed)
+  }
+
+  test("a json line that does not parse fails the run and is sunk") {
+    val base = acctBase("graft-json-corrupt", idNullable = true)
+    Files.writeString(base.resolve("inputs/acct.json"),
+      "{\"ID\":\"1\",\"AMOUNT\":\"12.5\"}\nnot json at all\n")
+    val (code, printed) = runAcct(base, graft.io.SourceFormat.Json)
+    assert(code == 1, printed)
+    assert(printed.linesIterator.exists(l =>
+      l.startsWith("corrupt_records") && l.contains("FAIL") &&
+        l.contains("failed=1")), printed)
+    val bad = spark.read
+      .parquet(base.resolve("inputs/VALIDATION/acct_TMP").toString)
+      .collect()
+    assert(bad.length == 1)
+    assert(bad.head.getAs[String](TableValidator.CorruptCol) == "not json at all")
+  }
+
+  test("typed result lines read the same for csv, parquet and json") {
+    import spark.implicits._
+    val base = acctBase("graft-formats")
+    Files.writeString(base.resolve("inputs/acct.csv"), "ID|AMOUNT\n1|12.5\n2|abc\n")
+    val rows = Seq(("1", "12.5"), ("2", "abc")).toDF("ID", "AMOUNT")
+    rows.write.mode("overwrite").parquet(base.resolve("inputs/acct.parquet").toString)
+    rows.coalesce(1).write.mode("overwrite")
+      .json(base.resolve("inputs/acct.json").toString)
+    val typed = Seq(graft.io.SourceFormat.Csv, graft.io.SourceFormat.Parquet,
+        graft.io.SourceFormat.Json).map { f =>
+      val (code, printed) = runAcct(base, f)
+      assert(code == 1, printed)
+      f -> printed.linesIterator.filter(_.startsWith("typed:")).toList
+    }
+    val csv = typed.head._2
+    assert(csv.exists(l => l.startsWith("typed:AMOUNT:type_format") &&
+      l.contains("1 rows violate NUMBER (bad rows: ")), csv)
+    typed.tail.foreach { case (f, lines) => assert(lines == csv, f) }
+  }
+
   test("typed checks skip declared columns missing from the file") {
     val base = SparkSpec.tempDir("graft-missing")
     Files.createDirectories(base.resolve("inputs"))

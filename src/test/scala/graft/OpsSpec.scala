@@ -11,6 +11,7 @@ import graft.ops.{CorpusOps, FuzzyDedup, Multimodal, Relational, Similarity, Tex
   * compare; these tests pin the scale-critical plan shapes (bucketed
   * joins, no all-pairs) and the multimodal decode plumbing. */
 class OpsSpec extends AnyFunSuite with SparkSpec {
+  import OpsSpec.GatePlans
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -252,18 +253,52 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(counts.nonEmpty && counts.forall(_.getLong(1) <= 10))
   }
 
+  /** Every registered gate run once on sf0.001, and the `graft-d*`
+    * entries of `java.io.tmpdir` the pass left behind. A gate whose
+    * result is a checkpoint shows only a `Scan ExistingRDD` in its
+    * returned plan, so the plans it ran on the way come from a
+    * `QueryExecutionListener`, read once the listener bus has drained. */
+  private lazy val registryPass: (Seq[GatePlans], Set[String]) = {
+    val before = SparkSpec.tmpEntries("graft-d")
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val found =
+      try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, q) =>
+        val returned = q(spark, dir).queryExecution.executedPlan
+        org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+        val ran = Iterator.continually(executed.poll()).takeWhile(_ != null).toSeq
+        val nodes = (returned +: ran).flatMap(collectPlans)
+        GatePlans(name, ran.size,
+          nodes.collect { case c: CartesianProductExec => c.nodeName },
+          nodes.collect {
+            case w: org.apache.spark.sql.execution.window.WindowExec
+                if w.partitionSpec.isEmpty => w.nodeName
+            case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
+                if w.partitionSpec.isEmpty => w.nodeName
+          })
+      } finally spark.listenerManager.unregister(listener)
+    (found, SparkSpec.tmpEntries("graft-d") -- before)
+  }
+
   test("no registered query plans a CartesianProduct") {
     // 1-row scalar broadcasts plan as BroadcastNestedLoopJoin and are
     // deliberate; an unkeyed CartesianProduct is never acceptable in
     // this surface — catch regressions across the whole registry
     // the same pass over every gate checks that none leaves a temp dir
-    val before = SparkSpec.tmpEntries("graft-d")
-    for ((name, q) <- SparkEntry.queries) {
-      val bad = collectPlans(q(spark, dir).queryExecution.executedPlan)
-        .filter(_.isInstanceOf[CartesianProductExec])
-      assert(bad.isEmpty, s"$name plans a CartesianProduct")
-    }
-    val left = SparkSpec.tmpEntries("graft-d") -- before
+    val (gates, left) = registryPass
+    assert(gates.map(_.executed).sum > 0, "the listener saw no executed plan")
+    info(s"${gates.size} gates, ${gates.map(_.executed).sum} executed plans")
+    gates.foreach(g =>
+      assert(g.cartesian.isEmpty, s"${g.name} plans a CartesianProduct"))
     assert(left.isEmpty, s"gates left temp dirs: ${left.toSeq.sorted}")
   }
 
@@ -272,17 +307,9 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     // WindowExec warning in the bench logs; every window in the surface
     // must either partition on a real key or (rank-of-top-k) a constant
     // applied after the data is already reduced to O(k) rows
-    for ((name, q) <- SparkEntry.queries) {
-      val offenders = collectPlans(q(spark, dir).queryExecution.executedPlan)
-        .collect {
-          case w: org.apache.spark.sql.execution.window.WindowExec
-              if w.partitionSpec.isEmpty => w
-          case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
-              if w.partitionSpec.isEmpty => w
-        }
-      assert(offenders.isEmpty,
-        s"$name has a window with no partition spec: ${offenders.map(_.nodeName)}")
-    }
+    registryPass._1.foreach(g =>
+      assert(g.unpartitionedWindows.isEmpty,
+        s"${g.name} has a window with no partition spec: ${g.unpartitionedWindows}"))
   }
 
   test("dedup clusters: one canonical survivor per cluster, pairs co-clustered") {
@@ -897,4 +924,13 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(joins.count(_ == org.apache.spark.sql.catalyst.plans.LeftAnti) == 1,
       s"want one LeftAnti, got $joins")
   }
+}
+
+object OpsSpec {
+
+  /** What one gate's plans hold that the registry-wide checks forbid:
+    * its CartesianProduct nodes and its windows with no partition spec,
+    * over the plan of the frame it returns and every plan it executed. */
+  private final case class GatePlans(name: String, executed: Int,
+      cartesian: Seq[String], unpartitionedWindows: Seq[String])
 }

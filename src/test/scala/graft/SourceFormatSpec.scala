@@ -38,7 +38,7 @@ class SourceFormatSpec extends SparkSpec {
 
     val df = Sources.table(spark, meta, Seq("ID", "AMOUNT", "OPENED"), dir,
       "CorruptRecCol", SourceFormat.Parquet)
-    val results = TypedChecks.summarize(TypedChecks.lexical(df, meta), meta)
+    val results = TypedChecks.summarizeWith(TypedChecks.lexical(df, meta), meta)._1
     val byCheck = results.map(r => s"${r.column}:${r.check}" -> r.errorCount).toMap
     assert(byCheck == Map(
       "ID:not_null" -> 1L,        // null ID
@@ -61,7 +61,7 @@ class SourceFormatSpec extends SparkSpec {
     try {
       assert(cached.filter(cached("CorruptRecCol").isNotNull).count() == 1)
       val results =
-        TypedChecks.summarize(TypedChecks.lexical(cached, meta), meta)
+        TypedChecks.summarizeWith(TypedChecks.lexical(cached, meta), meta)._1
       val byCheck = results.map(r => s"${r.column}:${r.check}" -> r.errorCount).toMap
       assert(byCheck("AMOUNT:type_format") == 1L) // 'abc'
       assert(byCheck("OPENED:type_format") == 0L)

@@ -24,7 +24,7 @@ class TypedChecksSpec extends SparkSpec {
   ).toDF("ID", "NAME", "BIRTH_DATE")
 
   test("single-pass summary counts per-column violations") {
-    val s = TypedChecks.summarize(df, meta)
+    val s = TypedChecks.summarizeWith(df, meta)._1
     val byKey = s.map(r => (r.column, r.check) -> r.errorCount).toMap
     assert(byKey(("ID", "type_format")) == 1)   // "abc"
     assert(byKey(("ID", "not_null")) == 1)      // ""
@@ -33,7 +33,8 @@ class TypedChecksSpec extends SparkSpec {
   }
 
   test("badRows annotates each offending row with column:check labels") {
-    val bad = TypedChecks.badRows(df, meta)
+    val bad = TypedChecks.labelled(df, meta)
+      .filter(org.apache.spark.sql.functions.size($"errors") > 0)
       .select($"NAME", $"errors")
       .as[(String, Seq[String])]
       .collect()
@@ -48,7 +49,7 @@ class TypedChecksSpec extends SparkSpec {
     val m = TableMetadata(Seq(
       ColumnMeta("X", "NUMBER", "", nullable = true)), ",", ";", "")
     val d = Seq("1,5", "2", "3.5").toDF("X")
-    val s = TypedChecks.summarize(d, m)
+    val s = TypedChecks.summarizeWith(d, m)._1
     // "3.5" is invalid when comma is the declared decimal separator
     assert(s.head.errorCount == 1)
   }
