@@ -1,6 +1,11 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, GraftColumns, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader,
+  HadoopFsRelation, LogicalRelation, PartitionedFile}
 
 import graft.meta.TableMetadata
 
@@ -34,6 +39,28 @@ object Sources {
   /** S1: raw line scan → single `value: string` column. */
   def text(spark: SparkSession, path: String): DataFrame =
     spark.read.text(path)
+
+  /** The files a file-source frame scans, as its file index listed them
+    * when the frame was built (no job). */
+  def files(df: DataFrame): Seq[FileStatus] =
+    df.queryExecution.analyzed.collect { case r: LogicalRelation => r.relation }
+      .collect { case r: HadoopFsRelation =>
+        r.location.listFiles(Nil, Nil).flatMap(_.files.map(_.fileStatus))
+      }.flatten
+
+  /** The line a `head(1)` of the text scan over `files` returns, read
+    * without a job: the first line of the largest file (the scan's
+    * first split), by the text source's own line reader, so a UTF-8
+    * byte-order mark is skipped and `\n`, `\r` and `\r\n` end a line.
+    * None when there is no file or no line. */
+  def firstLine(spark: SparkSession, files: Seq[FileStatus]): Option[String] =
+    files.sortBy(-_.getLen).headOption.flatMap { f =>
+      val lines = new HadoopFileLinesReader(
+        PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath), 0, f.getLen),
+        GraftColumns.hadoopConf(spark))
+      try lines.nextOption().map(_.toString)
+      finally lines.close()
+    }
 
   /** S2: schema'd PERMISSIVE CSV scan with corrupt-record capture —
     * option-for-option the reference reader

@@ -69,8 +69,9 @@ object TypedChecks {
     if (c.nullable) None
     else Some(col(c.name).isNull || col(c.name) === lit(""))
 
-  /** All (column, checkName, predicate) triples for a table. */
-  private def conds(meta: TableMetadata): Seq[(ColumnMeta, String, Column)] =
+  /** All (column, checkName, predicate) triples for a table, in the
+    * order every summary reports them. */
+  private[validate] def conds(meta: TableMetadata): Seq[(ColumnMeta, String, Column)] =
     meta.typeMapping.flatMap { c =>
       errorCond(c, meta).map((c, "type_format", _)).toSeq ++
         nullCond(c).map((c, "not_null", _)).toSeq
@@ -87,27 +88,17 @@ object TypedChecks {
       sum(when(cond, 1L).otherwise(0L)).as(s"e$i")
     }
 
-  /** One-pass per-column error summary: a single group-less aggregate of
-    * [[errorSums]], with `extra` long-valued aggregates taken in the same
-    * pass; returns the typed results and the extra values in order (a sum
-    * over no rows reads 0). Runs no job when there is nothing to
-    * aggregate. */
-  def summarizeWith(df: DataFrame, meta: TableMetadata, extra: Column*)
-      : (Seq[ColumnCheckResult], Seq[Long]) = {
-    val cs = conds(meta)
-    val aggs = errorSums(cs) ++ extra
-    if (aggs.isEmpty) return (Nil, Nil)
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val values = aggs.indices.map(i => if (row.isNullAt(i)) 0L else row.getLong(i))
-    (cs.zip(values).map { case ((c, name, _), n) =>
+  /** The results of `meta`'s checks from their error counts, given in
+    * [[conds]] order. */
+  private[validate] def results(meta: TableMetadata, errors: Seq[Long]): Seq[ColumnCheckResult] =
+    conds(meta).zip(errors).map { case ((c, name, _), n) =>
       ColumnCheckResult(c.name, c.sourceType, name, n)
-    }, values.drop(cs.size))
-  }
+    }
 
-  /** The same one-pass summary as a lazy DataFrame (no driver collect):
-    * the single agg row is unpivoted with `stack` into
-    * (col_name, check_name, n_errors) — used by the driver-gated
-    * validation-surface query [[ValidationQueries]]. */
+  /** One-pass per-column error summary as a lazy DataFrame (no driver
+    * collect): a single group-less aggregate of [[errorSums]], its row
+    * unpivoted with `stack` into (col_name, check_name, n_errors) — used
+    * by the driver-gated validation-surface query [[ValidationQueries]]. */
   def summaryDf(df: DataFrame, meta: TableMetadata): DataFrame = {
     val cs = conds(meta)
     require(cs.nonEmpty, "metadata declares no typed checks")

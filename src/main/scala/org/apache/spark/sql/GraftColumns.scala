@@ -10,13 +10,18 @@
  */
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge for graft's native Catalyst expressions (see
-  * `graft.functions`). Keep this object minimal: two conversions plus
-  * the registry accessor, no logic — everything interesting belongs in
-  * the expressions themselves. */
+  * `graft.functions`) and for the session internals the validator
+  * plans with. Keep this object minimal: conversions and accessors, no
+  * logic — everything interesting belongs in the callers. */
 object GraftColumns {
   def column(e: Expression): Column =
     Column(classic.ExpressionColumnNode(e))
@@ -30,4 +35,18 @@ object GraftColumns {
     * names into a live session. */
   def functionRegistry(spark: SparkSession): FunctionRegistry =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+
+  /** A copy of `spark` with its own conf, temp views and functions:
+    * what is set on the copy does not reach `spark`. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** A frame over rows already computed as `rows` (a scan of the RDD,
+    * planned without a job), typed by `schema`. */
+  def frame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** The Hadoop conf the session's file scans read with. */
+  def hadoopConf(spark: SparkSession): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 }

@@ -1,6 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
 import graft.meta.{ColumnMeta, MetadataCompiler, TableMetadata}
 import graft.validate.TableValidator
@@ -16,6 +24,110 @@ class ChecksSpec extends SparkSpec {
       badDir: String = tmp().resolve("bad").toString): TableValidator =
     new TableValidator(spark,
       MetadataCompiler.parseCsvFile(metaCsv), tablePath, badDir)
+
+  /** What the Spark jobs run while it listened did: how many jobs, each
+    * stage's task count, and each task's input bytes (from files or
+    * cached blocks). */
+  private final class Work extends SparkListener {
+    val jobs = new AtomicLong()
+    val stageTasks = new ConcurrentLinkedQueue[Int]()
+    val taskBytes = new ConcurrentLinkedQueue[Long]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      stageTasks.add(e.stageInfo.numTasks)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      Option(e.taskMetrics).foreach(m => taskBytes.add(m.inputMetrics.bytesRead))
+    def widestStage: Int = stageTasks.asScala.maxOption.getOrElse(0)
+  }
+
+  /** `body`'s result and the work its Spark jobs did; the listener bus is
+    * drained on both sides, so no other job is counted. */
+  private def traced[T](body: => T): (T, Work) = {
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    val work = new Work
+    sc.addSparkListener(work)
+    try {
+      val result = body
+      TestListenerBus.drain(sc)
+      (result, work)
+    } finally sc.removeSparkListener(work)
+  }
+
+  /** `lines` as a file whose size is a multiple of the cluster's cores,
+    * padding the last line with trailing blanks (which the CSV reader
+    * trims), so an even split gives every core exactly one. */
+  private def evenFile(path: Path, lines: Seq[String]): Long = {
+    val text = lines.mkString("", "\n", "\n")
+    val cores = spark.sparkContext.defaultParallelism
+    val pad = (cores - text.length % cores) % cores
+    Files.writeString(path, text.dropRight(1) + " " * pad + "\n")
+    Files.size(path)
+  }
+
+  private val amountTable = TableMetadata(Seq(
+    ColumnMeta("ID", "VARCHAR2", "", false),
+    ColumnMeta("AMOUNT", "NUMBER", "", true),
+    ColumnMeta("NAME", "VARCHAR2", "", true)), ".", "|", "")
+
+  test("a clean multi-MB plain csv runs two jobs as wide as the cluster " +
+      "and leaves the caller's conf alone") {
+    val dir = tmp()
+    val data = dir.resolve("t.csv")
+    // about 800 KB per core, well above the validator's smallest split
+    val cores = spark.sparkContext.defaultParallelism
+    val size = evenFile(data, "ID|AMOUNT|NAME" +:
+      (1 to 30000 * math.max(4, cores)).map(i => s"$i|${i % 997}.25|name number $i"))
+    assert(size > 3000000)
+    val conf = spark.conf.getAll
+    val (results, work) = traced(new TableValidator(spark, amountTable,
+      data.toString, dir.resolve("bad").toString).performValidation())
+    assert(results.forall(_.passed), results)
+    // the header read runs no job: the text count and the summary do
+    assert(work.jobs.get == 2)
+    assert(work.widestStage == cores, work.stageTasks)
+    assert(spark.conf.getAll == conf)
+  }
+
+  test("a small csv is scanned by one task, not cut into one split per core") {
+    val dir = tmp()
+    val data = dir.resolve("t.csv")
+    Files.writeString(data, ("ID|AMOUNT|NAME" +:
+      (1 to 100).map(i => s"$i|$i.25|n$i")).mkString("", "\n", "\n"))
+    val (results, work) = traced(new TableValidator(spark, amountTable,
+      data.toString, dir.resolve("bad").toString).performValidation())
+    assert(results.forall(_.passed), results)
+    assert(work.widestStage == 1, work.stageTasks)
+  }
+
+  test("a dirty quoted csv is parsed as csv once, its sinks written from the kept rows") {
+    val dir = tmp()
+    val data = dir.resolve("t.csv")
+    val q = "\""
+    // every 50th line has an extra field (the CSV reader's corrupt
+    // record), every 70th a bad AMOUNT
+    val size = evenFile(data, s"${q}ID$q|${q}AMOUNT$q|${q}NAME$q" +:
+      (1 to 60000).map { i =>
+        val amount = if (i % 70 == 0) "n/a" else s"${i % 997}.25"
+        s"$q$i$q|$q$amount$q|${q}name|$i$q" + (if (i % 50 == 0) "|extra" else "")
+      })
+    val meta = amountTable.copy(stringSeparator = q)
+    val bad = dir.resolve("bad").toString
+    val conf = spark.conf.getAll
+    val (results, work) = traced(
+      new TableValidator(spark, meta, data.toString, bad).performValidation())
+    assert(results.map(r => r.check -> r.failedCount) == Seq(
+      "column_names" -> 0, "field_count_quoted" -> 1200,
+      "typed:ID:not_null" -> 0, "typed:AMOUNT:type_format" -> 857))
+    // text count, summary, and one write per sink
+    assert(work.jobs.get == 4)
+    // a quoted CSV is parsed whole by one task; the sinks read the kept
+    // rows, so no second task reads the whole file again
+    assert(work.taskBytes.asScala.count(_ >= size) == 1, work.taskBytes)
+    assert(spark.read.parquet(bad).count() == 1200)
+    assert(spark.read.parquet(bad.stripSuffix("/") + "_TYPED").count() == 857)
+    assert(spark.conf.getAll == conf)
+  }
 
   test("reference success fixture passes end-to-end") {
     val v = validator(s"$refBase/inputs/success.csv",
@@ -119,7 +231,10 @@ class ChecksSpec extends SparkSpec {
       ColumnMeta("C", "VARCHAR2", "", true)), ".", "|", "")
     val v = new TableValidator(small, meta, data.toString,
       dir.resolve("bad").toString)
-    val fc = v.performValidation().find(_.check == "field_count").get
+    val (results, work) = traced(v.performValidation())
+    // the validator's scans keep the caller's smaller split size
+    assert(work.widestStage >= (Files.size(data) + 255) / 256, work.stageTasks)
+    val fc = results.find(_.check == "field_count").get
     assert(!fc.passed)
     assert(fc.failedCount == 2)
     assert(fc.detail.contains("first offender (count=4, line=150)"), fc.detail)

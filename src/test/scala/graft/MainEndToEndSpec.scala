@@ -205,6 +205,25 @@ class MainEndToEndSpec extends SparkSpec {
     assert(bad.head.getAs[String](TableValidator.CorruptCol) == "not json at all")
   }
 
+  test("a json line that does not parse is a corrupt record, not a typed violation") {
+    // its columns are null only because it did not parse: ID NOT NULL
+    // must not count it a second time, nor sink it a second time
+    val base = acctBase("graft-json-corrupt-typed")
+    Files.writeString(base.resolve("inputs/acct.json"),
+      "{\"ID\":\"1\",\"AMOUNT\":\"12.5\"}\nnot json at all\n")
+    val (code, printed) = runAcct(base, graft.io.SourceFormat.Json)
+    assert(code == 1, printed)
+    assert(verdicts(printed) == Seq(
+      "corrupt_records FAIL failed=1",
+      "typed:ID:not_null PASS failed=0",
+      "typed:AMOUNT:type_format PASS failed=0",
+      "validation failed!"), printed)
+    assert(spark.read
+      .parquet(base.resolve("inputs/VALIDATION/acct_TMP").toString)
+      .count() == 1)
+    assert(!Files.exists(base.resolve("inputs/VALIDATION/acct_TMP_TYPED")))
+  }
+
   test("typed result lines read the same for csv, parquet and json") {
     import spark.implicits._
     val base = acctBase("graft-formats")

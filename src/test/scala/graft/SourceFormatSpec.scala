@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+
 import graft.io.{SourceFormat, Sources}
 import graft.meta.{ColumnMeta, TableMetadata}
 import graft.validate.TypedChecks
@@ -17,6 +19,11 @@ class SourceFormatSpec extends SparkSpec {
       ColumnMeta("AMOUNT", "NUMBER", "", nullable = true),
       ColumnMeta("OPENED", "DATE", "dd/MM/yyyy", nullable = true)),
     decimalSeparator = ".", fieldSeparator = "|", stringSeparator = "")
+
+  /** `column:check` -> violating rows, from the one-pass summary. */
+  private def errorCounts(df: DataFrame): Map[String, Long] =
+    TypedChecks.summaryDf(df, meta).collect()
+      .map(r => s"${r.getString(0)}:${r.getString(1)}" -> r.getLong(2)).toMap
 
   test("format enum parses and rejects") {
     assert(SourceFormat.parse(" Parquet ") == SourceFormat.Parquet)
@@ -38,8 +45,7 @@ class SourceFormatSpec extends SparkSpec {
 
     val df = Sources.table(spark, meta, Seq("ID", "AMOUNT", "OPENED"), dir,
       "CorruptRecCol", SourceFormat.Parquet)
-    val results = TypedChecks.summarizeWith(TypedChecks.lexical(df, meta), meta)._1
-    val byCheck = results.map(r => s"${r.column}:${r.check}" -> r.errorCount).toMap
+    val byCheck = errorCounts(TypedChecks.lexical(df, meta))
     assert(byCheck == Map(
       "ID:not_null" -> 1L,        // null ID
       "AMOUNT:type_format" -> 0L, // double→string round-trips as a NUMBER
@@ -60,9 +66,7 @@ class SourceFormatSpec extends SparkSpec {
     val cached = df.cache()
     try {
       assert(cached.filter(cached("CorruptRecCol").isNotNull).count() == 1)
-      val results =
-        TypedChecks.summarizeWith(TypedChecks.lexical(cached, meta), meta)._1
-      val byCheck = results.map(r => s"${r.column}:${r.check}" -> r.errorCount).toMap
+      val byCheck = errorCounts(TypedChecks.lexical(cached, meta))
       assert(byCheck("AMOUNT:type_format") == 1L) // 'abc'
       assert(byCheck("OPENED:type_format") == 0L)
     } finally cached.unpersist()

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.meta.{ColumnMeta, TableMetadata}
 import graft.validate.TypedChecks
 
@@ -23,13 +25,17 @@ class TypedChecksSpec extends SparkSpec {
     ("6e3", "sci", null)               // scientific ok; null date ok (nullable)
   ).toDF("ID", "NAME", "BIRTH_DATE")
 
+  /** (column, check) -> violating rows, from the one-pass summary. */
+  private def errorCounts(d: DataFrame, m: TableMetadata): Map[(String, String), Long] =
+    TypedChecks.summaryDf(d, m).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+
   test("single-pass summary counts per-column violations") {
-    val s = TypedChecks.summarizeWith(df, meta)._1
-    val byKey = s.map(r => (r.column, r.check) -> r.errorCount).toMap
+    val byKey = errorCounts(df, meta)
     assert(byKey(("ID", "type_format")) == 1)   // "abc"
     assert(byKey(("ID", "not_null")) == 1)      // ""
     assert(byKey(("BIRTH_DATE", "type_format")) == 1) // ISO date
-    assert(!s.exists(r => r.column == "NAME"))  // VARCHAR2 nullable: no checks
+    assert(!byKey.keys.exists(_._1 == "NAME"))  // VARCHAR2 nullable: no checks
   }
 
   test("badRows annotates each offending row with column:check labels") {
@@ -49,9 +55,8 @@ class TypedChecksSpec extends SparkSpec {
     val m = TableMetadata(Seq(
       ColumnMeta("X", "NUMBER", "", nullable = true)), ",", ";", "")
     val d = Seq("1,5", "2", "3.5").toDF("X")
-    val s = TypedChecks.summarizeWith(d, m)._1
     // "3.5" is invalid when comma is the declared decimal separator
-    assert(s.head.errorCount == 1)
+    assert(errorCounts(d, m) == Map(("X", "type_format") -> 1L))
   }
 
   test("applyTargetSchema casts to declared types") {

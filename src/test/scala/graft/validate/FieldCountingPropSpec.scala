@@ -1,6 +1,9 @@
 package graft.validate
 
-import org.apache.spark.sql.functions.col
+import java.util.regex.Pattern
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 import graft.SparkSpec
@@ -10,7 +13,8 @@ import graft.SparkSpec
   * count equals the constructed field count and the naive count equals
   * fields + embedded separators. Random inputs run through the REAL
   * Spark expression (regexp_extract_all with the validator's pattern) in
-  * one batch evaluation. */
+  * one batch evaluation. On generated HOSTILE lines, the counters are
+  * compared with the split and backtracking-regex forms they replaced. */
 class FieldCountingPropSpec extends SparkSpec {
 
   // non-empty: adjacent EMPTY fields hit the reference regex's zero-width
@@ -56,6 +60,50 @@ class FieldCountingPropSpec extends SparkSpec {
         s"quote-aware count of '${r.getString(4)}'")
       assert(r.getInt(3) == expected + embedded,
         s"naive count of '${r.getString(4)}'")
+    }
+  }
+
+  test("the linear counters count exactly as the split and backtracking forms did") {
+    // the forms the counters replaced, kept here as the reference: a
+    // regex split, and the reference's pattern with greedy quantifiers
+    def splitCount(line: Column, sep: String): Column =
+      size(split(line, Pattern.quote(sep), -1))
+    def backtrackingCount(line: Column, sep: String, quote: String): Column = {
+      val sepClass = sep.map(FieldCounting.charClassEscape).mkString
+      val s = FieldCounting.regexEscape(sep)
+      val qc = quote.map(FieldCounting.charClassEscape).mkString
+      val ql = FieldCounting.regexEscape(quote)
+      size(regexp_extract_all(line, lit(
+        s"(?:(?:[^$sepClass$qc]|$ql[^$qc]*(?:$ql|$$))+|(?=$s$s)|(?=$s$$)|(?=^$s))"),
+        lit(0)))
+    }
+    // "" is no separator the CSV reader takes, but the counts still agree
+    val seps = Seq("|", "||", "~|", ".", "[", "-", "&&", "\\", "")
+    val quotes = Seq("\"", "\"\"\"\"", "'")
+    // hostile lines: any run of separator and quote pieces (so empty and
+    // adjacent-empty fields and unbalanced quotes), plain and non-ASCII
+    // text
+    val piece = Gen.oneOf(seps ++ quotes ++ Seq("a", "bc", " ", "~", "&",
+      "]", "^", "é", "中文", "\uD83D\uDE00"))
+    val lines = "" +: Gen.listOfN(3000, Gen.listOf(piece).map(_.take(40).mkString))
+      .apply(Gen.Parameters.default.withSize(40), org.scalacheck.rng.Seed(7L))
+      .get
+    import spark.implicits._
+    val line = col("line")
+    val pairs =
+      seps.map(sep => (s"naive <$sep>", FieldCounting.naiveCount(line, sep),
+        splitCount(line, sep))) ++
+      (for (sep <- seps; q <- quotes) yield (s"quote-aware <$sep> <$q>",
+        FieldCounting.quoteAwareCount(line, sep, q), backtrackingCount(line, sep, q)))
+    // one job for every line and pair
+    val rows = lines.toDF("line")
+      .select(line +: pairs.flatMap { case (_, now, was) => Seq(now, was) }: _*)
+      .collect()
+    assert(rows.length == lines.size)
+    pairs.zipWithIndex.foreach { case ((name, _, _), i) =>
+      val differ = rows.filter(r => r.getInt(1 + 2 * i) != r.getInt(2 + 2 * i))
+      assert(differ.isEmpty, s"$name on <${differ.headOption.map(_.getString(0))}>: " +
+        s"${differ.headOption.map(r => (r.getInt(1 + 2 * i), r.getInt(2 + 2 * i)))}")
     }
   }
 }

@@ -9,14 +9,18 @@ checkout, the parent first on odd seeds and the change first on even ones,
 so drift falls on both sides. Every run
 is printed as it ends; then, per end-to-end metric of BENCHMARK.json (read
 from the change), each side's median and quartiles, the change/parent ratio
-of the medians, and how many pairs the change won. A metric whose change
-median is worse than the parent's by more than its bound is flagged
-REGRESSION; a run that is not correct is flagged too. Exit status is 1 when
+of the medians, how many pairs the change won, and whether the gain rule
+holds: the change wins at least nine tenths of the pairs (a tie counts for
+neither side) and its median beats the parent's by more than the parent's
+interquartile range. A claimed gain needs that line to read "holds". A
+metric whose change median is worse than the parent's by more than its
+bound is flagged REGRESSION; a run that is not correct is flagged too. Exit status is 1 when
 anything is flagged. Nothing in either checkout is modified beyond what
 perfbench itself writes (its build and work directories).
 """
 import argparse
 import json
+import math
 import os
 import statistics
 import subprocess
@@ -88,10 +92,15 @@ def main():
         flag = worse > bound
         flagged |= flag
         pq, cq = quartiles(ps), quartiles(cs)
+        gap, iqr = (pm - cm) if lower else (cm - pm), pq[1] - pq[0]
+        gain = wins >= 0.9 * len(pairs) and gap > iqr
         print(f"{name:12s} {pm:12.4g} [{pq[0]:.4g}, {pq[1]:.4g}]".ljust(44) +
               f"{cm:12.4g} [{cq[0]:.4g}, {cq[1]:.4g}]".ljust(31) +
               f"{cm / pm if pm else float('nan'):7.3f} {wins:3d}/{len(pairs)}" +
               (f"  REGRESSION: worse by {worse:.1%} > bound {bound:.0%}" if flag else ""))
+        print(f"{'':12s} gain rule {'holds' if gain else 'does not hold'}: "
+              f"wins {wins}/{len(pairs)} (needs {math.ceil(0.9 * len(pairs))}), "
+              f"median gap {gap:.4g} vs parent IQR {iqr:.4g}")
     sys.exit(1 if flagged else 0)
 
 
