@@ -15,9 +15,14 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** A table's parquet scan; `events.ts` arrives as TimestampType
-    * whichever encoding the file holds ([[EventTime.normalized]]). */
+    * whichever encoding the file holds ([[EventTime.normalized]]). A
+    * table stored as one file is read with the schema its footer gives
+    * on the driver ([[io.ParquetMeta.fileSchema]]), which runs no job;
+    * a directory keeps Spark's inference. */
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$table.parquet")
+    val path = s"$sfDir/$table.parquet"
+    val df = io.ParquetMeta.fileSchema(spark, path)
+      .fold(spark.read)(spark.read.schema).parquet(path)
     if (table == "events") EventTime.normalized(df) else df
   }
 
@@ -41,14 +46,14 @@ object Tables {
     * core-wide spreading measured 24% WORSE on the isolated heavy set
     * at sf0.1 — on a sub-MB input the repartition multiplies every
     * downstream stage's task count while each task holds microseconds
-    * of work, and multi-job pipelines (the ANN family re-reads its
-    * checkpointed frames dozens of times per query) pay the scheduling
-    * tax per job. The quantum keeps per-task map work well above task
-    * overhead: ~1 MB of compressed text is ~1 s of regex/shingle CPU
-    * vs ~10 ms of scheduling. Production layouts (many files / row
-    * groups) make the partition-count gate a strict no-op, so nothing
-    * here is tuned to local mode — the bytes/quantum ratio IS the
-    * scale adaptation. */
+    * of work, and multi-job pipelines (the dedup and corpus families
+    * re-read checkpointed frames many times per query) pay the
+    * scheduling tax per job. The quantum keeps per-task map work well
+    * above task overhead: ~1 MB of compressed text is ~1 s of
+    * regex/shingle CPU vs ~10 ms of scheduling. Production layouts
+    * (many files / row groups) make the partition-count gate a strict
+    * no-op, so nothing here is tuned to local mode — the bytes/quantum
+    * ratio IS the scale adaptation. */
   def loadSpread(spark: SparkSession, sfDir: String, table: String,
       bytesPerTask: Long = 1L << 20): DataFrame = {
     val df = load(spark, sfDir, table)

@@ -39,10 +39,15 @@ object MetadataCompiler {
       format = values.lift(6).getOrElse(""),
       nullable = values.lift(5).getOrElse("TRUE").equalsIgnoreCase("TRUE"),
       rawNullable = values.lift(5).getOrElse("TRUE"))
+    val fieldSeparator = first.lift(3).getOrElse("|")
+    // the reference's `str.split('')` raises on an empty separator
+    require(fieldSeparator.nonEmpty,
+      "metadata CSV data row 1, column 4 (FIELD_SEPARATOR) is empty: " +
+        "a field separator cannot be empty")
     TableMetadata(
       typeMapping = rows.map(columnOf),
       decimalSeparator = first.lift(4).getOrElse("."),
-      fieldSeparator = first.lift(3).getOrElse("|"),
+      fieldSeparator = fieldSeparator,
       stringSeparator = first.lift(2).getOrElse(""))
   }
 

@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{KnownNullable, Literal, Round}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +28,8 @@ object Similarity {
 
   private[graft] def emb(spark: SparkSession, dir: String): DataFrame =
     // 2 MB/task: the embedding store is dense fixed-width vectors and
-    // its consumers re-read checkpointed frames many times per query —
-    // finer grains multiply every downstream job's task count
+    // its consumers run several jobs per query (Lloyd rounds, exact
+    // re-ranks) — finer grains multiply every downstream job's task count
     Tables.loadSpread(spark, dir, "embeddings", 2L << 20)
       .select(col("vec_id"), col("label"),
         // array cast, not transform(_.cast): Cast widens float→double
@@ -230,27 +232,145 @@ object Similarity {
 
   // --------------------------------------------------------------- d14
   /** IVF parameters: K cells, Lloyd refinement rounds over a
-    * deterministic 1-in-TrainMod sample, and the number of inverted
-    * cells each probe searches. */
+    * deterministic 1-in-TrainMod sample, the number of inverted
+    * cells each probe searches, and the probe vectors (vec_id below
+    * [[AnnQueries]]) every ANN gate here scores. */
   private val IvfK = 8
   private val LloydIters = 2
   private val TrainMod = 5
   private val NProbe = 2
+  private val AnnQueries = 3
+
+  /** A trained codebook held on the driver: centre ids in ascending
+    * order, each with its vector. A Lloyd round collects its ≤K-row
+    * mean aggregate ([[updateCentroids]], [[pqUpdate]]) into one, and
+    * the next round assigns against it as literals in a map-only
+    * projection ([[nearest]], [[nearestCode]]): no broadcast, no
+    * argmin shuffle, no checkpoint. A centre with no members is
+    * absent, as the aggregate's groupBy drops it. */
+  private[graft] final case class Book(ids: IndexedSeq[Long],
+      cvs: IndexedSeq[Array[Double]]) {
+
+    /** The centres as (id, vector) literals with their index. An empty
+      * book (from an empty corpus or training sample) is one null
+      * centre, so an argmax over it is still typed; the frames that
+      * assign against an empty book are empty. */
+    def literals: Seq[(Column, Column, Option[Int])] =
+      if (ids.isEmpty) Seq((lit(null).cast("long"), lit(null).cast("array<double>"), None))
+      else ids.indices.map(k => (lit(ids(k)), typedLit(cvs(k)), Some(k)))
+  }
+
+  /** `df`, or no rows of it when any of `books` is empty: nothing can be
+    * assigned to a centre then. */
+  private def unlessEmpty(df: DataFrame, books: Book*): DataFrame =
+    if (books.exists(_.ids.isEmpty)) df.where(lit(false)) else df
+
+  private[graft] object Book {
+    def of(rows: Seq[(Long, Array[Double])]): Book = {
+      val s = rows.sortBy(_._1)
+      Book(s.map(_._1).toIndexedSeq, s.map(_._2).toIndexedSeq)
+    }
+
+    /** The (id, cv) rows of `df`, collected. */
+    def collect(df: DataFrame): Book = of(df.collect().toSeq.map(r =>
+      r.getLong(0) -> r.getSeq[Double](1).toArray))
+
+    /** The (m, code, cv) rows of `df`, collected: one book per PQ
+      * subspace. */
+    def collectPq(df: DataFrame): IndexedSeq[Book] = {
+      val byM = df.collect().toSeq.groupBy(_.getInt(0))
+      (0 until PqM).map(m => of(byM.getOrElse(m, Nil).map(r =>
+        r.getLong(1) -> r.getSeq[Double](2).toArray)))
+    }
+
+    /** `book` as (cent_id, cv) rows — the frozen coarse artifact. */
+    def frame(spark: SparkSession, book: Book): DataFrame =
+      spark.createDataFrame(book.ids.zip(book.cvs)).toDF("cent_id", "cv")
+
+    /** `books` as (m, code, cv) rows — the frozen PQ artifact. */
+    def pqFrame(spark: SparkSession, books: IndexedSeq[Book]): DataFrame =
+      spark.createDataFrame(for (m <- books.indices;
+          (code, cv) <- books(m).ids.zip(books(m).cvs)) yield (m, code, cv))
+        .toDF("m", "code", "cv")
+  }
+
+  /** The rows of `e` with vec_id < n as id → vector, in ONE driver
+    * collect: the first-K Lloyd seeds and the probe vectors both come
+    * from it. */
+  private[graft] def firstVecs(e: DataFrame, n: Int): Map[Long, Array[Double]] =
+    e.filter(col("vec_id") < n).select("vec_id", "v").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
+
+  /** The centres a Lloyd run starts from: the vectors with id < k. */
+  private def seedBook(first: Map[Long, Array[Double]], k: Int): Book =
+    Book.of(first.toSeq.filter(_._1 < k))
+
+  /** The probe vectors (vec_id < [[AnnQueries]]), in id order. */
+  private def queries(first: Map[Long, Array[Double]]): Seq[(Long, Array[Double])] =
+    first.toSeq.filter(_._1 < AnnQueries).sortBy(_._1)
+
+  /** [[LloydIters]] rounds from `init`, each one collected aggregate. */
+  private def lloyd[B](init: B)(round: B => B): B =
+    (1 to LloydIters).foldLeft(init)((b, _) => round(b))
+
+  /** The greatest (`max`) or least of `xs` — the expressions Spark's
+    * own `max`/`min` aggregates fold with, so a struct argmax/argmin
+    * orders and breaks ties exactly as the aggregate did. */
+  private def extreme(xs: Seq[Column], max: Boolean): Column =
+    if (xs.size == 1) xs.head else if (max) greatest(xs: _*) else least(xs: _*)
+
+  /** `c` typed nullable. A literal id or a lookup sum stands where an
+    * aggregate's (nullable) output stood, and the gates' output
+    * schemas keep their nullability. */
+  private def nullable(c: Column): Column =
+    GraftColumns.column(KnownNullable(GraftColumns.expression(c)))
+
+  /** One struct (sim, nc = −id, cv) per centre of `book`: its 4dp
+    * cosine to `v`. Ordered as structs, the greatest is the nearest
+    * centre, ties to the lower id (`max(struct(sim, −cent_id, …))`). */
+  private def centreSims(v: Column, book: Book): Seq[Column] =
+    book.literals.map { case (id, cv, _) =>
+      struct(cosine(v, cv).as("sim"), (-id).as("nc"), cv.as("cv")) }
+
+  /** The nearest centre of `book` to `v`, as a (sim, nc, cv) struct.
+    * One cosine per centre in a single projection: the plan grows
+    * linearly with K (8 here, each centre a 64-double literal). */
+  private def nearest(v: Column, book: Book): Column =
+    extreme(centreSims(v, book), max = true)
 
   /** Nearest-cell assignment — the primitive shared by training and
-    * search. The O(K) centroid table is broadcast (the one deliberate
-    * K-row nested loop in this file: K is a constant, not data-scaled);
-    * the argmax is ONE partial-aggregating groupBy (`max` of a
-    * (sim, -cent_id, v) struct, tie-broken toward the lowest cent_id),
-    * so at most N rows shuffle — not the K·N sorted rows a row_number
-    * window would move. */
-  private def assignCells(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("cent_id"),
-        cosine(col("v"), col("cv")).as("sim"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("sim"), (-col("cent_id")).as("nc"), col("v"))).as("m"))
-      .select(col("vec_id"), col("m.v").as("v"), (-col("m.nc")).as("cell"))
+    * search: a map-only projection over the driver-held [[Book]]
+    * (`cell`, its centre `cv` and the 4dp similarity `sim`) where the
+    * K-row centroid table used to be broadcast and the argmax was a
+    * vec_id-keyed groupBy. */
+  private def assignCells(vecs: DataFrame, book: Book): DataFrame =
+    unlessEmpty(vecs.select(col("vec_id"), col("v"), nearest(col("v"), book).as("nn"))
+      .select(col("vec_id"), col("v"), nullable(-col("nn.nc")).as("cell"),
+        col("nn.sim").as("sim"), col("nn.cv").as("cv")), book)
+
+  /** One row `h` per probe hit (a null hit is a vector no probe
+    * scores); no probes (no vec_id below [[AnnQueries]]) is an empty
+    * array of the hit type `q_id:bigint,<score>`. */
+  private def explodeHits(hits: Seq[Column], score: String): Column =
+    explode(if (hits.nonEmpty) array(hits: _*)
+      else array().cast(s"array<struct<q_id:bigint,$score>>")).as("h")
+
+  /** Driver twin of [[nearest]]: the indices of `book`'s n nearest
+    * centres to `v`, nearest first — Spark's own `CosineSim` and 4dp
+    * `Round` evaluated here, compared in Spark's double order (NaN
+    * greatest, a null similarity last), ties to the lower id. */
+  private def route(v: Array[Double], book: Book, n: Int): Seq[Int] = {
+    val sims = book.cvs.map(cv => Round(graft.functions.CosineSim(
+      Literal(v), Literal(cv)), Literal(4)).eval().asInstanceOf[java.lang.Double])
+    def before(a: Int, b: Int): Boolean = (sims(a), sims(b)) match {
+      case (x, y) if x != null && y != null &&
+          SQLOrderingUtil.compareDoubles(x, y) != 0 =>
+        SQLOrderingUtil.compareDoubles(x, y) > 0
+      case (x, y) if (x == null) != (y == null) => y == null
+      case _ => book.ids(a) < book.ids(b)
+    }
+    book.ids.indices.sortWith(before).take(n)
+  }
 
   /** One Lloyd update: element-wise mean of each cell's member vectors.
     * Means are rounded to 4dp so the trained centroids are reproducible
@@ -274,32 +394,31 @@ object Similarity {
       .select(col("cell").as("cent_id"), col("cv"))
 
   /** The trained coarse quantizer shared by d14 IVF search, the
-    * training-objective monitor, and d59 semantic dedup: centroids
-    * start as the first K vectors, then LloydIters assign→mean rounds
-    * over a deterministic 1-in-TrainMod sample refine them
-    * (driver-coordinated loop — K·LloydIters tiny jobs over the SAMPLE
-    * only; the corpus never enters training). */
-  private def trainedCentroids(e: DataFrame): DataFrame = {
-    val c0 = e.filter(col("vec_id") < IvfK)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
+    * training-objective monitor, d59 semantic dedup and the IVF-PQ
+    * gates: centroids start as the first K vectors (`first`), then
+    * LloydIters assign→mean rounds over a deterministic 1-in-TrainMod
+    * sample refine them. Each round is one aggregate over the SAMPLE
+    * whose ≤K rows come back to the driver — one job per round, plus
+    * the exchange AQE runs as its own; the corpus never enters
+    * training. */
+  private[graft] def trainedCentroids(e: DataFrame, first: Map[Long, Array[Double]],
+      k: Int = IvfK): Book = {
     val train = e.filter(col("vec_id") % TrainMod === 0)
-    (1 to LloydIters).foldLeft(c0) { (c, _) =>
-      updateCentroids(assignCells(train, c))
-    }
+    lloyd(seedBook(first, k))(c =>
+      Book.collect(updateCentroids(assignCells(train, c))))
   }
 
   /** IVF ANN with a TRAINED coarse quantizer: centroids start as the
     * first K vectors, then LloydIters assign→mean rounds over a
-    * deterministic 1-in-TrainMod sample refine them (driver-coordinated
-    * loop; each round reuses [[assignCells]]). Every corpus vector is
-    * assigned to its nearest trained cell; each probe (vec_id < 3)
-    * searches its NProbe nearest cells' inverted lists via an equi-join
-    * on the cell id.
+    * deterministic 1-in-TrainMod sample refine them
+    * ([[trainedCentroids]]). Every corpus vector is assigned to its
+    * nearest trained cell; each probe (vec_id < 3) searches its NProbe
+    * nearest cells, routed on the driver.
     *
-    * Scale shape: training touches only the sample; the corpus-sized
-    * side moves exactly once, shuffled on its cell id; the probe table
-    * fans out NProbe rows per query. Recall/cost trade off by NProbe and
-    * K — structure unchanged. */
+    * Scale shape: training touches only the sample; the corpus is one
+    * map pass that scores a vector only against the probes routed to
+    * its cell; recall/cost trade off by NProbe and K — structure
+    * unchanged. */
   def d14AnnIvf(spark: SparkSession, dir: String): DataFrame =
     annIvf(spark, dir, trained = true, nProbe = NProbe)
 
@@ -309,25 +428,20 @@ object Similarity {
   private[graft] def annIvf(spark: SparkSession, dir: String,
       trained: Boolean, nProbe: Int): DataFrame = {
     val e = emb(spark, dir)
-    val c0 = e.filter(col("vec_id") < IvfK)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    val cents =
-      if (!trained) c0
-      else trainedCentroids(e)
-        .localCheckpoint() // 8 rows; reused by assignment AND probe ranking
-    val assigned = assignCells(e, cents)
-    val probes = e.filter(col("vec_id") < 3)
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cent_id"),
-        cosine(col("v"), col("cv")).as("sim"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("sim").desc, col("cent_id"))))
-      .filter(col("rk") <= nProbe)
-      .select(col("q_id"), col("qv"), col("cent_id").as("cell"))
+    val first = firstVecs(e, math.max(IvfK, AnnQueries))
+    val cents = if (!trained) seedBook(first, IvfK) else trainedCentroids(e, first)
+    // a vector is a candidate of every probe routed to its cell
+    val hits = queries(first).map { case (q, qv) =>
+      when(col("cell").isin(route(qv, cents, nProbe).map(cents.ids): _*) &&
+          col("vec_id") =!= q,
+        struct(nullable(lit(q)).as("q_id"),
+          cosine(col("v"), typedLit(qv)).as("cos_sim")))
+    }
     val wTop = Window.partitionBy("q_id").orderBy(col("cos_sim").desc, col("vec_id"))
-    assigned.join(probes, Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
+    assignCells(e, cents)
+      .select(col("vec_id"), explodeHits(hits, "cos_sim:double"))
+      .filter(col("h").isNotNull)
+      .select(col("h.q_id").as("q_id"), col("vec_id"), col("h.cos_sim").as("cos_sim"))
       .withColumn("rk", row_number().over(wTop))
       .filter(col("rk") <= 3)
       .select("q_id", "rk", "vec_id", "cos_sim")
@@ -400,14 +514,9 @@ object Similarity {
   private[graft] def meanAssignSim(spark: SparkSession, dir: String,
       trained: Boolean): Double = {
     val e = emb(spark, dir)
-    val c0 = e.filter(col("vec_id") < IvfK)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    val cents =
-      if (!trained) c0
-      else trainedCentroids(e)
-    e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), cosine(col("v"), col("cv")).as("sim"))
-      .groupBy("vec_id").agg(max("sim").as("best"))
+    val first = firstVecs(e, IvfK)
+    val cents = if (!trained) seedBook(first, IvfK) else trainedCentroids(e, first)
+    e.select(nearest(col("v"), cents).getField("sim").as("best"))
       .agg(avg("best")).head().getDouble(0)
   }
 
@@ -755,7 +864,7 @@ object Similarity {
     * a rep — replicas tie on cent_sim but lose the id tie-break. */
   def d59SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val cents = trainedCentroids(e).localCheckpoint()
+    val cents = trainedCentroids(e, firstVecs(e, IvfK))
     // ONE vector-keyed exchange yields both the member→rep mapping and
     // the rep set (a groupBy + join-back would move the vectors twice);
     // checkpointed because the rep pipeline and the final expansion
@@ -765,10 +874,11 @@ object Similarity {
       .localCheckpoint()
     val reps = mapped.filter(col("vec_id") === col("rep_id"))
     val assigned = assignCells(reps.select("vec_id", "v"), cents)
+      .select("vec_id", "v", "cell", "sim")
       .localCheckpoint()
+    // the assignment's argmax similarity IS the cosine to the cell's centroid
     val withSim = assigned
-      .join(broadcast(cents), col("cell") === col("cent_id"))
-      .select(col("vec_id"), col("cell"), cosine(col("v"), col("cv")).as("cent_sim"))
+      .select(col("vec_id"), col("cell"), col("sim").as("cent_sim"))
     val right = assigned
       .select(col("vec_id").as("vec_b"), col("v").as("vb"), col("cell"))
     val pairs = assigned.join(right, Seq("cell"))
@@ -1638,8 +1748,8 @@ object Similarity {
     * as BIGINT, summed in any order without float drift), squared-L2
     * accumulated in element order in both engines.
     *
-    * Scale: training touches only the sample; encode is one
-    * broadcast-join pass (K·M tiny comparisons per vector); serving
+    * Scale: training touches only the sample; encode is one map pass
+    * (K·M tiny comparisons per vector against literal codewords); serving
     * state is 4 bytes/vector + a 16-row LUT per query, and the ADC
     * scan is the point of PQ — brute force over COMPRESSED codes,
     * with the per-probe top-k the only ordering. */
@@ -1665,45 +1775,53 @@ object Similarity {
   def d217PqAdc(spark: SparkSession, dir: String): DataFrame =
     pqAdc(emb(spark, dir))
 
-  /** Split a vector column `vc` into the [[PqM]] per-subspace rows
-    * (id cols + m + sv) — shared by the raw-vector PQ (d217) and the
-    * residual PQ inside IVF-PQ (d219). */
-  private def subspaceRows(df: DataFrame, vc: String,
-      idCols: String*): DataFrame =
-    df.select(idCols.map(col) :+ explode(array((0 until PqM).map(m =>
-        struct(lit(m).as("m"),
-          slice(col(vc), m * PqDim + 1, PqDim).as("sv"))): _*)).as("s"): _*)
-      .select(idCols.map(col) :+ col("s.m").as("m") :+ col("s.sv").as("sv"): _*)
+  /** Subvector m of the vector column `vc`. */
+  private def sub(vc: Column, m: Int): Column = slice(vc, m * PqDim + 1, PqDim)
 
-  /** Residual subspace rows — assign each vector its nearest cell,
-    * center it on that cell's centroid, split into the [[PqM]]
-    * subspaces: (vec_id, cell, m, sv). The shared IVF-PQ encode front
-    * (d219's corpus pass; d226's frozen-artifact corpus AND per-batch
-    * arrival encodes). */
-  private def residSubs(vecs: DataFrame, cents: DataFrame): DataFrame =
-    subspaceRows(
-      assignCells(vecs, cents)
-        .join(broadcast(cents), col("cell") === col("cent_id"))
-        .select(col("vec_id"), col("cell"),
-          zip_with(col("v"), col("cv"), (x, c) => x - c).as("r")),
-      "r", "vec_id", "cell")
+  /** Driver twin of [[sub]]. */
+  private def sub(v: Array[Double], m: Int): Array[Double] =
+    v.slice(m * PqDim, (m + 1) * PqDim)
 
-  /** Nearest-codebook-entry assignment per (vector, subspace) — the PQ
-    * analogue of [[assignCells]]: the K·M-row codebook is broadcast,
-    * distances are exact e4 integers, ties break to the LOWER code by
-    * plain struct ordering, and the argmin is a partial-aggregating
-    * groupBy (never a row_number window over the K-way fanout).
-    * `extraKeys` carries functionally-dependent columns (d219's coarse
-    * cell id) through the aggregate. */
-  private def pqAssign(v: DataFrame, c: DataFrame,
-      extraKeys: Seq[String] = Nil): DataFrame =
-    v.join(broadcast(c), Seq("m"))
-      .select(Seq(col("vec_id"), col("m"), col("sv"), col("code"),
-        l2e4(col("sv"), col("cv")).as("d")) ++ extraKeys.map(col): _*)
-      .groupBy((Seq("vec_id", "m") ++ extraKeys).map(col): _*)
-      .agg(min(struct(col("d"), col("code"), col("sv"))).as("b"))
-      .select(Seq(col("vec_id"), col("m"), col("b.sv").as("sv"),
-        col("b.code").as("code")) ++ extraKeys.map(col): _*)
+  /** Exact e4 squared L2 of two driver-side vectors — the very
+    * [[graft.functions.L2SqE4]] arithmetic, so a driver-built LUT holds
+    * the integers the executors' encode compares. */
+  private def l2e4(a: Array[Double], b: Array[Double]): Long = {
+    val d = graft.functions.L2SqE4.compute(
+      new GenericArrayData(a), new GenericArrayData(b), false)
+    require(d != null, s"vectors of ${a.length} and ${b.length} dims")
+    d.longValue
+  }
+
+  /** The codeword of `book` nearest the subvector `sv` by exact e4 L2,
+    * as a struct (d, code, extra…): ties go to the lower code, the
+    * order `min(struct(d, code, …))` gave, and `extra(k)` rides along
+    * with codeword k (an ADC probe's LUT entries). One L2 per codeword
+    * in a single projection: the plan grows linearly with K (8 here,
+    * 256 in a production codebook — past the codegen method limit,
+    * Spark falls back to interpreting the projection). */
+  private def nearestCode(sv: Column, book: Book,
+      extra: Option[Int] => Seq[Column] = _ => Nil): Column =
+    extreme(book.literals.map { case (code, cv, k) =>
+      struct(l2e4(sv, cv).as("d") +: code.as("code") +: extra(k): _*) }, max = false)
+
+  /** The [[PqM]] subvectors of `vc` as columns `sv0`… beside `keep`. */
+  private def subCols(df: DataFrame, vc: String, keep: String*): DataFrame =
+    df.select(keep.map(col) ++ (0 until PqM).map(m => sub(col(vc), m).as(s"sv$m")): _*)
+
+  /** PQ ENCODE, map-only: every vector's [[PqM]] subvectors as rows
+    * (keep…, m, sv, code), code being its nearest codeword in
+    * `books(m)` ([[nearestCode]]) — the PQ analogue of
+    * [[assignCells]], where the K·M-row codebook used to be broadcast
+    * and the argmin was a (vec_id, m)-keyed groupBy. */
+  private def pqRows(df: DataFrame, vc: String, books: IndexedSeq[Book],
+      keep: String*): DataFrame = unlessEmpty(
+    subCols(df, vc, keep: _*)
+      .select(keep.map(col) :+ explode(array((0 until PqM).map(m =>
+        struct(lit(m).as("m"), col(s"sv$m").as("sv"),
+          nearestCode(col(s"sv$m"), books(m)).getField("code").as("code"))): _*))
+        .as("s"): _*)
+      .select(keep.map(col) ++ Seq("m", "sv", "code").map(f => col(s"s.$f").as(f)): _*),
+    books: _*)
 
   /** One PQ Lloyd update: element-wise 4dp-rounded mean per
     * (subspace, code) — the [[updateCentroids]] discipline on the
@@ -1716,36 +1834,71 @@ object Similarity {
     .agg(array((0 until PqDim).map(i =>
       round(avg(col("sv").getItem(i)), 4)): _*).as("cv"))
 
-  /** Train the [[PqM]] subspace codebooks over the deterministic
-    * 1-in-[[TrainMod]] sample: first-`pqK` init, [[LloydIters]]
-    * assign→mean rounds. */
-  private def pqTrain(subs: DataFrame, pqK: Int): DataFrame = {
-    val c0 = subs.filter(col("vec_id") < pqK)
-      .select(col("m"), col("vec_id").as("code"), col("sv").as("cv"))
-    val train = subs.filter(col("vec_id") % TrainMod === 0)
-    (1 to LloydIters).foldLeft(c0) { (c, _) =>
-      pqUpdate(pqAssign(train, c))
-    }.localCheckpoint() // K·M tiny rows; reused by encode and every LUT
+  /** Train the [[PqM]] subspace codebooks: the seed vectors' subvectors
+    * (ids below `pqK`) start them, then [[LloydIters]] rounds over the
+    * training vectors (column `vc`), each one [[pqUpdate]] aggregate
+    * collected to the driver. */
+  private[graft] def pqTrain(train: DataFrame, vc: String,
+      seeds: Seq[(Long, Array[Double])], pqK: Int): IndexedSeq[Book] =
+    lloyd((0 until PqM).map(m =>
+      Book.of(seeds.filter(_._1 < pqK).map { case (id, v) => id -> sub(v, m) })
+    ))(bs => Book.collectPq(pqUpdate(pqRows(train, vc, bs))))
+
+  /** One ADC probe: query `q`'s LUT, `lut(m)(k)` the e4 distance of
+    * its subvector m to codeword k of book m, over the candidates in
+    * `cell` (every vector when None). */
+  private final case class Probe(q: Long, cell: Option[Long],
+      lut: IndexedSeq[IndexedSeq[Long]])
+
+  private def probe(q: Long, cell: Option[Long], qv: Array[Double],
+      books: IndexedSeq[Book]): Probe =
+    Probe(q, cell, books.indices.map(m =>
+      books(m).cvs.map(cv => l2e4(sub(qv, m), cv))))
+
+  /** Asymmetric distances (q_id, vec_id, adc_e4) of every vector of
+    * `vecs` (column `vc`, plus `cell` when the probes route) to each
+    * probe whose cell it is in, itself excluded — one map pass. The
+    * LUTs are built once on the driver; each subspace's encode struct
+    * carries codeword k's LUT entries, so the nearest codeword yields
+    * them and a distance is the sum of [[PqM]] of them, the same
+    * integers the (m, code)-keyed LUT join summed. */
+  private def adcScores(vecs: DataFrame, vc: String, books: IndexedSeq[Book],
+      probes: Seq[Probe]): DataFrame = {
+    val keep = "vec_id" +: (if (probes.exists(_.cell.nonEmpty)) Seq("cell") else Nil)
+    val coded = subCols(vecs, vc, keep: _*)
+      .select(keep.map(col) ++ (0 until PqM).map(m =>
+        nearestCode(col(s"sv$m"), books(m), k => probes.indices.map(p =>
+          k.fold(lit(null).cast("long"))(k => lit(probes(p).lut(m)(k))).as(s"l$p")))
+          .as(s"b$m")): _*)
+    val hits = probes.indices.map { p =>
+      val pr = probes(p)
+      when(pr.cell.fold(lit(true))(col("cell") === _) && col("vec_id") =!= pr.q,
+        struct(nullable(lit(pr.q)).as("q_id"),
+          nullable((0 until PqM).map(m => col(s"b$m.l$p")).reduce(_ + _)).as("adc_e4")))
+    }
+    unlessEmpty(coded.select(col("vec_id"), explodeHits(hits, "adc_e4:bigint"))
+      .filter(col("h").isNotNull)
+      .select(col("h.q_id").as("q_id"), col("vec_id"), col("h.adc_e4").as("adc_e4")),
+      books: _*)
   }
 
+  /** Each probe's top 3 by `by`, ties to the lower vec_id. */
+  private def top3(scores: DataFrame, by: String): DataFrame = scores
+    .withColumn("rk", row_number().over(
+      Window.partitionBy("q_id").orderBy(col(by), col("vec_id"))))
+    .filter(col("rk") <= 3)
+    .select("q_id", "rk", "vec_id", by)
+    .orderBy("q_id", "rk")
+
+  /** d217: codebooks trained from one driver collect (seeds and probes)
+    * and [[LloydIters]] collected aggregates, then one map pass that
+    * encodes every vector and sums its three probes' LUT entries. */
   private[graft] def pqAdc(e: DataFrame): DataFrame = {
-    val subs = subspaceRows(e, "v", "vec_id")
-      .localCheckpoint() // feeds training, encode, and the probe LUTs
-    val cents = pqTrain(subs, PqK)
-    val codes = pqAssign(subs, cents).select("vec_id", "m", "code")
-    val lut = subs.filter(col("vec_id") < 3)
-      .select(col("vec_id").as("q_id"), col("m"), col("sv").as("qv"))
-      .join(broadcast(cents), Seq("m"))
-      .select(col("q_id"), col("m"), col("code"),
-        l2e4(col("qv"), col("cv")).as("d_e4"))
-    codes.join(broadcast(lut), Seq("m", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id").agg(sum("d_e4").as("adc_e4"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("adc_e4"), col("vec_id"))))
-      .filter(col("rk") <= 3)
-      .select("q_id", "rk", "vec_id", "adc_e4")
-      .orderBy("q_id", "rk")
+    val first = firstVecs(e, math.max(PqK, AnnQueries))
+    val books = pqTrain(e.filter(col("vec_id") % TrainMod === 0), "v",
+      first.toSeq, PqK)
+    top3(adcScores(e, "v", books,
+      queries(first).map { case (q, qv) => probe(q, None, qv, books) }), "adc_e4")
   }
 
   val d217Oracle: String = {
@@ -1813,14 +1966,15 @@ object Similarity {
     * reproduces every integer bit-for-bit.
     *
     * Scale shape, piecewise: coarse + subspace training touch only the
-    * 1-in-[[TrainMod]] sample; the corpus moves ONCE through cell
-    * assignment and once through residual encode (both broadcast
-    * joins, K-row and K·M-row tables); serving state is
-    * (cell, 4 codes) ≈ 5 bytes/vector; a query broadcasts its
-    * nProbe·M·K-entry LUT and scans only the routed cells' code lists
-    * via an equi-join on (cell, m, code) — work per query is
-    * nProbe·N/K LUT lookups, and recall/cost trade off by nProbe and
-    * the codebook widths with the structure unchanged. */
+    * 1-in-[[TrainMod]] sample, each Lloyd round one aggregate whose
+    * codebook comes back to the driver; the corpus moves ONCE, through
+    * one map pass that assigns, centres, encodes and scores it against
+    * the literal codebooks; serving state is (cell, 4 codes) ≈ 5
+    * bytes/vector; a query's nProbe·M·K-entry LUT is built on the
+    * driver and a candidate is scored only for the probes of its own
+    * cell — work per query is nProbe·N/K LUT lookups, and recall/cost
+    * trade off by nProbe and the codebook widths with the structure
+    * unchanged. */
   def d219Ivfpq(spark: SparkSession, dir: String): DataFrame =
     ivfpq(emb(spark, dir), IvfK, PqK, NProbe)
 
@@ -1829,59 +1983,48 @@ object Similarity {
     * and LUT entry is hand-computable. */
   private[graft] def ivfpq(e: DataFrame, k: Int, pqK: Int,
       nProbe: Int): DataFrame =
-    ivfpqAdc(e, k, pqK, nProbe)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("adc_e4"), col("vec_id"))))
-      .filter(col("rk") <= 3)
-      .select("q_id", "rk", "vec_id", "adc_e4")
-      .orderBy("q_id", "rk")
+    top3(ivfpqAdc(e, k, pqK, nProbe), "adc_e4")
+
+  /** Residual of every vector on its nearest centre of `cents`:
+    * (vec_id, cell, r) — the IVF-PQ encode front, one map pass
+    * (64 subtractions per vector, off the candidate-scoring hot path). */
+  private def residuals(vecs: DataFrame, cents: Book): DataFrame =
+    assignCells(vecs, cents).select(col("vec_id"), col("cell"),
+      zip_with(col("v"), col("cv"), (x, c) => x - c).as("r"))
+
+  private def minus(a: Array[Double], b: Array[Double]): Array[Double] =
+    a.indices.map(i => a(i) - b(i)).toArray
+
+  /** The IVF-PQ artifacts trained from `first` (the vectors with
+    * vec_id below max(k, pqK)) and the 1-in-[[TrainMod]] sample of
+    * `e`: k coarse centroids, then the residual codebooks, seeded with
+    * the residuals of the vectors below pqK — routed and centred on
+    * the driver, exactly as the executors centre the sample. */
+  private def ivfpqTrain(e: DataFrame, first: Map[Long, Array[Double]],
+      k: Int, pqK: Int): (Book, IndexedSeq[Book]) = {
+    val cents = trainedCentroids(e, first, k)
+    val seeds = first.toSeq.filter(_._1 < pqK).flatMap { case (id, v) =>
+      route(v, cents, 1).map(c => id -> minus(v, cents.cvs(c))) }
+    (cents, pqTrain(residuals(e.filter(col("vec_id") % TrainMod === 0), cents),
+      "r", seeds, pqK))
+  }
 
   /** The full per-candidate ADC distance table (q_id, vec_id, adc_e4)
     * — d219 keeps its top-3, the d224 refine stage its top-[[RefineR]]
-    * for exact re-ranking. */
+    * for exact re-ranking. Each query is routed on the driver to its
+    * nProbe nearest cells (the same 4dp cosine and tie-break the
+    * assignment uses), with one LUT per (query, cell) over its
+    * residual on that cell; a candidate surfaces ONLY for a probe of
+    * its own cell, so a vector in an unprobed cell is never scored. */
   private[graft] def ivfpqAdc(e: DataFrame, k: Int, pqK: Int,
       nProbe: Int): DataFrame = {
-    // coarse quantizer: first-k init + LloydIters rounds over the
-    // deterministic sample (the d14 discipline, k parameterized)
-    val c0 = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
-    val train = e.filter(col("vec_id") % TrainMod === 0)
-    val cents = (1 to LloydIters).foldLeft(c0) { (c, _) =>
-      updateCentroids(assignCells(train, c))
-    }.localCheckpoint() // k rows; reused by assignment, residuals, probes
-    // residual encode: center every vector on ITS cell before the
-    // subspace split (one zip_with pass per vector — 64 subtractions,
-    // once, off the candidate-scoring hot path)
-    val rsubs = residSubs(e, cents)
-      .localCheckpoint() // feeds codebook training AND encode
-    val books = pqTrain(rsubs, pqK)
-    val codes = pqAssign(rsubs, books, extraKeys = Seq("cell"))
-      .select("vec_id", "cell", "m", "code")
-    // probe routing: each query ranks the k cells by the SAME cosine
-    // the assignment used and keeps its nProbe nearest
-    val probes = e.filter(col("vec_id") < 3)
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cent_id"),
-        cosine(col("v"), col("cv")).as("sim"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("sim").desc, col("cent_id"))))
-      .filter(col("rk") <= nProbe)
-      .select(col("q_id"), col("qv"), col("cent_id").as("cell"))
-    // per-probed-cell query residual → one LUT row per (q, cell, m, code)
-    val qresid = probes.join(broadcast(cents), col("cell") === col("cent_id"))
-      .select(col("q_id"), col("cell"),
-        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
-    val lut = subspaceRows(qresid, "qr", "q_id", "cell")
-      .join(broadcast(books), Seq("m"))
-      .select(col("q_id"), col("cell"), col("m"), col("code"),
-        l2e4(col("sv"), col("cv")).as("d_e4"))
-    // ADC: candidates surface ONLY via the equi-join on their routed
-    // cell — a candidate in an unprobed cell never joins, and a routed
-    // candidate meets exactly its M code rows, so the sum is its
-    // complete asymmetric distance
-    codes.join(broadcast(lut), Seq("cell", "m", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy("q_id", "vec_id").agg(sum("d_e4").as("adc_e4"))
+    val first = firstVecs(e, Seq(k, pqK, AnnQueries).max)
+    val (cents, books) = ivfpqTrain(e, first, k, pqK)
+    val probes = for {
+      (q, qv) <- queries(first)
+      c <- route(qv, cents, nProbe)
+    } yield probe(q, Some(cents.ids(c)), minus(qv, cents.cvs(c)), books)
+    adcScores(residuals(e, cents), "r", books, probes)
   }
 
   /** Oracle-side exact squared-L2 as an e4 BIGINT over `dims`-long
@@ -2069,14 +2212,10 @@ object Similarity {
       .select("q_id", "vec_id")
     val qv = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    e.join(broadcast(cands), "vec_id")
+    top3(e.join(broadcast(cands), "vec_id")
       .join(broadcast(qv), "q_id")
-      .select(col("q_id"), col("vec_id"), l2e4(col("v"), col("qv")).as("l2_e4"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("l2_e4"), col("vec_id"))))
-      .filter(col("rk") <= 3)
-      .select("q_id", "rk", "vec_id", "l2_e4")
-      .orderBy("q_id", "rk")
+      .select(col("q_id"), col("vec_id"), l2e4(col("v"), col("qv")).as("l2_e4")),
+      "l2_e4")
   }
 
   /** d219's CTE chain + the R-candidate exact re-rank. */
@@ -2130,50 +2269,49 @@ object Similarity {
     * so the artifacts are trained once and the stream only APPENDS
     * codes encoded against them. */
   private[graft] def ingestArtifacts(
-      corpus: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val cents = trainedCentroids(corpus).localCheckpoint()
-    val rsubs = residSubs(corpus, cents).localCheckpoint()
-    val books = pqTrain(rsubs, PqK)
-    val codes = pqAssign(rsubs, books, extraKeys = Seq("cell"))
-      .select("vec_id", "cell", "m", "code")
-    (cents, books, codes)
+      corpus: DataFrame): (Book, IndexedSeq[Book], DataFrame) = {
+    val (cents, books) = ivfpqTrain(corpus,
+      firstVecs(corpus, math.max(IvfK, PqK)), IvfK, PqK)
+    (cents, books, ingestEncode(corpus, cents, books))
   }
 
   /** Route + PQ-encode one micro-batch of arrivals against the frozen
-    * artifacts — a STATELESS map over the batch (two broadcast joins:
-    * the K-row centroid table and the K·M-row codebook), exactly what
-    * an encode-on-arrival executor does at any batch size. */
-  private[graft] def ingestEncode(arrivals: DataFrame, cents: DataFrame,
-      books: DataFrame): DataFrame =
-    pqAssign(residSubs(arrivals, cents), books, extraKeys = Seq("cell"))
+    * artifacts: (vec_id, cell, m, code) — a STATELESS map over the
+    * batch with the codebooks as literals, exactly what an
+    * encode-on-arrival executor does at any batch size. */
+  private[graft] def ingestEncode(arrivals: DataFrame, cents: Book,
+      books: IndexedSeq[Book]): DataFrame =
+    pqRows(residuals(arrivals, cents), "r", books, "vec_id", "cell")
       .select("vec_id", "cell", "m", "code")
 
   /** PROBE-BEFORE-ADD: score one micro-batch of arrivals against the
     * CURRENT index — codes only, no raw corpus vector ever loads — and
     * verdict each arrival near_dup/novel by its best ADC distance.
-    * Candidates surface ONLY via the (cell, m, code) equi-join on the
-    * arrival's [[NProbe]] routed cells (the d219 serving shape); the
-    * argmin is a partial-aggregating groupBy. The LUT side is
-    * batch-sized (arrivals × nProbe × M × K rows) and the index side
-    * corpus-sized — the join is left to AQE, which broadcasts
-    * whichever side a production trigger actually bounds. */
+    * Each arrival is routed to its [[NProbe]] nearest cells and its
+    * LUT rows (arrival × cell × M × K) are computed in one map pass
+    * over the batch, the codebooks as literals. Candidates surface
+    * ONLY via the (cell, m, code) equi-join on the routed cells (the
+    * d219 serving shape); the argmin is a partial-aggregating groupBy.
+    * The LUT side is batch-sized and the index side corpus-sized — the
+    * join is left to AQE, which broadcasts whichever side a production
+    * trigger actually bounds. */
   private[graft] def ingestProbe(arrivals: DataFrame, idx: DataFrame,
-      cents: DataFrame, books: DataFrame, threshE4: Long,
+      cents: Book, books: IndexedSeq[Book], threshE4: Long,
       excludeSelf: Boolean = false): DataFrame = {
-    val probes = arrivals.crossJoin(broadcast(cents))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("cent_id"),
-        cosine(col("v"), col("cv")).as("sim"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("sim").desc, col("cent_id"))))
-      .filter(col("rk") <= NProbe)
-      .select(col("q_id"), col("qv"), col("cent_id").as("cell"))
-    val qresid = probes.join(broadcast(cents), col("cell") === col("cent_id"))
-      .select(col("q_id"), col("cell"),
-        zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
-    val lut = subspaceRows(qresid, "qr", "q_id", "cell")
-      .join(broadcast(books), Seq("m"))
-      .select(col("q_id"), col("cell"), col("m"), col("code"),
-        l2e4(col("sv"), col("cv")).as("d_e4"))
+    // sorted descending, the (sim, −id) structs rank the cells as the
+    // assignment's argmax does
+    val routed = arrivals.select(col("vec_id").as("q_id"), col("v").as("qv"),
+        explode(slice(sort_array(array(centreSims(col("v"), cents): _*),
+          asc = false), 1, NProbe)).as("c"))
+      .select(col("q_id"), (-col("c.nc")).as("cell"),
+        zip_with(col("qv"), col("c.cv"), (x, c) => x - c).as("qr"))
+    val lut = subCols(routed, "qr", "q_id", "cell")
+      .select(col("q_id"), col("cell"), explode(array((
+        for (m <- 0 until PqM; (code, cv, _) <- books(m).literals) yield struct(
+          lit(m).as("m"), code.as("code"), l2e4(col(s"sv$m"), cv).as("d_e4"))): _*))
+        .as("l"))
+      .select(col("q_id"), col("cell"), col("l.m").as("m"),
+        col("l.code").as("code"), col("l.d_e4").as("d_e4"))
     val cands = idx
       .select(col("vec_id").as("cand_id"), col("cell"), col("m"), col("code"))
       .join(lut, Seq("cell", "m", "code"))
@@ -2373,8 +2511,8 @@ object Similarity {
       val corpus = e.filter(col("vec_id") < IngestSplit1)
       val (cents, books, base) = ingestArtifacts(corpus)
       // the base write and the two delta encodes are independent
-      // actions over checkpointed inputs (e, cents, books) writing to
-      // three distinct dirs — overlap them (guide §2.6)
+      // actions over the checkpointed e and the driver-held codebooks,
+      // writing to three distinct dirs — overlap them (guide §2.6)
       graft.Par.actions(Seq(
         () => base.write.mode("overwrite").parquet(s"$root/idx/base"),
         () => ingestEncode(e.filter(col("vec_id") >= IngestSplit1 &&

@@ -43,11 +43,13 @@ object EventStreams {
     * mis-scaled the other generation by 1000×. */
   def readEvents(spark: SparkSession, dir: String,
       sourceOptions: Map[String, String] = Map.empty): DataFrame = {
-    // the staged entry can be a bare parquet FILE (testdata layout) or
-    // a directory-shaped table (Spark writes) — the batch probe does
-    // not recurse, so try both shapes
+    // the staged entry can be a bare parquet FILE (testdata layout),
+    // whose footer is read on the driver, or a directory-shaped table
+    // (Spark writes) — the batch probe does not recurse, so try both
+    // shapes
     val probed = Seq(dir, s"$dir/*").view
-      .flatMap(p => scala.util.Try(spark.read.parquet(p).schema).toOption)
+      .flatMap(p => scala.util.Try(graft.io.ParquetMeta.fileSchema(spark, p)
+        .getOrElse(spark.read.parquet(p).schema)).toOption)
       .headOption.filter(_.fieldNames.contains("ts"))
     // a day-one-empty dir has no footer to probe: we must still pick a
     // unit (the stream cannot re-declare its schema later), but doing

@@ -1903,17 +1903,19 @@ object StreamGates {
       def freeze(df: DataFrame, name: String): DataFrame = {
         val p = art.resolve(name).toString
         df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p).localCheckpoint()
+        spark.read.parquet(p)
       }
       // the two artifact freezes and the base-index write are
-      // independent actions over already-checkpointed training outputs
-      // (codes0's lineage reads only checkpointed frames) — overlap
-      // them (guide §2.6); same bytes land in the same three dirs
-      var cents: DataFrame = null
-      var books: DataFrame = null
+      // independent actions over the driver-held codebooks (codes0 is
+      // a map over the corpus scan) — overlap them (guide §2.6); same
+      // bytes land in the same three dirs
+      var cents: Similarity.Book = null
+      var books: IndexedSeq[Similarity.Book] = null
       graft.Par.actions(Seq(
-        () => cents = freeze(cents0, "cents.parquet"),
-        () => books = freeze(books0, "books.parquet"),
+        () => cents = Similarity.Book.collect(
+          freeze(Similarity.Book.frame(spark, cents0), "cents.parquet")),
+        () => books = Similarity.Book.collectPq(
+          freeze(Similarity.Book.pqFrame(spark, books0), "books.parquet")),
         () => codes0.write.mode("overwrite").parquet(s"$idxRoot/base")))
       // audit counts from the artifacts' own footers (guide §1.2): the
       // staleness pin needs committed row counts, which the parquet

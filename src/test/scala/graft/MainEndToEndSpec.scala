@@ -294,6 +294,15 @@ class MainEndToEndSpec extends SparkSpec {
     assert(printed.contains("validation success"), printed)
   }
 
+  test("an empty FIELD_SEPARATOR cell is rejected, naming the cell") {
+    // the reference's `str.split('')` raises; an empty separator used to
+    // split the header into single characters and pass
+    val ex = intercept[IllegalArgumentException](
+      runOn("nosep", "IDA\n12\n34\n", sep = ""))
+    assert(ex.getMessage.contains("FIELD_SEPARATOR") &&
+      ex.getMessage.contains("row 1, column 4"), ex.getMessage)
+  }
+
   /** The `name STATUS failed=N` head of every check line `Main` printed,
     * then its verdict line. */
   private def verdicts(printed: String): Seq[String] =

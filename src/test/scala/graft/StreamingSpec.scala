@@ -1224,7 +1224,8 @@ class StreamingSpec extends SparkSpec {
       .toDF("vec_id", "cell", "m", "code")
     val arrivals = Seq((7L, Array.fill(dim)(1.0))).toDF("vec_id", "v")
     val got = graft.ops.Similarity
-      .ingestProbe(arrivals, idx, cents, books, 100000L).collect()
+      .ingestProbe(arrivals, idx, graft.ops.Similarity.Book.collect(cents),
+        graft.ops.Similarity.Book.collectPq(books), 100000L).collect()
     assert(got.length == 1)
     assert(got.head.getLong(0) == 7L)
     assert(got.head.isNullAt(1) && got.head.isNullAt(2),

@@ -14,8 +14,11 @@ holds: the change wins at least nine tenths of the pairs (a tie counts for
 neither side) and its median beats the parent's by more than the parent's
 interquartile range. A claimed gain needs that line to read "holds". A
 metric whose change median is worse than the parent's by more than its
-bound is flagged REGRESSION; a run that is not correct is flagged too. Exit status is 1 when
-anything is flagged. Nothing in either checkout is modified beyond what
+bound is flagged REGRESSION; a run that is not correct is flagged too. Last,
+per operation, each side's median seconds: each run's median over its timed
+passes, read from the run's `.bench_build/work/<workload>/result.json`
+(`passes[].ops_s`), then the median over the runs, so a gain names the
+operation that moved. Exit status is 1 when anything is flagged. Nothing in either checkout is modified beyond what
 perfbench itself writes (its build and work directories).
 """
 import argparse
@@ -28,7 +31,8 @@ import sys
 
 
 def run_once(checkout, workload, seed, seconds):
-    """One benchmark run in `checkout`; its result object, or None."""
+    """One benchmark run in `checkout`: its result object, or None, and
+    each operation's median seconds over the run's timed passes."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
@@ -37,8 +41,22 @@ def run_once(checkout, workload, seed, seconds):
     if p.returncode != 0 or not lines:
         print(f"  run failed in {checkout} (exit {p.returncode}): "
               f"{p.stderr.strip()[-400:]}", flush=True)
-        return None
-    return json.loads(lines[-1])
+        return None, {}
+    return json.loads(lines[-1]), op_medians(checkout, workload)
+
+
+def op_medians(checkout, workload):
+    """Per operation, the median of its seconds over the complete,
+    untraced passes in the run's result.json."""
+    path = os.path.join(checkout, ".bench_build", "work", workload, "result.json")
+    try:
+        res = json.load(open(path))
+    except (OSError, ValueError):
+        return {}
+    passes = [p["ops_s"] for p in res.get("passes", [])
+              if not p.get("traced") and len(p["ops_s"]) == len(res["ops"])]
+    return {op: statistics.median(p[op] for p in passes)
+            for op in res["ops"]} if passes else {}
 
 
 def quartiles(xs):
@@ -60,11 +78,13 @@ def main():
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
 
     runs = {"parent": [], "change": []}
+    ops = {"parent": [], "change": []}
     flagged = False
     for seed in range(1, a.pairs + 1):
         order = ("parent", "change") if seed % 2 else ("change", "parent")
         for side in order:
-            res = run_once(sides[side], a.workload, seed, seconds)
+            res, per_op = run_once(sides[side], a.workload, seed, seconds)
+            ops[side].append(per_op)
             if res is None or not res["correct"] or res["failed"]:
                 flagged = True
                 print(f"FLAG {side} seed={seed}: not correct: {res}", flush=True)
@@ -101,6 +121,13 @@ def main():
         print(f"{'':12s} gain rule {'holds' if gain else 'does not hold'}: "
               f"wins {wins}/{len(pairs)} (needs {math.ceil(0.9 * len(pairs))}), "
               f"median gap {gap:.4g} vs parent IQR {iqr:.4g}")
+
+    names = sorted({op for side in ops.values() for run in side for op in run})
+    print(f"\n{'operation':24s} {'parent median s':>16s} {'change median s':>16s} {'ratio':>7s}")
+    for op in names:
+        pm, cm = (statistics.median(xs) if xs else float("nan") for xs in
+                  ([r[op] for r in ops[s] if op in r] for s in ("parent", "change")))
+        print(f"{op:24s} {pm:16.4g} {cm:16.4g} {cm / pm if pm else float('nan'):7.3f}")
     sys.exit(1 if flagged else 0)
 
 
